@@ -350,14 +350,3 @@ def run_analyzers(
     for fdf in findings[1:]:
         out = out.unionByName(fdf)
     return out
-
-
-def parse_policy_events(events_lines: DataFrame) -> DataFrame:
-    """P17/P18 — MAC_POLICY_LOAD / MAC_STATUS side table from parsed events.
-
-    Input: any DataFrame with (denial_type-bearing) raw lines already parsed;
-    here we re-use the routed event table's sibling records by filtering the
-    pages text directly is unnecessary — the datagen embeds policy loads as
-    dedicated docs. Kept simple: filter rows whose raw text matched policy
-    types during parse (extension hook for future rounds)."""
-    return events_lines.filter(F.col("denial_type").isin("MAC_POLICY_LOAD", "MAC_STATUS"))

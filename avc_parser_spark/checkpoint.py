@@ -3,16 +3,23 @@
 North-rule requirement: "the job checkpoints per-Iceberg-partition with
 lineage + row-count metrics so reruns resume without reprocessing".
 
-Design (Iceberg-equivalent on hive-partitioned parquet):
-- The pages table is partitioned by `warc_date`. Each run processes
-  partitions one at a time (or in batches), writing the routed event table
-  under `events/warc_date=<d>/` and appending a manifest line to
-  `_manifest/<d>.json` with: partition, input rows, routed row counts,
-  wall seconds, input fingerprint (path + mtime-derived), engine version.
-- On re-run, partitions whose manifest entry exists AND whose input
-  fingerprint is unchanged are SKIPPED — resume is exact and idempotent
-  (last write wins per partition; a partial write without a manifest entry
-  is simply overwritten).
+Design (Iceberg-equivalent on hive-partitioned parquet): one loop over
+checkpoint units, shared by every front door. A unit is a pages-warehouse
+`warc_date=<d>` directory or one raw audit-log / WARC file. Per unit:
+1. fingerprint its input files as (name, size, mtime_ns) — mtime in ns so
+   an in-place, same-size rewrite within one second still counts as new;
+2. skip it if its manifest entry carries the same fingerprint;
+3. read, parse and sign it, and write the routed events under
+   `events/warc_date=<unit>/` (a partial write without a manifest entry is
+   simply overwritten on the next run);
+4. commit `_manifest/<unit>.json` — input fingerprint, input rows, routed
+   rows per route, output rows, malformed lines, wall seconds, engine
+   version — by an fsynced atomic rename.
+
+The row counts are `DataFrame.observe` metrics on the input and event
+frames, filled by the parquet write itself: a processed unit costs the
+write job (plus a parquet schema read for the warehouse), not extra
+count or read-back jobs.
 
 On a real Iceberg deployment the manifest collapses into Iceberg snapshot
 metadata (commit per partition; lineage = snapshot id + summary), and the
@@ -22,46 +29,39 @@ below is the same shape with plain files.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from avc_parser_spark import __version__
-from avc_parser_spark.enrich.join import signature_exprs
-from avc_parser_spark.parse.udf import parse_pages
+from avc_parser_spark.pipeline import ROUTES, parse_and_sign
 
 MANIFEST_DIR = "_manifest"
 
 
-def _partition_values(spark: SparkSession, pages_path: str) -> list[str]:
-    return sorted(
-        d.split("=", 1)[1]
-        for d in os.listdir(pages_path)
-        if d.startswith("warc_date=")
-    )
+def _input_fingerprint(files: list[str]) -> str:
+    entries = []
+    for f in files:
+        st = os.stat(f)
+        entries.append((os.path.basename(f), st.st_size, st.st_mtime_ns))
+    return json.dumps(sorted(entries), separators=(",", ":"))
 
 
-def _input_fingerprint(pages_path: str, part: str) -> str:
-    pdir = os.path.join(pages_path, f"warc_date={part}")
-    entries = sorted(
-        (
-            f,
-            os.path.getsize(os.path.join(pdir, f)),
-            # mtime (ns) so an in-place rewrite with identical name+size is
-            # still detected as changed input and reprocessed on resume
-            os.stat(os.path.join(pdir, f)).st_mtime_ns,
-        )
-        for f in os.listdir(pdir)
-        if f.endswith(".parquet")
-    )
-    return json.dumps(entries, separators=(",", ":"))
-
-
-def _manifest_path(out_path: str, part: str) -> str:
-    return os.path.join(out_path, MANIFEST_DIR, f"{part}.json")
+def _commit(out_path: str, entry: dict) -> None:
+    # The rename is the commit point; fsync first so a crash cannot leave
+    # an empty manifest file behind it.
+    mpath = os.path.join(out_path, MANIFEST_DIR, f"{entry['partition']}.json")
+    tmp = mpath + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(entry, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, mpath)
 
 
 def read_manifest(out_path: str) -> dict[str, dict]:
@@ -77,150 +77,105 @@ def read_manifest(out_path: str) -> dict[str, dict]:
     return out
 
 
+def _run_units(
+    spark: SparkSession,
+    units: list[tuple[str, str, list[str]]],
+    reader,
+    out_path: str,
+    force: bool,
+) -> dict:
+    """The checkpointed ingest loop. `units` are (part, source, files):
+    `reader(spark, source)` returns the pages-shaped frame parse_pages
+    consumes, and `files` are fingerprinted for the skip check."""
+    os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
+    manifest = {} if force else read_manifest(out_path)
+
+    processed, skipped = [], []
+    for part, source, files in units:
+        fp = _input_fingerprint(files)
+        prior = manifest.get(part)
+        if prior and prior.get("input_fingerprint") == fp:
+            skipped.append(part)
+            continue
+
+        t0 = time.time()
+        seen_in, seen_out = Observation(), Observation()
+        pages = reader(spark, source).observe(
+            seen_in, F.count(F.lit(1)).alias("input_rows")
+        )
+        events = parse_and_sign(pages).observe(
+            seen_out,
+            F.count(F.lit(1)).alias("output_rows"),
+            F.coalesce(F.sum("malformed_lines"), F.lit(0)).alias("malformed_lines"),
+            *(F.count_if(F.col("route") == r).alias(r) for r in ROUTES),
+        )
+        events.write.mode("overwrite").parquet(
+            os.path.join(out_path, "events", f"warc_date={part}")
+        )
+        out = seen_out.get
+        _commit(out_path, {
+            "partition": part,
+            "input_fingerprint": fp,
+            "input_rows": seen_in.get["input_rows"],
+            # routes with no rows are left out, as a groupBy would
+            "routed_rows": {r: out[r] for r in ROUTES if out[r]},
+            "output_rows": out["output_rows"],
+            "malformed_lines": out["malformed_lines"],
+            "wall_sec": round(time.time() - t0, 3),
+            "engine_version": __version__,
+            "completed_at_epoch": int(time.time()),
+        })
+        processed.append(part)
+
+    return {
+        "processed": processed,
+        "skipped": skipped,
+        "manifest": read_manifest(out_path),
+    }
+
+
 def run_with_checkpoints(
     spark: SparkSession,
     pages_path: str,
     out_path: str,
     force: bool = False,
 ) -> dict:
-    """Parse+route every pages partition, resuming from the manifest.
+    """Parse+route every `warc_date=` partition of the pages warehouse,
+    resuming from the manifest.
 
-    Returns {"processed": [...], "skipped": [...], "metrics": {...}}.
+    Returns {"processed": [...], "skipped": [...], "manifest": {...}}.
     """
-    os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
-    manifest = {} if force else read_manifest(out_path)
-
-    processed, skipped = [], []
-    for part in _partition_values(spark, pages_path):
-        fp = _input_fingerprint(pages_path, part)
-        prior = manifest.get(part)
-        if prior and prior.get("input_fingerprint") == fp:
-            skipped.append(part)
-            continue
-
-        t0 = time.time()
-        pages = spark.read.parquet(
-            os.path.join(pages_path, f"warc_date={part}")
-        )
-        input_rows = pages.count()
-        events = signature_exprs(parse_pages(pages))
-        (
-            events.write.mode("overwrite").parquet(
-                os.path.join(out_path, "events", f"warc_date={part}")
-            )
-        )
-        routed = {
-            r["route"]: r["n"]
-            for r in spark.read.parquet(
-                os.path.join(out_path, "events", f"warc_date={part}")
-            )
-            .groupBy("route")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        entry = {
-            "partition": part,
-            "input_fingerprint": fp,
-            "input_rows": input_rows,
-            "routed_rows": routed,
-            "output_rows": sum(routed.values()),
-            "wall_sec": round(time.time() - t0, 3),
-            "engine_version": __version__,
-            "completed_at_epoch": int(time.time()),
-        }
-        # manifest write is the commit point: atomic rename
-        mpath = _manifest_path(out_path, part)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        os.replace(tmp, mpath)
-        processed.append(part)
-
-    return {
-        "processed": processed,
-        "skipped": skipped,
-        "manifest": read_manifest(out_path),
-    }
+    units = []
+    for d in sorted(os.listdir(pages_path)):
+        if d.startswith("warc_date="):
+            pdir = os.path.join(pages_path, d)
+            files = glob.glob(os.path.join(pdir, "*.parquet"))
+            units.append((d.split("=", 1)[1], pdir, files))
+    return _run_units(
+        spark, units, lambda s, p: s.read.parquet(p), out_path, force
+    )
 
 
-def _run_files_with_checkpoints(
-    spark: SparkSession,
-    input_path: str,
-    out_path: str,
-    reader,
-    suffix: str,
-    part_prefix: str,
-    force: bool = False,
-) -> dict:
-    """Per-FILE resumable ingest shared by every raw-file front door: each
-    source file is one checkpoint unit — the operational shape for a
-    directory receiving daily drops. Re-running skips files whose
-    size+mtime fingerprint is unchanged; new drops process incrementally.
-    `reader(spark, path)` must return the pages-shaped frame parse_pages
-    consumes. Events land under events/warc_date=<prefix>-<file>/ so
+def _file_units(
+    input_path: str, suffix: str, part_prefix: str
+) -> list[tuple[str, str, list[str]]]:
+    """Per-FILE units for the raw-file front doors: each source file is
+    one checkpoint unit — the operational shape for a directory receiving
+    daily drops. Events land under events/warc_date=<prefix>-<file>/ so
     read_events and the report path work identically to the
     pages-warehouse mode."""
-    import glob as _glob
-    import re as _re
-
     if os.path.isdir(input_path):
-        files = sorted(_glob.glob(os.path.join(input_path, f"*{suffix}")))
+        files = sorted(glob.glob(os.path.join(input_path, f"*{suffix}")))
     else:
-        files = sorted(_glob.glob(input_path)) or [input_path]
-
-    os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
-    manifest = {} if force else read_manifest(out_path)
-
-    processed, skipped = [], []
-    for path in files:
-        part = part_prefix + "-" + _re.sub(
-            r"[^A-Za-z0-9_.-]", "_", os.path.basename(path)
+        files = sorted(glob.glob(input_path)) or [input_path]
+    return [
+        (
+            part_prefix + "-" + re.sub(r"[^A-Za-z0-9_.-]", "_", os.path.basename(f)),
+            f,
+            [f],
         )
-        st = os.stat(path)
-        fp = f"{st.st_size}:{int(st.st_mtime)}"
-        prior = manifest.get(part)
-        if prior and prior.get("input_fingerprint") == fp:
-            skipped.append(part)
-            continue
-
-        t0 = time.time()
-        blocks = reader(spark, path)
-        input_rows = blocks.count()
-        events = signature_exprs(parse_pages(blocks))
-        events.write.mode("overwrite").parquet(
-            os.path.join(out_path, "events", f"warc_date={part}")
-        )
-        routed = {
-            r["route"]: r["n"]
-            for r in spark.read.parquet(
-                os.path.join(out_path, "events", f"warc_date={part}")
-            )
-            .groupBy("route")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        entry = {
-            "partition": part,
-            "input_fingerprint": fp,
-            "input_rows": input_rows,
-            "routed_rows": routed,
-            "output_rows": sum(routed.values()),
-            "wall_sec": round(time.time() - t0, 3),
-            "engine_version": __version__,
-            "completed_at_epoch": int(time.time()),
-        }
-        mpath = _manifest_path(out_path, part)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        os.replace(tmp, mpath)
-        processed.append(part)
-
-    return {
-        "processed": processed,
-        "skipped": skipped,
-        "manifest": read_manifest(out_path),
-    }
+        for f in files
+    ]
 
 
 def run_audit_logs_with_checkpoints(
@@ -233,9 +188,8 @@ def run_audit_logs_with_checkpoints(
     reference CLI's native input, via sources.read_audit_logs)."""
     from avc_parser_spark.sources import read_audit_logs
 
-    return _run_files_with_checkpoints(
-        spark, logs_path, out_path, read_audit_logs, ".log", "log", force
-    )
+    units = _file_units(logs_path, ".log", "log")
+    return _run_units(spark, units, read_audit_logs, out_path, force)
 
 
 def run_warc_with_checkpoints(
@@ -251,9 +205,8 @@ def run_warc_with_checkpoints(
     the same manifest/lineage/skip semantics as every other source."""
     from avc_parser_spark.sources import read_warc_pages
 
-    return _run_files_with_checkpoints(
-        spark, warc_path, out_path, read_warc_pages, ".warc", "warc", force
-    )
+    units = _file_units(warc_path, ".warc", "warc")
+    return _run_units(spark, units, read_warc_pages, out_path, force)
 
 
 def read_events(spark: SparkSession, out_path: str) -> DataFrame:

@@ -88,7 +88,3 @@ def write_pages_warehouse(
     with open(marker, "w") as f:
         f.write(str(n_docs))
     return path
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -13,7 +13,7 @@ routed event table (SURVEY.md §7.3 risk 3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -102,22 +102,3 @@ def mls_relationship_expr(s_mls: Column, t_mls: Column) -> Column:
         .when((s_only > 0) & (t_only == 0), F.lit("mcs_source_superset"))
         .otherwise(F.lit("mcs_disjoint"))
     )
-
-
-MLS_MESSAGES = [
-    ("no_read_up", "MLS 'No Read Up' (Simple Security Property): process level below target classification"),
-    ("no_write_down", "MLS 'No Write Down' (Star Property): writing to lower-classified object blocked"),
-    ("mcs_missing_categories", "MCS compartmentalization: target categories not in source's current level"),
-    ("mcs_source_superset", "Source clearance is a superset of target categories; write may still be blocked"),
-    ("mcs_disjoint", "MCS compartmentalization: disjoint category sets between source and target"),
-]
-
-
-def with_mls_analysis(df: DataFrame, s_col: str = "sc_mls", t_col: str = "tc_mls") -> DataFrame:
-    """Attach mls_case + broadcast-joined mls_analysis description."""
-    spark = df.sparkSession
-    out = df.withColumn(
-        "mls_case", mls_relationship_expr(F.col(s_col), F.col(t_col))
-    )
-    dim = spark.createDataFrame(MLS_MESSAGES, "mls_case string, mls_analysis string")
-    return out.join(F.broadcast(dim), "mls_case", "left")

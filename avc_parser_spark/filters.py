@@ -143,12 +143,6 @@ def filter_source_context(groups: DataFrame, spec: str) -> DataFrame:
     )
 
 
-def filter_target_context(groups: DataFrame, spec: str) -> DataFrame:
-    return groups.filter(
-        _context_match(F.coalesce(F.col("representative.tcontext_raw"), F.lit("")), spec)
-    )
-
-
 def filter_mls_only(groups: DataFrame) -> DataFrame:
     """F5 — keep groups whose contexts carry a non-trivial MLS component."""
     smls = F.regexp_extract(F.col("representative.scontext_raw"), r"^[^:]+:[^:]+:[^:]+:(.+)$", 1)

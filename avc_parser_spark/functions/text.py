@@ -112,13 +112,6 @@ def stopword_ratio(text: Column) -> Column:
     return F.when(n <= 0, F.lit(0.0)).otherwise(sw / n)
 
 
-def mean_word_length(text: Column) -> Column:
-    toks = F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
-    n = F.size(toks)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(n <= 0, F.lit(0.0)).otherwise(total / n)
-
-
 def quality_score(text: Column) -> Column:
     """Composite document quality in [0,1]: length band + stopword presence
     + low punctuation noise (web-pipeline heuristic, Gopher-rule flavored)."""

@@ -81,18 +81,6 @@ def per_lang_hour_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def monitoring_rollup(events: DataFrame) -> DataFrame:
-    """Job-health metrics per route: row counts + approximate distincts
-    (approx_count_distinct is monitoring-only — SURVEY §2.9: every
-    correctness-gated aggregate stays exact)."""
-    return events.groupBy("route").agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.approx_count_distinct("url").alias("approx_docs"),
-        F.approx_count_distinct("sig_id").alias("approx_signatures"),
-        F.sum("malformed_lines").alias("malformed_lines"),
-    )
-
-
 def run_pipeline(pages: DataFrame, salted: bool = True) -> dict[str, DataFrame]:
     """Full composition. Returns the principal output frames (lazy)."""
     events = parse_and_sign(pages)

@@ -29,7 +29,7 @@ def load_reference():
     module, or None if unavailable (tests then skip)."""
     global _loaded
     if _loaded is not None:
-        return _loaded
+        return _loaded or None
     try:
         if "rich" not in sys.modules:
             subs = [

@@ -174,24 +174,126 @@ def test_checkpoint_partial_write_recovery(spark, tmp_path):
     assert part in r3["processed"]
 
 
-def test_checkpoint_detects_in_place_rewrite(spark, tmp_path):
-    """An input file rewritten IN PLACE with identical name+size must still
-    invalidate the partition fingerprint (mtime_ns is part of it)."""
+AUDIT_BLOCK = (
+    "type=AVC msg=audit(1700000000.100:{i}): avc:  denied  {{ read }} "
+    "for pid={i} comm=c{i} scontext=u:r:t:s0 tcontext=u:r:f:s0 "
+    "tclass=file\n"
+)
+
+
+def _checkpoint_source(spark, tmp_path, kind):
+    """A small input for one checkpointed front door. Returns
+    run(out) -> result, files(part) -> the unit's input files, and
+    read(part) -> the unit's input frame as the loop reads it."""
     import glob
     import os
 
+    from avc_parser_spark.checkpoint import (
+        run_audit_logs_with_checkpoints,
+        run_with_checkpoints,
+    )
+
+    if kind == "pages":
+        from avc_parser_spark.datagen.pages import write_pages_warehouse
+
+        root = str(tmp_path / "pages")
+        write_pages_warehouse(spark, root, 200)
+
+        def unit_dir(part):
+            return os.path.join(root, f"warc_date={part}")
+
+        return (
+            lambda out: run_with_checkpoints(spark, root, out),
+            lambda part: glob.glob(os.path.join(unit_dir(part), "*.parquet")),
+            lambda part: spark.read.parquet(unit_dir(part)),
+        )
+
+    from avc_parser_spark.sources import read_audit_logs
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    # day1 is all parse_ok; day2 adds a malformed block (one malformed line)
+    (logs / "day1.log").write_text(
+        "----\n" + AUDIT_BLOCK.format(i=1) + "----\n" + AUDIT_BLOCK.format(i=2)
+    )
+    (logs / "day2.log").write_text(
+        "----\n" + AUDIT_BLOCK.format(i=3) + "----\ntype=AVC msg=audit(bogus\n"
+    )
+    return (
+        lambda out: run_audit_logs_with_checkpoints(spark, str(logs), out),
+        lambda part: [str(logs / part.removeprefix("log-"))],
+        lambda part: read_audit_logs(spark, str(logs / part.removeprefix("log-"))),
+    )
+
+
+@pytest.mark.parametrize("kind", ["pages", "audit_logs"])
+def test_checkpoint_detects_in_place_rewrite(spark, tmp_path, kind):
+    """An input file rewritten IN PLACE with identical name+size within the
+    same second must still invalidate the unit fingerprint (mtime_ns is
+    part of it)."""
+    import os
+
+    run, files, _ = _checkpoint_source(spark, tmp_path, kind)
+    out_path = str(tmp_path / "out")
+    r1 = run(out_path)
+    part = r1["processed"][0]
+
+    f = files(part)[0]
+    st = os.stat(f)
+    with open(f, "rb") as fh:
+        data = fh.read()
+    with open(f, "r+b") as fh:
+        fh.write(data)
+    # keep the whole second, move only the sub-second part of the mtime
+    sec, frac = divmod(st.st_mtime_ns, 10**9)
+    os.utime(f, ns=(st.st_atime_ns, sec * 10**9 + (frac + 500_000_000) % 10**9))
+    st2 = os.stat(f)
+    assert st2.st_size == st.st_size and int(st2.st_mtime) == int(st.st_mtime)
+    assert st2.st_mtime_ns != st.st_mtime_ns
+
+    r2 = run(out_path)
+    assert part in r2["processed"]  # reprocessed despite same name+size
+
+
+@pytest.mark.parametrize("kind", ["pages", "audit_logs"])
+def test_checkpoint_manifest_counts_match_read_back(spark, tmp_path, kind):
+    """The manifest's observed metrics equal counts read back from the
+    unit's input and from the events table the loop wrote."""
+    import os
+
+    run, _, read = _checkpoint_source(spark, tmp_path, kind)
+    out_path = str(tmp_path / "out")
+    r = run(out_path)
+    assert r["processed"]
+    for part, entry in r["manifest"].items():
+        written = spark.read.parquet(os.path.join(out_path, "events", f"warc_date={part}"))
+        routed = {x["route"]: x["count"] for x in written.groupBy("route").count().collect()}
+        assert entry["input_rows"] == read(part).count()
+        assert entry["routed_rows"] == routed  # zero-row routes left out
+        assert entry["output_rows"] == written.count()
+        malformed = written.agg(F.sum("malformed_lines")).first()[0] or 0
+        assert entry["malformed_lines"] == malformed
+    if kind == "audit_logs":
+        assert r["manifest"]["log-day1.log"]["routed_rows"] == {"parse_ok": 2}
+        assert r["manifest"]["log-day2.log"]["malformed_lines"] == 1
+
+
+def test_checkpoint_jobs_per_partition(spark, tmp_path):
+    """The observed metrics fill during the events write: a processed
+    partition runs at most 2 Spark jobs (parquet schema read + write),
+    with no count() or read-back job."""
     from avc_parser_spark.checkpoint import run_with_checkpoints
     from avc_parser_spark.datagen.pages import write_pages_warehouse
 
     pages_path = str(tmp_path / "pages")
-    out_path = str(tmp_path / "out")
-    write_pages_warehouse(spark, pages_path, 200)
-    r1 = run_with_checkpoints(spark, pages_path, out_path)
-    part = r1["processed"][0]
-
-    f = glob.glob(os.path.join(pages_path, f"warc_date={part}", "*.parquet"))[0]
-    st = os.stat(f)
-    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-
-    r2 = run_with_checkpoints(spark, pages_path, out_path)
-    assert part in r2["processed"]  # reprocessed despite same name+size
+    write_pages_warehouse(spark, pages_path, 300)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-jobs", "run_with_checkpoints")
+    try:
+        r = run_with_checkpoints(spark, pages_path, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-jobs")
+    assert r["processed"]
+    assert 0 < len(jobs) <= 2 * len(r["processed"])

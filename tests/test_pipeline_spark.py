@@ -168,17 +168,6 @@ def test_capped_sets_exact_below_cap(spark, events):
             assert sorted(r["permissions"]) == exact[r["sig_id"]]
 
 
-def test_monitoring_rollup(spark, events):
-    from avc_parser_spark.pipeline import monitoring_rollup
-
-    ev = signature_exprs(events)
-    rows = {r["route"]: r for r in monitoring_rollup(ev).collect()}
-    assert set(rows) == {"parse_ok", "malformed", "quarantine"}
-    ok = rows["parse_ok"]
-    exact_docs = ev.filter(F.col("route") == "parse_ok").select("url").distinct().count()
-    assert abs(ok["approx_docs"] - exact_docs) / exact_docs < 0.1
-
-
 def test_hot_signature_salting_splits_state(spark):
     """The reference premise: one signature can be >50% of all events
     (10k raw -> ~20 groups). Salting must spread that hot key across
