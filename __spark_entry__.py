@@ -796,130 +796,129 @@ def q_token_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_terms = docs.select(
         F.col("lang"), F.explode(F.split(F.col("text"), " ")).alias("term")
     ).filter(F.col("term") != "")
-    pool = ThreadPoolExecutor(max_workers=3)
-    f_counters = pool.submit(
-        cms_build(cms_terms, width=cms_w, depth=cms_d).collect
-    )
-    f_kmv = pool.submit(
-        kmv_build_grouped(lang_terms, "lang", k=kmv_k).collect
-    )
-    f_lm = pool.submit(
-        lambda: {k: v.localCheckpoint() for k, v in lm.items()}
-    )
-    # (results harvested below, once every independent mode is built — the
-    # driver-side construction of the remaining modes overlaps the two
-    # corpus passes running on the pool)
-    cms_exact = (
-        cms_terms.filter(F.col("term").isin(cms_probe_terms))
-        .groupBy("term")
-        .count()
-    )
-    # hll: HyperLogLog cardinality registers over the same doc word stream
-    # (p=6 → ≤64 rows regardless of corpus size). Every register is pure
-    # integer arithmetic (md5-slice hash, idx = low bits, rho via
-    # length(bin(w))) so the whole sketch — not an approximation of it —
-    # is re-derived bit-exactly in DuckDB. n2 = distinct terms per
-    # register pins the index assignment independently of rho.
-    hll_p = 6
-    hll_terms = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("term")
-    ).filter(F.col("term") != "")
-    # r6: the register maxes (hll_build's aggregation) and the per-register
-    # distinct-term pin previously ran as two independent corpus explodes
-    # joined on idx; both group by the same register index over the same
-    # stream, so ONE pass computes both (guide §2.3 — aggregate before you
-    # shuffle; hll_build's own arithmetic is reused via _hll_register_cols
-    # and stays pinned by its pytest + the unchanged oracle).
-    from avc_parser_spark.functions.dedup import _hll_register_cols
-
-    _hidx, _hrho = _hll_register_cols(F.col("term"), hll_p)
-    hll_fused = (
-        hll_terms.select(_hidx.alias("idx"), _hrho.alias("rho"), "term")
-        .groupBy("idx")
-        .agg(
-            F.max("rho").cast("long").alias("rho"),
-            F.countDistinct("term").alias("n_distinct"),
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_counters = pool.submit(
+            cms_build(cms_terms, width=cms_w, depth=cms_d).collect
         )
-    )
-    from avc_parser_spark.functions.text import exact_quantiles, weighted_sample
+        f_kmv = pool.submit(
+            kmv_build_grouped(lang_terms, "lang", k=kmv_k).collect
+        )
+        f_lm = pool.submit(
+            lambda: {k: v.localCheckpoint() for k, v in lm.items()}
+        )
+        # (results harvested below, once every independent mode is built — the
+        # driver-side construction of the remaining modes overlaps the two
+        # corpus passes running on the pool)
+        cms_exact = (
+            cms_terms.filter(F.col("term").isin(cms_probe_terms))
+            .groupBy("term")
+            .count()
+        )
+        # hll: HyperLogLog cardinality registers over the same doc word stream
+        # (p=6 → ≤64 rows regardless of corpus size). Every register is pure
+        # integer arithmetic (md5-slice hash, idx = low bits, rho via
+        # length(bin(w))) so the whole sketch — not an approximation of it —
+        # is re-derived bit-exactly in DuckDB. n2 = distinct terms per
+        # register pins the index assignment independently of rho.
+        hll_p = 6
+        hll_terms = docs.select(
+            F.explode(F.split(F.col("text"), " ")).alias("term")
+        ).filter(F.col("term") != "")
+        # r6: the register maxes (hll_build's aggregation) and the per-register
+        # distinct-term pin previously ran as two independent corpus explodes
+        # joined on idx; both group by the same register index over the same
+        # stream, so ONE pass computes both (guide §2.3 — aggregate before you
+        # shuffle; hll_build's own arithmetic is reused via _hll_register_cols
+        # and stays pinned by its pytest + the unchanged oracle).
+        from avc_parser_spark.functions.dedup import _hll_register_cols
 
-    # quantile: EXACT corpus length percentiles the 100 TB way — aggregate
-    # to the bounded per-value count table first, window over ≤|domain|
-    # rows (see exact_quantiles); pinned ceil-threshold pick, integer
-    # arithmetic ⇒ the exact percentile values re-derive in DuckDB.
-    quant = exact_quantiles(
-        prof.select(F.col("n_tokens").alias("v")), "v", (25, 50, 75, 90, 99)
-    ).select(
-        F.lit("quantile").alias("mode"),
-        F.col("q").cast("string").alias("k"),
-        F.col("value").alias("n1"),
-        F.col("n_total").cast("long").alias("n2"),
-        null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
-    )
+        _hidx, _hrho = _hll_register_cols(F.col("term"), hll_p)
+        hll_fused = (
+            hll_terms.select(_hidx.alias("idx"), _hrho.alias("rho"), "term")
+            .groupBy("idx")
+            .agg(
+                F.max("rho").cast("long").alias("rho"),
+                F.countDistinct("term").alias("n_distinct"),
+            )
+        )
+        from avc_parser_spark.functions.text import exact_quantiles, weighted_sample
 
-    from avc_parser_spark.functions.text import fim_transform, span_corrupt
+        # quantile: EXACT corpus length percentiles the 100 TB way — aggregate
+        # to the bounded per-value count table first, window over ≤|domain|
+        # rows (see exact_quantiles); pinned ceil-threshold pick, integer
+        # arithmetic ⇒ the exact percentile values re-derive in DuckDB.
+        quant = exact_quantiles(
+            prof.select(F.col("n_tokens").alias("v")), "v", (25, 50, 75, 90, 99)
+        ).select(
+            F.lit("quantile").alias("mode"),
+            F.col("q").cast("string").alias("k"),
+            F.col("value").alias("n1"),
+            F.col("n_total").cast("long").alias("n2"),
+            null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
+        )
 
-    # fim: fill-in-the-middle PSM layout — shuffle-free native transform;
-    # the md5 prefix binds the exact rebuilt string.
-    fim = fim_transform(docs).select(
-        F.lit("fim").alias("mode"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.conv(F.substring(F.md5("fim_text"), 1, 14), 16, 10)
-        .cast("long").alias("n1"),
-        F.col("cut_lo").alias("n2"),
-        F.col("cut_hi").alias("n3"),
-        null_n.alias("n4"),
-        null_n.alias("n5"),
-    )
+        from avc_parser_spark.functions.text import fim_transform, span_corrupt
 
-    # t5span: T5 denoising pairs over the corpus — the 14-hex md5 prefixes
-    # bind the exact input/target STRINGS cross-engine.
-    t5 = span_corrupt(docs, 150).select(
-        F.lit("t5span").alias("mode"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.conv(F.substring(F.md5("input_text"), 1, 14), 16, 10)
-        .cast("long").alias("n1"),
-        F.conv(F.substring(F.md5("target_text"), 1, 14), 16, 10)
-        .cast("long").alias("n2"),
-        F.col("n_spans").alias("n3"),
-        F.col("n_masked").alias("n4"),
-        null_n.alias("n5"),
-    )
+        # fim: fill-in-the-middle PSM layout — shuffle-free native transform;
+        # the md5 prefix binds the exact rebuilt string.
+        fim = fim_transform(docs).select(
+            F.lit("fim").alias("mode"),
+            F.col("doc_id").cast("string").alias("k"),
+            F.conv(F.substring(F.md5("fim_text"), 1, 14), 16, 10)
+            .cast("long").alias("n1"),
+            F.col("cut_lo").alias("n2"),
+            F.col("cut_hi").alias("n3"),
+            null_n.alias("n4"),
+            null_n.alias("n5"),
+        )
 
-    # wsample: deterministic Efraimidis-Spirakis weighted sampling — the
-    # top-40 exponential-race winners weighted by length(text)+1. The
-    # integer race keys make the exact selected set (and each key)
-    # enumerable in DuckDB from the same md5/ln-micro arithmetic.
-    wsample = weighted_sample(
-        docs.withColumn("_w", F.length("text") + F.lit(1)),
-        40,
-        "_w",
-    ).select(
-        F.lit("wsample").alias("mode"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.col("sample_key").alias("n1"),
-        F.col("_w").cast("long").alias("n2"),
-        null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
-    )
-    from avc_parser_spark.functions.text import training_order
+        # t5span: T5 denoising pairs over the corpus — the 14-hex md5 prefixes
+        # bind the exact input/target STRINGS cross-engine.
+        t5 = span_corrupt(docs, 150).select(
+            F.lit("t5span").alias("mode"),
+            F.col("doc_id").cast("string").alias("k"),
+            F.conv(F.substring(F.md5("input_text"), 1, 14), 16, 10)
+            .cast("long").alias("n1"),
+            F.conv(F.substring(F.md5("target_text"), 1, 14), 16, 10)
+            .cast("long").alias("n2"),
+            F.col("n_spans").alias("n3"),
+            F.col("n_masked").alias("n4"),
+            null_n.alias("n5"),
+        )
 
-    # order: deterministic training-data order — shard = md5-key mod 8,
-    # pos = rank of the key within the shard (one hash exchange + local
-    # sort; no global sort). A pure function of the id set, so DuckDB
-    # re-derives every (shard, pos) from the same 14-hex md5 arithmetic.
-    order = training_order(docs, 8, method="md5").select(
-        F.lit("order").alias("mode"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.col("shard").cast("long").alias("n1"),
-        F.col("pos").alias("n2"),
-        null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
-    )
-    # Harvest the overlapped corpus passes (see the pool.submit calls
-    # above); everything from here on depends on their results.
-    counter_rows = f_counters.result()
-    kmv_grouped_rows = f_kmv.result()
-    lm_ck = f_lm.result()
-    pool.shutdown()
+        # wsample: deterministic Efraimidis-Spirakis weighted sampling — the
+        # top-40 exponential-race winners weighted by length(text)+1. The
+        # integer race keys make the exact selected set (and each key)
+        # enumerable in DuckDB from the same md5/ln-micro arithmetic.
+        wsample = weighted_sample(
+            docs.withColumn("_w", F.length("text") + F.lit(1)),
+            40,
+            "_w",
+        ).select(
+            F.lit("wsample").alias("mode"),
+            F.col("doc_id").cast("string").alias("k"),
+            F.col("sample_key").alias("n1"),
+            F.col("_w").cast("long").alias("n2"),
+            null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
+        )
+        from avc_parser_spark.functions.text import training_order
+
+        # order: deterministic training-data order — shard = md5-key mod 8,
+        # pos = rank of the key within the shard (one hash exchange + local
+        # sort; no global sort). A pure function of the id set, so DuckDB
+        # re-derives every (shard, pos) from the same 14-hex md5 arithmetic.
+        order = training_order(docs, 8, method="md5").select(
+            F.lit("order").alias("mode"),
+            F.col("doc_id").cast("string").alias("k"),
+            F.col("shard").cast("long").alias("n1"),
+            F.col("pos").alias("n2"),
+            null_n.alias("n3"), null_n.alias("n4"), null_n.alias("n5"),
+        )
+        # Harvest the overlapped corpus passes (see the pool.submit calls
+        # above); everything from here on depends on their results.
+        counter_rows = f_counters.result()
+        kmv_grouped_rows = f_kmv.result()
+        lm_ck = f_lm.result()
     ppl = lm_score(pdocs.filter(F.col("doc_id") % 50 == 11), lm_ck).select(
         F.lit("ppl").alias("mode"),
         F.col("doc_id").cast("string").alias("k"),
@@ -1403,7 +1402,9 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # harvest the overlapped probe + training jobs
     qvec = f_qvec.result()
     if qvec is None:
-        pool.shutdown(wait=False)
+        # no query vector ⇒ the centroid training is moot: drop it if still
+        # queued and wait for a running one, so no job outlives the query
+        pool.shutdown(wait=True, cancel_futures=True)
         return _empty_topk(emb).select(
             F.lit("brute").alias("mode"), "vec_id", "cosine"
         )

@@ -19,7 +19,9 @@ owns the COMPOSITION. Scale audit of the chain at 100 TB:
   shuffle on domain (the cap itself bounds what any hot domain emits).
 - Near-dup: sketch is narrow, bucket groupBy is one bounded shuffle
   (max_bucket cap), verification joins only candidate pairs.
-- Resolution: edges ≤ buckets × C(max_bucket, 2); O(log d) rounds.
+- Resolution: edges ≤ buckets × C(max_bucket, 2), both orientations built
+  from ONE read of the verified pairs, so the lazy sketch → bucket →
+  verify subtree runs once per run; O(log d) rounds.
 - Decontamination: eval grams BROADCAST; clean-doc grams die map-side.
 - LM filter: the (top-k capped) LM tables BROADCAST; scoring is one
   narrow pass + one partial-aggregated groupBy on doc id.

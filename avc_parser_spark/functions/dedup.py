@@ -830,11 +830,21 @@ def resolve_clusters(
 
     Returns (doc_id, keeper) for every vertex that appears in `pairs`.
     """
+    # Both orientations of each pair come from ONE read of `pairs`: a union
+    # of two selects under `persist` re-plans the whole lazy pair subtree
+    # (MinHash UDF, bucket shuffle, verify joins) once per branch, and AQE
+    # does not reuse those stages across the branches.
+    a, b = F.col(a_col), F.col(b_col)
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
         .distinct()
         # pre-partition the reusable join side by the per-round join key so
         # the cached edge table never re-exchanges inside the loop (r6,

@@ -102,11 +102,11 @@ def pagerank_micro_multi(
     if not variants:
         raise ValueError("pagerank_micro_multi: need at least one variant")
     reset = RANK_SCALE - damping_micro
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-    )
+    # one read of `edges` (a union of two selects would evaluate a lazy
+    # edge input twice)
+    nodes = edges.select(
+        F.explode(F.array(F.col(src_col), F.col(dst_col))).alias("node")
+    ).distinct()
     for name, seeds in variants.items():
         if seeds is None:
             nodes = nodes.withColumns(
@@ -277,11 +277,7 @@ def hits_micro(
     if iters < 0:
         raise ValueError("hits_micro: iters must be >= 0")
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     e = e.persist()
     zero = F.lit(0).cast("long")
     scores = nodes.select(

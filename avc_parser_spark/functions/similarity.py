@@ -13,6 +13,8 @@ Two paths:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -388,12 +390,24 @@ def quantized_topk(
 # ---------------------------------------------------------------------------
 
 
+def _double_sql(x: float, codeword: list[float]) -> str:
+    """`x` as a SQL double literal. NaN/inf have no literal form (`nanD`
+    fails to parse), so a non-finite value derived from `codeword` is
+    rejected here, naming the codeword, instead of inside the SQL parser."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"non-finite value {x!r} from codeword {list(codeword)!r}"
+        )
+    return repr(x) + "D"
+
+
 def _dot_sql(subvec_sql: str, c: list[float]) -> str:
     """SQL text of dot_expr(subvec, lit array) — identical zip_with /
     aggregate arithmetic, but one driver-side string instead of ~2·dim
     py4j calls (repr() round-trips every double exactly, and the JVM
     parses shortest-repr decimals back to the same double)."""
-    arr = "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
+    arr = "array(" + ",".join(_double_sql(x, c) for x in c) + ")"
     return (
         f"aggregate(zip_with({subvec_sql}, {arr}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -413,7 +427,7 @@ def _l2_argmin_sql(subvec_sql: str, codebook: list[list[float]]) -> str:
     Emitted as ONE parseable string for the same py4j-cost reason as
     _dot_sql (construction measured ~5 s per pq_encode call before)."""
     scores = "array(" + ",".join(
-        f"({repr(float(sum(x * x for x in c)))}D"
+        f"({_double_sql(sum(x * x for x in c), c)}"
         f" - ({_dot_sql(subvec_sql, c)} * 2.0D))"
         for c in codebook
     ) + ")"

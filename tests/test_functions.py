@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -318,6 +319,33 @@ def test_resolve_clusters_transitive_chain(spark):
     got = {r["doc_id"]: r["keeper"] for r in resolve_clusters(pairs).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10, 12: 10,
                    20: 20, 21: 20}
+
+
+def test_resolve_clusters_reads_pairs_once(spark):
+    """The edge build reads `pairs` once. A lazy pair frame (in curation: the
+    MinHash UDF, bucket shuffle and Jaccard joins) must not be re-planned
+    per edge orientation; an identity pandas UDF on column `a` counts the
+    pair rows it sees."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from avc_parser_spark.functions.dedup import resolve_clusters
+
+    rows_seen = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("long")
+    def counted(a: pd.Series) -> pd.Series:
+        rows_seen.add(len(a))
+        return a
+
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
+        "a long, b long",
+    ).select(counted("a").alias("a"), "b")
+    got = {r["doc_id"]: r["keeper"] for r in resolve_clusters(pairs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10, 12: 10,
+                   20: 20, 21: 20}
+    assert rows_seen.value == 7
 
 
 def test_resolve_clusters_matches_union_find(spark):
@@ -2810,6 +2838,24 @@ def test_pq_lossless_on_codeword_corpus(spark):
     adc = [r["vec_id"] for r in pq_topk(codes, books, q, k=10).collect()]
     exact = [r["vec_id"] for r in brute_force_topk(df, q, k=10).collect()]
     assert adc == exact
+
+
+def test_pq_non_finite_codebook_rejected(spark):
+    """A NaN/inf codeword (or one whose squared norm overflows) has no SQL
+    double literal: building the expression must raise a ValueError that
+    names the codeword, not emit `nanD`/`infD` for the SQL parser to choke
+    on."""
+    from avc_parser_spark.functions.similarity import ivf_assign, pq_encode
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0])], "vec_id: long, embedding: array<double>"
+    )
+    with pytest.raises(ValueError, match=r"codeword \[nan, 1\.0\]"):
+        pq_encode(df, [[[0.0, 0.0], [math.nan, 1.0]]])
+    with pytest.raises(ValueError, match=r"codeword \[1e\+200, 0\.0\]"):
+        pq_encode(df, [[[1e200, 0.0]]])
+    with pytest.raises(ValueError, match=r"codeword \[inf, 0\.0\]"):
+        ivf_assign(df, [[0.5, 0.5], [math.inf, 0.0]])
 
 
 def test_ivfpq_fused_probe_equals_brute(spark):
