@@ -11,11 +11,13 @@ a cold operation), alternating which side runs first from one seed to the
 next so that drift in the host's speed falls on both sides alike. The
 1-minute load average is read just before each run starts.
 
-Prints one line per run, then per side and per end-to-end metric of
-``BENCHMARK.json``: median, Q1, Q3 and (Q3-Q1)/median; then, for the
-``--metric`` (default ``docs_per_s``), the change's wins out of the pairs
-and the paired ratios (> 1 means the change is better, in the metric's own
-direction). The last line is a JSON object with every run.
+Prints one line per run. A pair is valid only when both of its runs exited
+0 and reported ``correct``; invalid pairs are listed and left out of
+everything after. Then, per side and per end-to-end metric of
+``BENCHMARK.json``: median, Q1, Q3 and (Q3-Q1)/median over the valid
+pairs; then, per metric, the change's wins and the paired ratios (> 1 means
+the change is better, in the metric's own direction). The last line is a
+JSON object with every run.
 """
 
 from __future__ import annotations
@@ -63,6 +65,8 @@ def _run(checkout: str, workload: str, seed: int) -> dict:
         "seed": seed,
         "load1": load1,
         "run_s": wall,
+        "exit": proc.returncode,
+        "ok": proc.returncode == 0 and res["correct"] is True,
         "attempted": res["attempted"],
         "failed": res["failed"],
         "metrics": {k: m["value"] for k, m in res["metrics"].items()},
@@ -82,7 +86,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--change", default=REPO, help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 801-810 or 1,5,9")
-    ap.add_argument("--metric", default="docs_per_s")
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -91,7 +94,7 @@ def main(argv: list[str] | None = None) -> int:
              "change": os.path.abspath(args.change)}
     runs: dict[str, list[dict]] = {"base": [], "change": []}
 
-    print("seed side   order load1  run_s  failed  " + args.metric)
+    print("seed side   order load1  run_s exit  failed  docs_per_s")
     for i, seed in enumerate(_seeds(args.seeds)):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for pos, side in enumerate(order):
@@ -99,37 +102,46 @@ def main(argv: list[str] | None = None) -> int:
             r["first"] = pos == 0
             runs[side].append(r)
             print(f"{seed:4d} {side:6s} {pos + 1:5d} {r['load1']:5.2f} "
-                  f"{r['run_s']:6.1f} {r['failed']:3d}/{r['attempted']:<3d} "
-                  f"{r['metrics'].get(args.metric, float('nan')):.6g}",
+                  f"{r['run_s']:6.1f} {r['exit']:4d} "
+                  f"{r['failed']:3d}/{r['attempted']:<3d} "
+                  f"{r['metrics'].get('docs_per_s', float('nan')):.6g}",
                   flush=True)
+
+    pairs = list(zip(runs["base"], runs["change"]))
+    invalid = [b["seed"] for b, c in pairs if not (b["ok"] and c["ok"])]
+    valid = [(b, c) for b, c in pairs if b["ok"] and c["ok"]]
+    print(f"\nvalid pairs {len(valid)}/{len(pairs)}"
+          + (f"; invalid (a run failed or was not correct): seeds "
+             + " ".join(map(str, invalid)) if invalid else ""))
 
     print("\nmetric                      side    median        Q1        Q3  IQR/median")
     for name in better:
-        for side in ("base", "change"):
-            xs = [r["metrics"][name] for r in runs[side] if name in r["metrics"]]
+        for k, side in enumerate(("base", "change")):
+            xs = [p[k]["metrics"][name] for p in valid if name in p[k]["metrics"]]
             if not xs:
                 continue
             q1, med, q3 = _quartiles(xs)
             spread = (q3 - q1) / med if med else float("nan")
             print(f"{name:27s} {side:6s} {med:9.4g} {q1:9.4g} {q3:9.4g} {spread:10.3f}")
 
-    sign = 1 if better.get(args.metric, "higher") == "higher" else -1
-    ratios = []
-    for b, c in zip(runs["base"], runs["change"]):
-        vb, vc = b["metrics"].get(args.metric), c["metrics"].get(args.metric)
-        if vb and vc:
-            ratios.append((vc / vb) ** sign)
-    wins = sum(r > 1 for r in ratios)
-    print(f"\n{args.metric}: change wins {wins}/{len(ratios)} pairs; paired ratios "
-          + " ".join(f"{r:.3f}" for r in ratios)
-          + (f"; median {median(ratios):.3f}" if ratios else ""))
+    print()
+    summary: dict[str, dict] = {}
+    for name, direction in better.items():
+        sign = 1 if direction == "higher" else -1
+        ratios = [(c["metrics"][name] / b["metrics"][name]) ** sign
+                  for b, c in valid
+                  if b["metrics"].get(name) and c["metrics"].get(name)]
+        wins = sum(r > 1 for r in ratios)
+        summary[name] = {"wins": wins, "pairs": len(ratios), "ratios": ratios}
+        print(f"{name}: change wins {wins}/{len(ratios)} pairs; paired ratios "
+              + " ".join(f"{r:.3f}" for r in ratios)
+              + (f"; median {median(ratios):.3f}" if ratios else ""))
     loads = [r["load1"] for side in runs.values() for r in side]
     print(f"load1 {min(loads):.2f}-{max(loads):.2f}; failed ops base "
           f"{sum(r['failed'] for r in runs['base'])}, change "
           f"{sum(r['failed'] for r in runs['change'])}")
-    print(json.dumps({"workload": args.workload, "metric": args.metric,
-                      "wins": wins, "pairs": len(ratios), "ratios": ratios,
-                      "runs": runs}))
+    print(json.dumps({"workload": args.workload, "invalid_seeds": invalid,
+                      "metrics": summary, "runs": runs}))
     return 0
 
 

@@ -326,7 +326,6 @@ def test_resolve_clusters_reads_pairs_once(spark):
     MinHash UDF, bucket shuffle and Jaccard joins) must not be re-planned
     per edge orientation; an identity pandas UDF on column `a` counts the
     pair rows it sees."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from avc_parser_spark.functions.dedup import resolve_clusters
