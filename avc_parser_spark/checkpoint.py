@@ -39,7 +39,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from avc_parser_spark import __version__
-from avc_parser_spark.pipeline import ROUTES, parse_and_sign
+from avc_parser_spark.enrich.join import signature_exprs
+from avc_parser_spark.parse.udf import parse_pages
+from avc_parser_spark.pipeline import ROUTES
 
 MANIFEST_DIR = "_manifest"
 
@@ -103,7 +105,7 @@ def _run_units(
         pages = reader(spark, source).observe(
             seen_in, F.count(F.lit(1)).alias("input_rows")
         )
-        events = parse_and_sign(pages).observe(
+        events = signature_exprs(parse_pages(pages)).observe(
             seen_out,
             F.count(F.lit(1)).alias("output_rows"),
             F.coalesce(F.sum("malformed_lines"), F.lit(0)).alias("malformed_lines"),

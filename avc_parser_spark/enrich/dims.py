@@ -203,7 +203,8 @@ SERVICE_MAPPINGS = [
 ]
 
 # E9 — (tclass_group, permission) → permission category (parse_avc.py:1546-1662)
-# exploded form for broadcast join; fallbacks handled by expression.
+# in the reference's if/elif order; join.permission_category_expr generates
+# its when-cascade from these rows.
 PERM_CATEGORY_ROWS: list[tuple[str, str, str]] = (
     [("fs", p, "file_access") for p in ["read", "write", "append", "getattr", "open"]]
     + [("fs", p, "file_create") for p in ["create", "add_name", "setattr"]]
@@ -274,13 +275,6 @@ def build_dims(spark: SparkSession) -> dict[str, DataFrame]:
         ),
         "port_desc": spark.createDataFrame(
             PORT_DESCRIPTIONS, "dest_port string, port_description string"
-        ),
-        "service_map": spark.createDataFrame(
-            SERVICE_MAPPINGS, "comm string, process_category string"
-        ),
-        "perm_category": spark.createDataFrame(
-            PERM_CATEGORY_ROWS,
-            "tclass_group string, permission string, permission_category string",
         ),
         "perm_context_desc": spark.createDataFrame(
             PERM_CONTEXT_DESCRIPTIONS,

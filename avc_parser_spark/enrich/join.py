@@ -7,6 +7,8 @@ free of Python round-trips (the parse UDF is the only Python in the plan).
 
 from __future__ import annotations
 
+from itertools import groupby
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from avc_parser_spark.enrich.dims import (
     NETWORK_OBJECT_CLASSES,
     NETWORK_PERM_CLASSES,
     PATH_PATTERNS,
+    PERM_CATEGORY_ROWS,
     SYSTEM_CLASSES,
     build_dims,
 )
@@ -50,61 +53,42 @@ def process_category_expr(comm: Column, sc_type: Column) -> Column:
     )
 
 
-def permission_category_fallback_expr(permission: Column, tclass: Column) -> Column:
-    """Fallback when the (group, permission) broadcast lookup misses
-    (parse_avc.py:1546-1662 else-branches)."""
-    return (
-        F.when(
-            tclass.isin(*FILESYSTEM_CLASSES), F.concat(F.lit("file_"), permission)
-        )
-        .when(tclass.isin(*NETWORK_PERM_CLASSES), F.concat(F.lit("net_"), permission))
-        .when(tclass == "process", F.concat(F.lit("process_"), permission))
-        .when(tclass == "dbus", F.concat(F.lit("dbus_"), permission))
-        .when(tclass == "key", F.concat(F.lit("key_"), permission))
-        .when(
-            tclass.isin("capability", "capability2"),
-            F.concat(F.lit("capability_"), permission),
-        )
-        .when(tclass == "security", F.concat(F.lit("security_"), permission))
-        .otherwise(permission)
-    )
+# E9 tclass group → the object classes it covers; any other group is the
+# one class of the same name.
+PERM_GROUP_CLASSES = {
+    "fs": FILESYSTEM_CLASSES,
+    "net": NETWORK_PERM_CLASSES,
+    "capability": ["capability", "capability2"],
+}
 
 
 def permission_category_expr(permission: Column, tclass: Column) -> Column:
-    """Self-contained permission categorization (join-free variant used by
-    oracle-checked queries; enrich_events uses the broadcast-join variant)."""
-    # tclass → lookup group
-    fs = tclass.isin(*FILESYSTEM_CLASSES)
-    net = tclass.isin(*NETWORK_PERM_CLASSES)
+    """Permission categorization (parse_avc.py:1546-1662), fully native.
 
-    def inset(*perms: str) -> Column:
-        return permission.isin(*perms)
+    One `when` per (group, category) run of PERM_CATEGORY_ROWS, in row
+    order; a miss falls back to `<group prefix>_<permission>` for a known
+    group (prefix `file` for `fs`) and to the bare permission otherwise."""
 
-    return (
-        F.when(fs & inset("read", "write", "append", "getattr", "open"), F.lit("file_access"))
-        .when(fs & inset("create", "add_name", "setattr"), F.lit("file_create"))
-        .when(fs & inset("execute", "execute_no_trans", "entrypoint"), F.lit("file_execute"))
-        .when(fs & inset("unlink", "remove_name", "rename", "rmdir"), F.lit("file_manage"))
-        .when(net & inset("name_bind", "bind", "listen"), F.lit("net_bind"))
-        .when(net & inset("name_connect", "connect", "send_msg", "recv_msg"), F.lit("net_connect"))
-        .when((tclass == "process") & inset("signal", "signull", "sigkill", "sigstop"), F.lit("process_signal"))
-        .when((tclass == "process") & inset("ptrace", "getsched", "setsched"), F.lit("process_trace"))
-        .when((tclass == "process") & inset("transition", "entrypoint", "execute"), F.lit("process_transition"))
-        .when((tclass == "dbus") & inset("send_msg", "acquire_svc", "own"), F.lit("dbus_communication"))
-        .when((tclass == "key") & inset("read", "view", "search", "link"), F.lit("key_access"))
-        .when((tclass == "key") & inset("write", "create", "setattr", "chown"), F.lit("key_manage"))
-        .when(
-            tclass.isin("capability", "capability2")
-            & inset("use", "audit_access", "audit_control", "setuid", "setgid"),
-            F.lit("capability_use"),
+    def in_group(group: str) -> Column:
+        if group in PERM_GROUP_CLASSES:
+            return tclass.isin(*PERM_GROUP_CLASSES[group])
+        return tclass == group
+
+    # F.when starts each chain and Column.when extends it
+    fallback = F
+    for group in dict.fromkeys(g for g, _, _ in PERM_CATEGORY_ROWS):
+        prefix = "file" if group == "fs" else group
+        fallback = fallback.when(
+            in_group(group), F.concat(F.lit(prefix + "_"), permission)
         )
-        .when(
-            (tclass == "security")
-            & inset("enforce", "load_policy", "compute_av", "compute_create", "check_context"),
-            F.lit("security_control"),
-        )
-        .otherwise(permission_category_fallback_expr(permission, tclass))
-    )
+
+    expr = F
+    for (group, category), rows in groupby(
+        PERM_CATEGORY_ROWS, key=lambda row: (row[0], row[2])
+    ):
+        perms = [p for _, p, _ in rows]
+        expr = expr.when(in_group(group) & permission.isin(*perms), F.lit(category))
+    return expr.otherwise(fallback.otherwise(permission))
 
 
 def object_group_expr(tclass: Column) -> Column:
@@ -203,21 +187,6 @@ def signature_exprs(df: DataFrame) -> DataFrame:
         .withColumn("sig_id", F.xxhash64("signature"))
     )
     return df
-
-
-def legacy_signature_exprs(df: DataFrame) -> DataFrame:
-    """Legacy exact signature (scontext, tcontext, tclass, permission) —
-    parse_avc.py:1883-1892; kept for regression A/B."""
-    return df.withColumn(
-        "signature",
-        F.concat_ws(
-            "␟",
-            F.coalesce(F.col("scontext_raw"), F.lit("")),
-            F.coalesce(F.col("tcontext_raw"), F.lit("")),
-            F.coalesce(F.col("tclass"), F.lit("")),
-            F.coalesce(F.col("permission"), F.lit("")),
-        ),
-    ).withColumn("sig_id", F.xxhash64("signature"))
 
 
 def sesearch_expr() -> Column:

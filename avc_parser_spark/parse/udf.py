@@ -1,4 +1,4 @@
-"""Spark wrapper for the parse kernel: mapInPandas over Arrow batches.
+"""Spark wrapper for the parse kernel: mapInArrow over Arrow batches.
 
 The kernel is document-local (a page's blocks are self-contained), so the
 entire parse → shared-context merge → route computation is a *narrow*
@@ -9,7 +9,7 @@ only shuffles in the whole pipeline are the signature aggregations.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -71,32 +71,25 @@ EVENT_SCHEMA_DDL = ", ".join(
 # largest string column never crosses the Arrow boundary.
 INNER_SCHEMA_DDL = EVENT_SCHEMA_DDL.replace(", extracted_text string", "")
 
-_DDL_TYPES = dict(
-    part.rsplit(" ", 1) for part in EVENT_SCHEMA_DDL.split(", ")
-)
 
-_ARROW_SCHEMAS: dict[str, object] = {}
-
-
-def _arrow_schema(ddl: str = INNER_SCHEMA_DDL):
-    """A DDL string as the exact Arrow schema Spark's mapInArrow expects
+@cache
+def _arrow_schema():
+    """INNER_SCHEMA_DDL as the exact Arrow schema Spark's mapInArrow expects
     (strings, timestamp[us, tz=UTC] under the pinned UTC session, bool,
     int64)."""
-    if ddl not in _ARROW_SCHEMAS:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        type_map = {
-            "string": pa.string(),
-            "timestamp": pa.timestamp("us", tz="UTC"),
-            "boolean": pa.bool_(),
-            "bigint": pa.int64(),
-        }
-        fields = []
-        for part in ddl.split(", "):
-            name, typ = part.rsplit(" ", 1)
-            fields.append(pa.field(name, type_map[typ]))
-        _ARROW_SCHEMAS[ddl] = pa.schema(fields)
-    return _ARROW_SCHEMAS[ddl]
+    type_map = {
+        "string": pa.string(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+        "boolean": pa.bool_(),
+        "bigint": pa.int64(),
+    }
+    fields = []
+    for part in INNER_SCHEMA_DDL.split(", "):
+        name, typ = part.rsplit(" ", 1)
+        fields.append(pa.field(name, type_map[typ]))
+    return pa.schema(fields)
 
 
 def extracted_text_expr():
@@ -116,7 +109,7 @@ def extracted_text_expr():
     return F.when(F.col("route") == "parse_ok", F.concat_ws("|", *pieces))
 
 
-def _pdf_to_batch(out: pd.DataFrame, ddl: str = INNER_SCHEMA_DDL):
+def _pdf_to_batch(out: pd.DataFrame):
     """pandas event frame → Arrow RecordBatch, column-at-a-time.
 
     This replaces Spark's generic pandas→Arrow serializer on the OUTPUT side
@@ -124,7 +117,7 @@ def _pdf_to_batch(out: pd.DataFrame, ddl: str = INNER_SCHEMA_DDL):
     types, no intermediate Series coercion pass."""
     import pyarrow as pa
 
-    schema = _arrow_schema(ddl)
+    schema = _arrow_schema()
     arrays = []
     for field in schema:
         col = out[field.name]
@@ -138,33 +131,23 @@ def _pdf_to_batch(out: pd.DataFrame, ddl: str = INNER_SCHEMA_DDL):
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def parse_pages(
-    pages: DataFrame,
-    jvm_pregate: bool = True,
-    arrow_output: bool = True,
-    columns: list[str] | None = None,
-) -> DataFrame:
+def parse_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → routed event DataFrame.
 
-    columns: optional subset of EVENT columns for aggregate-only consumers —
-    only those columns cross the Arrow boundary (url/route/parse_status are
-    always included; asking for extracted_text pulls in its source columns
-    internally but still projects to the requested set). Arrow path only.
-
-    arrow_output=True runs the kernel under mapInArrow: the input batch is
-    converted to pandas once (same as mapInPandas), but the 43-column event
-    OUTPUT is assembled into Arrow arrays directly (`_pdf_to_batch`) instead
-    of going through Spark's generic pandas→Arrow serializer — measurably
-    cheaper on the wide output side of the boundary. Semantics identical
-    (same kernel, same per-doc error salvage); arrow_output=False keeps the
-    mapInPandas path for A/B measurement.
+    The kernel runs under mapInArrow: the input batch is converted to
+    pandas once, and the 43-column event OUTPUT is assembled into Arrow
+    arrays directly (`_pdf_to_batch`) instead of going through Spark's
+    generic pandas→Arrow serializer. extracted_text is then built JVM-side
+    (`extracted_text_expr`). The kernel run on local pandas data
+    (`parse_pages_pdf`, which builds extracted_text itself) is the
+    reference this path is tested against.
 
     Column pruning matters at scale: only (url, warc_ts, text, lang) are
     selected, so Parquet/Iceberg never reads the heavy `html` binary column
     for the text parse path (check `.explain` ReadSchema).
 
-    jvm_pregate (V2/V3 as a native prefilter): non-audit blocks (filler
-    prose) are dropped JVM-side before the Arrow boundary — codegen
+    Native pregate (V2/V3): non-audit blocks (filler prose) are dropped
+    JVM-side before the Arrow boundary — codegen
     `filter(split(text,'----'), b -> b rlike ...)` — so only audit-bearing
     bytes pay the serialization tax. The quarantine signal (control bytes)
     is computed on the FULL text first, and carried as a one-char sentinel
@@ -173,11 +156,11 @@ def parse_pages(
     """
     from pyspark.sql import functions as F
 
-    def parse_with_salvage(
-        pdf: pd.DataFrame, build_extracted_text: bool = True
-    ) -> pd.DataFrame:
+    from avc_parser_spark.parse.kernels import EVENT_COLUMNS
+
+    def parse_with_salvage(pdf: pd.DataFrame) -> pd.DataFrame:
         try:
-            return parse_pages_pdf(pdf, build_extracted_text=build_extracted_text)
+            return parse_pages_pdf(pdf, build_extracted_text=False)
         except Exception:  # noqa: BLE001
             # V4 contract (parse_avc.py:477-482): NEVER fail the job.
             # Retry per document to salvage the good ones; the bad
@@ -186,11 +169,7 @@ def parse_pages(
             for i in range(len(pdf)):
                 one = pdf.iloc[i : i + 1]
                 try:
-                    frames.append(
-                        parse_pages_pdf(
-                            one, build_extracted_text=build_extracted_text
-                        )
-                    )
+                    frames.append(parse_pages_pdf(one, build_extracted_text=False))
                 except Exception as doc_err:  # noqa: BLE001
                     stub = pd.DataFrame(
                         {
@@ -205,8 +184,6 @@ def parse_pages(
                     )
                     frames.append(stub)
             out = pd.concat(frames, ignore_index=True)
-            from avc_parser_spark.parse.kernels import EVENT_COLUMNS
-
             for col in EVENT_COLUMNS:
                 if col not in out.columns:
                     out[col] = None
@@ -217,59 +194,22 @@ def parse_pages(
             )
             return out[EVENT_COLUMNS]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield parse_with_salvage(pdf)
-
-    from avc_parser_spark.parse.kernels import EVENT_COLUMNS
-
-    if columns is None:
-        inner_cols = [c for c in EVENT_COLUMNS if c != "extracted_text"]
-        want_et, final_cols = True, None
-    else:
-        unknown = set(columns) - set(EVENT_COLUMNS)
-        if unknown:
-            raise ValueError(f"unknown event columns: {sorted(unknown)}")
-        want_et = "extracted_text" in columns
-        final_cols = list(
-            dict.fromkeys(["url", "route", "parse_status", *columns])
-        )
-        inner = set(final_cols) - {"extracted_text"}
-        if want_et:
-            from avc_parser_spark.parse.kernels import EXTRACT_FIELD_ORDER
-
-            inner |= set(EXTRACT_FIELD_ORDER)
-        inner_cols = [c for c in EVENT_COLUMNS if c in inner]
-    inner_ddl = ", ".join(f"{c} {_DDL_TYPES[c]}" for c in inner_cols)
-
     def run_arrow(batches):
         for batch in batches:
-            out = parse_with_salvage(batch.to_pandas(), build_extracted_text=False)
-            yield _pdf_to_batch(out, inner_ddl)
+            yield _pdf_to_batch(parse_with_salvage(batch.to_pandas()))
 
-    pruned = pages.select("url", "warc_ts", "text", "lang")
-    if jvm_pregate:
-        blocks = F.split(F.col("text"), "----")
-        kept = F.filter(
-            blocks, lambda b: b.rlike(r"type=\w+|msg=audit|avc:")
-        )
-        has_ctrl = F.col("text").rlike("[\x00-\x08\x0b\x0c\x0e-\x1f]")
-        gated_text = F.concat(
-            F.array_join(kept, "\n----\n"),
-            # control bytes anywhere in the doc must still quarantine it,
-            # even if they sit in a dropped block: append a sentinel.
-            F.when(has_ctrl, F.lit("\n----\n\x01ctrl\x01\n----\n")).otherwise(
-                F.lit("")
-            ),
-        )
-        pruned = pruned.select(
-            "url", "warc_ts", gated_text.alias("text"), "lang"
-        )
-    if arrow_output:
-        out = pruned.mapInArrow(run_arrow, schema=inner_ddl)
-        if want_et:
-            out = out.withColumn("extracted_text", extracted_text_expr())
-        return out.select(*final_cols) if final_cols else out
-    if columns is not None:
-        raise ValueError("columns narrowing requires arrow_output=True")
-    return pruned.mapInPandas(run, schema=EVENT_SCHEMA_DDL)
+    blocks = F.split(F.col("text"), "----")
+    kept = F.filter(blocks, lambda b: b.rlike(r"type=\w+|msg=audit|avc:"))
+    has_ctrl = F.col("text").rlike("[\x00-\x08\x0b\x0c\x0e-\x1f]")
+    gated_text = F.concat(
+        F.array_join(kept, "\n----\n"),
+        # control bytes anywhere in the doc must still quarantine it,
+        # even if they sit in a dropped block: append a sentinel.
+        F.when(has_ctrl, F.lit("\n----\n\x01ctrl\x01\n----\n")).otherwise(
+            F.lit("")
+        ),
+    )
+    pruned = pages.select("url", "warc_ts", gated_text.alias("text"), "lang")
+    return pruned.mapInArrow(run_arrow, schema=INNER_SCHEMA_DDL).withColumn(
+        "extracted_text", extracted_text_expr()
+    )

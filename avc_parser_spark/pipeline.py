@@ -1,6 +1,6 @@
 """End-to-end pipeline composition (SURVEY.md §7.0 skeleton).
 
-    pages → [prefilter] → PARSE (pandas UDF) → ENRICH (broadcast joins)
+    pages → [prefilter] → PARSE (mapInArrow) → ENRICH (broadcast joins)
           → ROUTE fan-out → per-sink salted aggregates → findings
 
 Stage shape at scale: scan→parse→enrich→route is ONE narrow stage (no
@@ -15,22 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from avc_parser_spark.aggregate import aggregate_signatures
-from avc_parser_spark.enrich.join import (
-    enrich_events,
-    legacy_signature_exprs,
-    sesearch_expr,
-    signature_exprs,
-)
+from avc_parser_spark.enrich.join import enrich_events, sesearch_expr, signature_exprs
 from avc_parser_spark.parse.udf import parse_pages
 
 ROUTES = ["parse_ok", "malformed", "quarantine"]
-
-
-def parse_and_sign(pages: DataFrame, legacy: bool = False) -> DataFrame:
-    """pages → parsed, enriched, signature-tagged event table."""
-    events = parse_pages(pages)
-    signed = legacy_signature_exprs(events) if legacy else signature_exprs(events)
-    return signed
 
 
 def route_split(events: DataFrame) -> dict[str, DataFrame]:
@@ -42,12 +30,12 @@ def route_split(events: DataFrame) -> dict[str, DataFrame]:
     return {r: events.filter(F.col("route") == r) for r in ROUTES}
 
 
-def denial_groups(events: DataFrame, salted: bool = True) -> DataFrame:
+def denial_groups(events: DataFrame) -> DataFrame:
     """parse_ok events → signature groups with sesearch remediation (E12)."""
     if "sig_id" not in events.columns:
         events = signature_exprs(events)
     ok = events.filter(F.col("route") == "parse_ok")
-    groups = aggregate_signatures(ok, salted=salted)
+    groups = aggregate_signatures(ok)
     groups = groups.withColumn(
         "sc_type", F.col("representative.sc_type")
     ).withColumn("tc_type", F.col("representative.tc_type")).withColumn(
@@ -81,15 +69,15 @@ def per_lang_hour_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def run_pipeline(pages: DataFrame, salted: bool = True) -> dict[str, DataFrame]:
+def run_pipeline(pages: DataFrame) -> dict[str, DataFrame]:
     """Full composition. Returns the principal output frames (lazy)."""
-    events = parse_and_sign(pages)
+    events = signature_exprs(parse_pages(pages))
     enriched = enrich_events(events)
     return {
         "events": events,
         "enriched": enriched,
         "routes": route_split(events),
-        "groups": denial_groups(events, salted=salted),
+        "groups": denial_groups(events),
         "route_counts": route_counts(events),
         "lang_hour": per_lang_hour_rollup(events),
     }

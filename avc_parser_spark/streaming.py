@@ -5,7 +5,7 @@ it batch with per-partition checkpoint/resume — but a web-scale deployment
 often tails a landing zone. This module runs the SAME parse kernel as an
 incremental file-source stream:
 
-    pages landing dir → readStream → parse (mapInPandas, stateless)
+    pages landing dir → readStream → parse (mapInArrow, stateless)
         → watermarked windowed aggregates / routed sink
 
 Semantics: identical to batch per micro-batch (the kernel is pure); late
@@ -37,8 +37,8 @@ def stream_pages(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 
 def stream_events(pages_stream: DataFrame) -> DataFrame:
-    """Streaming parse: the kernel is stateless, so mapInPandas applies
-    unchanged to the unbounded DataFrame."""
+    """Streaming parse: the kernel is stateless, so parse_pages' mapInArrow
+    applies unchanged to the unbounded DataFrame."""
     return parse_pages(pages_stream)
 
 

@@ -59,7 +59,6 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output path")
     ap.add_argument("--force", action="store_true", help="reprocess everything")
     ap.add_argument("--report", action="store_true", help="write JSON report")
-    ap.add_argument("--sort", default="count", choices=["recent", "count", "chrono"])
     ap.add_argument(
         "--eval-docs", help="(--curate) eval parquet for 8-gram decontamination"
     )

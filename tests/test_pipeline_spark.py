@@ -42,15 +42,14 @@ def test_routed_row_sets_match_ground_truth(spark, events):
 
 
 def test_salted_equals_unsalted_groups(spark, events):
-    a = (
-        denial_groups(events, salted=True)
-        .select("signature", "count", "first_seen", "last_seen", "permissions")
-        .orderBy("signature")
-        .collect()
-    )
+    from avc_parser_spark.aggregate import aggregate_signatures
+
+    cols = ("signature", "count", "first_seen", "last_seen", "permissions")
+    a = denial_groups(events).select(*cols).orderBy("signature").collect()
+    parse_ok = signature_exprs(events.filter(F.col("route") == "parse_ok"))
     b = (
-        denial_groups(events, salted=False)
-        .select("signature", "count", "first_seen", "last_seen", "permissions")
+        aggregate_signatures(parse_ok, salted=False)
+        .select(*cols)
         .orderBy("signature")
         .collect()
     )
@@ -139,12 +138,12 @@ def test_error_isolation_never_fails_job(spark, monkeypatch):
     df = spark.createDataFrame(
         [
             ("ok1", None, None, "type=AVC msg=audit(1.0:1): avc: denied { read } for pid=1 comm=x scontext=a:b:c tcontext=d:e:f tclass=file", "en"),
-            ("bad", None, None, "BOOM_MARKER", "en"),
+            ("bad", None, None, "type=AVC BOOM_MARKER", "en"),
             ("ok2", None, None, "type=AVC msg=audit(2.0:2): avc: denied { write } for pid=2 comm=y scontext=a:b:c tcontext=d:e:f tclass=file", "en"),
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     ).coalesce(1)
-    rows = {r["url"]: r for r in udf_mod.parse_pages(df, jvm_pregate=False).collect()}
+    rows = {r["url"]: r for r in udf_mod.parse_pages(df).collect()}
     assert rows["bad"]["route"] == "quarantine"
     assert rows["bad"]["parse_status"].startswith("PARSE_ERROR_")
     assert rows["ok1"]["route"] == "parse_ok"
@@ -233,49 +232,84 @@ def test_hot_signature_salting_splits_state(spark):
     assert len(groups["hot"]["pids"]) <= 128
 
 
-def test_arrow_and_pandas_parse_paths_byte_equal(spark):
-    """The mapInArrow path (JVM-assembled extracted_text) must be
-    byte-identical to the mapInPandas path (kernel-built extracted_text)
-    across all 43 columns — this is the equivalence gate for the
-    Arrow-boundary optimization."""
-    from avc_parser_spark.datagen import build_pages_df
-    from avc_parser_spark.parse.udf import parse_pages
+def test_parse_pages_equals_kernel_reference(spark):
+    """parse_pages (native pregate, mapInArrow, JVM-built extracted_text)
+    must equal the kernel run directly on the raw pages in pandas, with the
+    kernel building extracted_text itself, across all 44 columns. Every
+    doc carries a non-audit block the pregate drops, and one carries its
+    control bytes only there, so this also pins the pregate."""
+    import re
 
-    pages = build_pages_df(spark, 800).cache()
-    a = sorted(tuple(r) for r in parse_pages(pages, arrow_output=True).collect())
-    b = sorted(tuple(r) for r in parse_pages(pages, arrow_output=False).collect())
-    assert a == b
-    assert len(a) >= 800 * 0.9
+    from avc_parser_spark.parse.kernels import parse_pages_pdf
+    from avc_parser_spark.parse.udf import EVENT_SCHEMA_DDL
 
-
-def test_parse_pages_narrow_output(spark):
-    """The columns= narrowing must project without changing values, always
-    carry routing essentials, and reject unknown columns / the pandas path."""
-    from avc_parser_spark.parse.udf import parse_pages
-
-    pages = build_pages_df(spark, 400).cache()
-    full = parse_pages(pages)
-    narrow = parse_pages(pages, columns=["lang", "event_ts", "comm"])
-    assert narrow.columns == ["url", "route", "parse_status", "lang", "event_ts", "comm"]
-    a = sorted(tuple(r) for r in narrow.collect())
-    b = sorted(
-        tuple(r)
-        for r in full.select(
-            "url", "route", "parse_status", "lang", "event_ts", "comm"
-        ).collect()
+    avc = (
+        "type=AVC msg=audit(1.0:1): avc: denied { read } for pid=1 comm=x "
+        "scontext=a:b:c tcontext=d:e:f tclass=file"
     )
-    assert a == b
-
-    et = parse_pages(pages, columns=["extracted_text"])
-    assert et.columns == ["url", "route", "parse_status", "extracted_text"]
-    ea = sorted(tuple(r) for r in et.collect())
-    eb = sorted(
-        tuple(r)
-        for r in full.select("url", "route", "parse_status", "extracted_text").collect()
+    # control bytes only in a filler block the pregate drops
+    extra = spark.createDataFrame(
+        [("ctrl_in_filler", None, None, avc + "\n----\nprose \x07 here", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    assert ea == eb
+    pages = build_pages_df(spark, 800).unionByName(extra).cache()
+    raw = pages.toPandas()[["url", "warc_ts", "text", "lang"]]
+    audit = re.compile(r"type=\w+|msg=audit|avc:")
+    assert all(
+        any(not audit.search(b) for b in text.split("----")) for text in raw["text"]
+    )
+    assert raw["text"].str.contains("[\x00-\x08\x0b\x0c\x0e-\x1f]").sum() > 1
 
-    with pytest.raises(ValueError):
-        parse_pages(pages, columns=["nope"])
-    with pytest.raises(ValueError):
-        parse_pages(pages, columns=["lang"], arrow_output=False)
+    got = parse_pages(pages)
+    ref = spark.createDataFrame(parse_pages_pdf(raw), EVENT_SCHEMA_DDL)
+    assert got.columns == ref.columns and len(got.columns) == 44
+    a = sorted(tuple(r) for r in got.collect())
+    b = sorted(tuple(r) for r in ref.collect())
+    assert a == b
+    assert len({r[0] for r in a}) == 801
+    assert {r[3] for r in a if r[0] == "ctrl_in_filler"} == {"quarantine"}
+
+
+def test_permission_category_table(spark):
+    """E9 permission categories: every (group, permission) row of the dim
+    table, for every tclass of its group, plus the per-group fallbacks and
+    the bare-permission default."""
+    from avc_parser_spark.enrich.dims import (
+        FILESYSTEM_CLASSES,
+        NETWORK_PERM_CLASSES,
+        PERM_CATEGORY_ROWS,
+    )
+    from avc_parser_spark.enrich.join import permission_category_expr
+
+    group_classes = {
+        "fs": FILESYSTEM_CLASSES,
+        "net": NETWORK_PERM_CLASSES,
+        "capability": ["capability", "capability2"],
+    }
+    cases = [
+        (perm, tclass, category)
+        for group, perm, category in PERM_CATEGORY_ROWS
+        for tclass in group_classes.get(group, [group])
+    ]
+    assert len(cases) == 169
+    cases += [
+        ("ioctl", "file", "file_ioctl"),
+        ("accept", "tcp_socket", "net_accept"),
+        ("fork", "process", "process_fork"),
+        ("x", "dbus", "dbus_x"),
+        ("x", "key", "key_x"),
+        ("x", "capability2", "capability_x"),
+        ("x", "security", "security_x"),
+        ("read", "no_such_class", "read"),
+        ("read", None, "read"),
+    ]
+    df = spark.createDataFrame(
+        cases, "permission string, tclass string, want string"
+    ).select(
+        "permission",
+        "tclass",
+        "want",
+        permission_category_expr(F.col("permission"), F.col("tclass")).alias("got"),
+    )
+    bad = [tuple(r) for r in df.collect() if r["got"] != r["want"]]
+    assert bad == []
