@@ -1,5 +1,7 @@
 """Cross-group analyzers & per-group detectors (reference §2.7), as native
-DataFrame expressions over the (small) group-aggregate table.
+DataFrame expressions over the (small) group-aggregate table. The detectors
+are flag columns; AN1-AN5 are one aggregate read once, with the findings
+built as Python rows.
 
 Findings are severity/category-tagged rows; thresholds mirror the reference:
   D1  dontaudit-disabled        detectors/anomaly_detector.py:169-229
@@ -16,7 +18,7 @@ Findings are severity/category-tagged rows; thresholds mirror the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DONTAUDIT_INDICATORS = ["noatsecure", "rlimitinh", "siginh"]
@@ -133,20 +135,29 @@ def _startswith_any(col, prefixes):
 
 
 def _finding(
-    spark: SparkSession, severity, category, title, affected, events, detail,
-    sigs=None, evidence=None,
+    severity, category, title, affected, events, detail, sigs=None, evidence=None
 ):
-    return spark.createDataFrame(
-        [
-            (
-                severity, category, title, int(affected), int(events), detail,
-                sorted(int(s) for s in (sigs or [])),
-                HINTS.get(category, []),
-                {k: str(v) for k, v in (evidence or {}).items()},
-            )
-        ],
-        FINDINGS_SCHEMA,
+    return (
+        severity, category, title, int(affected), int(events), detail,
+        sorted(int(s) for s in (sigs or [])),
+        HINTS.get(category, []),
+        {k: str(v) for k, v in (evidence or {}).items()},
     )
+
+
+def _sigs(cond=None):
+    """The first 128 sorted sig ids (of the rows where ``cond`` holds)."""
+    sig = F.col("sig_id") if cond is None else F.when(cond, F.col("sig_id"))
+    return F.slice(F.sort_array(F.collect_set(sig)), 1, 128)
+
+
+def _rule_aggs(rule, cond):
+    """Groups, events and sig ids of the rows where ``cond`` holds."""
+    return [
+        F.count_if(cond).alias(f"{rule}_grp"),
+        F.coalesce(F.sum(F.when(cond, F.col("count"))), F.lit(0)).alias(f"{rule}_ev"),
+        _sigs(cond).alias(f"{rule}_sigs"),
+    ]
 
 
 def run_analyzers(
@@ -154,12 +165,17 @@ def run_analyzers(
 ) -> DataFrame:
     """AN1-AN6 over the group table → findings DataFrame.
 
-    The group table is small (the whole premise of signature dedup), so each
-    rule is a filter+agg; the final result is a unionByName of finding rows.
-    Runs pre-filter, like the reference (analyzers/__init__.py:13-37).
+    The group table is small (the whole premise of signature dedup), so
+    AN1-AN5 are ONE grouping-sets aggregate read once: the ``()`` row
+    carries AN1-AN4 as per-rule conditional aggregates, the
+    ``(t_type, t_mls)`` rows carry AN5. The findings are built as Python
+    rows and become one DataFrame; AN6 (only with ``policy_loads``) keeps
+    its own grouped aggregate. Runs pre-filter, like the reference
+    (analyzers/__init__.py:13-37).
     """
     spark = groups.sparkSession
-    g = detector_flags(groups).select(
+    mls = r"^[^:]+:[^:]+:[^:]+:"
+    g = groups.select(
         "sig_id",
         "count",
         "first_seen",
@@ -167,127 +183,114 @@ def run_analyzers(
         "permissions",
         F.col("representative.sc_type").alias("s_type"),
         F.col("representative.tc_type").alias("t_type"),
-        F.col("representative.scontext_raw").alias("scontext"),
-        F.col("representative.tcontext_raw").alias("tcontext"),
         F.col("representative.comm").alias("comm"),
         F.col("representative.permissive").alias("rep_permissive"),
-        "flag_dontaudit",
-        "flag_permissive",
-        "flag_container_paths",
-        "flag_custom_paths",
-    ).cache()
+        F.regexp_extract("representative.tcontext_raw", mls + "(.*)$", 1).alias("t_mls"),
+        F.split(F.regexp_extract("representative.scontext_raw", mls + "([^-]*)", 1), ",")
+        .getItem(0)
+        .alias("s_mls_low"),
+    )
+    s_type, t_type, s_low = F.col("s_type"), F.col("t_type"), F.col("s_mls_low")
+    # AN1 widespread unlabeled_t (≥3 groups or ≥10 events)
+    unlabeled = t_type == "unlabeled_t"
+    # AN2 MLS inconsistency (≥5 core types @s15 while source s0)
+    mls_bad = (
+        t_type.isin(*CORE_SYSTEM_TYPES)
+        & F.col("t_mls").contains("s15")
+        & (s_low.isin("s0", "") | s_low.isNull())
+    )
+    # AN3 relabeling tools denied
+    relabel = s_type.isin(*RELABELING_TYPES) & (
+        F.size(F.array_intersect(
+            F.col("permissions"), F.array(*[F.lit(p) for p in RELABEL_PERMISSIONS])
+        )) > 0
+    )
+    # AN4 boot-blocking
+    boot = s_type.isin(*BOOT_CRITICAL_TYPES) & t_type.isin(*ESSENTIAL_TARGET_TYPES)
 
-    findings: list[DataFrame] = []
-
-    # ---- AN1: widespread unlabeled_t (≥3 groups or ≥10 events) ------------
-    unl = g.filter(F.col("t_type") == "unlabeled_t").agg(
-        F.count(F.lit(1)).alias("grp"),
-        F.coalesce(F.sum("count"), F.lit(0)).alias("ev"),
-        F.max(F.col("rep_permissive") == "1").alias("any_perm"),
-        F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
-    ).head()
-    if unl["grp"] >= 3 or unl["ev"] >= 10:
-        findings.append(
-            _finding(
-                spark,
-                "WARNING" if unl["any_perm"] else "CRITICAL",
-                "labeling",
-                "Widespread unlabeled_t files",
-                unl["grp"],
-                unl["ev"],
-                f"{unl['grp']} groups / {unl['ev']} events target unlabeled_t",
-                sigs=unl["sigs"],
-                evidence={"unlabeled_groups": unl["grp"], "unlabeled_events": unl["ev"]},
-            )
-        )
-
-    # ---- AN2: MLS inconsistency (≥5 core types @s15 while source s0) ------
-    t_mls = F.regexp_extract(F.col("tcontext"), r"^[^:]+:[^:]+:[^:]+:(.*)$", 1)
-    s_mls_low = F.split(
-        F.regexp_extract(F.col("scontext"), r"^[^:]+:[^:]+:[^:]+:([^-]*)", 1), ","
-    ).getItem(0)
-    mls_bad = g.filter(
-        F.col("t_type").isin(*CORE_SYSTEM_TYPES)
-        & t_mls.contains("s15")
-        & (s_mls_low.isin("s0", "") | s_mls_low.isNull())
-    ).agg(
-        F.countDistinct("t_type").alias("types"),
-        F.count(F.lit(1)).alias("grp"),
-        F.coalesce(F.sum("count"), F.lit(0)).alias("ev"),
-        F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
-    ).head()
-    if mls_bad["types"] >= 5:
-        findings.append(
-            _finding(
-                spark, "CRITICAL", "labeling",
-                "MLS labeling inconsistency: system files at wrong level",
-                mls_bad["grp"], mls_bad["ev"],
-                f"{mls_bad['types']} core types labeled s15 vs s0 sources",
-                sigs=mls_bad["sigs"],
-                evidence={"wrong_level_types": mls_bad["types"]},
-            )
-        )
-
-    # ---- AN3: relabeling tools denied --------------------------------------
-    rel = g.filter(
-        F.col("s_type").isin(*RELABELING_TYPES)
-        & (F.size(F.array_intersect(F.col("permissions"), F.array(*[F.lit(p) for p in RELABEL_PERMISSIONS]))) > 0)
-    ).agg(
-        F.count(F.lit(1)).alias("grp"),
-        F.coalesce(F.sum("count"), F.lit(0)).alias("ev"),
-        F.sort_array(F.collect_set("comm")).alias("tools"),
-        F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
-    ).head()
-    if rel["grp"] > 0:
-        findings.append(
-            _finding(
-                spark, "CRITICAL", "relabeling",
-                "Relabeling tools are being denied",
-                rel["grp"], rel["ev"],
-                "tools: " + ",".join(t for t in rel["tools"] if t),
-                sigs=rel["sigs"],
-                evidence={"tools": ",".join(t for t in rel["tools"] if t)},
-            )
-        )
-
-    # ---- AN4: boot-blocking -------------------------------------------------
-    boot = g.filter(
-        F.col("s_type").isin(*BOOT_CRITICAL_TYPES)
-        & F.col("t_type").isin(*ESSENTIAL_TARGET_TYPES)
-    ).agg(
-        F.count(F.lit(1)).alias("grp"),
-        F.coalesce(F.sum("count"), F.lit(0)).alias("ev"),
-        F.sort_array(F.collect_set("comm")).alias("svcs"),
-        F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
-    ).head()
-    if boot["grp"] > 0:
-        findings.append(
-            _finding(
-                spark, "CRITICAL", "boot_impact",
-                "Boot-blocking denials detected",
-                boot["grp"], boot["ev"],
-                "services: " + ",".join(s for s in boot["svcs"][:5] if s),
-                sigs=boot["sigs"],
-                evidence={"services": ",".join(s for s in boot["svcs"][:5] if s)},
-            )
-        )
-
-    # ---- AN5: systemic pattern (≥10 distinct sources on one target) -------
-    systemic = (
-        g.groupBy("t_type", t_mls.alias("t_mls"))
+    rows = (
+        g.groupingSets([[], ["t_type", "t_mls"]], "t_type", "t_mls")
         .agg(
-            F.countDistinct("s_type").alias("sources"),
+            F.grouping_id().alias("gid"),
+            *_rule_aggs("an1", unlabeled),
+            F.max(F.when(unlabeled, F.col("rep_permissive") == "1")).alias("an1_perm"),
+            *_rule_aggs("an2", mls_bad),
+            F.size(F.collect_set(F.when(mls_bad, t_type))).alias("an2_types"),
+            *_rule_aggs("an3", relabel),
+            F.sort_array(F.collect_set(F.when(relabel, F.col("comm")))).alias("an3_comms"),
+            *_rule_aggs("an4", boot),
+            F.sort_array(F.collect_set(F.when(boot, F.col("comm")))).alias("an4_comms"),
+            # AN5 systemic pattern (≥10 distinct sources on one target)
+            F.size(F.collect_set("s_type")).alias("sources"),
             F.count(F.lit(1)).alias("grp"),
             F.sum("count").alias("ev"),
-            F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
+            _sigs().alias("sigs"),
         )
-        .filter(F.col("sources") >= 10)
+        .filter((F.col("gid") == 3) | (F.col("sources") >= 10))
         .collect()
     )
+
+    # at most one () row: an empty table yields none, and nothing fires
+    top = [r for r in rows if r["gid"] == 3]
+    # AN5 targets in (t_type, t_mls) order, nulls first
+    systemic = sorted(
+        (r for r in rows if r["gid"] == 0),
+        key=lambda r: [(v is not None, v or "") for v in (r["t_type"], r["t_mls"])],
+    )
+
+    findings: list[tuple] = []
+    for r in top:
+        if r["an1_grp"] >= 3 or r["an1_ev"] >= 10:
+            findings.append(
+                _finding(
+                    "WARNING" if r["an1_perm"] else "CRITICAL", "labeling",
+                    "Widespread unlabeled_t files",
+                    r["an1_grp"], r["an1_ev"],
+                    f"{r['an1_grp']} groups / {r['an1_ev']} events target unlabeled_t",
+                    sigs=r["an1_sigs"],
+                    evidence={"unlabeled_groups": r["an1_grp"], "unlabeled_events": r["an1_ev"]},
+                )
+            )
+        if r["an2_types"] >= 5:
+            findings.append(
+                _finding(
+                    "CRITICAL", "labeling",
+                    "MLS labeling inconsistency: system files at wrong level",
+                    r["an2_grp"], r["an2_ev"],
+                    f"{r['an2_types']} core types labeled s15 vs s0 sources",
+                    sigs=r["an2_sigs"],
+                    evidence={"wrong_level_types": r["an2_types"]},
+                )
+            )
+        if r["an3_grp"] > 0:
+            tools = ",".join(t for t in r["an3_comms"] if t)
+            findings.append(
+                _finding(
+                    "CRITICAL", "relabeling",
+                    "Relabeling tools are being denied",
+                    r["an3_grp"], r["an3_ev"],
+                    "tools: " + tools,
+                    sigs=r["an3_sigs"],
+                    evidence={"tools": tools},
+                )
+            )
+        if r["an4_grp"] > 0:
+            svcs = ",".join(s for s in r["an4_comms"][:5] if s)
+            findings.append(
+                _finding(
+                    "CRITICAL", "boot_impact",
+                    "Boot-blocking denials detected",
+                    r["an4_grp"], r["an4_ev"],
+                    "services: " + svcs,
+                    sigs=r["an4_sigs"],
+                    evidence={"services": svcs},
+                )
+            )
+
     for row in systemic:
         findings.append(
             _finding(
-                spark, "WARNING", "systemic",
+                "WARNING", "systemic",
                 f"Systemic issue: {row['sources']} processes denied on {row['t_type']}",
                 row["grp"], row["ev"],
                 f"target={row['t_type']} mls={row['t_mls']}",
@@ -297,7 +300,7 @@ def run_analyzers(
         )
 
     # ---- AN6: recurrence across policy reloads ------------------------------
-    if policy_loads is not None and policy_loads.head(1):
+    if policy_loads is not None:
         bounds = policy_loads.agg(
             F.min("event_ts").alias("lo"), F.max("event_ts").alias("hi")
         ).head()
@@ -315,7 +318,7 @@ def run_analyzers(
                 .agg(
                     F.sum("before_ev").alias("before"),
                     F.sum("after_ev").alias("after"),
-                    F.slice(F.sort_array(F.collect_set("sig_id")), 1, 128).alias("sigs"),
+                    _sigs().alias("sigs"),
                 )
                 # integer forms of the reference's 0.3/0.7 ratios — exact
                 # for integer counts (a >= 0.3b ⇔ 10a >= 3b), immune to the
@@ -334,7 +337,7 @@ def run_analyzers(
                 )
                 findings.append(
                     _finding(
-                        spark, "WARNING", "recurrence",
+                        "WARNING", "recurrence",
                         f"Recurring denials for {row['t_type']} across policy reloads",
                         0, row["before"] + row["after"],
                         f"before={row['before']} after={row['after']} trend={trend}",
@@ -343,10 +346,4 @@ def run_analyzers(
                     )
                 )
 
-    g.unpersist()
-    if not findings:
-        return spark.createDataFrame([], FINDINGS_SCHEMA)
-    out = findings[0]
-    for fdf in findings[1:]:
-        out = out.unionByName(fdf)
-    return out
+    return spark.createDataFrame(findings, FINDINGS_SCHEMA)

@@ -93,7 +93,12 @@ def ivf_assign(
     set — native expressions only (one greatest() over N dot products).
 
     At 10^12 scale the assigned table is written bucketed by `cluster`, so
-    a probe scans only its clusters (partition pruning), the IVF classic."""
+    a probe scans only its clusters (partition pruning), the IVF classic.
+
+    Centroids must be finite (a ValueError names the bad codeword), but
+    embeddings are not checked: a NaN embedding value makes every dot of
+    that row NaN, and array_max ranks NaN above every double, so such a
+    row lands in cluster 0."""
     # Built as ONE parsed SQL expression, not a k-deep F.when chain of
     # k zip_with/aggregate Column trees: the py4j call per lit/lambda made
     # construction alone cost ~0.5 s per call at k=4, dim=64 (r6, guide

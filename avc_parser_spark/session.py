@@ -8,8 +8,9 @@ local[N] sandbox:
   signature groups, docs/DEDUPLICATION_ALGORITHM.md).
 - Arrow on for pandas UDFs; batch size bounded so wide text rows don't blow
   executor memory.
-- shuffle.partitions defaults to cores in local mode; a real cluster run via
-  spark-submit would set it to ~2-3× total cores (AQE coalesces the excess).
+- shuffle.partitions defaults to a fixed 32, whatever the core count (AQE
+  coalesces the excess at run time); a real cluster run via spark-submit
+  would set it to ~2-3× total cores.
 """
 
 from __future__ import annotations
@@ -68,8 +69,8 @@ def get_spark(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
     else:
-        # local mode: one shuffle partition per core is the sweet spot for
-        # the sandbox data sizes; AQE coalesces further if tiny.
+        # a fixed 32, not one per core: every shuffle plans 32 map-side
+        # partitions and AQE coalesces them at run time if tiny.
         builder = builder.config("spark.sql.shuffle.partitions", "32")
 
     for k, v in (extra_conf or {}).items():

@@ -136,10 +136,13 @@ def main() -> None:
 
     if args.report:
         events = read_events(spark, args.out)
-        groups = denial_groups(events)
-        findings = run_analyzers(groups)
         report_path = os.path.join(args.out, "report.json")
-        write_json_report(groups, findings, report_path)
+        # the analyzers and the report each read the groups: aggregate once
+        groups = denial_groups(events).persist()
+        try:
+            write_json_report(groups, run_analyzers(groups), report_path)
+        finally:
+            groups.unpersist()
         print(f"report: {report_path}")
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+import os
 from datetime import datetime
 
 import pytest
@@ -59,6 +61,135 @@ def test_run_analyzers_produces_findings(spark, groups):
         if f["category"] != "recurrence":
             assert f["affected_groups"] == 0 or len(f["affected_sigs"]) > 0
             assert len(f["affected_sigs"]) <= 128
+
+
+GROUP_SCHEMA = (
+    "sig_id bigint, count bigint, first_seen timestamp, last_seen timestamp, "
+    "permissions array<string>, permissives array<string>, paths array<string>, "
+    "representative struct<sc_type: string, tc_type: string, "
+    "scontext_raw: string, tcontext_raw: string, comm: string, permissive: string>"
+)
+
+
+def _hand_groups(spark):
+    """A group table that fires AN2, AN3, AN4 and two AN5 targets (one with
+    a null t_type), next to near misses of every rule."""
+    ts = datetime(2025, 9, 4, 12, 0, 0)
+    rows = []
+
+    def add(s_type, t_type, comm, perms=("read",), count=1, s_mls="s0", t_mls="s0"):
+        tcon = None if t_type is None else f"system_u:object_r:{t_type}:{t_mls}"
+        rep = (s_type, t_type, f"system_u:system_r:{s_type}:{s_mls}", tcon, comm, "0")
+        rows.append((len(rows) + 1, count, ts, ts, list(perms), ["0"], ["/x"], rep))
+
+    # AN2: six core types at s15 from s0 sources; boot_t's source is at s2
+    for t in ["etc_t", "lib_t", "bin_t", "usr_t", "var_t"]:
+        add("httpd_t", t, "httpd", count=2, t_mls="s15:c0.c1023")
+    add("httpd_t", "root_t", "httpd", s_mls="s0-s15:c0.c1023", t_mls="s15")
+    add("httpd_t", "boot_t", "httpd", s_mls="s2", t_mls="s15")
+    # AN3: three relabel denials (one without a comm); semanage only reads
+    add("setfiles_t", "file_t", "setfiles", perms=("relabelfrom",), count=4)
+    add("restorecon_t", "default_t", "restorecon", perms=("read", "relabelto"))
+    add("load_policy_t", "default_t", None, perms=("relabelto",))
+    add("semanage_t", "etc_t", "semanage")
+    # AN4: six boot services, only the first five listed; AN1 near miss
+    for s_type, t_type, comm in [
+        ("init_t", "lib_t", "init"), ("kmod_t", "bin_t", "kmod"),
+        ("mount_t", "etc_t", "mount"), ("udev_t", "boot_t", "udevd"),
+        ("systemd_t", "root_t", "systemd"), ("lvm_t", "unlabeled_t", "lvm"),
+    ]:
+        add(s_type, t_type, comm, count=3)
+    # AN5: ten sources on shadow_t and on a null target; nine on passwd_t
+    for i in range(10):
+        add(f"src{i}_t", "shadow_t", f"s{i}", count=i + 1)
+        add(f"nsrc{i}_t", None, f"n{i}")
+    add("src0_t", "shadow_t", "s0")
+    for i in range(9):
+        add(f"src{i}_t", "passwd_t", f"p{i}")
+    return spark.createDataFrame(rows, GROUP_SCHEMA)
+
+
+def _findings(df):
+    """Every column of every finding, order-free, as JSON values."""
+    rows = [tuple(r)[:8] + (sorted(r["evidence"].items()),) for r in df.collect()]
+    return json.loads(json.dumps(sorted(rows)))
+
+
+# Two reloads inside the fixture's time range (18:19-18:44 on 2025-09-04)
+AN6_LOADS = [datetime(2025, 9, 4, 18, 25), datetime(2025, 9, 4, 18, 30)]
+
+HINT_SYSTEMIC = [
+    "many sources denied on one target usually means the TARGET is mislabeled",
+    "verify the expected label: matchpathcon <path>",
+]
+EXPECTED_HAND = [
+    ["CRITICAL", "boot_impact", "Boot-blocking denials detected", 6, 18,
+     "services: init,kmod,lvm,mount,systemd", [12, 13, 14, 15, 16, 17],
+     ["inspect early-boot denials: journalctl -b -t audit",
+      "if boot is blocked, consider enforcing=0 on the kernel cmdline while fixing policy"],
+     [["services", "init,kmod,lvm,mount,systemd"]]],
+    ["CRITICAL", "labeling", "MLS labeling inconsistency: system files at wrong level", 6, 11,
+     "6 core types labeled s15 vs s0 sources", [1, 2, 3, 4, 5, 6],
+     ["filter groups with --target unlabeled_t to inspect the denials",
+      "run: fixfiles -v check", "run: rpm -V selinux-policy-*"],
+     [["wrong_level_types", "6"]]],
+    ["CRITICAL", "relabeling", "Relabeling tools are being denied", 3, 6,
+     "tools: restorecon,setfiles", [8, 9, 10],
+     ["check file-context rules: semanage fcontext -l",
+      "complete the relabel: restorecon -Rv <path> (or touch /.autorelabel)"],
+     [["tools", "restorecon,setfiles"]]],
+    ["WARNING", "systemic", "Systemic issue: 10 processes denied on None", 10, 10,
+     "target=None mls=None", [19, 21, 23, 25, 27, 29, 31, 33, 35, 37], HINT_SYSTEMIC,
+     [["sources", "10"], ["target", "None"]]],
+    ["WARNING", "systemic", "Systemic issue: 10 processes denied on shadow_t", 11, 56,
+     "target=shadow_t mls=s0", [18, 20, 22, 24, 26, 28, 30, 32, 34, 36, 38], HINT_SYSTEMIC,
+     [["sources", "10"], ["target", "shadow_t"]]],
+]
+
+
+def test_run_analyzers_pinned_on_fixture(spark, groups):
+    """All columns of every finding on the generated groups, with and
+    without two policy reloads (AN6), as captured before AN1-AN5 became
+    one aggregate (tests/fixtures/analyzer_findings.json)."""
+    with open(os.path.join(os.path.dirname(__file__), "fixtures", "analyzer_findings.json")) as fh:
+        expected = json.load(fh)
+    assert _findings(run_analyzers(groups)) == expected["fixture"]
+    loads = spark.createDataFrame([(t,) for t in AN6_LOADS], "event_ts timestamp")
+    assert _findings(run_analyzers(groups, policy_loads=loads)) == expected["fixture_an6"]
+
+
+def test_run_analyzers_pinned_on_hand_table(spark):
+    assert _findings(run_analyzers(_hand_groups(spark))) == EXPECTED_HAND
+    assert run_analyzers(spark.createDataFrame([], GROUP_SCHEMA)).collect() == []
+
+
+def test_run_analyzers_systemic_order(spark):
+    """AN5 findings come in (t_type, t_mls) order, nulls first."""
+    titles = [
+        r["title"] for r in run_analyzers(_hand_groups(spark)).collect()
+        if r["category"] == "systemic"
+    ]
+    assert titles == [
+        "Systemic issue: 10 processes denied on None",
+        "Systemic issue: 10 processes denied on shadow_t",
+    ]
+
+
+def test_run_analyzers_jobs(spark, groups):
+    """AN1-AN5 are one aggregate over the group table: with the groups
+    persisted and materialised, the analyzers run at most 2 Spark jobs
+    (map stage + result stage)."""
+    groups.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("analyzer-jobs", "run_analyzers")
+    try:
+        findings = run_analyzers(groups)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("analyzer-jobs")
+    assert 0 < len(jobs) <= 2
+    assert findings.count() == 2
 
 
 def test_filter_process(spark, groups):

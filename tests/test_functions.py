@@ -2857,6 +2857,27 @@ def test_pq_non_finite_codebook_rejected(spark):
         ivf_assign(df, [[0.5, 0.5], [math.inf, 0.0]])
 
 
+def test_ivf_assign_nan_embedding(spark):
+    """Embeddings are not guarded: a NaN value makes every dot of its row
+    NaN, and array_max ranks NaN highest, so the row lands in cluster 0
+    while its finite neighbours are assigned as usual."""
+    from avc_parser_spark.functions.similarity import ivf_assign
+
+    df = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [math.nan, 1.0]), (2, [0.0, math.nan])],
+        "vec_id: long, embedding: array<double>",
+    )
+    got = {
+        r["vec_id"]: r["cluster"]
+        for r in ivf_assign(df, [[1.0, 0.0], [0.0, 1.0]]).collect()
+    }
+    assert got == {0: 1, 1: 0, 2: 0}
+    nan_first = spark.range(1).select(
+        F.expr("array_max(array(1.0D, double('NaN'), 2.0D))").alias("m")
+    ).head()["m"]
+    assert math.isnan(nan_first)
+
+
 def test_ivfpq_fused_probe_equals_brute(spark):
     """The fused IVF+PQ path (assign → prune to the query's cluster →
     encode → ADC top-10) must equal brute-force over the full plant: the

@@ -77,6 +77,66 @@ def test_json_report_shape(spark, events):
     assert d["log"]["timestamp"] == d["log"]["timestamp_float"]
 
 
+def test_json_report_totals_without_aggregate(spark, events):
+    """Totals summed from the collected rows (all groups came back) equal
+    the totals aggregate taken when the listing is capped."""
+    groups = denial_groups(events).cache()
+    capped = json_report(groups, max_groups=5)["summary"]
+    full = json_report(groups, max_groups=10**6)["summary"]
+    assert capped["listed_groups"] == 5
+    assert full["listed_groups"] == full["total_groups"] == groups.count()
+    for key in ("total_groups", "total_events", "permissive_events"):
+        assert capped[key] == full[key]
+    groups.unpersist()
+
+
+def test_cli_report_persists_groups_once(spark, tmp_path, monkeypatch):
+    """run_pipeline --report hands the analyzers and the report ONE
+    persisted group table, and unpersists it once the report is written."""
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    import avc_parser_spark.analyzers as analyzers
+    import avc_parser_spark.sinks as sinks
+    from avc_parser_spark.datagen.pages import write_pages_warehouse
+
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_warehouse(spark, pages, 300)
+    seen = []
+
+    def recording(fn):
+        def wrapper(groups, *args, **kwargs):
+            seen.append((fn.__name__, groups, groups.is_cached))
+            return fn(groups, *args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(analyzers, "run_analyzers", recording(analyzers.run_analyzers))
+    monkeypatch.setattr(sinks, "write_json_report", recording(sinks.write_json_report))
+    monkeypatch.setattr(
+        sys, "argv", ["run_pipeline.py", "--pages", pages, "--out", out, "--report"]
+    )
+    script = os.path.join(os.path.dirname(__file__), "..", "scripts", "run_pipeline.py")
+    spec = importlib.util.spec_from_file_location("run_pipeline_cli", script)
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    try:
+        cli.main()
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+
+    assert [(name, cached) for name, _, cached in seen] == [
+        ("run_analyzers", True),
+        ("write_json_report", True),
+    ]
+    assert seen[0][1] is seen[1][1]
+    assert not seen[0][1].is_cached
+    with open(os.path.join(out, "report.json")) as fh:
+        assert json.load(fh)["summary"]["total_groups"] > 0
+
+
 def test_normalize_log_fields_event_ts_form():
     """event_ts strings are PySpark collect() renderings (driver-LOCAL tz
     via datetime.fromtimestamp); normalization must invert that rendering
