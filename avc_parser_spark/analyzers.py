@@ -231,15 +231,15 @@ def run_analyzers(
     )
 
     # at most one () row: an empty table yields none, and nothing fires
-    top = [r for r in rows if r["gid"] == 3]
+    r = next((row for row in rows if row["gid"] == 3), None)
     # AN5 targets in (t_type, t_mls) order, nulls first
     systemic = sorted(
-        (r for r in rows if r["gid"] == 0),
+        (row for row in rows if row["gid"] == 0),
         key=lambda r: [(v is not None, v or "") for v in (r["t_type"], r["t_mls"])],
     )
 
     findings: list[tuple] = []
-    for r in top:
+    if r is not None:
         if r["an1_grp"] >= 3 or r["an1_ev"] >= 10:
             findings.append(
                 _finding(

@@ -331,20 +331,12 @@ def json_report(
             }
         )
 
-    if len(rows) < max_groups:
-        # every group came back: the totals are sums over the listed rows
-        totals = {
-            "g": len(rows),
-            "e": sum(r["count"] or 0 for r in rows),
-            "p": sum(r["permissive_count"] or 0 for r in rows),
-        }
-    else:
-        # true totals from an aggregate (max_groups caps only the listing)
-        totals = groups.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.coalesce(F.sum("count"), F.lit(0)).alias("e"),
-            F.coalesce(F.sum("permissive_count"), F.lit(0)).alias("p"),
-        ).head()
+    # true totals from an aggregate (max_groups caps only the listing)
+    totals = groups.agg(
+        F.count(F.lit(1)).alias("g"),
+        F.coalesce(F.sum("count"), F.lit(0)).alias("e"),
+        F.coalesce(F.sum("permissive_count"), F.lit(0)).alias("p"),
+    ).head()
     report = {
         "unique_denials": unique_denials,
         "summary": {

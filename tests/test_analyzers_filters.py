@@ -109,9 +109,9 @@ def _hand_groups(spark):
     return spark.createDataFrame(rows, GROUP_SCHEMA)
 
 
-def _findings(df):
+def _findings(rows):
     """Every column of every finding, order-free, as JSON values."""
-    rows = [tuple(r)[:8] + (sorted(r["evidence"].items()),) for r in df.collect()]
+    rows = [tuple(r)[:8] + (sorted(r["evidence"].items()),) for r in rows]
     return json.loads(json.dumps(sorted(rows)))
 
 
@@ -153,26 +153,25 @@ def test_run_analyzers_pinned_on_fixture(spark, groups):
     one aggregate (tests/fixtures/analyzer_findings.json)."""
     with open(os.path.join(os.path.dirname(__file__), "fixtures", "analyzer_findings.json")) as fh:
         expected = json.load(fh)
-    assert _findings(run_analyzers(groups)) == expected["fixture"]
+    assert _findings(run_analyzers(groups).collect()) == expected["fixture"]
     loads = spark.createDataFrame([(t,) for t in AN6_LOADS], "event_ts timestamp")
-    assert _findings(run_analyzers(groups, policy_loads=loads)) == expected["fixture_an6"]
+    assert (
+        _findings(run_analyzers(groups, policy_loads=loads).collect())
+        == expected["fixture_an6"]
+    )
 
 
 def test_run_analyzers_pinned_on_hand_table(spark):
-    assert _findings(run_analyzers(_hand_groups(spark))) == EXPECTED_HAND
-    assert run_analyzers(spark.createDataFrame([], GROUP_SCHEMA)).collect() == []
-
-
-def test_run_analyzers_systemic_order(spark):
-    """AN5 findings come in (t_type, t_mls) order, nulls first."""
-    titles = [
-        r["title"] for r in run_analyzers(_hand_groups(spark)).collect()
-        if r["category"] == "systemic"
-    ]
-    assert titles == [
+    """All columns of every finding on a hand-built table, with the AN5
+    findings in (t_type, t_mls) order, nulls first; an empty table gives
+    no findings."""
+    rows = run_analyzers(_hand_groups(spark)).collect()
+    assert _findings(rows) == EXPECTED_HAND
+    assert [r["title"] for r in rows if r["category"] == "systemic"] == [
         "Systemic issue: 10 processes denied on None",
         "Systemic issue: 10 processes denied on shadow_t",
     ]
+    assert run_analyzers(spark.createDataFrame([], GROUP_SCHEMA)).collect() == []
 
 
 def test_run_analyzers_jobs(spark, groups):
