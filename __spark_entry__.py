@@ -1174,16 +1174,6 @@ def _empty_topk(emb: DataFrame) -> DataFrame:
     return emb.sparkSession.createDataFrame([], "vec_id bigint, cosine double")
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 against the vec_id=0 embedding."""
-    _views(spark, sf_dir, ["embeddings"])
-    emb = spark.table("embeddings")
-    qvec = _query_vec(emb)
-    if qvec is None:
-        return _empty_topk(emb)
-    return brute_force_topk(emb, qvec, k=10)
-
-
 # --- planted separable corpus for the IVF pruned-probe mode ---------------
 # 4 groups on disjoint 16-dim blocks of a 64-dim space: group g = vec_id%4
 # occupies dims [16g, 16g+16) with values 1 + 0.001*((vec_id*31+d) % 97),
@@ -2722,24 +2712,6 @@ def q_events_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE event_type = 'purchase' AND value > 180
         """
     )
-
-
-def q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with n_probe = all clusters is EXACT by construction, so the
-    whole train→assign→probe machinery is hash-checked against the DuckDB
-    brute-force cosine oracle (the cluster-pruned n_probe<k path and its
-    recall monotonicity are pytest-verified)."""
-    from avc_parser_spark.functions.similarity import ivf_topk, train_centroids
-
-    _views(spark, sf_dir, ["embeddings"])
-    emb = spark.table("embeddings")
-    qvec = _query_vec(emb)
-    if qvec is None:
-        return _empty_topk(emb)
-    cents = train_centroids(emb, k=4, iters=2)
-    return ivf_topk(emb, qvec, cents, k=10, n_probe=len(cents))
-
-
 
 
 # 44-byte canonical RIFF/WAVE header: PCM, mono, 8000 Hz, 8-bit, 8 samples

@@ -51,13 +51,6 @@ def filter_path(groups: DataFrame, glob: str) -> DataFrame:
     return groups.filter(cond)
 
 
-_TIME_SPECS = {
-    "now": timedelta(0),
-    "recent": timedelta(hours=1),
-    "today": None,  # midnight
-    "yesterday": None,
-}
-
 _AGO_RE = re.compile(r"^(\d+)\s+(second|minute|hour|day|week|month)s?\s+ago$")
 
 _DATE_FORMATS = [

@@ -22,11 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA_DDL = (
-    "doc_id bigint, media_type string, payload binary, "
-    "width int, height int, n_frames int, sample_rate int"
-)
-
 FEATURE_SCHEMA_DDL = (
     "doc_id bigint, media_type string, n_bytes bigint, sha1 string, "
     "feature array<float>, decode_status string"

@@ -74,9 +74,8 @@ def bm25_topk(
 def _score_hits(
     tfd: DataFrame, dfreq: DataFrame, totals: DataFrame, k: int, id_col: str
 ) -> DataFrame:
-    """Shared BM25 scoring tail (in-memory and stored-index paths run the
-    IDENTICAL integer arithmetic, so stored == in-memory is exact):
-    tfd = (id, term, tf, dl), dfreq = (term, df), totals 1 row."""
+    """BM25 scoring tail: tfd = (id, term, tf, dl), dfreq = (term, df),
+    totals 1 row."""
     p, q = BM25_K1
     r, s = BM25_B
     scored = (
@@ -121,81 +120,6 @@ def _tokens_expr(text_col: str):
         ),
         lambda x: x != "",
     )
-
-
-def write_term_index(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize the inverted index as a STORED layout (the operational
-    100 TB retrieval pattern, same contract as the stored IVF/LSH tables):
-    postings (term, id, tf, dl) hive-partitioned by term_bucket =
-    pmod(xxhash64(term), n_buckets) — a term's postings live entirely in
-    ONE bucket, so a query probe directory-prunes to its terms' buckets
-    and per-term document frequency is computable from the pruned scan
-    alone. Corpus totals (n_docs, total_tokens — the only global state)
-    are one 1-row parquet written beside the postings."""
-    toks = _tokens_expr(text_col)
-    base = docs.select(
-        F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term")
-    )
-    postings = (
-        base.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-        )
-    )
-    postings.write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{path}/postings"
-    )
-    docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_tokens_expr(text_col))).cast("long").alias(
-            "total_tokens"
-        ),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def bm25_topk_stored(
-    spark,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    n_buckets: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k under BM25 against a write_term_index layout: the postings
-    scan carries term_bucket IN (query buckets) — a PartitionFilter, so
-    only the query's directories are read (plan-gated in tests) — plus a
-    pushed term IN filter; df comes from the pruned postings, totals from
-    the 1-row stats table. Runs the SAME _score_hits arithmetic as the
-    in-memory path ⇒ results are exactly equal."""
-    terms = sorted({t.lower() for t in query_terms})
-    if not terms:
-        raise ValueError("bm25_topk_stored: need at least one query term")
-    buckets = sorted(
-        {
-            r["b"]
-            for r in spark.createDataFrame([(t,) for t in terms], ["term"])
-            .select(
-                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b")
-            )
-            .collect()
-        }
-    )
-    hits = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .drop("term_bucket")
-    )
-    dfreq = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    totals = spark.read.parquet(f"{path}/stats")
-    return _score_hits(hits, dfreq, totals, k, id_col)
 
 
 def bm25_sql(
@@ -249,226 +173,3 @@ def bm25_sql(
         ORDER BY score_micro DESC, {id_col} ASC
         LIMIT {k}
     """
-
-
-def top_terms_per_doc(
-    docs: DataFrame,
-    k: int = 5,
-    min_df: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """TF-IDF keyword extraction: the k most salient terms per document
-    (corpus summarization / tagging). Scale shape: ONE (id, term) partial-
-    aggregated shuffle for term frequencies; document frequencies are a
-    vocabulary-bounded aggregate broadcast back; per-doc top-k is a
-    sort_array(collect_list) slice inside the SAME groupBy as the tf
-    aggregation's reduction — no window over the corpus, no second
-    shuffle. Scores are integer micro TF-IDF (tf × round(ln(N/df)·1e6)),
-    bit-exact cross-engine; score ties break to the lexicographically
-    LARGER term (descending (score, term) struct order) — deterministic
-    across engines and partitionings.
-
-    Returns (id_col, terms: array<struct<term, score_micro>>).
-    """
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
-        lambda x: x != "",
-    )
-    tfd = (
-        docs.select(F.col(id_col), F.explode(toks).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tfd.groupBy("term").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") >= min_df
-    )
-    totals = docs.select(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tfd.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(totals))
-        .withColumn(
-            "score_micro",
-            F.expr("tf * cast(round(ln(n_docs / df) * 1e6) as bigint)"),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.slice(
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(F.struct("score_micro", "term"))
-                    )
-                ),
-                1,
-                k,
-            ).alias("terms")
-        )
-    )
-
-
-def mine_retrieval_triplets(
-    docs: DataFrame,
-    queries: list[str],
-    k_pos: int = 1,
-    n_hard: int = 2,
-    n_rand: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(query, positive, negative) training triplets for embedding-model
-    fine-tuning — the standard recipe: positives = the BM25 top-k_pos
-    docs per query, HARD negatives = the next n_hard BM25 ranks (high-
-    scoring non-positives, the examples that actually teach the margin),
-    plus n_rand RANDOM negatives drawn deterministically (smallest
-    md5(query || ':' || id) among docs that matched NO query term — a
-    pure function of (corpus, query), re-runnable).
-
-    Returns (query, pos_id, neg_id, neg_type['hard'|'rand'], pos_rank,
-    neg_rank) — neg_rank NULL for random negatives. Scale shape: ALL
-    queries' positives+hard negatives come from ONE bm25_topk_multi pass
-    over the corpus (not Q scans); random negatives are one TakeOrdered
-    over the non-matching corpus per query — no corpus shuffle, no
-    rand() nondeterminism."""
-    out = None
-    toks = _tokens_expr(text_col)
-    ranked_all = bm25_topk_multi(
-        docs,
-        {q: q.split() for q in queries},
-        k=k_pos + n_hard,
-        text_col=text_col,
-        id_col=id_col,
-    ).select("query_id", id_col, "rank").localCheckpoint()
-    for q in queries:
-        ranked = ranked_all.filter(F.col("query_id") == q).drop("query_id")
-        pos = ranked.filter(F.col("rank") <= k_pos)
-        hard = ranked.filter(F.col("rank") > k_pos)
-        pairs = (
-            pos.alias("p")
-            .crossJoin(hard.alias("h"))  # ≤ k_pos × n_hard rows — bounded
-            .select(
-                F.lit(q).alias("query"),
-                F.col(f"p.{id_col}").alias("pos_id"),
-                F.col(f"h.{id_col}").alias("neg_id"),
-                F.lit("hard").alias("neg_type"),
-                F.col("p.rank").alias("pos_rank"),
-                F.col("h.rank").alias("neg_rank"),
-            )
-        )
-        terms = sorted({t.lower() for t in q.split()})
-        nomatch = (
-            docs.select(F.col(id_col), toks.alias("_t"))
-            .filter(F.size(F.array_intersect(
-                F.col("_t"), F.array(*[F.lit(t) for t in terms])
-            )) == 0)
-            .select(
-                id_col,
-                F.md5(F.concat(F.lit(q + ":"), F.col(id_col).cast("string")))
-                .alias("_r"),
-            )
-            .orderBy("_r")
-            .limit(n_rand)
-        )
-        rand_pairs = (
-            pos.alias("p")
-            .crossJoin(nomatch.alias("n"))
-            .select(
-                F.lit(q).alias("query"),
-                F.col(f"p.{id_col}").alias("pos_id"),
-                F.col(f"n.{id_col}").alias("neg_id"),
-                F.lit("rand").alias("neg_type"),
-                F.col("p.rank").alias("pos_rank"),
-                F.lit(None).cast("long").alias("neg_rank"),
-            )
-        )
-        part = pairs.unionByName(rand_pairs)
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        raise ValueError("mine_retrieval_triplets: need at least one query")
-    return out
-
-
-def bm25_topk_multi(
-    docs: DataFrame,
-    queries: dict[str, list[str]],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k per query for a BATCH of queries in ONE corpus pass — the
-    query-log serving shape (Q separate bm25_topk calls scan the corpus Q
-    times; here the union of all query terms rides a single isin filter
-    and per-query scoring reuses the shared hits frame). Identical
-    integer arithmetic to bm25_topk, so per-query results are EXACTLY the
-    single-query results (pytest-pinned).
-
-    Returns (query_id, id_col, score_micro, terms_matched, rank ≤ k).
-    Scale shape: one hits shuffle bounded by |∪terms|-matching docs; the
-    (query_id, term) map is broadcast (query logs are tiny next to the
-    corpus); per-query ranking is a window over each query's own hit set
-    (partitionBy query_id — hits stream through one sort per query)."""
-    if not queries:
-        raise ValueError("bm25_topk_multi: need at least one query")
-    norm = {
-        qid: sorted({t.lower() for t in terms})
-        for qid, terms in queries.items()
-    }
-    all_terms = sorted({t for ts in norm.values() for t in ts})
-
-    toks = _tokens_expr(text_col)
-    base = docs.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        F.explode(toks).alias("term"),
-    ).filter(F.col("term").isin(all_terms))
-    tfd = base.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl")
-    )
-    dfreq = tfd.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    totals = docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_tokens_expr(text_col))).cast("long").alias(
-            "total_tokens"
-        ),
-    )
-    p, q = BM25_K1
-    r, s = BM25_B
-    contrib = (
-        tfd.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(totals))
-        .withColumn(
-            "idf_micro",
-            F.expr(
-                "cast(round(ln((n_docs - df + 0.5) / (df + 0.5) + 1) * 1e6)"
-                " as bigint)"
-            ),
-        )
-        .withColumn(
-            "contrib",
-            F.expr(
-                f"(idf_micro * tf * {(p + q) * s} * total_tokens) div "
-                f"({q * s} * total_tokens * tf"
-                f" + {p * (s - r)} * total_tokens"
-                f" + {p * r} * dl * n_docs)"
-            ),
-        )
-    )
-    qmap = docs.sparkSession.createDataFrame(
-        [(qid, t) for qid, ts in norm.items() for t in ts],
-        "query_id string, term string",
-    )
-    per_q = (
-        contrib.join(F.broadcast(qmap), "term")
-        .groupBy("query_id", id_col)
-        .agg(
-            F.sum("contrib").alias("score_micro"),
-            F.count(F.lit(1)).alias("terms_matched"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col(id_col).asc()
-    )
-    return per_q.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )

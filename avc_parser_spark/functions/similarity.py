@@ -6,9 +6,7 @@ Two paths:
   Spark executes as TakeOrdered: per-partition heap + driver merge of k·P
   rows, no full sort shuffle).
 - LSH-bucketed ANN: sign-random-projection buckets as the shuffle key; query
-  probes only its own bucket (and neighbors at higher recall). At 10^12 rows
-  the bucket table is written bucketed-by(bucket) so probes are
-  partition-pruned scans.
+  probes only its own bucket (and neighbors at higher recall).
 """
 
 from __future__ import annotations
@@ -197,79 +195,6 @@ def ivf_topk(
     )
 
 
-def write_ivf_table(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-assigned embedding table hive-partitioned by
-    `cluster` (no Iceberg in this environment; a directory per cluster is
-    the partition-pruning layout). This is the storage half of the 10^12
-    design: probes against the stored table scan ONLY the probed clusters'
-    files — asserted by the PartitionFilters plan gate in
-    tests/test_streaming_plans.py."""
-    ivf_assign(embeddings, centroids, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(path)
-
-
-def ivf_topk_stored(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF probe over the STORED assigned table: the cluster predicate is a
-    partition filter, so the scan reads only n_probe of the cluster
-    directories (no full pass, no assignment recompute)."""
-    probe = _probe_clusters(query_vec, centroids, n_probe)
-    stored = spark.read.parquet(path).filter(F.col("cluster").isin(probe))
-    return _topk_within(stored, query_vec, k, id_col, vec_col)
-
-
-def write_lsh_table(
-    embeddings: DataFrame,
-    planes: list[list[float]],
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the LSH-bucketed embedding table hive-partitioned by
-    `bucket` — the stored twin of lsh_topk's bucket probe."""
-    embeddings.withColumn(
-        "bucket", lsh_project_bucket(F.col(vec_col), planes)
-    ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def lsh_topk_stored(
-    spark,
-    path: str,
-    query_vec: list[float],
-    planes: list[list[float]],
-    k: int = 10,
-    multi_probe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """LSH probe over the STORED bucketed table (partition-pruned scan of
-    the query's bucket + multi-probe neighbors)."""
-    import numpy as np
-
-    dots = [float(np.dot(query_vec, p)) for p in planes]
-    qbits = 0
-    for i, d in enumerate(dots):
-        if d >= 0:
-            qbits |= 1 << i
-    flip_order = sorted(range(len(planes)), key=lambda i: abs(dots[i]))
-    probes = [qbits] + [qbits ^ (1 << i) for i in flip_order[:multi_probe]]
-    stored = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
-    return _topk_within(stored, query_vec, k, id_col, vec_col)
-
-
 def lsh_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -286,9 +211,7 @@ def lsh_topk(
     by how close the query sits to each hyperplane (|dot| ascending — the
     planes most likely to have put a true neighbor on the other side).
     multi_probe=0 is the classic single-bucket probe (recall < 1);
-    multi_probe=n_planes probes all Hamming-1 neighbors. The bucket column
-    doubles as a bucketing key for the stored table so every probe is a
-    pruned scan, not a full pass."""
+    multi_probe=n_planes probes all Hamming-1 neighbors."""
     planes = make_planes(len(query_vec), n_planes)
     import numpy as np
 
@@ -312,74 +235,6 @@ def lsh_topk(
             F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-# --- int8 scalar quantization (embedding storage compression) -------------
-#
-# At 10^12 vectors the embedding column dominates storage; per-vector
-# min/max scalar quantization stores uint8 codes + two floats = ~4× smaller
-# than float32 with ~1e-2 cosine error at typical dims. Both directions are
-# pure native array expressions (transform/aggregate — whole-stage codegen,
-# no UDF), so quantize-on-write and dequantize-on-read ride the scan.
-
-
-def quantize_embedding_expr(emb: Column) -> Column:
-    """array<float> → struct(codes: array<int> in [0,255], lo, hi).
-    Degenerate constant vectors (hi == lo) code to 0 with scale kept
-    harmless (dequantize returns the constant)."""
-    lo = F.array_min(F.transform(emb, lambda x: x.cast("double")))
-    hi = F.array_max(F.transform(emb, lambda x: x.cast("double")))
-    rng = hi - lo
-    codes = F.transform(
-        emb,
-        lambda x: F.when(rng > 0,
-                         F.round((x.cast("double") - lo) / rng * 255))
-        .otherwise(F.lit(0))
-        .cast("int"),
-    )
-    return F.struct(
-        codes.alias("codes"),
-        lo.cast("float").alias("lo"),
-        hi.cast("float").alias("hi"),
-    )
-
-
-def dequantize_embedding_expr(qcol: Column) -> Column:
-    """struct(codes, lo, hi) → array<float> reconstruction."""
-    lo = qcol["lo"].cast("double")
-    hi = qcol["hi"].cast("double")
-    rng = hi - lo
-    return F.transform(
-        qcol["codes"],
-        lambda c: (
-            F.when(rng > 0, lo + c.cast("double") / 255.0 * rng).otherwise(lo)
-        ).cast("float"),
-    )
-
-
-def quantized_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    q_col: str = "q",
-) -> DataFrame:
-    """Brute-force cosine top-k over QUANTIZED vectors: dequantize inside
-    the scan projection and rank — the memory-bandwidth win of reading
-    uint8 codes instead of float32 is exactly what a 10^12-row scan needs;
-    the TakeOrdered top-k shape is identical to the float path."""
-    qv = F.array(*[F.lit(float(v)) for v in query_vec])
-    deq = dequantize_embedding_expr(F.col(q_col))
-    return (
-        emb.select(
-            F.col(id_col),
-            F.round(
-                dot_expr(deq, qv) / (norm_expr(deq) * norm_expr(qv)), 6
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
@@ -437,79 +292,6 @@ def _l2_argmin_sql(subvec_sql: str, codebook: list[list[float]]) -> str:
         for c in codebook
     ) + ")"
     return f"CAST(array_position({scores}, array_min({scores})) - 1 AS INT)"
-
-
-def train_pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 4,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Train m per-subspace codebooks (k codewords each) with L2 Lloyd
-    steps, ALL subspaces in one job per iteration: the corpus is exploded
-    once into (sub, subvec) rows and persisted; each iteration is one
-    assignment projection + ONE groupBy shuffle on (sub, cluster, dim),
-    collecting only m·k·(dim/m) = k·dim doubles to the driver — the same
-    bounded-loop contract as train_centroids/train_quality_classifier."""
-    import numpy as np
-
-    first = embeddings.select(vec_col).first()
-    if first is None:
-        raise ValueError("no vectors to train on")
-    dim = len(first[vec_col])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    d = dim // m
-
-    sub = embeddings.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.slice(F.col(vec_col), s * d + 1, d).alias("subvec"),
-                )
-                for s in range(m)
-            ])
-        ).alias("e")
-    ).select("e.sub", "e.subvec").persist()
-    try:
-        # deterministic seeded init per subspace from one bounded sample
-        sample = sub.limit(512 * m).collect()
-        by_sub: dict[int, list[list[float]]] = {}
-        for r in sample:
-            by_sub.setdefault(r["sub"], []).append(list(r["subvec"]))
-        rng = np.random.RandomState(seed)
-        books = []
-        for s in range(m):
-            pool = np.array(by_sub[s], dtype="float64")
-            idx = rng.choice(len(pool), size=k, replace=False)
-            books.append(pool[idx])
-
-        for _ in range(iters):
-            assign_sql = "0"
-            for s in range(m):
-                assign_sql = (
-                    f"(CASE WHEN (sub = {s}) THEN "
-                    f"({_l2_argmin_sql('subvec', books[s].tolist())}) "
-                    f"ELSE {assign_sql} END)"
-                )
-            assign = F.expr(assign_sql)
-            means = (
-                sub.withColumn("cluster", assign)
-                .select("sub", "cluster", F.posexplode("subvec").alias("dim", "x"))
-                .groupBy("sub", "cluster", "dim")
-                .agg(F.avg("x").alias("mu"))
-                .collect()
-            )
-            new = [b.copy() for b in books]
-            for r in means:
-                new[r["sub"]][r["cluster"]][r["dim"]] = r["mu"]
-            books = new
-        return [b.tolist() for b in books]
-    finally:
-        sub.unpersist()
 
 
 def pq_encode(
@@ -585,96 +367,4 @@ def pq_topk(
         codes_df.select(F.col(id_col), score.alias("adc_score"))
         .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
         .limit(k)
-    )
-
-
-def mine_bitext_pairs(
-    embeddings: DataFrame,
-    src_lang: str,
-    tgt_lang: str,
-    min_cos: float = 0.7,
-    margin_ratio: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    lang_col: str = "lang",
-    n_planes: int = 4,
-) -> DataFrame:
-    """Cross-lingual parallel-pair mining (the LASER/CCMatrix recipe that
-    built the big MT corpora): for every src-lang doc, its best tgt-lang
-    neighbor by embedding cosine — kept only when the match is both
-    strong (cosine ≥ min_cos) AND UNAMBIGUOUS (best/second-best ratio ≥
-    margin_ratio, the margin criterion that kills hub false positives
-    plain thresholding admits).
-
-    Scale shape: candidates come from a sign-projection bucket EQUI-join
-    restricted to src×tgt (never all-pairs; same-direction translations
-    share every sign bit ⇒ recall 1 for near-parallel embeddings); the
-    top-2-per-src margin is a window over each src's own candidate set.
-    Returns (src_id, tgt_id, cosine, margin_micro) — margin_micro =
-    cos1·1e6 div max(cos2_micro, 1) as an integer ratio (second-best
-    missing ⇒ margin is maximal: the match is trivially unambiguous)."""
-    from pyspark.sql.window import Window
-
-    first = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("d"))
-        .head()
-    )
-    if first is None:
-        id_type = embeddings.schema[id_col].dataType.simpleString()
-        return embeddings.sparkSession.createDataFrame(
-            [], f"src_id {id_type}, tgt_id {id_type},"
-                " cosine double, margin_micro bigint"
-        )
-    planes = make_planes(int(first["d"]), n_planes)
-    bucketed = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(lang_col).alias("_lang"),
-        F.col(vec_col).alias("_v"),
-        lsh_project_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    src = bucketed.filter(F.col("_lang") == src_lang).select(
-        "bucket", F.col("_id").alias("src_id"), F.col("_v").alias("vs")
-    )
-    tgt = bucketed.filter(F.col("_lang") == tgt_lang).select(
-        "bucket", F.col("_id").alias("tgt_id"), F.col("_v").alias("vt")
-    )
-    cand = (
-        src.join(tgt, "bucket")
-        .withColumn(
-            "cos_micro",
-            F.round(
-                cosine_expr(F.col("vs"), F.col("vt")) * 1_000_000
-            ).cast("long"),
-        )
-        .select("src_id", "tgt_id", "cos_micro")
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cos_micro").desc(), F.col("tgt_id").asc()
-    )
-    ranked = cand.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 2
-    )
-    best = ranked.filter(F.col("rk") == 1).select(
-        "src_id", "tgt_id", F.col("cos_micro").alias("c1")
-    )
-    second = ranked.filter(F.col("rk") == 2).select(
-        "src_id", F.col("cos_micro").alias("c2")
-    )
-    return (
-        best.join(second, "src_id", "left")
-        .withColumn(
-            "margin_micro",
-            F.expr("c1 * 1000000 div greatest(coalesce(c2, 1L), 1L)"),
-        )
-        .filter(
-            (F.col("c1") >= int(round(min_cos * 1_000_000)))
-            & (F.col("margin_micro") >= int(round(margin_ratio * 1_000_000)))
-        )
-        .select(
-            "src_id",
-            "tgt_id",
-            (F.col("c1") / 1_000_000.0).alias("cosine"),
-            "margin_micro",
-        )
     )

@@ -1129,389 +1129,6 @@ def dsir_select(
     )
 
 
-def _bpe_merge_expr(symbols: Column, a: str, b: str) -> Column:
-    """Left-fold one BPE merge over a symbol array natively: append each
-    symbol unless the accumulator's last element is `a` and the incoming
-    symbol is `b`, in which case replace the last element with a||b. A
-    single look-back fold IS leftmost-greedy non-overlapping merging (the
-    Sennrich/GPT-2 rule); the Python differential reference implements
-    the identical fold."""
-    return F.aggregate(
-        symbols,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (x == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(F.element_at(acc, -1), x)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def train_bpe(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 50,
-    min_pair_count: int = 2,
-    end_of_word: str = "</w>",
-    checkpoint_every: int = 8,
-) -> list[tuple[str, str]]:
-    """Distributed BPE merge learning (Sennrich et al. 2016 / the GPT-2
-    tokenizer-training recipe; no reference-repo analog — this is the
-    vocabulary step a pretraining pipeline runs over the curated corpus).
-
-    100 TB shape: the corpus crosses a shuffle exactly ONCE (normalized
-    word counts). Every merge round then operates on the DISTINCT-word
-    (symbols, count) table — Zipf-bounded vocabulary, orders of magnitude
-    smaller than the corpus: explode adjacent symbol pairs weighted by
-    word count → partial-aggregated groupBy pair → distributed top-1
-    (orderBy+limit(1) = TakeOrderedAndProject) with a deterministic
-    (count desc, a, b) tie-break → collect ONE row → apply the merge with
-    a native fold. Driver state is one pair per round plus the returned
-    merge list — bounded by num_merges. localCheckpoint every
-    `checkpoint_every` rounds truncates the per-round fold lineage (the
-    resolve_clusters planner-growth lesson).
-    """
-    from avc_parser_spark.functions.dedup import normalized_text
-
-    vocab = (
-        docs.select(
-            F.explode(
-                F.split(normalized_text(F.col(text_col)), " ")
-            ).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.concat(
-                F.split(F.col("w"), ""), F.array(F.lit(end_of_word))
-            ).alias("s"),
-            "c",
-        )
-        .localCheckpoint()
-    )
-    merges: list[tuple[str, str]] = []
-    for r in range(num_merges):
-        pairs = (
-            vocab.select(
-                F.explode(
-                    F.when(
-                        F.size("s") < 2, F.expr(
-                            "cast(array() as array<struct<a:string,b:string>>)"
-                        )
-                    ).otherwise(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size("s") - 1),
-                            lambda i: F.struct(
-                                F.element_at(F.col("s"), i).alias("a"),
-                                F.element_at(F.col("s"), i + 1).alias("b"),
-                            ),
-                        )
-                    )
-                ).alias("p"),
-                "c",
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("c").alias("n"))
-            .orderBy(F.col("n").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not pairs or pairs[0]["n"] < min_pair_count:
-            break
-        a, b = pairs[0]["a"], pairs[0]["b"]
-        merges.append((a, b))
-        vocab = vocab.select(_bpe_merge_expr(F.col("s"), a, b).alias("s"), "c")
-        if (r + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint()
-    return merges
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    end_of_word: str = "</w>",
-) -> DataFrame:
-    """Apply a learned merge list: adds `bpe_tokens` (array<string>).
-    Runs as ONE Arrow-batched pass with the merge list carried in the
-    closure (broadcast-sized by construction: num_merges entries) — the
-    per-merge fold is inherently sequential per word, the same sanctioned
-    per-payload class as the media decoders; chaining 50 native fold
-    expressions instead re-inlines into one giant codegen tree (the
-    winnowing lesson)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    def encode_word(word: str) -> list[str]:
-        syms = list(word) + [end_of_word]
-        while len(syms) > 1:
-            best = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or r < best[0]):
-                    best = (r, i)
-            if best is None:
-                break
-            a, b = merges[best[0]]
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    @pandas_udf(ArrayType(StringType()))
-    def enc(texts: pd.Series) -> pd.Series:
-        import re as _re
-
-        cache: dict[str, list[str]] = {}
-
-        def doc(t):
-            t = _re.sub(r"\s+", " ", (t or "").strip().lower())
-            toks: list[str] = []
-            for w in t.split(" "):
-                if not w:
-                    continue
-                if w not in cache:
-                    cache[w] = encode_word(w)
-                toks.extend(cache[w])
-            return toks
-
-        return texts.map(doc)
-
-    return docs.withColumn("bpe_tokens", enc(F.col(text_col)))
-
-
-UNIGRAM_UNK_MICRO = -20_000_000  # score for a char absent from the vocab
-
-
-def _unigram_viterbi(
-    word: str, scores: dict[str, int], max_len: int
-) -> list[str]:
-    """Best segmentation of `word` under integer-micro piece log-probs:
-    maximize the score sum; ties broken toward the LONGER last piece,
-    then the lexicographically smaller one — a total, engine-free rule
-    (the pure-Python test twin brute-forces all segmentations with the
-    same key). Chars outside the vocab segment as themselves at
-    UNIGRAM_UNK_MICRO (total coverage — no unencodable text)."""
-    n = len(word)
-    # best[i] = (score, last_piece) for word[:i]
-    best: list[tuple[int, str] | None] = [None] * (n + 1)
-    best[0] = (0, "")
-    for i in range(1, n + 1):
-        for l in range(1, min(max_len, i) + 1):
-            piece = word[i - l:i]
-            s = scores.get(piece)
-            if s is None:
-                if l != 1:
-                    continue
-                s = UNIGRAM_UNK_MICRO
-            prev = best[i - l]
-            if prev is None:
-                continue
-            cand = (prev[0] + s, piece)
-            cur = best[i]
-            if (
-                cur is None
-                or cand[0] > cur[0]
-                or (
-                    cand[0] == cur[0]
-                    and (
-                        len(piece) > len(cur[1])
-                        or (len(piece) == len(cur[1]) and piece < cur[1])
-                    )
-                )
-            ):
-                best[i] = cand
-    out: list[str] = []
-    i = n
-    while i > 0:
-        piece = best[i][1]
-        out.append(piece)
-        i -= len(piece)
-    return list(reversed(out))
-
-
-def train_unigram(
-    docs: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 200,
-    seed_size: int = 600,
-    iters: int = 3,
-    max_piece_len: int = 6,
-) -> list[tuple[str, int]]:
-    """Unigram-LM tokenizer training (Kudo 2018 / the SentencePiece
-    'unigram' model, simplified to HARD EM: Viterbi counts instead of
-    full forward–backward expectations, frequency pruning instead of
-    loss-delta pruning — deviations pinned in the tests; no reference-repo
-    analog, this is the other mainstream vocabulary learner next to
-    train_bpe). Returns [(piece, score_micro)] with score_micro =
-    round(ln(count/total)·1e6) — integer log-probs, so segmentation is
-    deterministic cross-engine.
-
-    100 TB shape (the train_bpe contract): the corpus crosses a shuffle
-    exactly ONCE (normalized word counts → the Zipf-bounded distinct-word
-    table, localCheckpoint'ed). Seeding = one substring explode over that
-    table + a distributed top-`seed_size` (TakeOrderedAndProject, bounded
-    broadcast). Each EM iteration = one Arrow-batched Viterbi pass over
-    the distinct words (vocab carried in the closure, per-word cache) +
-    one vocab-bounded groupBy; driver state = the ≤ seed_size piece list.
-    Single chars are always retained (total coverage)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    import math
-
-    from avc_parser_spark.functions.dedup import normalized_text
-
-    words = (
-        docs.select(
-            F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
-    )
-
-    # seed: all substrings (len ≤ max_piece_len) weighted by word count,
-    # top seed_size by (weight desc, piece asc) — native explode + one
-    # partial-agg shuffle + TakeOrderedAndProject; chars ride along and
-    # are union'ed back in unconditionally below.
-    # substring(w, i+1, l) needs both lambda vars — Spark's 2-param
-    # higher-order lambdas bind (elem, idx) (project gotcha), so the
-    # inner lambda captures i via a closure factory:
-    def _sub_factory(i_col):
-        return lambda l: F.expr("w").substr(i_col + 1, l)
-
-    subs = words.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.length("w") - 1),
-                    lambda i: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(F.lit(max_piece_len), F.length("w") - i),
-                        ),
-                        _sub_factory(i),
-                    ),
-                )
-            )
-        ).alias("piece"),
-        F.col("c"),
-    )
-    seed_rows = (
-        subs.groupBy("piece")
-        .agg(F.sum("c").alias("n"))
-        .orderBy(F.desc("n"), F.asc("piece"))
-        .limit(seed_size)
-        .collect()
-    )
-    char_rows = (
-        words.select(F.explode(F.split("w", "")).alias("piece"), "c")
-        .filter(F.col("piece") != "")
-        .groupBy("piece")
-        .agg(F.sum("c").alias("n"))
-        .collect()
-    )
-    counts: dict[str, int] = {r["piece"]: int(r["n"]) for r in seed_rows}
-    chars = {r["piece"]: int(r["n"]) for r in char_rows}
-    counts.update(chars)
-    if not counts:
-        return []
-
-    def _scores(cnts: dict[str, int]) -> dict[str, int]:
-        total = sum(cnts.values())
-        return {
-            p: int(round(math.log(n / total) * 1_000_000))
-            for p, n in cnts.items()
-        }
-
-    scores = _scores(counts)
-    for _ in range(iters):
-        sc, ml = dict(scores), max_piece_len
-
-        @pandas_udf(ArrayType(StringType()))
-        def seg(ws: pd.Series) -> pd.Series:
-            cache: dict[str, list[str]] = {}
-
-            def one(w):
-                if w not in cache:
-                    cache[w] = _unigram_viterbi(w, sc, ml)
-                return cache[w]
-
-            return ws.map(one)
-
-        used = (
-            words.select(F.explode(seg(F.col("w"))).alias("piece"), "c")
-            .groupBy("piece")
-            .agg(F.sum("c").alias("n"))
-            .collect()
-        )
-        counts = {r["piece"]: int(r["n"]) for r in used}
-        # prune to vocab_size by (count desc, piece asc); single chars are
-        # never dropped (coverage); unk placeholders ('' keys never occur)
-        multi = sorted(
-            ((p, n) for p, n in counts.items() if len(p) > 1),
-            key=lambda x: (-x[1], x[0]),
-        )
-        keep = dict(multi[: max(0, vocab_size - len(chars))])
-        for ch in chars:
-            # chars never drop (total coverage); floor 1 keeps a char the
-            # Viterbi stopped using scoreable (log 0 is undefined)
-            keep[ch] = max(1, counts.get(ch, 0))
-        scores = _scores(keep)
-    return sorted(scores.items(), key=lambda x: (-x[1], x[0]))
-
-
-def unigram_encode(
-    docs: DataFrame,
-    vocab: list[tuple[str, int]],
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a trained unigram vocab: adds `unigram_tokens` — one
-    Arrow-batched Viterbi pass (vocab in the closure, per-word cache),
-    the same sanctioned per-payload class as bpe_encode."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    sc = dict(vocab)
-    ml = max((len(p) for p in sc), default=1)
-
-    @pandas_udf(ArrayType(StringType()))
-    def enc(texts: pd.Series) -> pd.Series:
-        import re as _re
-
-        cache: dict[str, list[str]] = {}
-
-        def doc(t):
-            t = _re.sub(r"\s+", " ", (t or "").strip().lower())
-            toks: list[str] = []
-            for w in t.split(" "):
-                if not w:
-                    continue
-                if w not in cache:
-                    cache[w] = _unigram_viterbi(w, sc, ml)
-                toks.extend(cache[w])
-            return toks
-
-        return texts.map(doc)
-
-    return docs.withColumn("unigram_tokens", enc(F.col(text_col)))
-
-
 def chunk_documents(
     docs: DataFrame,
     size: int = 32,
@@ -1943,7 +1560,7 @@ def anchor_summary(
     web-search relevance signal (anchor text describes the TARGET, written
     by third parties), used to augment retrieval and page-quality scoring.
 
-    Scale shape (the top_terms_per_doc pattern): one (href, anchor)
+    Scale shape: one (href, anchor)
     partial-agg shuffle for counts, then the per-href top-k happens
     INSIDE the href-side reduction — sort_array(collect_list(struct))
     slice with a deterministic (count desc, anchor asc) tie-break — never

@@ -114,11 +114,6 @@ AVC_DENIAL_TYPES = frozenset(
     {"AVC", "USER_AVC", "AVC_PATH", "FANOTIFY", "SELINUX_ERR",
      "USER_SELINUX_ERR", "1400", "1107"}
 )
-POLICY_TYPES = frozenset({"MAC_POLICY_LOAD", "MAC_STATUS"})
-CONTEXT_TYPES = frozenset(
-    {"SYSCALL", "PATH", "CWD", "PROCTITLE", "SOCKADDR", "EXECVE"}
-)
-ALL_SUPPORTED = AVC_DENIAL_TYPES | POLICY_TYPES | CONTEXT_TYPES | {"USER_ACCT"}
 
 # errno translation table (parse_avc.py:250-295 uses the same public module).
 _ERRNO_NAMES: dict[str, str] = {str(-v): n for v, n in errno.errorcode.items()}

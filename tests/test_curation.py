@@ -95,75 +95,6 @@ def test_split_by_hash_md5_portable(spark):
         assert out[i] == want, (i, bucket)
 
 
-def test_curate_corpus_lm_perplexity_filter(spark):
-    """lm + max_ppl drop surviving docs the reference LM finds implausible;
-    clean docs and too-short-to-score docs are kept. The LM is trained on
-    the corpus domain (the CCNet pattern: reference LM over in-domain
-    text), so every in-domain doc scores well below the all-OOV backoff
-    ceiling the gibberish doc hits."""
-    from avc_parser_spark.functions.curation import curate_corpus
-    from avc_parser_spark.functions.text import build_ngram_lm, lm_score
-
-    corpus = _corpus(spark).unionByName(
-        spark.createDataFrame(
-            [
-                (20, "https://site.com/junk", "qzx wvb kjh plm ytr qzx nmk"),
-                (21, "https://site.com/tiny", "solo"),
-            ],
-            "doc_id long, url string, text string",
-        )
-    )
-    lm = build_ngram_lm(_corpus(spark))
-    # pick a threshold between the clean docs' max ppl and the junk doc's
-    scored = {
-        r["doc_id"]: r["ppl"]
-        for r in lm_score(corpus, lm).collect()
-    }
-    clean_max = max(p for d, p in scored.items() if d != 20)
-    assert scored[20] > clean_max * 2
-    cutoff = (clean_max + scored[20]) / 2
-    out = curate_corpus(corpus, _evals(spark), lm=lm, max_ppl=cutoff)
-    ids = sorted(r["doc_id"] for r in out.collect())
-    # 20 dropped by the LM filter; 21 (<2 tokens, unscoreable) kept
-    assert ids == [0, 2] + list(range(6, 12)) + [21]
-
-
-def test_curate_corpus_domain_blocklist_and_cap(spark):
-    """blocked_domains drops every doc from listed hosts before any
-    sketching; max_per_domain keeps the K smallest-md5(id) docs per
-    domain — re-derived here, so the selection is pinned, not just
-    counted."""
-    import hashlib
-
-    from avc_parser_spark.functions.curation import curate_corpus
-
-    rows = [
-        (i, f"https://spam.example/p{i}",
-         f"spam farm page number {i} words {i * 13}")
-        for i in range(10)
-    ] + [
-        (100 + i, f"https://ok.example/p{i}",
-         f"good page number {i} body {i * 11}")
-        for i in range(4)
-    ] + [
-        (200, "https://blocked.example/x", "blocked host page body words"),
-    ]
-    corpus = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    out = curate_corpus(
-        corpus,
-        None,
-        blocked_domains=["blocked.example"],
-        max_per_domain=3,
-    )
-    got = sorted(r["doc_id"] for r in out.collect())
-    md5 = lambda i: hashlib.md5(str(i).encode()).hexdigest()  # noqa: E731
-    want_spam = sorted(sorted(range(10), key=lambda i: (md5(i), i))[:3])
-    want_ok = sorted(sorted(range(100, 104), key=lambda i: (md5(i), i))[:3])
-    assert got == want_spam + want_ok
-    doms = {r["doc_id"]: r["domain"] for r in out.collect()}
-    assert all(d in ("spam.example", "ok.example") for d in doms.values())
-
-
 def test_write_sharded_controls_file_counts(spark, tmp_path):
     """Shard counts derive from MEASURED per-split text bytes: a split
     with ~3 target-sizes of text gets 3 parquet files, a small one gets
@@ -267,92 +198,3 @@ def test_curate_corpus_quality_battery(spark):
     # (they share the `good` body), so only those drop, via dedup not C4
     base = curate_corpus(docs, None)
     assert sorted(r["doc_id"] for r in base.collect()) == [0, 1, 4, 5]
-
-
-def test_curate_delta_incremental(spark, tmp_path):
-    """Incremental ingest: a delta batch dedups against the STORED curated
-    corpus without reprocessing it — url-level, exact-text, cross-batch
-    near-dup, within-batch near-dup and contamination drops each planted
-    once; commit_delta appends survivors + sketches so the NEXT delta
-    dedups against them too."""
-    from avc_parser_spark.functions.curation import (
-        commit_delta,
-        curate_corpus,
-        curate_delta,
-        write_curated,
-    )
-    from avc_parser_spark.functions.dedup import write_sketch_table
-
-    base_rows = [
-        (i, f"https://base.com/p{i}",
-         f"stored document number {i} keeps twelve distinct words in every "
-         f"single line body {i * 13}")
-        for i in range(10)
-    ]
-    base = spark.createDataFrame(base_rows, "doc_id long, url string, text string")
-    corpus_path = str(tmp_path / "corpus")
-    sketch_path = str(tmp_path / "sketches")
-    curated = curate_corpus(base, None)
-    write_curated(curated, corpus_path)
-    write_sketch_table(curated, sketch_path, mode="overwrite")
-
-    eval_text = ("held out benchmark sentence with many overlapping tokens "
-                 "for the contamination check stage")
-    evals = spark.createDataFrame([(900, eval_text)], "eval_id long, text string")
-    near = base_rows[3][2] + " extra"     # high-jaccard, different digest
-    delta_rows = [
-        (100, "https://base.com/p4?utm_source=x",  # canon_url == stored p4
-         "entirely novel text that only shares the url with stored page four"),
-        (101, "https://d.com/a", base_rows[5][2]),          # exact text copy
-        (102, "https://d.com/b", near),                     # cross near-dup
-        (103, "https://d.com/c", "within batch twin text that repeats "
-                                 "across two fresh delta documents today"),
-        (104, "https://d.com/d", "within batch twin text that repeats "
-                                 "across two fresh delta documents today"),
-        (105, "https://d.com/e", eval_text),                # contaminated
-        (106, "https://d.com/f", "a genuinely fresh clean delta document "
-                                 "with its own vocabulary and nothing shared"),
-    ]
-    delta = spark.createDataFrame(delta_rows, "doc_id long, url string, text string")
-
-    out = curate_delta(spark, delta, corpus_path, sketch_path, eval_docs=evals)
-    got = {r["doc_id"]: r for r in out.collect()}
-    assert sorted(got) == [103, 106]
-    assert all(r["split"] in ("train", "val", "test") for r in got.values())
-
-    # commit, then a second delta copying survivor 106 must now drop
-    commit_delta(out.select(*curated.columns), corpus_path, sketch_path)
-    delta2 = spark.createDataFrame(
-        [(200, "https://d2.com/x", delta_rows[-1][2]),      # copy of 106
-         (201, "https://d2.com/y", "second wave document standing alone "
-                                   "with completely independent words")],
-        "doc_id long, url string, text string",
-    )
-    out2 = curate_delta(spark, delta2, corpus_path, sketch_path)
-    assert sorted(r["doc_id"] for r in out2.collect()) == [201]
-    # the store now holds base survivors + both committed deltas
-    stored = spark.read.parquet(corpus_path)
-    assert stored.count() == curated.count() + 2
-
-
-def test_curate_corpus_link_rank_floor(spark):
-    """ranks + min_rank_micro drop low-rank survivors BEFORE sketching;
-    docs absent from the rank table are kept (pinned keep-on-missing)."""
-    from avc_parser_spark.functions.curation import curate_corpus
-
-    # 6 and 7 are low-rank spam; 8 is high-rank; 9-11 have no rank rows.
-    ranks = spark.createDataFrame(
-        [(6, 100), (7, 99_999), (8, 5_000_000), (2, 3_000_000)],
-        "node long, rank_micro long",
-    )
-    out = curate_corpus(
-        _corpus(spark), _evals(spark), ranks=ranks, min_rank_micro=100_000
-    )
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert ids == [0, 2, 8, 9, 10, 11]
-
-    # floor alone (no ranks frame) must not activate the stage
-    out2 = curate_corpus(_corpus(spark), _evals(spark), min_rank_micro=10)
-    assert sorted(r["doc_id"] for r in out2.collect()) == [0, 2] + list(
-        range(6, 12)
-    )

@@ -1914,233 +1914,6 @@ def test_build_ngram_lm_top_k_cap_deterministic(spark):
     assert kept == {("aa", "bb"), ("bb", "aa")}
 
 
-def _bpe_reference_trainer(texts, num_merges=50, min_pair_count=2,
-                           eow="</w>"):
-    """Pure-Python Sennrich-style BPE trainer with EXACTLY train_bpe's
-    semantics: whitespace-normalized lowercase words, (count desc, a, b)
-    tie-break, leftmost-greedy single-look-back fold per merge."""
-    import re
-    from collections import Counter
-
-    vocab = Counter()
-    for t in texts:
-        t = re.sub(r"\s+", " ", (t or "").strip().lower())
-        for w in t.split(" "):
-            if w:
-                vocab[w] += 1
-    words = {w: list(w) + [eow] for w in vocab}
-    merges = []
-    for _ in range(num_merges):
-        pairs = Counter()
-        for w, syms in words.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += vocab[w]
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_pair_count:
-            break
-        a, b = best[0]
-        merges.append((a, b))
-        for w, syms in words.items():
-            out = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            words[w] = out
-    return merges
-
-
-def test_train_bpe_differential_vs_python_reference(spark):
-    """Distributed BPE training must reproduce the scalar reference
-    trainer merge-for-merge (same counts, same deterministic tie-break)."""
-    from avc_parser_spark.functions.text import train_bpe
-
-    texts = [
-        "low lower lowest newest newest widest",
-        "new new newer newest low low low",
-        "the cat sat on the mat the cat ran",
-        "banana bandana ban banana",
-    ] * 3
-    got = train_bpe(
-        spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-        ),
-        num_merges=25,
-    )
-    want = _bpe_reference_trainer(texts, num_merges=25)
-    assert got == want
-    assert len(got) == 25  # corpus is rich enough to fill every round
-
-
-def test_bpe_encode_applies_merges(spark):
-    """bpe_encode applies the learned merges by rank (GPT-2 rule) with
-    word caching; untouched words fall back to chars+end-of-word."""
-    from avc_parser_spark.functions.text import bpe_encode, train_bpe
-
-    docs = spark.createDataFrame(
-        [(0, "low low low lower lowest")], ["doc_id", "text"]
-    )
-    merges = train_bpe(docs, num_merges=10, min_pair_count=2)
-    rows = bpe_encode(
-        spark.createDataFrame([(1, "low lowest zz")], ["doc_id", "text"]),
-        merges,
-    ).collect()
-    toks = rows[0]["bpe_tokens"]
-    # 'low' was the most frequent word -> fully merged to one token
-    assert toks[0] == "low</w>"
-    # unseen word: no merges apply beyond learned ones; chars survive
-    assert toks[-2:] == ["z", "z</w>"] or toks[-1].endswith("</w>")
-    assert "".join(toks).replace("</w>", " ").strip() == "low lowest zz"
-
-
-def test_unigram_viterbi_matches_bruteforce():
-    """Viterbi segmentation ≡ brute-force enumeration of EVERY
-    segmentation: the DP must achieve the optimal total score (ties are
-    resolved by the pinned longer-last-piece/lex rule; optimality is the
-    independent check) over randomized piece scores."""
-    import random
-
-    from avc_parser_spark.functions.text import (
-        UNIGRAM_UNK_MICRO,
-        _unigram_viterbi,
-    )
-
-    rng = random.Random(13)
-    pieces = ["a", "b", "c", "ab", "bc", "abc", "cab", "bb", "cc"]
-    for trial in range(200):
-        scores = {p: rng.randint(-30, -1) * 250_000 for p in pieces}
-        word = "".join(rng.choice("abcd") for _ in range(rng.randint(1, 8)))
-
-        def seg_score(seg):
-            total = 0
-            for p in seg:
-                s = scores.get(p)
-                if s is None:
-                    if len(p) != 1:
-                        return None
-                    s = UNIGRAM_UNK_MICRO
-                total += s
-            return total
-
-        def all_segs(w):
-            if not w:
-                yield []
-                return
-            for l in range(1, min(6, len(w)) + 1):
-                head = w[:l]
-                if head not in scores and l != 1:
-                    continue
-                for rest in all_segs(w[l:]):
-                    yield [head] + rest
-
-        best_score = max(seg_score(seg) for seg in all_segs(word))
-        got = _unigram_viterbi(word, scores, 6)
-        assert "".join(got) == word
-        assert seg_score(got) == best_score, (word, got, best_score)
-
-
-def _unigram_python_twin(texts, vocab_size, seed_size, iters, max_piece_len):
-    """Pure-Python replica of train_unigram's whole pipeline (word counts,
-    positional substring seed, hard-EM with pruning, char floor)."""
-    import math
-    import re
-    from collections import Counter
-
-    from avc_parser_spark.functions.text import _unigram_viterbi
-
-    words = Counter()
-    for t in texts:
-        t = re.sub(r"\s+", " ", t.strip().lower())
-        for w in t.split(" "):
-            if w:
-                words[w] += 1
-
-    sub_counts = Counter()
-    chars = Counter()
-    for w, c in words.items():
-        for i in range(len(w)):
-            chars[w[i]] += c
-            for l in range(1, min(max_piece_len, len(w) - i) + 1):
-                sub_counts[w[i:i + l]] += c
-    seed = dict(
-        sorted(sub_counts.items(), key=lambda x: (-x[1], x[0]))[:seed_size]
-    )
-    counts = dict(seed)
-    counts.update(chars)
-    if not counts:
-        return []
-
-    def scores_of(cnts):
-        total = sum(cnts.values())
-        return {
-            p: int(round(math.log(n / total) * 1_000_000))
-            for p, n in cnts.items()
-        }
-
-    scores = scores_of(counts)
-    for _ in range(iters):
-        used = Counter()
-        for w, c in words.items():
-            for p in _unigram_viterbi(w, scores, max_piece_len):
-                used[p] += c
-        counts = dict(used)
-        multi = sorted(
-            ((p, n) for p, n in counts.items() if len(p) > 1),
-            key=lambda x: (-x[1], x[0]),
-        )
-        keep = dict(multi[: max(0, vocab_size - len(chars))])
-        for ch in chars:
-            keep[ch] = max(1, counts.get(ch, 0))
-        scores = scores_of(keep)
-    return sorted(scores.items(), key=lambda x: (-x[1], x[0]))
-
-
-def test_train_unigram_matches_python_twin(spark):
-    """Distributed unigram training ≡ the pure-Python pipeline twin piece
-    for piece and score for score (integer micro log-probs)."""
-    from avc_parser_spark.functions.text import train_unigram
-
-    texts = [
-        "internationalization international internal nation",
-        "the nation the national anthem the internet",
-        "internal internet interns in tern nation nation",
-    ] * 2
-    got = train_unigram(
-        spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-        ),
-        vocab_size=40,
-        seed_size=120,
-        iters=3,
-    )
-    want = _unigram_python_twin(
-        texts, vocab_size=40, seed_size=120, iters=3, max_piece_len=6
-    )
-    assert got == want
-    assert any(len(p) > 1 for p, _ in got)  # learned real multi-char pieces
-
-
-def test_unigram_encode_roundtrip_and_unk(spark):
-    """Tokens concatenate back to the normalized words; never-seen chars
-    segment as themselves (UNK floor — total coverage)."""
-    from avc_parser_spark.functions.text import train_unigram, unigram_encode
-
-    docs = spark.createDataFrame(
-        [(0, "banana band ban banana bandana")], ["doc_id", "text"]
-    )
-    vocab = train_unigram(docs, vocab_size=20, seed_size=60, iters=2)
-    rows = unigram_encode(
-        spark.createDataFrame([(1, "banana bandana xq")], ["doc_id", "text"]),
-        vocab,
-    ).collect()
-    toks = rows[0]["unigram_tokens"]
-    assert "".join(toks) == "bananabandanaxq"
-    assert "x" in toks and "q" in toks  # unseen chars fall back to UNK
-
-
 def test_extract_html_text_behavior(spark):
     """HTML→text extraction: script/style/head/comments dropped, block tags
     become newlines, entities decode AFTER tag strip (no double-decode),
@@ -2308,128 +2081,6 @@ def test_bm25_topk_ranking_semantics(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_mine_bitext_pairs_margin_criterion(spark):
-    """Parallel docs (same-direction embeddings, cosine 1, guaranteed
-    co-bucketed) are mined; an AMBIGUOUS source with two equal matches
-    fails the margin ratio; cross-lang only; weak matches fail min_cos."""
-    import math
-
-    from avc_parser_spark.functions.similarity import mine_bitext_pairs
-
-    def unit(i):
-        v = [0.0] * 16
-        v[i] = 1.0
-        return v
-
-    def mix(i, j, a):
-        # unit blend: a·e_i + sqrt(1-a²)·e_j
-        v = [0.0] * 16
-        v[i], v[j] = a, math.sqrt(1 - a * a)
-        return v
-
-    rows = [
-        (0, "en", unit(0)),
-        (1, "en", unit(1)),
-        (2, "en", unit(2)),
-        (3, "en", unit(3)),          # no de counterpart at all
-        (100, "de", [x * 2.0 for x in unit(0)]),   # parallel to 0 (scaled)
-        (102, "de", unit(1)),        # ambiguous pair for 1...
-        (103, "de", [x * 3.0 for x in unit(1)]),   # ...both cosine 1
-        (104, "de", mix(2, 5, 0.5)), # cos 0.5 vs src 2 — below min_cos
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, lang string, embedding array<double>")
-    got = {
-        (r["src_id"], r["tgt_id"]): r["margin_micro"]
-        for r in mine_bitext_pairs(
-            df, "en", "de", min_cos=0.7, margin_ratio=1.05
-        ).collect()
-    }
-    assert set(got) == {(0, 100)}
-    assert got[(0, 100)] >= 1_000_000  # unambiguous: second-best absent/weak
-
-
-def test_bm25_topk_multi_equals_single_query(spark):
-    """The one-pass batched ranking must equal the single-query bm25_topk
-    result per query EXACTLY (ids, micro scores, terms_matched, ranks) —
-    including queries with overlapping term sets."""
-    from avc_parser_spark.functions.retrieval import bm25_topk, bm25_topk_multi
-
-    rows = [
-        (i, " ".join(
-            (["spark"] * (1 + i % 3))
-            + (["vector"] * (i % 2))
-            + (["graph"] * (i % 5 == 0))
-            + ["filler"] * (i % 7)
-        ))
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    queries = {
-        "q1": ["spark", "vector"],
-        "q2": ["graph"],
-        "q3": ["vector", "graph", "missingterm"],
-    }
-    multi = bm25_topk_multi(docs, queries, k=7)
-    got = {
-        qid: sorted(
-            (r["doc_id"], r["score_micro"], r["terms_matched"], r["rank"])
-            for r in multi.filter(F.col("query_id") == qid).collect()
-        )
-        for qid in queries
-    }
-    for qid, terms in queries.items():
-        want = sorted(
-            (r["doc_id"], r["score_micro"], r["terms_matched"], r["rank"])
-            for r in bm25_topk(docs, terms, k=7).collect()
-        )
-        assert got[qid] == want, qid
-
-
-def test_mine_retrieval_triplets(spark):
-    """Hard negatives = the BM25 ranks after the positives; random
-    negatives = the deterministic md5-smallest docs with NO query term
-    (re-derived with hashlib); pos/neg ids disjoint."""
-    import hashlib
-
-    from avc_parser_spark.functions.retrieval import (
-        bm25_topk,
-        mine_retrieval_triplets,
-    )
-
-    rows = [
-        (1, "spark vector spark vector filler"),
-        (2, "spark filler filler"),
-        (3, "spark filler"),
-        (4, "nothing relevant here"),
-        (5, "vector vector filler"),
-        (6, "completely unrelated words"),
-        (7, "also no query words"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    q = "spark vector"
-    trip = mine_retrieval_triplets(
-        docs, [q], k_pos=1, n_hard=2, n_rand=2
-    ).collect()
-    ranked = [r["doc_id"] for r in bm25_topk(docs, q.split(), k=3).collect()]
-    pos = ranked[0]
-    hard = {
-        (r["pos_id"], r["neg_id"], r["neg_rank"])
-        for r in trip
-        if r["neg_type"] == "hard"
-    }
-    assert hard == {(pos, ranked[1], 2), (pos, ranked[2], 3)}
-    no_term = [4, 6, 7]
-    want_rand = sorted(
-        no_term, key=lambda i: hashlib.md5(f"{q}:{i}".encode()).hexdigest()
-    )[:2]
-    rand = {
-        r["neg_id"] for r in trip if r["neg_type"] == "rand"
-    }
-    assert rand == set(want_rand)
-    assert all(r["query"] == q for r in trip)
-    assert not ({r["neg_id"] for r in trip} & {pos})
-
-
 def test_bm25_duckdb_differential(spark):
     """Seeded random word-soup corpus: bm25_topk must reproduce the
     generated DuckDB twin EXACTLY (ids, integer micro scores, ranks) —
@@ -2509,105 +2160,6 @@ def test_fix_mojibake_roundtrip_and_duckdb_twin(spark):
         f"select i, {fix_mojibake_sql('raw')} from t").fetchall())
     for i, (x, _) in got.items():
         assert oracle[i] == x, (i, oracle[i], x)
-
-
-def test_top_terms_per_doc(spark):
-    """TF-IDF keyword extraction: corpus-wide common terms score 0 (df=N
-    → ln 1), rare terms dominate, tf scales within a doc, min_df prunes
-    hapaxes, score ties break to the lexicographically larger term, and
-    the integer micro scores match a pure-Python re-derivation."""
-    import math
-
-    from avc_parser_spark.functions.retrieval import top_terms_per_doc
-
-    rows = [
-        (1, "common common zebra zebra zebra quartz"),
-        (2, "common quartz quartz"),
-        (3, "common onlyonce"),
-        (4, "common"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: [(t["term"], t["score_micro"]) for t in r["terms"]]
-        for r in top_terms_per_doc(docs, k=3, min_df=2).collect()
-    }
-
-    idf = lambda df_: int(round(math.log(4 / df_) * 1e6))
-    # doc 1: zebra tf=3 df=1 -> pruned by min_df=2? no - zebra df=1 < 2 pruned;
-    # quartz df=2, common df=4 (idf 0)
-    assert got[1] == [("quartz", idf(2)), ("common", 0)]
-    assert got[2] == [("quartz", 2 * idf(2)), ("common", 0)]
-    # doc 3: onlyonce is a hapax (df=1) -> pruned; common survives at 0
-    assert got[3] == [("common", 0)]
-    assert got[4] == [("common", 0)]
-
-    # tie-break: equal scores order by term descending
-    tie = spark.createDataFrame(
-        [(1, "aaa bbb"), (2, "aaa bbb")], "doc_id long, text string"
-    )
-    t = {
-        r["doc_id"]: [x["term"] for x in r["terms"]]
-        for r in top_terms_per_doc(tie, k=2).collect()
-    }
-    assert t[1] == ["bbb", "aaa"] and t[2] == ["bbb", "aaa"]
-
-
-def test_int8_embedding_quantization(spark):
-    """Scalar int8 quantization: roundtrip error bounded by half a code
-    step per component, constant vectors reconstruct exactly, and
-    brute-force top-k over quantized codes recalls >=8/10 of the exact
-    float top-k on a clustered corpus (4x smaller storage, same plan
-    shape)."""
-    import math
-    import random
-
-    from pyspark.sql import functions as F
-
-    from avc_parser_spark.functions.similarity import (
-        brute_force_topk,
-        dequantize_embedding_expr,
-        quantize_embedding_expr,
-        quantized_topk,
-    )
-
-    rng = random.Random(7)
-    dim = 16
-    rows = []
-    for i in range(200):
-        if i % 4 == 0:  # cluster near the query direction
-            v = [1.0 + rng.uniform(-0.05, 0.05) * (j % 3) for j in range(dim)]
-        else:
-            v = [rng.uniform(-1, 1) for _ in range(dim)]
-        rows.append((i, [float(x) for x in v]))
-    rows.append((900, [2.5] * dim))  # constant vector (degenerate range)
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    q = emb.select(
-        "vec_id", "embedding",
-        quantize_embedding_expr(F.col("embedding")).alias("q"),
-    ).select(
-        "vec_id", "embedding",
-        F.col("q").alias("q"),
-        dequantize_embedding_expr(F.col("q")).alias("back"),
-    )
-    for r in q.collect():
-        orig, back = r["embedding"], r["back"]
-        lo, hi = min(orig), max(orig)
-        step = (hi - lo) / 255.0 if hi > lo else 0.0
-        for a, b in zip(orig, back):
-            assert abs(a - b) <= step / 2 + 1e-5, (r["vec_id"], a, b, step)
-        codes = r["q"]["codes"]
-        assert all(0 <= c <= 255 for c in codes)
-    const = {r["vec_id"]: r["back"] for r in q.collect()}[900]
-    assert all(abs(x - 2.5) < 1e-6 for x in const)
-
-    query = [1.0] * dim
-    exact = [r["vec_id"] for r in brute_force_topk(emb, query, k=10).collect()]
-    qtab = emb.select(
-        "vec_id", quantize_embedding_expr(F.col("embedding")).alias("q")
-    )
-    approx = [r["vec_id"] for r in quantized_topk(qtab, query, k=10).collect()]
-    assert len(set(exact) & set(approx)) >= 8, (exact, approx)
 
 
 def test_chunk_documents_invariants(spark):
@@ -2946,44 +2498,6 @@ def test_ivfpq_fused_probe_equals_brute(spark):
         assert fused == exact
     finally:
         spark.catalog.dropTempView("embeddings")
-
-
-def test_pq_recall_on_real_embeddings(spark):
-    """Full path on the sf0.001 embeddings table: train codebooks (joint
-    per-subspace Lloyd), encode, ADC top-10. Gate: ADC-top-10 ∩
-    exact-top-50, summed over 3 queries, must clear 12 — random codes
-    score E=3 (10·50/500 per query) while a correct PQ at m=8,k=16
-    measures ~21 here; a numpy reference PQ at identical params achieves
-    the SAME per-query numbers as this trainer (top10-in-top10 ≈ 3-5/10
-    with recon error 0.736 on unit vectors — the corpus is genuinely hard
-    at 16 codewords per 8-dim subspace), so the bound tests the
-    implementation, not the corpus."""
-    from avc_parser_spark.functions.similarity import (
-        brute_force_topk,
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = train_pq_codebooks(emb, m=8, k=16, iters=3)
-    assert len(books) == 8 and len(books[0]) == 16 and len(books[0][0]) == 8
-    codes = pq_encode(emb, books).select("vec_id", "pq_codes").persist()
-    queries = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.orderBy("vec_id").limit(3).collect()
-    ]
-    try:
-        hits = 0
-        for q in queries:
-            adc = {r["vec_id"] for r in pq_topk(codes, books, q, k=10).collect()}
-            exact = {
-                r["vec_id"] for r in brute_force_topk(emb, q, k=50).collect()
-            }
-            hits += len(adc & exact)
-        assert hits >= 12, hits
-    finally:
-        codes.unpersist()
 
 
 def test_pq_topk_plan_no_shuffle(spark):

@@ -81,87 +81,6 @@ def test_parquet_filter_pushdown(spark, tmp_path):
     assert "text" not in read_schema and "html" not in read_schema
 
 
-def _planted_embeddings(spark, n=200, dim=16, groups=4):
-    """Separable corpus: group g occupies dims [4g, 4g+4) (disjoint
-    supports), so every vector provably assigns to its own block-indicator
-    centroid."""
-    block = dim // groups
-    rows = [
-        (
-            i,
-            [
-                1.0 + 0.01 * ((i * 7 + d) % 13)
-                if (i % groups) * block <= d < (i % groups + 1) * block
-                else 0.0
-                for d in range(dim)
-            ],
-        )
-        for i in range(n)
-    ]
-    cents = [
-        [1.0 if g * block <= d < (g + 1) * block else 0.0 for d in range(dim)]
-        for g in range(groups)
-    ]
-    return (
-        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
-        cents,
-    )
-
-
-def test_ivf_stored_probe_partition_prunes(spark, tmp_path):
-    """The 10^12 storage design, exercised: write the IVF-assigned table
-    hive-partitioned by cluster; a probe scan must carry the cluster
-    predicate as PartitionFilters (directory pruning, not a post-scan
-    Filter) and return the same rows as the in-memory probe."""
-    from avc_parser_spark.functions.similarity import (
-        ivf_topk,
-        ivf_topk_stored,
-        write_ivf_table,
-    )
-
-    emb, cents = _planted_embeddings(spark)
-    path = str(tmp_path / "ivf_store")
-    write_ivf_table(emb, cents, path)
-    qvec = [1.0 if d < 4 else 0.0 for d in range(16)]
-
-    stored = ivf_topk_stored(spark, path, qvec, cents, k=5, n_probe=1)
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "cluster" in plan.split("PartitionFilters:")[1][:200]
-
-    mem = ivf_topk(emb, qvec, cents, k=5, n_probe=1)
-    assert [tuple(r) for r in stored.collect()] == [
-        tuple(r) for r in mem.collect()
-    ]
-
-
-def test_lsh_stored_probe_partition_prunes(spark, tmp_path):
-    """Same gate for the LSH bucket layout: stored-bucket probe must prune
-    on the bucket partition column and agree with the in-memory probe."""
-    from avc_parser_spark.functions.similarity import (
-        lsh_topk,
-        lsh_topk_stored,
-        make_planes,
-        write_lsh_table,
-    )
-
-    emb, _ = _planted_embeddings(spark)
-    planes = make_planes(16, 4)
-    path = str(tmp_path / "lsh_store")
-    write_lsh_table(emb, planes, path)
-    qvec = [1.0 if d < 4 else 0.0 for d in range(16)]
-
-    stored = lsh_topk_stored(spark, path, qvec, planes, k=5, multi_probe=1)
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "bucket" in plan.split("PartitionFilters:")[1][:200]
-
-    mem = lsh_topk(emb, qvec, k=5, n_planes=4, multi_probe=1)
-    assert [tuple(r) for r in stored.collect()] == [
-        tuple(r) for r in mem.collect()
-    ]
-
-
 def test_salted_agg_plan_has_two_aggregates(spark):
     """The salted aggregate must show two groupBy levels (partial per salt,
     then final merge) and no more than two exchanges."""
@@ -627,79 +546,6 @@ def test_sketch_stream_merges_to_whole_corpus_sketch(spark, tmp_path):
     assert len(batches) == 2
 
 
-def test_continuous_rollup_incremental_refresh(spark, tmp_path):
-    """Hypertable-rollup maintenance: after an ingest batch (including
-    LATE rows for an old day), refreshing only the touched days equals
-    the full recompute, untouched day partitions' files are not
-    rewritten, and the touched-days scan over the day-partitioned base
-    is directory-pruned."""
-    import datetime
-    import os
-
-    from avc_parser_spark.functions.rollup import (
-        _rollup_frame,
-        read_rollup,
-        refresh_rollup,
-        write_rollup,
-    )
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    for i in range(600):
-        day = i % 3
-        ts = t0 + datetime.timedelta(days=day, minutes=(i * 7) % 1440)
-        rows.append((i, ts, f"t{i % 4}", float(i % 10)))
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    # delta = every day-2 row plus LATE day-0 rows (i % 97 == 0)
-    is_delta = lambda i: i % 3 == 2 or (i % 3 == 0 and i % 97 == 0)  # noqa: E731
-    initial = spark.createDataFrame(
-        [r for r in rows if not is_delta(r[0])], schema
-    )
-    delta = spark.createDataFrame([r for r in rows if is_delta(r[0])], schema)
-
-    base_path = str(tmp_path / "events_base")
-    roll_path = str(tmp_path / "rollup")
-    day_of = lambda df: df.withColumn("day", F.to_date("ts"))  # noqa: E731
-    day_of(initial).write.partitionBy("day").parquet(base_path)
-    write_rollup(initial, roll_path)
-
-    day_of(delta).write.mode("append").partitionBy("day").parquet(base_path)
-    full = spark.read.parquet(base_path)
-
-    untouched_dir = os.path.join(roll_path, "day=2024-01-02")
-    before = {
-        f: os.path.getmtime(os.path.join(untouched_dir, f))
-        for f in os.listdir(untouched_dir)
-    }
-    refreshed = refresh_rollup(
-        spark, full, delta, roll_path, day_col="day"
-    )
-    assert sorted(refreshed) == ["2024-01-01", "2024-01-03"]
-
-    as_map = lambda df: {  # noqa: E731
-        (str(r["day"]), str(r["hour_start"]), r["event_type"]): (
-            r["n_events"], r["sum_value"]
-        )
-        for r in df.collect()
-    }
-    want = as_map(_rollup_frame(full.drop("day"), "ts", "event_type"))
-    got = as_map(read_rollup(spark, roll_path))
-    assert got == want
-
-    after = {
-        f: os.path.getmtime(os.path.join(untouched_dir, f))
-        for f in os.listdir(untouched_dir)
-    }
-    assert after == before  # untouched day partition not rewritten
-
-    plan = full.filter(
-        F.col("day").isin(["2024-01-01", "2024-01-03"])
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "day" in plan.split(
-        "PartitionFilters"
-    )[1][:200], plan
-
-
 def test_extract_links_prunes_scan_columns(spark, tmp_path):
     """The scan feeding extract_links reads only (doc_id, html) — heavy
     sibling columns (text) must not cross the parquet boundary."""
@@ -717,41 +563,3 @@ def test_extract_links_prunes_scan_columns(spark, tmp_path):
     assert "html" in read_schema and "doc_id" in read_schema
     assert "text" not in read_schema, read_schema
     assert out.count() == 20
-
-
-def test_bm25_stored_index_partition_prunes(spark, tmp_path):
-    """The stored inverted-index layout: a query probe must carry
-    term_bucket as PartitionFilters (directory pruning) and return
-    EXACTLY the in-memory bm25_topk ranking (shared _score_hits
-    arithmetic)."""
-    from avc_parser_spark.functions.retrieval import (
-        bm25_topk,
-        bm25_topk_stored,
-        write_term_index,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"apple banana doc{i} " + ("apple " * (i % 4)) + "cherry")
-            for i in range(40)
-        ],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "term_index")
-    write_term_index(docs, path, n_buckets=8)
-
-    stored = bm25_topk_stored(spark, path, ["apple", "cherry"], k=7,
-                              n_buckets=8)
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "term_bucket" in plan.split("PartitionFilters:")[1][:250]
-
-    mem = bm25_topk(docs, ["apple", "cherry"], k=7)
-    assert [tuple(r) for r in stored.collect()] == [
-        tuple(r) for r in mem.collect()
-    ]
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        bm25_topk_stored(spark, path, [], k=3)
