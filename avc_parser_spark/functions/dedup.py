@@ -206,6 +206,57 @@ def _perm_params(num_perms: int, seed: int = 42) -> tuple[list[int], list[int]]:
     return a, b
 
 
+def _minhash_signatures(base_hashes, a, b, chunk_hashes: int) -> list[list[int]]:
+    """MinHash signature per doc: min over its hashes h of (a_p·h + b_p) mod
+    M61 in wrapping uint64 arithmetic, for every permutation p. A doc that
+    is None or empty gets all zeros.
+
+    The hashes of all docs are flattened into ONE array, and the
+    (num_perms × hashes) matrix is computed in doc-aligned chunks of at most
+    ``chunk_hashes`` columns (a longer doc is a chunk of its own), with
+    per-doc segment minima: no per-row Python/numpy calls, and the chunk
+    size never changes a signature."""
+    import numpy as np
+
+    num_perms = len(a)
+    m = np.uint64(MERSENNE61)
+    lens = np.fromiter(
+        (0 if hs is None else len(hs) for hs in base_hashes),
+        dtype=np.int64,
+        count=len(base_hashes),
+    )
+    empty_sig = [0] * num_perms
+    if int(lens.sum()) == 0:
+        return [empty_sig] * len(lens)
+
+    flat = np.concatenate(
+        [np.asarray(hs, dtype=np.int64) for hs in base_hashes if hs is not None and len(hs)]
+    ).astype(np.uint64)
+    seg_lens = lens[lens > 0]
+    starts = np.zeros(len(seg_lens), dtype=np.int64)
+    np.cumsum(seg_lens[:-1], out=starts[1:])
+
+    mins = np.empty((num_perms, len(seg_lens)), dtype=np.uint64)
+    doc_lo = 0
+    while doc_lo < len(seg_lens):
+        doc_hi = doc_lo
+        span = 0
+        while doc_hi < len(seg_lens) and (
+            span + seg_lens[doc_hi] <= chunk_hashes or doc_hi == doc_lo
+        ):
+            span += seg_lens[doc_hi]
+            doc_hi += 1
+        lo = starts[doc_lo]
+        vals = (np.outer(a, flat[lo : lo + span]) + b[:, None]) % m
+        mins[:, doc_lo:doc_hi] = np.minimum.reduceat(
+            vals, (starts[doc_lo:doc_hi] - lo).astype(np.int64), axis=1
+        )
+        doc_lo = doc_hi
+
+    it = iter(mins.T.astype(np.int64).tolist())
+    return [next(it) if n else empty_sig for n in lens]
+
+
 def minhash_signature_udf(num_perms: int = DEFAULT_PERMS):
     """Arrow-vectorized MinHash over base shingle hashes.
 
@@ -220,56 +271,14 @@ def minhash_signature_udf(num_perms: int = DEFAULT_PERMS):
     a_list, b_list = _perm_params(num_perms)
     a = np.array(a_list, dtype=np.uint64)
     b = np.array(b_list, dtype=np.uint64)
-    m = np.uint64(MERSENNE61)
 
-    # bound the (num_perms × chunk) work matrix to ~32 MB
-    chunk_hashes = max(1, (4 << 20) // num_perms)
+    # bound the (num_perms × chunk) uint64 work matrix to ~8 MB per Python
+    # worker; chunks are doc-aligned, so the size never changes a signature
+    chunk_hashes = max(1, (1 << 20) // num_perms)
 
     @pandas_udf("array<long>")
     def _sig(base_hashes: pd.Series) -> pd.Series:
-        n_docs = len(base_hashes)
-        lens = np.fromiter(
-            (0 if hs is None else len(hs) for hs in base_hashes),
-            dtype=np.int64,
-            count=n_docs,
-        )
-        total = int(lens.sum())
-        empty_sig = [0] * num_perms
-        if total == 0:
-            return pd.Series([empty_sig] * n_docs)
-
-        # flatten every doc's shingle hashes into ONE array, then compute the
-        # (num_perms × hashes) universal-hash matrix in doc-aligned chunks and
-        # take per-document segment minima — no per-row python/numpy calls.
-        flat = np.concatenate(
-            [np.asarray(hs, dtype=np.int64) for hs in base_hashes if hs is not None and len(hs)]
-        ).astype(np.uint64)
-        seg_lens = lens[lens > 0]
-        starts = np.zeros(len(seg_lens), dtype=np.int64)
-        np.cumsum(seg_lens[:-1], out=starts[1:])
-
-        mins = np.empty((num_perms, len(seg_lens)), dtype=np.uint64)
-        doc_lo = 0
-        while doc_lo < len(seg_lens):
-            doc_hi = doc_lo
-            span = 0
-            while doc_hi < len(seg_lens) and (
-                span + seg_lens[doc_hi] <= chunk_hashes or doc_hi == doc_lo
-            ):
-                span += seg_lens[doc_hi]
-                doc_hi += 1
-            lo = starts[doc_lo]
-            vals = (np.outer(a, flat[lo : lo + span]) + b[:, None]) % m
-            mins[:, doc_lo:doc_hi] = np.minimum.reduceat(
-                vals, (starts[doc_lo:doc_hi] - lo).astype(np.int64), axis=1
-            )
-            doc_lo = doc_hi
-
-        sigs = mins.T.astype(np.int64).tolist()
-        it = iter(sigs)
-        return pd.Series(
-            [next(it) if n else empty_sig for n in lens]
-        )
+        return pd.Series(_minhash_signatures(base_hashes, a, b, chunk_hashes))
 
     return _sig
 

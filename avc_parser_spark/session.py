@@ -8,9 +8,11 @@ local[N] sandbox:
   signature groups, docs/DEDUPLICATION_ALGORITHM.md).
 - Arrow on for pandas UDFs; batch size bounded so wide text rows don't blow
   executor memory.
-- shuffle.partitions defaults to a fixed 32, whatever the core count (AQE
-  coalesces the excess at run time); a real cluster run via spark-submit
-  would set it to ~2-3× total cores.
+- shuffle.partitions defaults to the cluster's core count
+  (``defaultParallelism``): one task per core per shuffle. AQE coalesces
+  shuffles it reads fresh, but not the output of persisted or
+  ``localCheckpoint``ed frames, so a wider default only adds idle tasks
+  there. A width set at launch (spark-submit ``--conf``) is kept.
 """
 
 from __future__ import annotations
@@ -21,21 +23,17 @@ from pyspark.sql import SparkSession
 
 # One pages row carries up to ~8 KB text + html binary; 10k rows/batch keeps
 # Arrow batches ~100 MB worst case, comfortably inside executor memory.
-# Arrow batch size for pandas-UDF transfer; env-overridable so the bench
-# ladder can sweep IPC-batch granularity without a code edit.
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_ARROW_BATCH_ROWS", "10000"))
+ARROW_BATCH_ROWS = 10_000
 
 
 def get_spark(
     app_name: str = "avc-parser-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with pipeline-tuned configs.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``local[*]``)
-    so bench.py can sweep parallelism levels for the N-vs-4N scaling evidence.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``local[*]``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -64,16 +62,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
 
-    if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    else:
-        # a fixed 32, not one per core: every shuffle plans 32 map-side
-        # partitions and AQE coalesces them at run time if tiny.
-        builder = builder.config("spark.sql.shuffle.partitions", "32")
-
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # One shuffle partition per core, unless a width is already set: at
+    # launch (spark-submit --conf), through extra_conf, or earlier on this
+    # session.
+    key = "spark.sql.shuffle.partitions"
+    if spark.conf.get(key, None) is None:
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    return spark

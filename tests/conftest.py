@@ -20,6 +20,6 @@ def _benign_numpy_fp_state():
 def spark():
     from avc_parser_spark.session import get_spark
 
-    s = get_spark(app_name="avc-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="avc-tests", master="local[8]")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -73,6 +73,50 @@ def test_minhash_lsh_bucket_cap_bounds_pairs(spark):
     assert uncapped.count() == n * (n - 1) // 2
 
 
+@pytest.mark.parametrize("matrix_cells", [1 << 20, 4 << 20])
+def test_minhash_signatures_match_per_doc_reference(matrix_cells):
+    """The chunked MinHash kernel equals a plain per-doc numpy MinHash (same
+    wrapping uint64 arithmetic) with a num_perms × chunk work matrix of 1M
+    and of 4M cells (8 MB and 32 MB): None and [] docs sign as zeros, a doc
+    longer than one chunk is signed whole, and docs that straddle a chunk
+    boundary are never split."""
+    import numpy as np
+
+    from avc_parser_spark.functions.dedup import (
+        DEFAULT_PERMS,
+        MERSENNE61,
+        _minhash_signatures,
+        _perm_params,
+    )
+
+    a_list, b_list = _perm_params(DEFAULT_PERMS)
+    a = np.array(a_list, dtype=np.uint64)
+    b = np.array(b_list, dtype=np.uint64)
+    chunk = matrix_cells // DEFAULT_PERMS
+
+    rng = np.random.default_rng(7)
+
+    def doc(n):
+        return rng.integers(-(1 << 63), (1 << 63) - 1, size=n, dtype=np.int64)
+
+    third = chunk // 3 + 5  # three of these overrun one chunk
+    base = pd.Series(
+        [None, doc(3), np.array([], dtype=np.int64), doc(2 * chunk + 7), None]
+        + [doc(third) for _ in range(4)]
+        + [doc(1), [], doc(chunk - 2), doc(5), None]
+    )
+
+    def reference(hs):
+        if hs is None or len(hs) == 0:
+            return [0] * DEFAULT_PERMS
+        h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
+        vals = (a[:, None] * h[None, :] + b[:, None]) % np.uint64(MERSENNE61)
+        return vals.min(axis=1).astype(np.int64).tolist()
+
+    got = _minhash_signatures(base, a, b, chunk)
+    assert got == [reference(hs) for hs in base]
+
+
 def test_embedding_near_dups_bucketed_no_cross_join(spark):
     """Scaled copies are always found (same sign bits) and the physical plan
     joins on the bucket key — no cartesian / nested-loop join."""
@@ -2167,8 +2211,6 @@ def test_chunk_documents_invariants(spark):
     full coverage (chunk tokens reassemble the doc), overlap equality
     between consecutive chunks, exactly one chunk for short docs, zero
     chunks for empty/null docs, and last-chunk-short (never padded)."""
-    from pyspark.sql import functions as F
-
     from avc_parser_spark.functions.text import chunk_documents
 
     docs = spark.createDataFrame(
@@ -2220,7 +2262,6 @@ def test_chunk_documents_duckdb_differential(spark):
     sf0.001 documents table plus adversarial whitespace edge cases, at two
     (size, overlap) settings."""
     import duckdb
-    import pandas as pd
 
     from avc_parser_spark.functions.text import chunk_documents, chunk_sql
 
@@ -2258,7 +2299,6 @@ def test_normalize_nfc_duckdb_battery(spark):
     plus the planted suffix used by token_suite mode='nfc'."""
     import duckdb
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from avc_parser_spark.functions.text import normalize_nfc
 

@@ -8,7 +8,6 @@ context split, multi-permission preservation.
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from avc_parser_spark.parse.kernels import parse_pages_pdf, translate_exit_code
 
@@ -294,7 +293,7 @@ def test_simhash_pairs_recall_property_all_k():
     from avc_parser_spark.functions.dedup import simhash64, simhash_pairs
     from avc_parser_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(master="local[8]")
     rng = _random.Random(424242)
     words = [f"w{i}" for i in range(40)]
     rows = []

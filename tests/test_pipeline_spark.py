@@ -173,7 +173,7 @@ def test_hot_signature_salting_splits_state(spark):
     NUM_SALTS partial states while keeping the final aggregate exact."""
     from pyspark.sql import functions as F2
 
-    from avc_parser_spark.aggregate import NUM_SALTS, SIG_COLS, aggregate_signatures
+    from avc_parser_spark.aggregate import NUM_SALTS, aggregate_signatures
 
     # 20k events, 90% in ONE signature
     base = spark.range(20000).select(
@@ -313,3 +313,19 @@ def test_permission_category_table(spark):
     )
     bad = [tuple(r) for r in df.collect() if r["got"] != r["want"]]
     assert bad == []
+
+
+def test_shuffle_width_is_one_partition_per_core(spark):
+    """get_spark sets one shuffle partition per core unless a width is
+    already set."""
+    from avc_parser_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    try:
+        spark.conf.unset(key)
+        assert get_spark(master="local[8]").conf.get(key) == "8"
+        spark.conf.unset(key)
+        assert get_spark(master="local[8]", extra_conf={key: "3"}).conf.get(key) == "3"
+        assert get_spark(master="local[8]").conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, "8")

@@ -218,8 +218,6 @@ def test_read_warc_roundtrip_pages(spark, tmp_path):
     read back with the delimiter-split reader must reproduce the exact
     (url, whole-second warc_ts, html bytes) multiset, and read_warc_pages
     must chain extract_html_text byte-identically."""
-    import datetime as dt
-
     from avc_parser_spark.datagen import build_pages_df
     from avc_parser_spark.functions.text import extract_html_text
     from avc_parser_spark.sources import build_warc_bytes, read_warc, read_warc_pages
