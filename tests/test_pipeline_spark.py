@@ -315,6 +315,117 @@ def test_permission_category_table(spark):
     assert bad == []
 
 
+_SIGN_INPUT_DDL = (
+    "comm string, sc_type string, tclass string, permission string, "
+    "path string, tcontext_raw string, tc_type string, dest_port string"
+)
+
+
+def _signed_mismatches(spark, cases, fields, component):
+    """Rows of ``cases`` (``fields`` values + expected value) whose
+    signature_exprs ``component`` column differs from the expected one."""
+    cols = [c.split()[0] for c in _SIGN_INPUT_DDL.split(", ")]
+    rows = [
+        tuple(dict(zip(fields, case[:-1])).get(c) for c in cols) + (case[-1],)
+        for case in cases
+    ]
+    df = signature_exprs(
+        spark.createDataFrame(rows, _SIGN_INPUT_DDL + ", want string")
+    )
+    return [
+        (*[r[f] for f in fields], r["want"], r[component])
+        for r in df.collect()
+        if r[component] != r["want"]
+    ]
+
+
+def test_process_category_table(spark):
+    """E8 process categories: every exact service mapping (ahead of the
+    substring rules and the domain split), the five substring rules (ahead
+    of the split), the four-domain `*_t` split and the service_<comm>
+    default."""
+    from avc_parser_spark.enrich.dims import SERVICE_MAPPINGS
+
+    cases = [(c, "unconfined_t", cat) for c, cat in SERVICE_MAPPINGS]
+    cases += [(c, None, cat) for c, cat in SERVICE_MAPPINGS]
+    cases += [
+        (None, "init_t", "unknown"),
+        ("", "init_t", "unknown"),
+        ("my-httpd-worker", "unconfined_t", "web_server_apache"),
+        ("nginx-reload", "init_t", "web_server_nginx"),
+        ("xpostgres", "user_t", "database_postgresql"),
+        ("mysql-cli", "admin_t", "database_mysql"),
+        ("xsshd", None, "ssh_daemon"),
+        ("foo", "unconfined_t", "unconfined_foo"),
+        ("foo", "init_t", "init_foo"),
+        ("foo", "user_t", "user_foo"),
+        ("foo", "admin_t", "admin_foo"),
+        ("foo", "httpd_t", "service_foo"),
+        ("foo", None, "service_foo"),
+        ("it's \\x", "staff_t", "service_it's \\x"),
+    ]
+    assert _signed_mismatches(
+        spark, cases, ("comm", "sc_type"), "process_category"
+    ) == []
+
+
+def test_object_group_table(spark):
+    """E10 object groups: every member of the four class lists, first
+    list wins, and the tclass itself (or NULL) otherwise."""
+    from avc_parser_spark.enrich.dims import (
+        FS_OBJECT_CLASSES,
+        IPC_CLASSES,
+        NETWORK_OBJECT_CLASSES,
+        SYSTEM_CLASSES,
+    )
+
+    ordered = [
+        (FS_OBJECT_CLASSES, "filesystem"),
+        (NETWORK_OBJECT_CLASSES, "network"),
+        (IPC_CLASSES, "ipc"),
+        (SYSTEM_CLASSES, "system"),
+    ]
+    members = dict.fromkeys(c for classes, _ in ordered for c in classes)
+    cases = [
+        (c, next(group for classes, group in ordered if c in classes))
+        for c in members
+    ]
+    cases += [("dbus", "dbus"), ("key", "key"), (None, None)]
+    assert _signed_mismatches(spark, cases, ("tclass",), "object_group") == []
+
+
+def test_path_pattern_table(spark):
+    """E11 path patterns: one path per PATH_PATTERNS row that no earlier
+    row matches, for file/dir/NULL tclass; the no-path literals; dev:
+    inodes; and the file dirname, partial-dir, dir and bare fallbacks."""
+    import re
+
+    from avc_parser_spark.enrich.dims import PATH_PATTERNS
+
+    cases = []
+    for i, (pattern, replacement) in enumerate(PATH_PATTERNS):
+        path = (
+            replacement.replace("(/.*)?", "/f")
+            .replace("[^/]+", "u")
+            .replace("*/...", "abc/f")
+        )
+        first = next(j for j, (p, _) in enumerate(PATH_PATTERNS) if re.search(p, path))
+        assert first == i, (path, PATH_PATTERNS[first])
+        cases += [(path, t, replacement) for t in ("file", "dir", None)]
+    cases += [(p, "file", "no_path") for p in (None, "?", '"?"', "unknown", "")]
+    cases += [
+        ("dev:fd0", "chr_file", "dev_inode"),
+        ("/opt/app/x.conf", "file", "/opt/app/*"),
+        ("/opt", "file", "/opt"),
+        ("x.conf", "file", "x.conf"),
+        ("...partial", "dir", "/var/local/log(/.*)?"),
+        ("/opt/app", "dir", "/opt/app/*"),
+        ("/opt/app/s", "sock_file", "/opt/app/s"),
+        ("/opt/it's\\x/f", "file", "/opt/it's\\x/*"),
+    ]
+    assert _signed_mismatches(spark, cases, ("path", "tclass"), "path_pattern") == []
+
+
 def test_shuffle_width_is_one_partition_per_core(spark):
     """get_spark sets one shuffle partition per core unless a width is
     already set."""
