@@ -207,7 +207,7 @@ def q_enrich_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir, ["documents"])
     matrix = spark.sql(_ED_MATRIX_SQL)
     ev = enrich_events(matrix).withColumn(
-        "path_pattern", path_pattern_expr(F.col("path"), F.col("tclass"))
+        "path_pattern", path_pattern_expr()
     )
     return ev.select(
         "doc_id", "permission", "tclass",

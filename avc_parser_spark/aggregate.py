@@ -77,14 +77,63 @@ REPRESENTATIVE_FIELDS = [
 ]
 
 
-def _capped_set(col: str) -> F.Column:
-    return F.slice(F.sort_array(F.collect_set(col)), 1, SET_CAP)
+SET_COLS = {
+    "permissions": "permission",
+    "pids": "pid",
+    "comms": "comm",
+    "paths": "path",
+    "proctitles": "proctitle",
+    "tclasses": "tclass",
+    "permissives": "permissive",
+    "dest_ports": "dest_port",
+    "langs": "lang",
+}
+
+# representative struct and its (event_ts, event_id, url) ordering key
+_REP_SQL = f"struct({', '.join(REPRESENTATIVE_FIELDS)}) AS _rep"
+_REP_ORD_SQL = (
+    "struct(coalesce(event_ts, to_timestamp('9999-01-01')) AS ts, "
+    "coalesce(event_id, '~') AS eid, url AS url) AS _rep_ord"
+)
+_PERMISSIVE_SQL = "CASE WHEN permissive = '1' THEN 1 ELSE 0 END"
 
 
-def _merge_capped_sets(col: str) -> F.Column:
-    return F.slice(
-        F.sort_array(F.array_distinct(F.flatten(F.collect_list(col)))), 1, SET_CAP
+def _capped_set(col: str) -> str:
+    return f"slice(sort_array(collect_set({col})), 1, {SET_CAP})"
+
+
+def _merge_capped_sets(col: str) -> str:
+    return (
+        f"slice(sort_array(array_distinct(flatten(collect_list({col})))), 1, {SET_CAP})"
     )
+
+
+# unsalted aggregate; salted stage 1 (partials per salt); salted stage 2
+_UNSALTED_SQL = [
+    "count(1) AS count",
+    "min(event_ts) AS first_seen",
+    "max(event_ts) AS last_seen",
+    "min_by(_rep, _rep_ord) AS representative",
+    f"sum({_PERMISSIVE_SQL}) AS permissive_count",
+    *[f"{_capped_set(src)} AS {dst}" for dst, src in SET_COLS.items()],
+]
+_PARTIAL_SQL = [
+    "count(1) AS _cnt",
+    "min(event_ts) AS _first",
+    "max(event_ts) AS _last",
+    "min_by(_rep, _rep_ord) AS _rep_p",
+    "min(_rep_ord) AS _rep_ord_p",
+    f"sum({_PERMISSIVE_SQL}) AS _perm_cnt",
+    *[f"{_capped_set(src)} AS _s_{dst}" for dst, src in SET_COLS.items()],
+]
+_MERGE_SQL = [
+    "sum(_cnt) AS count",
+    "min(_first) AS first_seen",
+    "max(_last) AS last_seen",
+    "min_by(_rep_p, _rep_ord_p) AS representative",
+    "sum(_perm_cnt) AS permissive_count",
+    *[f"{_merge_capped_sets(f'_s_{dst}')} AS {dst}" for dst in SET_COLS],
+]
 
 
 def aggregate_signatures(events: DataFrame, salted: bool = True) -> DataFrame:
@@ -93,78 +142,29 @@ def aggregate_signatures(events: DataFrame, salted: bool = True) -> DataFrame:
     Input: parsed+signed event DataFrame (parse_ok route).
     Output: one row per signature group with exact count / first_seen /
     last_seen, canonical sorted sets (O4), and deterministic representative.
-    """
-    ev = events.withColumn(
-        "_rep",
-        F.struct(*[F.col(c).alias(c) for c in REPRESENTATIVE_FIELDS]),
-    ).withColumn(
-        "_rep_ord",
-        F.struct(
-            F.coalesce(F.col("event_ts"), F.to_timestamp(F.lit("9999-01-01"))).alias("ts"),
-            F.coalesce(F.col("event_id"), F.lit("~")).alias("eid"),
-            F.col("url").alias("url"),
-        ),
-    )
 
-    set_cols = {
-        "permissions": "permission",
-        "pids": "pid",
-        "comms": "comm",
-        "paths": "path",
-        "proctitles": "proctitle",
-        "tclasses": "tclass",
-        "permissives": "permissive",
-        "dest_ports": "dest_port",
-        "langs": "lang",
-    }
+    The projections and aggregate expressions are Spark SQL text, built
+    once at import and parsed JVM-side: one py4j call per expression, not
+    one per `col`/`lit`/`when` node.
+    """
+    ev = events.selectExpr("*", _REP_SQL, _REP_ORD_SQL)
+
+    def agg(grouped, texts):
+        return grouped.agg(*[F.expr(t) for t in texts])
 
     if not salted:
-        return (
-            ev.groupBy(*SIG_COLS)
-            .agg(
-                F.count(F.lit(1)).alias("count"),
-                F.min("event_ts").alias("first_seen"),
-                F.max("event_ts").alias("last_seen"),
-                F.min_by("_rep", "_rep_ord").alias("representative"),
-                F.sum(F.when(F.col("permissive") == "1", 1).otherwise(0)).alias(
-                    "permissive_count"
-                ),
-                *[_capped_set(src).alias(dst) for dst, src in set_cols.items()],
-            )
-        )
+        return agg(ev.groupBy(*SIG_COLS), _UNSALTED_SQL)
 
     # --- stage 1: salted partial aggregate --------------------------------
-    partial = (
-        ev.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(NUM_SALTS)))
-        .groupBy(*SIG_COLS, "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            F.min("event_ts").alias("_first"),
-            F.max("event_ts").alias("_last"),
-            F.min_by("_rep", "_rep_ord").alias("_rep_p"),
-            F.min("_rep_ord").alias("_rep_ord_p"),
-            F.sum(F.when(F.col("permissive") == "1", 1).otherwise(0)).alias(
-                "_perm_cnt"
-            ),
-            *[_capped_set(src).alias(f"_s_{dst}") for dst, src in set_cols.items()],
-        )
+    partial = agg(
+        ev.selectExpr("*", f"pmod(xxhash64(url), {NUM_SALTS}) AS _salt").groupBy(
+            *SIG_COLS, "_salt"
+        ),
+        _PARTIAL_SQL,
     )
 
     # --- stage 2: merge partials per signature ----------------------------
-    return (
-        partial.groupBy(*SIG_COLS)
-        .agg(
-            F.sum("_cnt").alias("count"),
-            F.min("_first").alias("first_seen"),
-            F.max("_last").alias("last_seen"),
-            F.min_by("_rep_p", "_rep_ord_p").alias("representative"),
-            F.sum("_perm_cnt").alias("permissive_count"),
-            *[
-                _merge_capped_sets(f"_s_{dst}").alias(dst)
-                for dst in set_cols
-            ],
-        )
-    )
+    return agg(partial.groupBy(*SIG_COLS), _MERGE_SQL)
 
 
 def resource_subgroups(events: DataFrame) -> DataFrame:

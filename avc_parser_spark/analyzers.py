@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from avc_parser_spark.sqltext import sql_in, sql_str
+
 DONTAUDIT_INDICATORS = ["noatsecure", "rlimitinh", "siginh"]
 
 CONTAINER_PATH_PATTERNS = [
@@ -145,19 +147,73 @@ def _finding(
     )
 
 
-def _sigs(cond=None):
+def _sigs(cond: str | None = None) -> str:
     """The first 128 sorted sig ids (of the rows where ``cond`` holds)."""
-    sig = F.col("sig_id") if cond is None else F.when(cond, F.col("sig_id"))
-    return F.slice(F.sort_array(F.collect_set(sig)), 1, 128)
+    sig = "sig_id" if cond is None else f"CASE WHEN {cond} THEN sig_id END"
+    return f"slice(sort_array(collect_set({sig})), 1, 128)"
 
 
-def _rule_aggs(rule, cond):
+def _rule_aggs(rule: str, cond: str) -> list[str]:
     """Groups, events and sig ids of the rows where ``cond`` holds."""
     return [
-        F.count_if(cond).alias(f"{rule}_grp"),
-        F.coalesce(F.sum(F.when(cond, F.col("count"))), F.lit(0)).alias(f"{rule}_ev"),
-        _sigs(cond).alias(f"{rule}_sigs"),
+        f"count_if({cond}) AS {rule}_grp",
+        f"coalesce(sum(CASE WHEN {cond} THEN count END), 0) AS {rule}_ev",
+        f"{_sigs(cond)} AS {rule}_sigs",
     ]
+
+
+_MLS = r"^[^:]+:[^:]+:[^:]+:"
+# the group columns the rules read, flattened out of the representative
+_GROUP_COLS_SQL = [
+    "sig_id",
+    "count",
+    "first_seen",
+    "last_seen",
+    "permissions",
+    "representative.sc_type AS s_type",
+    "representative.tc_type AS t_type",
+    "representative.comm AS comm",
+    "representative.permissive AS rep_permissive",
+    "regexp_extract(representative.tcontext_raw, "
+    f"{sql_str(_MLS + '(.*)$')}, 1) AS t_mls",
+    "split(regexp_extract(representative.scontext_raw, "
+    f"{sql_str(_MLS + '([^-]*)')}, 1), ',')[0] AS s_mls_low",
+]
+
+# AN1 widespread unlabeled_t (≥3 groups or ≥10 events)
+_UNLABELED_SQL = "t_type = 'unlabeled_t'"
+# AN2 MLS inconsistency (≥5 core types @s15 while source s0)
+_MLS_BAD_SQL = (
+    f"{sql_in('t_type', CORE_SYSTEM_TYPES)} AND contains(t_mls, 's15') "
+    "AND (s_mls_low IN ('s0', '') OR s_mls_low IS NULL)"
+)
+# AN3 relabeling tools denied
+_RELABEL_SQL = (
+    f"{sql_in('s_type', RELABELING_TYPES)} AND size(array_intersect(permissions, "
+    f"array({', '.join(map(sql_str, RELABEL_PERMISSIONS))}))) > 0"
+)
+# AN4 boot-blocking
+_BOOT_SQL = (
+    f"{sql_in('s_type', BOOT_CRITICAL_TYPES)} AND "
+    f"{sql_in('t_type', ESSENTIAL_TARGET_TYPES)}"
+)
+# AN1-AN5 as one grouping-sets aggregate
+_RULE_AGGS_SQL = [
+    "grouping_id() AS gid",
+    *_rule_aggs("an1", _UNLABELED_SQL),
+    f"max(CASE WHEN {_UNLABELED_SQL} THEN rep_permissive = '1' END) AS an1_perm",
+    *_rule_aggs("an2", _MLS_BAD_SQL),
+    f"size(collect_set(CASE WHEN {_MLS_BAD_SQL} THEN t_type END)) AS an2_types",
+    *_rule_aggs("an3", _RELABEL_SQL),
+    f"sort_array(collect_set(CASE WHEN {_RELABEL_SQL} THEN comm END)) AS an3_comms",
+    *_rule_aggs("an4", _BOOT_SQL),
+    f"sort_array(collect_set(CASE WHEN {_BOOT_SQL} THEN comm END)) AS an4_comms",
+    # AN5 systemic pattern (≥10 distinct sources on one target)
+    "size(collect_set(s_type)) AS sources",
+    "count(1) AS grp",
+    "sum(count) AS ev",
+    f"{_sigs()} AS sigs",
+]
 
 
 def run_analyzers(
@@ -174,59 +230,11 @@ def run_analyzers(
     (analyzers/__init__.py:13-37).
     """
     spark = groups.sparkSession
-    mls = r"^[^:]+:[^:]+:[^:]+:"
-    g = groups.select(
-        "sig_id",
-        "count",
-        "first_seen",
-        "last_seen",
-        "permissions",
-        F.col("representative.sc_type").alias("s_type"),
-        F.col("representative.tc_type").alias("t_type"),
-        F.col("representative.comm").alias("comm"),
-        F.col("representative.permissive").alias("rep_permissive"),
-        F.regexp_extract("representative.tcontext_raw", mls + "(.*)$", 1).alias("t_mls"),
-        F.split(F.regexp_extract("representative.scontext_raw", mls + "([^-]*)", 1), ",")
-        .getItem(0)
-        .alias("s_mls_low"),
-    )
-    s_type, t_type, s_low = F.col("s_type"), F.col("t_type"), F.col("s_mls_low")
-    # AN1 widespread unlabeled_t (≥3 groups or ≥10 events)
-    unlabeled = t_type == "unlabeled_t"
-    # AN2 MLS inconsistency (≥5 core types @s15 while source s0)
-    mls_bad = (
-        t_type.isin(*CORE_SYSTEM_TYPES)
-        & F.col("t_mls").contains("s15")
-        & (s_low.isin("s0", "") | s_low.isNull())
-    )
-    # AN3 relabeling tools denied
-    relabel = s_type.isin(*RELABELING_TYPES) & (
-        F.size(F.array_intersect(
-            F.col("permissions"), F.array(*[F.lit(p) for p in RELABEL_PERMISSIONS])
-        )) > 0
-    )
-    # AN4 boot-blocking
-    boot = s_type.isin(*BOOT_CRITICAL_TYPES) & t_type.isin(*ESSENTIAL_TARGET_TYPES)
-
+    g = groups.selectExpr(*_GROUP_COLS_SQL)
     rows = (
         g.groupingSets([[], ["t_type", "t_mls"]], "t_type", "t_mls")
-        .agg(
-            F.grouping_id().alias("gid"),
-            *_rule_aggs("an1", unlabeled),
-            F.max(F.when(unlabeled, F.col("rep_permissive") == "1")).alias("an1_perm"),
-            *_rule_aggs("an2", mls_bad),
-            F.size(F.collect_set(F.when(mls_bad, t_type))).alias("an2_types"),
-            *_rule_aggs("an3", relabel),
-            F.sort_array(F.collect_set(F.when(relabel, F.col("comm")))).alias("an3_comms"),
-            *_rule_aggs("an4", boot),
-            F.sort_array(F.collect_set(F.when(boot, F.col("comm")))).alias("an4_comms"),
-            # AN5 systemic pattern (≥10 distinct sources on one target)
-            F.size(F.collect_set("s_type")).alias("sources"),
-            F.count(F.lit(1)).alias("grp"),
-            F.sum("count").alias("ev"),
-            _sigs().alias("sigs"),
-        )
-        .filter((F.col("gid") == 3) | (F.col("sources") >= 10))
+        .agg(*map(F.expr, _RULE_AGGS_SQL))
+        .filter("gid = 3 OR sources >= 10")
         .collect()
     )
 
@@ -318,7 +326,7 @@ def run_analyzers(
                 .agg(
                     F.sum("before_ev").alias("before"),
                     F.sum("after_ev").alias("after"),
-                    _sigs().alias("sigs"),
+                    F.expr(f"{_sigs()} AS sigs"),
                 )
                 # integer forms of the reference's 0.3/0.7 ratios — exact
                 # for integer counts (a >= 0.3b ⇔ 10a >= 3b), immune to the

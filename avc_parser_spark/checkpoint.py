@@ -14,7 +14,8 @@ checkpoint units, shared by every front door. A unit is a pages-warehouse
    simply overwritten on the next run);
 4. commit `_manifest/<unit>.json` — input fingerprint, input rows, routed
    rows per route, output rows, malformed lines, wall seconds, engine
-   version — by an fsynced atomic rename.
+   version — by an fsynced atomic rename, with the directory fsynced after
+   it so the rename itself survives a power loss.
 
 The row counts are `DataFrame.observe` metrics on the input and event
 frames, filled by the parquet write itself: a processed unit costs the
@@ -42,8 +43,17 @@ from avc_parser_spark import __version__
 from avc_parser_spark.enrich.join import signature_exprs
 from avc_parser_spark.parse.udf import parse_pages
 from avc_parser_spark.pipeline import ROUTES
+from avc_parser_spark.sqltext import sql_str
 
 MANIFEST_DIR = "_manifest"
+
+# the observed row counts of a unit's input and event frames
+_INPUT_METRIC_SQL = "count(1) AS input_rows"
+_OUTPUT_METRICS_SQL = [
+    "count(1) AS output_rows",
+    "coalesce(sum(malformed_lines), 0) AS malformed_lines",
+    *(f"count_if(route = {sql_str(r)}) AS {r}" for r in ROUTES),
+]
 
 
 def _input_fingerprint(files: list[str]) -> str:
@@ -55,15 +65,22 @@ def _input_fingerprint(files: list[str]) -> str:
 
 
 def _commit(out_path: str, entry: dict) -> None:
-    # The rename is the commit point; fsync first so a crash cannot leave
-    # an empty manifest file behind it.
-    mpath = os.path.join(out_path, MANIFEST_DIR, f"{entry['partition']}.json")
+    # The rename is the commit point; fsync the file first so a crash cannot
+    # leave an empty manifest file behind it, and the directory after so a
+    # power loss cannot undo the rename.
+    mdir = os.path.join(out_path, MANIFEST_DIR)
+    mpath = os.path.join(mdir, f"{entry['partition']}.json")
     tmp = mpath + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(entry, fh)
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, mpath)
+    dfd = os.open(mdir, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 def read_manifest(out_path: str) -> dict[str, dict]:
@@ -102,14 +119,9 @@ def _run_units(
 
         t0 = time.time()
         seen_in, seen_out = Observation(), Observation()
-        pages = reader(spark, source).observe(
-            seen_in, F.count(F.lit(1)).alias("input_rows")
-        )
+        pages = reader(spark, source).observe(seen_in, F.expr(_INPUT_METRIC_SQL))
         events = signature_exprs(parse_pages(pages)).observe(
-            seen_out,
-            F.count(F.lit(1)).alias("output_rows"),
-            F.coalesce(F.sum("malformed_lines"), F.lit(0)).alias("malformed_lines"),
-            *(F.count_if(F.col("route") == r).alias(r) for r in ROUTES),
+            seen_out, *map(F.expr, _OUTPUT_METRICS_SQL)
         )
         events.write.mode("overwrite").parquet(
             os.path.join(out_path, "events", f"warc_date={part}")

@@ -1,8 +1,11 @@
 """Enrichment joins + categorizer expressions (reference §2.4, natively).
 
 Everything here stays JVM-side: broadcast hash joins for exact lookups,
-`when`-cascades for prefix/pattern rules — whole-stage-codegen eligible and
-free of Python round-trips (the parse UDF is the only Python in the plan).
+`CASE WHEN` cascades for prefix/pattern rules — whole-stage-codegen eligible
+and free of Python round-trips (the parse UDF is the only Python in the
+plan). The cascades are rendered from the dims tables as Spark SQL text
+at import (`avc_parser_spark.sqltext`) and parsed JVM-side in one py4j
+call each, instead of one call per `when`/`lit`/`isin` node.
 """
 
 from __future__ import annotations
@@ -21,36 +24,52 @@ from avc_parser_spark.enrich.dims import (
     NETWORK_PERM_CLASSES,
     PATH_PATTERNS,
     PERM_CATEGORY_ROWS,
+    SERVICE_MAPPINGS,
     SYSTEM_CLASSES,
     build_dims,
 )
+from avc_parser_spark.sqltext import sql_in, sql_str
+
+# comm substrings checked after the exact map, in the reference's order
+SERVICE_SUBSTRINGS = [
+    ("httpd", "web_server_apache"),
+    ("nginx", "web_server_nginx"),
+    ("postgres", "database_postgresql"),
+    ("mysql", "database_mysql"),
+    ("sshd", "ssh_daemon"),
+]
+
+# source domains whose category is <domain without _t>_<comm>
+SPLIT_DOMAINS = ["unconfined_t", "init_t", "user_t", "admin_t"]
 
 
-def process_category_expr(comm: Column, sc_type: Column) -> Column:
-    """Process categorization (parse_avc.py:1455-1543), fully native.
+def _case(whens: list[tuple[str, str]], otherwise: str) -> str:
+    body = " ".join(f"WHEN {cond} THEN {value}" for cond, value in whens)
+    return f"CASE {body} ELSE {otherwise} END"
+
+
+PROCESS_CATEGORY_SQL = _case(
+    [("comm IS NULL OR comm = ''", "'unknown'")]
+    + [(f"comm = {sql_str(c)}", sql_str(cat)) for c, cat in SERVICE_MAPPINGS]
+    + [(f"contains(comm, {sql_str(s)})", sql_str(cat)) for s, cat in SERVICE_SUBSTRINGS]
+    + [(
+        sql_in("sc_type", SPLIT_DOMAINS),
+        f"concat(regexp_replace(sc_type, {sql_str('_t$')}, ''), '_', comm)",
+    )],
+    "concat('service_', comm)",
+)
+
+
+def process_category_expr() -> Column:
+    """Process categorization (parse_avc.py:1455-1543) over `comm` and
+    `sc_type`, fully native.
 
     Order matters and mirrors the reference: exact service map → substring
     pattern rules → multi-service-domain split → service_<comm> default.
-    The exact map is folded into the codegen `when` chain (26 branches) so
-    the signature stage needs no join at all.
+    The exact map is folded into the codegen `CASE` (26 branches) so the
+    signature stage needs no join at all.
     """
-    from avc_parser_spark.enrich.dims import SERVICE_MAPPINGS
-
-    expr = F.when(comm.isNull() | (comm == ""), F.lit("unknown"))
-    for c, cat in SERVICE_MAPPINGS:
-        expr = expr.when(comm == c, F.lit(cat))
-    return (
-        expr.when(comm.contains("httpd"), F.lit("web_server_apache"))
-        .when(comm.contains("nginx"), F.lit("web_server_nginx"))
-        .when(comm.contains("postgres"), F.lit("database_postgresql"))
-        .when(comm.contains("mysql"), F.lit("database_mysql"))
-        .when(comm.contains("sshd"), F.lit("ssh_daemon"))
-        .when(
-            sc_type.isin("unconfined_t", "init_t", "user_t", "admin_t"),
-            F.concat(F.regexp_replace(sc_type, "_t$", ""), F.lit("_"), comm),
-        )
-        .otherwise(F.concat(F.lit("service_"), comm))
-    )
+    return F.expr(PROCESS_CATEGORY_SQL)
 
 
 # E9 tclass group → the object classes it covers; any other group is the
@@ -62,147 +81,151 @@ PERM_GROUP_CLASSES = {
 }
 
 
-def permission_category_expr(permission: Column, tclass: Column) -> Column:
-    """Permission categorization (parse_avc.py:1546-1662), fully native.
+def _in_group(group: str) -> str:
+    if group in PERM_GROUP_CLASSES:
+        return sql_in("tclass", PERM_GROUP_CLASSES[group])
+    return f"tclass = {sql_str(group)}"
 
-    One `when` per (group, category) run of PERM_CATEGORY_ROWS, in row
+
+# a miss: <group prefix>_<permission> for a known group, else the permission
+_PERM_FALLBACK_SQL = _case(
+    [
+        (_in_group(g), f"concat({sql_str(('file' if g == 'fs' else g) + '_')}, permission)")
+        for g in dict.fromkeys(g for g, _, _ in PERM_CATEGORY_ROWS)
+    ],
+    "permission",
+)
+PERMISSION_CATEGORY_SQL = _case(
+    [
+        (
+            f"{_in_group(group)} AND {sql_in('permission', [p for _, p, _ in rows])}",
+            sql_str(category),
+        )
+        for (group, category), rows in groupby(
+            PERM_CATEGORY_ROWS, key=lambda row: (row[0], row[2])
+        )
+    ],
+    _PERM_FALLBACK_SQL,
+)
+
+
+def permission_category_expr() -> Column:
+    """Permission categorization (parse_avc.py:1546-1662) over `permission`
+    and `tclass`, fully native.
+
+    One `WHEN` per (group, category) run of PERM_CATEGORY_ROWS, in row
     order; a miss falls back to `<group prefix>_<permission>` for a known
     group (prefix `file` for `fs`) and to the bare permission otherwise."""
-
-    def in_group(group: str) -> Column:
-        if group in PERM_GROUP_CLASSES:
-            return tclass.isin(*PERM_GROUP_CLASSES[group])
-        return tclass == group
-
-    # F.when starts each chain and Column.when extends it
-    fallback = F
-    for group in dict.fromkeys(g for g, _, _ in PERM_CATEGORY_ROWS):
-        prefix = "file" if group == "fs" else group
-        fallback = fallback.when(
-            in_group(group), F.concat(F.lit(prefix + "_"), permission)
-        )
-
-    expr = F
-    for (group, category), rows in groupby(
-        PERM_CATEGORY_ROWS, key=lambda row: (row[0], row[2])
-    ):
-        perms = [p for _, p, _ in rows]
-        expr = expr.when(in_group(group) & permission.isin(*perms), F.lit(category))
-    return expr.otherwise(fallback.otherwise(permission))
+    return F.expr(PERMISSION_CATEGORY_SQL)
 
 
-def object_group_expr(tclass: Column) -> Column:
-    """tclass → filesystem/network/ipc/system/<tclass> (parse_avc.py:1665-1714)."""
-    return (
-        F.when(tclass.isin(*FS_OBJECT_CLASSES), F.lit("filesystem"))
-        .when(tclass.isin(*NETWORK_OBJECT_CLASSES), F.lit("network"))
-        .when(tclass.isin(*IPC_CLASSES), F.lit("ipc"))
-        .when(tclass.isin(*SYSTEM_CLASSES), F.lit("system"))
-        .otherwise(tclass)
-    )
+OBJECT_GROUP_SQL = _case(
+    [
+        (sql_in("tclass", classes), sql_str(group))
+        for classes, group in [
+            (FS_OBJECT_CLASSES, "filesystem"),
+            (NETWORK_OBJECT_CLASSES, "network"),
+            (IPC_CLASSES, "ipc"),
+            (SYSTEM_CLASSES, "system"),
+        ]
+    ],
+    "tclass",
+)
 
 
-def path_pattern_expr(path: Column, tclass: Column) -> Column:
-    """Ordered fcontext-style path-pattern normalizer (parse_avc.py:1717-1803).
+def object_group_expr() -> Column:
+    """`tclass` → filesystem/network/ipc/system/<tclass> (parse_avc.py:1665-1714)."""
+    return F.expr(OBJECT_GROUP_SQL)
+
+
+_DIRNAME_SQL = "regexp_extract(path, " + sql_str(r"^(.*)/[^/]*$") + ", 1)"
+PATH_PATTERN_SQL = _case(
+    [
+        (
+            "path IS NULL OR " + sql_in("path", ["?", '"?"', "unknown", ""]),
+            "'no_path'",
+        ),
+        ("startswith(path, 'dev:')", "'dev_inode'"),
+    ]
+    + [(f"path RLIKE {sql_str(p)}", sql_str(r)) for p, r in PATH_PATTERNS]
+    + [
+        (f"tclass = 'file' AND {_DIRNAME_SQL} != ''", f"concat({_DIRNAME_SQL}, '/*')"),
+        # reference maps partial dir names into /var/local/log territory
+        ("tclass = 'dir' AND startswith(path, '...')", "'/var/local/log(/.*)?'"),
+        ("tclass = 'dir'", "concat(path, '/*')"),
+    ],
+    "path",
+)
+
+
+def path_pattern_expr() -> Column:
+    """Ordered fcontext-style path-pattern normalizer (parse_avc.py:1717-1803)
+    over `path` and `tclass`.
 
     This is the denial-signature normalizer of the north rule: an ordered
-    rlike cascade (web → container → system patterns) with a dirname/*
+    RLIKE cascade (web → container → system patterns) with a dirname/*
     fallback — all native regexp, no UDF.
     """
-    expr = F.when(
-        path.isNull() | path.isin("?", '"?"', "unknown", ""), F.lit("no_path")
-    ).when(path.startswith("dev:"), F.lit("dev_inode"))
+    return F.expr(PATH_PATTERN_SQL)
 
-    for pattern, replacement in PATH_PATTERNS:
-        expr = expr.when(path.rlike(pattern), F.lit(replacement))
 
-    dirname = F.regexp_extract(path, r"^(.*)/[^/]*$", 1)
-    expr = (
-        expr.when(
-            (tclass == "file") & (dirname != ""), F.concat(dirname, F.lit("/*"))
-        )
-        .when(
-            (tclass == "dir") & path.startswith("..."),
-            # reference maps partial dir names into /var/local/log territory
-            F.lit("/var/local/log(/.*)?"),
-        )
-        .when(tclass == "dir", F.concat(path, F.lit("/*")))
-        .otherwise(path)
-    )
-    return expr
+# target key: full context string normally; type-only for MLS-independent
+# classes (parse_avc.py:1928-1936)
+SIG_TARGET_SQL = _case(
+    [(f"{sql_in('tclass', MLS_INDEPENDENT_CLASSES)} AND tc_type IS NOT NULL", "tc_type")],
+    "tcontext_raw",
+)
+# 4th component: path_pattern for filesystem, dest_port for network,
+# empty otherwise (signature arity is normalized to 5 with a placeholder)
+SIG_EXTRA_SQL = _case(
+    [
+        ("object_group = 'filesystem'", "path_pattern"),
+        ("object_group = 'network'", "coalesce(dest_port, '')"),
+    ],
+    "''",
+)
+# unit-separator glyph: safe joiner for sig fields
+SIGNATURE_SQL = (
+    f"concat_ws({sql_str('␟')}, coalesce(process_category, ''), "
+    "coalesce(sig_target, ''), coalesce(object_group, ''), sig_extra, "
+    "coalesce(permission_category, ''))"
+)
 
 
 def signature_exprs(df: DataFrame) -> DataFrame:
     """Attach smart-signature component columns (parse_avc.py:1872-1944).
 
     Adds: process_category, permission_category, object_group, path_pattern,
-    sig_target, sig_port, and the composite `signature` string + 64-bit
-    `sig_id` hash used as the aggregation key.
+    sig_target, sig_extra, and the composite `signature` string + 64-bit
+    `sig_id` hash used as the aggregation key. One projection per layer of
+    the dependency chain; a column is only read by a later projection than
+    the one that defines it.
     """
-    comm = F.col("comm")
-    sc_type = F.col("sc_type")
-    tclass = F.col("tclass")
-    permission = F.col("permission")
-    path = F.col("path")
-
-    df = (
-        df.withColumn("process_category", process_category_expr(comm, sc_type))
-        .withColumn(
-            "permission_category", permission_category_expr(permission, tclass)
-        )
-        .withColumn("object_group", object_group_expr(tclass))
-        .withColumn("path_pattern", path_pattern_expr(path, tclass))
+    return (
+        df.withColumns({
+            "process_category": process_category_expr(),
+            "permission_category": permission_category_expr(),
+            "object_group": object_group_expr(),
+            "path_pattern": path_pattern_expr(),
+            "sig_target": F.expr(SIG_TARGET_SQL),
+        })
+        .withColumn("sig_extra", F.expr(SIG_EXTRA_SQL))
+        .withColumn("signature", F.expr(SIGNATURE_SQL))
+        .withColumn("sig_id", F.expr("xxhash64(signature)"))
     )
 
-    # target key: full context string normally; type-only for MLS-independent
-    # classes (parse_avc.py:1928-1936)
-    tcontext_str = F.col("tcontext_raw")
-    target_key = F.when(
-        tclass.isin(*MLS_INDEPENDENT_CLASSES) & F.col("tc_type").isNotNull(),
-        F.col("tc_type"),
-    ).otherwise(tcontext_str)
 
-    # 4th component: path_pattern for filesystem, dest_port for network,
-    # empty otherwise (signature arity is normalized to 5 with a placeholder)
-    fourth = (
-        F.when(F.col("object_group") == "filesystem", F.col("path_pattern"))
-        .when(F.col("object_group") == "network", F.coalesce(F.col("dest_port"), F.lit("")))
-        .otherwise(F.lit(""))
-    )
-
-    df = (
-        df.withColumn("sig_target", target_key)
-        .withColumn("sig_extra", fourth)
-        .withColumn(
-            "signature",
-            F.concat_ws(
-                "␟",  # unit-separator glyph: safe joiner for sig fields
-                F.coalesce(F.col("process_category"), F.lit("")),
-                F.coalesce(F.col("sig_target"), F.lit("")),
-                F.coalesce(F.col("object_group"), F.lit("")),
-                F.col("sig_extra"),
-                F.coalesce(F.col("permission_category"), F.lit("")),
-            ),
-        )
-        .withColumn("sig_id", F.xxhash64("signature"))
-    )
-    return df
+SESEARCH_SQL = (
+    "concat('sesearch -A -s ', sc_type, ' -t ', tc_type, ' -c ', tclass, "
+    "' -p ', array_join(permissions, ','))"
+)
 
 
 def sesearch_expr() -> Column:
     """Compose the sesearch remediation command from group columns
     (utils/selinux_utils.py:9-62). Expects sc_type, tc_type, tclass and
     sorted permissions array columns."""
-    return F.concat(
-        F.lit("sesearch -A -s "),
-        F.col("sc_type"),
-        F.lit(" -t "),
-        F.col("tc_type"),
-        F.lit(" -c "),
-        F.col("tclass"),
-        F.lit(" -p "),
-        F.array_join(F.col("permissions"), ","),
-    )
+    return F.expr(SESEARCH_SQL)
 
 
 def enrich_events(events: DataFrame) -> DataFrame:

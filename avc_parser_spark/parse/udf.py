@@ -12,9 +12,11 @@ from __future__ import annotations
 from functools import cache
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from avc_parser_spark.parse.kernels import parse_pages_pdf
+from avc_parser_spark.parse.kernels import EXTRACT_FIELD_ORDER, parse_pages_pdf
+from avc_parser_spark.sqltext import sql_str
 
 EVENT_SCHEMA_DDL = ", ".join(
     [
@@ -92,21 +94,39 @@ def _arrow_schema():
     return pa.schema(fields)
 
 
-def extracted_text_expr():
+EXTRACTED_TEXT_SQL = "CASE WHEN route = 'parse_ok' THEN concat_ws('|', {}) END".format(
+    ", ".join(
+        f"CASE WHEN {f} IS NOT NULL THEN concat({sql_str(f + '=')}, {f}) END"
+        for f in EXTRACT_FIELD_ORDER
+    )
+)
+
+
+def extracted_text_expr() -> Column:
     """The byte-exact extracted_text invariant as a NATIVE expression: the
     same fixed-order non-null `k=v` join the kernel defines
     (kernels.EXTRACT_FIELD_ORDER), but whole-stage-codegen'd JVM-side.
-    Equivalence to the pandas construction is asserted by test (and by the
-    DuckDB extracted_text oracle)."""
-    from pyspark.sql import functions as F
+    Rendered as SQL text at import and parsed in one py4j call, not one
+    call per `when`/`concat` node. Equivalence to the pandas
+    construction is asserted by test (and by the DuckDB extracted_text
+    oracle)."""
+    return F.expr(EXTRACTED_TEXT_SQL)
 
-    from avc_parser_spark.parse.kernels import EXTRACT_FIELD_ORDER
 
-    pieces = [
-        F.when(F.col(f).isNotNull(), F.concat(F.lit(f + "="), F.col(f)))
-        for f in EXTRACT_FIELD_ORDER
-    ]
-    return F.when(F.col("route") == "parse_ok", F.concat_ws("|", *pieces))
+# Native pregate of parse_pages: keep only the audit-bearing `----` blocks.
+# Control bytes anywhere in the doc must still quarantine it, even if they
+# sit in a dropped block: append a sentinel block.
+GATED_TEXT_SQL = (
+    "concat(array_join(filter(split(text, '----'), x -> x RLIKE "
+    + sql_str(r"type=\w+|msg=audit|avc:")
+    + "), "
+    + sql_str("\n----\n")
+    + "), CASE WHEN text RLIKE "
+    + sql_str("[\x00-\x08\x0b\x0c\x0e-\x1f]")
+    + " THEN "
+    + sql_str("\n----\n\x01ctrl\x01\n----\n")
+    + " ELSE '' END)"
+)
 
 
 def _pdf_to_batch(out: pd.DataFrame):
@@ -148,14 +168,12 @@ def parse_pages(pages: DataFrame) -> DataFrame:
 
     Native pregate (V2/V3): non-audit blocks (filler prose) are dropped
     JVM-side before the Arrow boundary — codegen
-    `filter(split(text,'----'), b -> b rlike ...)` — so only audit-bearing
+    `filter(split(text, '----'), x -> x RLIKE ...)`, GATED_TEXT_SQL — so only audit-bearing
     bytes pay the serialization tax. The quarantine signal (control bytes)
     is computed on the FULL text first, and carried as a one-char sentinel
     block so the kernel's routing semantics are unchanged. Documents are
     still self-contained: no shuffle.
     """
-    from pyspark.sql import functions as F
-
     from avc_parser_spark.parse.kernels import EVENT_COLUMNS
 
     def parse_with_salvage(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -198,18 +216,7 @@ def parse_pages(pages: DataFrame) -> DataFrame:
         for batch in batches:
             yield _pdf_to_batch(parse_with_salvage(batch.to_pandas()))
 
-    blocks = F.split(F.col("text"), "----")
-    kept = F.filter(blocks, lambda b: b.rlike(r"type=\w+|msg=audit|avc:"))
-    has_ctrl = F.col("text").rlike("[\x00-\x08\x0b\x0c\x0e-\x1f]")
-    gated_text = F.concat(
-        F.array_join(kept, "\n----\n"),
-        # control bytes anywhere in the doc must still quarantine it,
-        # even if they sit in a dropped block: append a sentinel.
-        F.when(has_ctrl, F.lit("\n----\n\x01ctrl\x01\n----\n")).otherwise(
-            F.lit("")
-        ),
-    )
-    pruned = pages.select("url", "warc_ts", gated_text.alias("text"), "lang")
+    pruned = pages.selectExpr("url", "warc_ts", f"{GATED_TEXT_SQL} AS text", "lang")
     return pruned.mapInArrow(run_arrow, schema=INNER_SCHEMA_DDL).withColumn(
         "extracted_text", extracted_text_expr()
     )

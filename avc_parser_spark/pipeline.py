@@ -34,12 +34,12 @@ def denial_groups(events: DataFrame) -> DataFrame:
     """parse_ok events → signature groups with sesearch remediation (E12)."""
     if "sig_id" not in events.columns:
         events = signature_exprs(events)
-    ok = events.filter(F.col("route") == "parse_ok")
-    groups = aggregate_signatures(ok)
-    groups = groups.withColumn(
-        "sc_type", F.col("representative.sc_type")
-    ).withColumn("tc_type", F.col("representative.tc_type")).withColumn(
-        "tclass", F.col("representative.tclass")
+    ok = events.filter("route = 'parse_ok'")
+    groups = aggregate_signatures(ok).selectExpr(
+        "*",
+        "representative.sc_type AS sc_type",
+        "representative.tc_type AS tc_type",
+        "representative.tclass AS tclass",
     )
     return groups.withColumn("sesearch_command", sesearch_expr())
 

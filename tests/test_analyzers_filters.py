@@ -304,6 +304,36 @@ def test_checkpoint_partial_write_recovery(spark, tmp_path):
     assert part in r3["processed"]
 
 
+def test_checkpoint_commit_syncs_manifest_dir(tmp_path, monkeypatch):
+    """The manifest commit fsyncs the file before the rename and the
+    _manifest/ directory after it, so a power loss cannot undo the
+    rename."""
+    import os
+    import stat
+
+    from avc_parser_spark import checkpoint
+    from avc_parser_spark.checkpoint import MANIFEST_DIR
+
+    mdir = tmp_path / MANIFEST_DIR
+    mdir.mkdir()
+    committed = mdir / "d1.json"
+    synced = []
+    real_fsync = os.fsync
+
+    def recording_fsync(fd):
+        st = os.fstat(fd)
+        synced.append((stat.S_ISDIR(st.st_mode), st.st_ino, committed.exists()))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    checkpoint._commit(str(tmp_path), {"partition": "d1", "output_rows": 1})
+    assert synced == [
+        (False, committed.stat().st_ino, False),  # the temp file, pre-rename
+        (True, mdir.stat().st_ino, True),  # the directory, post-rename
+    ]
+    assert json.loads(committed.read_text())["output_rows"] == 1
+
+
 AUDIT_BLOCK = (
     "type=AVC msg=audit(1700000000.100:{i}): avc:  denied  {{ read }} "
     "for pid={i} comm=c{i} scontext=u:r:t:s0 tcontext=u:r:f:s0 "

@@ -309,7 +309,7 @@ def test_permission_category_table(spark):
         "permission",
         "tclass",
         "want",
-        permission_category_expr(F.col("permission"), F.col("tclass")).alias("got"),
+        permission_category_expr().alias("got"),
     )
     bad = [tuple(r) for r in df.collect() if r["got"] != r["want"]]
     assert bad == []
@@ -424,6 +424,67 @@ def test_path_pattern_table(spark):
         ("/opt/it's\\x/f", "file", "/opt/it's\\x/*"),
     ]
     assert _signed_mismatches(spark, cases, ("path", "tclass"), "path_pattern") == []
+
+
+def test_sql_str_round_trips(spark):
+    """sql_str literals parse back to exactly the Python string: quotes,
+    backslashes (the parser unescapes them), `${...}` (variable
+    substitution rewrites it before parsing), the signature joiner, regex
+    metacharacters, control bytes and non-BMP text."""
+    from avc_parser_spark.sqltext import sql_str
+
+    cases = [
+        "it's", "a\\b", "\\'", "'\\", "''", '"?"', "␟", "$1 \\1 ${x}",
+        r"^[^:]+:(.*)$|\w+.*?()[]{}", "".join(map(chr, range(1, 32))),
+        "\\u0041\\n\\t\\%\\_", "/* x */ -- y", "😀 𝄞 non-BMP", "",
+        "${spark.app.name}", "${env:HOME}", "\\${x}", "$\\u0024{x}",
+    ]
+    got = spark.range(1).selectExpr(
+        *(f"{sql_str(s)} AS c{i}" for i, s in enumerate(cases))
+    ).head()
+    assert list(got) == cases
+
+
+def _py4j_calls(build):
+    """py4j round trips that ``build()`` makes on this thread. py4j sends
+    the releases of dead Java references from a thread of its own; those
+    are left out, and garbage collection is paused while ``build`` runs."""
+    import gc
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+    calls = 0
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    GatewayClient.send_command = counting
+    try:
+        build()
+    finally:
+        GatewayClient.send_command = send
+        gc.enable()
+    return calls
+
+
+def test_headline_build_round_trips(spark):
+    """The signature and group expressions are parsed from SQL text, one
+    py4j call per expression. Measured: 96 calls to build
+    signature_exprs(parse_pages(pages)) and 280-400 for
+    denial_groups(events); built as per-node Column chains they took about
+    6,000 and 7,000."""
+    pages = build_pages_df(spark, 20)
+    denial_groups(parse_pages(pages))  # warm the one-off imports and caches
+    assert _py4j_calls(lambda: signature_exprs(parse_pages(pages))) <= 150
+    events = parse_pages(pages)
+    assert _py4j_calls(lambda: denial_groups(events)) <= 500
 
 
 def test_shuffle_width_is_one_partition_per_core(spark):
