@@ -1,11 +1,12 @@
-"""Spark SQL text for the expression trees built on the driver.
+"""Spark SQL text for the expression trees built in Python.
 
 Building a Catalyst expression from Python one ``F.lit``/``F.col``/``.when``
 at a time costs one py4j round trip per node, so a few-hundred-node
-cascade costs more driver time than a small partition takes to run.
+cascade costs more time to build than a small partition takes to run.
 Rendered as SQL text (once per process) and parsed JVM-side in one call,
-the same tree costs one round trip. Every string literal in that text goes
-through `sql_str`.
+the same tree costs one round trip. Every string literal taken from a table
+or holding ``\\``, ``'`` or ``$`` goes through `sql_str`; fixed plain words
+may be written in the text.
 """
 
 from __future__ import annotations

@@ -415,13 +415,13 @@ def test_path_pattern_table(spark):
     cases += [(p, "file", "no_path") for p in (None, "?", '"?"', "unknown", "")]
     cases += [
         ("dev:fd0", "chr_file", "dev_inode"),
-        ("/opt/app/x.conf", "file", "/opt/app/*"),
-        ("/opt", "file", "/opt"),
+        ("/usr/local/app/x.conf", "file", "/usr/local/app/*"),
+        ("/data", "file", "/data"),
         ("x.conf", "file", "x.conf"),
         ("...partial", "dir", "/var/local/log(/.*)?"),
-        ("/opt/app", "dir", "/opt/app/*"),
-        ("/opt/app/s", "sock_file", "/opt/app/s"),
-        ("/opt/it's\\x/f", "file", "/opt/it's\\x/*"),
+        ("/usr/local/app", "dir", "/usr/local/app/*"),
+        ("/usr/local/app/s", "sock_file", "/usr/local/app/s"),
+        ("/usr/local/it's\\x/f", "file", "/usr/local/it's\\x/*"),
     ]
     assert _signed_mismatches(spark, cases, ("path", "tclass"), "path_pattern") == []
 
