@@ -790,7 +790,11 @@ def q_token_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pool so the two remaining corpus passes overlap (guide §2.6).
     from concurrent.futures import ThreadPoolExecutor
 
-    from avc_parser_spark.functions.dedup import KMV_BITS, kmv_build_grouped
+    from avc_parser_spark.functions.dedup import (
+        kmv_build_grouped,
+        kmv_estimate,
+        kmv_intersect_estimate,
+    )
 
     kmv_k = 256
     lang_terms = docs.select(
@@ -983,24 +987,11 @@ def q_token_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in kmv_grouped_rows:
         by_lang.setdefault(r["grp"], []).append(int(r["h"]))
     kmv_hashes = sorted(set().union(*by_lang.values()))[:kmv_k]
-
-    def _kmv_est(hs: list[int]) -> int:
-        return len(hs) if len(hs) < kmv_k else (
-            ((kmv_k - 1) << KMV_BITS) // max(hs)
-        )
-
-    kmv_est = _kmv_est(kmv_hashes)
-    # en∩de theta intersection — same pinned arithmetic as
-    # kmv_intersect_estimate, over the collected per-lang sketches
-    ha = sorted(by_lang.get("en", []))
-    hb = sorted(by_lang.get("de", []))
-    if len(ha) < kmv_k and len(hb) < kmv_k:
-        kmv_ix = len(set(ha) & set(hb))
-    else:
-        union = sorted(set(ha) | set(hb))[:kmv_k]
-        theta = union[-1]
-        common = len({h for h in set(ha) & set(hb) if h <= theta})
-        kmv_ix = 0 if common == 0 else (common << KMV_BITS) // theta
+    kmv_est = kmv_estimate(kmv_hashes, kmv_k)
+    # en∩de theta intersection over the collected per-lang sketches
+    kmv_ix = kmv_intersect_estimate(
+        by_lang.get("en", []), by_lang.get("de", []), kmv_k
+    )
     kmv = spark.createDataFrame(
         [
             ("kmv", str(i + 1), h, None, None, None, None)
@@ -2291,8 +2282,8 @@ def q_ngram_overlap_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       docs are verbatim copies of train docs, so overlap == total distinct
       8-grams, enumerable in DuckDB (k1 = overlap, k2 = total);
     - 'winnow': MOSS-style winnowing fingerprint candidates (rolling
-      k-gram hash + window-min selection, winnow_candidates) over the same
-      planted corpus as the minhash query — identical planted texts have
+      k-gram hash + window-min selection, winnow_candidates_from_fps) over
+      the same planted corpus as the minhash query — identical planted texts have
       identical fingerprint sets, so every intra-cluster pair surfaces
       with fp_jaccard exactly 1 (guaranteed recall, not probabilistic);
       the oracle enumerates the planted pairs (k1 = fp_jaccard = 1.0,

@@ -177,50 +177,6 @@ def write_curated(
     curated.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
-def write_sharded(
-    curated: DataFrame,
-    path: str,
-    target_shard_mb: int = 256,
-    text_col: str = "text",
-    partition_col: str = "split",
-) -> dict[str, int]:
-    """Materialize the corpus hive-partitioned with CONTROLLED shard
-    sizes: per partition value, measure the actual text bytes, derive
-    n_shards = ceil(bytes / target), and repartition that split to
-    exactly n_shards files before writing. Returns {split: n_shards}.
-
-    Why this exists: at 100 TB, `df.write.partitionBy(...)` emits one
-    file per (task × partition-value) — either thousands of tiny files
-    (the small-files problem: naming, listing and open() overhead
-    dominate downstream reads) or multi-GB monsters a single training
-    reader must stream alone. Sizing shards from MEASURED bytes keeps
-    both failure modes out. The per-split byte totals are one partial-
-    aggregated groupBy (a few rows to the driver — bounded by the
-    number of splits); each split then writes independently, so the
-    repartition exchange is sized to that split alone.
-    """
-    import math
-
-    sizes = {
-        r[partition_col]: int(r["_bytes"])
-        for r in curated.groupBy(partition_col)
-        .agg(F.sum(F.octet_length(F.col(text_col))).alias("_bytes"))
-        .collect()
-    }
-    shards: dict[str, int] = {}
-    target = max(1, target_shard_mb) * 1024 * 1024
-    for split_val, nbytes in sorted(sizes.items()):
-        n = max(1, math.ceil(nbytes / target))
-        shards[split_val] = n
-        (
-            curated.filter(F.col(partition_col) == split_val)
-            .repartition(n)
-            .write.mode("overwrite")
-            .parquet(f"{path}/{partition_col}={split_val}")
-        )
-    return shards
-
-
 def corpus_report(
     curated: DataFrame,
     text_col: str = "text",

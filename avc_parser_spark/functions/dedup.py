@@ -400,80 +400,6 @@ def minhash_bucket_stats(
     )
 
 
-def sketch_minhash_table(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """(doc_id, sig, band_0..band_{bands-1}) — the sketch computed ONCE per
-    document with the band keys materialized as plain columns, so a stored
-    copy can be band-probed later without touching `sig` (column pruning)."""
-    rows_per_band = num_perms // bands
-    sig_udf = minhash_signature_udf(num_perms)
-    sketched = docs.select(
-        F.col(id_col).alias("doc_id"),
-        sig_udf(base_shingle_hashes(word_shingles(F.col(text_col)))).alias("sig"),
-    )
-    keys = _minhash_band_keys(bands, rows_per_band)
-    return sketched.select(
-        "doc_id", "sig", *[k.alias(f"band_{b}") for b, k in enumerate(keys)]
-    )
-
-
-def write_sketch_table(
-    docs: DataFrame,
-    path: str,
-    mode: str = "append",
-    **kwargs,
-) -> None:
-    """Persist the MinHash sketch table (append mode = the operational
-    ingest pattern: each new partition's sketches land next to the old
-    ones; a document is sketched exactly once in its lifetime)."""
-    sketch_minhash_table(docs, **kwargs).write.mode(mode).parquet(path)
-
-
-def minhash_delta_candidates(
-    spark,
-    stored_path: str,
-    delta_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Incremental near-dup probe: sketch ONLY the delta batch and join its
-    band keys against the STORED sketch table — the 100 TB ingest shape:
-
-    - the corpus is never re-sketched (its signatures were written once by
-      write_sketch_table at its own ingest time);
-    - the delta's exploded band keys BROADCAST (a delta is small relative
-      to the corpus), so the stored table is one narrow map-side pass with
-      no shuffle, and column pruning reads ONLY (doc_id, band_*) from the
-      store — `sig` never leaves disk (plan-gated in tests/test_functions.py);
-    - output pairs (a = stored doc, b = delta doc) then feed the usual
-      verify → resolve_clusters chain, exactly like full-corpus candidates.
-    """
-    band_cols = [F.col(f"band_{b}") for b in range(bands)]
-    stored_banded = spark.read.parquet(stored_path).select(
-        F.col("doc_id").alias("a"),
-        F.posexplode(F.array(*band_cols)).alias("band", "bucket"),
-    )
-    delta_banded = sketch_minhash_table(
-        delta_docs, text_col, id_col, num_perms, bands
-    ).select(
-        F.col("doc_id").alias("b"),
-        F.posexplode(F.array(*band_cols)).alias("band", "bucket"),
-    )
-    return (
-        stored_banded.join(F.broadcast(delta_banded), ["band", "bucket"])
-        .filter(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def ngram_jaccard(
     docs: DataFrame,
     pairs: DataFrame,
@@ -1121,33 +1047,20 @@ def _winnow_fp_udf(k: int, window: int):
     return _fp
 
 
-def winnow_candidates(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    window: int = 4,
-    max_bucket: int = 512,
+def winnow_candidates_from_fps(
+    fps: DataFrame, id_col: str = "doc_id", max_bucket: int = 512
 ) -> DataFrame:
-    """Candidate near-dup pairs by shared winnowing fingerprint: explode
+    """Candidate near-dup pairs by shared winnowing fingerprint over a
+    PRECOMPUTED (id, fingerprints) frame (winnow_fingerprints): explode
     fingerprints → bucket docs per fingerprint (buckets over `max_bucket`
     dropped — same web-scale stop-list rationale as the LSH band cap: a
     fingerprint shared by thousands of docs is boilerplate, and keeping it
     costs C(bucket, 2) pairs) → intra-bucket pairs → distinct. The CORPUS
     crosses one shuffle (on the fingerprint key); the only other exchange
     is the pair-level distinct, which is bounded by the bucket cap.
-    Returns (a, b) with a < b."""
-    fps = winnow_fingerprints(docs, text_col, id_col, k, window)
-    return winnow_candidates_from_fps(fps, id_col, max_bucket)
-
-
-def winnow_candidates_from_fps(
-    fps: DataFrame, id_col: str = "doc_id", max_bucket: int = 512
-) -> DataFrame:
-    """winnow_candidates over a PRECOMPUTED (id, fingerprints) frame —
-    callers that also verify (winnow_jaccard_from_fps) sketch the corpus
+    Callers that also verify (winnow_jaccard_from_fps) sketch the corpus
     ONCE and persist, the same one-sketch-pass pattern as
-    minhash_candidates_from_hashes."""
+    minhash_candidates_from_hashes. Returns (a, b) with a < b."""
     exploded = fps.select(
         F.col(id_col).alias("_id"), F.explode("fingerprints").alias("fp")
     )
@@ -1175,25 +1088,13 @@ def winnow_candidates_from_fps(
     )
 
 
-def winnow_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
-    """Fingerprint-set Jaccard for candidate pairs (the cheap verify step:
-    fingerprints are ~2/(window+1) the size of the gram sets). Broadcast
-    NOT assumed — pairs join fingerprints on each side by id."""
-    fps = winnow_fingerprints(docs, text_col, id_col, k, window)
-    return winnow_jaccard_from_fps(fps, pairs, id_col)
-
-
 def winnow_jaccard_from_fps(
     fps: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """winnow_jaccard over a PRECOMPUTED (id, fingerprints) frame."""
+    """Fingerprint-set Jaccard for candidate pairs over a PRECOMPUTED (id,
+    fingerprints) frame (the cheap verify step: fingerprints are
+    ~2/(window+1) the size of the gram sets). Broadcast NOT assumed —
+    pairs join fingerprints on each side by id."""
     a = fps.select(F.col(id_col).alias("a"), F.col("fingerprints").alias("_fa"))
     b = fps.select(F.col(id_col).alias("b"), F.col("fingerprints").alias("_fb"))
     return (
@@ -1375,12 +1276,11 @@ def substring_dedup(
 # space; the CMS counter table is ≤ depth·width rows NO MATTER the corpus —
 # each partition pre-combines into at most depth·width cells, so the one
 # shuffle is corpus-size-independent. Counters are sums, so per-batch
-# sketches merge by re-summing the counter tables (the incremental-ingest
-# story: sketch each arriving batch, merge, never rescan the store).
-# Estimates only ever OVERcount (collisions add), so "estimate < threshold"
-# prunes safely. md5-slice hashing (the split_by_hash convention) keeps
-# every cell re-derivable in any SQL engine — the token_suite 'cms' mode
-# pins counters bit-exactly against DuckDB.
+# sketches merge by re-summing the counter tables. Estimates only ever
+# OVERcount (collisions add), so "estimate < threshold" prunes safely.
+# md5-slice hashing (the split_by_hash convention) keeps every cell
+# re-derivable in any SQL engine — the token_suite 'cms' mode pins counters
+# bit-exactly against DuckDB.
 # ---------------------------------------------------------------------------
 
 CMS_WIDTH = 1 << 12
@@ -1426,15 +1326,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merged sketch of the union corpus = cell-wise sum of the counter
-    tables (same width/depth). How per-batch sketches compose at ingest."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("r", "c").agg(F.sum("cnt").cast("long").alias("cnt"))
-
-
 def cms_estimate(
     counters: DataFrame,
     probes: DataFrame,
@@ -1476,8 +1367,8 @@ def cms_heavy_hitters(
     its exact count) without ever shuffling the vocabulary — the classic
     CMS-gate + verify two-pass:
 
-    1. the counter table (built here, or pass a stored/merged one — the
-       incremental-ingest story) collects to the driver (≤ depth·width
+    1. the counter table (built here, or passed as `counters` — token_suite
+       passes its collected table) collects to the driver (≤ depth·width
        longs, bounded by construction like the k-means means) and folds
        into ONE native `least(element_at(...))` expression, so the gate
        pass over the corpus is a pure whole-stage-codegen FILTER — no
@@ -1533,7 +1424,7 @@ def cms_heavy_hitters(
 # COUNT(DISTINCT url) over 100 TB shuffles the full distinct key space; the
 # HLL register table is <= m = 2^p rows no matter the corpus (partial max per
 # partition, one corpus-size-independent shuffle), and per-batch sketches
-# merge by register-wise MAX — append-only ingest never rescans the store.
+# merge by register-wise MAX.
 # Hashing is the md5-slice convention: a 60-bit value from 15 hex chars
 # (positive in int64 in every engine); register index = low p bits, rho =
 # leading-zero rank of the remaining B = 60-p bits derived via length(bin(w))
@@ -1571,15 +1462,6 @@ def hll_build(values: DataFrame, col: str = "term", p: int = HLL_P) -> DataFrame
         .groupBy("idx")
         .agg(F.max("rho").cast("long").alias("rho"))
     )
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Sketch of the union stream == register-wise max of the per-batch
-    register tables (same p). Lossless: HLL's merge is exact."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("idx").agg(F.max("rho").cast("long").alias("rho"))
 
 
 KMV_BITS = 60  # md5-slice hash domain: 15 hex chars, positive in int64
@@ -1667,103 +1549,28 @@ def kmv_build_grouped(
     )
 
 
-def kmv_merge(*sketches: DataFrame, k: int = 256) -> DataFrame:
-    """Sketch of the union stream == k smallest distinct hashes of the
-    concatenated sketch tables (exact — the union's k minima are among
-    each input's k minima)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.distinct().orderBy("h").limit(k)
+def kmv_estimate(hashes: list[int], k: int = 256) -> int:
+    """Distinct-count estimate from a sketch's hashes, as an INTEGER
+    (bit-exact cross-engine): (k-1) · 2^60 // h_k. If the stream had fewer
+    than k distinct values the sketch is exhaustive and the count is
+    exact."""
+    if len(hashes) < k:
+        return len(hashes)
+    return ((k - 1) << KMV_BITS) // max(hashes)
 
 
-def kmv_estimate(sketch: DataFrame, k: int = 256) -> int:
-    """Distinct-count estimate as an INTEGER (bit-exact cross-engine):
-    (k-1) · 2^60 // h_k. If the stream had fewer than k distinct values
-    the sketch is exhaustive and the count is exact."""
-    rows = sketch.collect()  # ≤ k rows, bounded
-    if len(rows) < k:
-        return len(rows)
-    hk = max(int(r["h"]) for r in rows)
-    return ((k - 1) << KMV_BITS) // hk
-
-
-def kmv_intersect_estimate(
-    a: DataFrame, b: DataFrame, k: int = 256
-) -> int:
-    """|A ∩ B| estimate from two sketches (the theta-sketch rule): theta =
-    the k-th smallest hash of the UNION sketch; count hashes below theta
-    present in BOTH sketches; estimate = common · 2^60 // theta (integer,
-    bit-exact). Exact when both streams had < k distinct values."""
-    ha = sorted(int(r["h"]) for r in a.collect())
-    hb = sorted(int(r["h"]) for r in b.collect())
-    union = sorted(set(ha) | set(hb))
+def kmv_intersect_estimate(ha: list[int], hb: list[int], k: int = 256) -> int:
+    """|A ∩ B| estimate from two sketches' hashes (the theta-sketch rule):
+    theta = the k-th smallest hash of the UNION sketch; count hashes below
+    theta present in BOTH sketches; estimate = common · 2^60 // theta
+    (integer, bit-exact). Exact when both streams had < k distinct
+    values."""
+    both = set(ha) & set(hb)
     if len(ha) < k and len(hb) < k:
-        return len(set(ha) & set(hb))
-    if len(union) > k:
-        union = union[:k]
-    theta = union[-1]
-    common = len({h for h in set(ha) & set(hb) if h <= theta})
-    if common == 0:
-        return 0
+        return len(both)
+    theta = sorted(set(ha) | set(hb))[:k][-1]
+    common = sum(1 for h in both if h <= theta)
     return (common << KMV_BITS) // theta
-
-
-def hll_build_grouped(
-    values: DataFrame,
-    group_col: str,
-    col: str = "term",
-    p: int = HLL_P,
-) -> DataFrame:
-    """Per-group HLL registers: (group, idx, rho) with ≤ n_groups·2^p rows
-    — distinct-count tracking per stratum (urls per domain, terms per
-    lang) at bounded memory: the data-card per-split cardinalities over
-    100 TB without shuffling each stratum's distinct key space. Same
-    md5-slice register arithmetic as hll_build; merge = per-(group, idx)
-    max (hll_merge_grouped), so per-batch sketches append-compose."""
-    idx, rho = _hll_register_cols(F.col(col), p)
-    return (
-        values.select(
-            F.col(group_col).alias("grp"), idx.alias("idx"), rho.alias("rho")
-        )
-        .groupBy("grp", "idx")
-        .agg(F.max("rho").cast("long").alias("rho"))
-    )
-
-
-def hll_merge_grouped(*sketches: DataFrame) -> DataFrame:
-    """Union-corpus grouped sketch == per-(group, register) max of the
-    per-batch grouped register tables."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("grp", "idx").agg(F.max("rho").cast("long").alias("rho"))
-
-
-def hll_estimate_grouped(registers: DataFrame, p: int = HLL_P) -> DataFrame:
-    """Per-group cardinality estimates as a DataFrame — the whole formula
-    (harmonic mean + small-range linear counting) runs NATIVELY inside
-    one partial-agg groupBy over the ≤ n_groups·2^p register rows, so
-    unlike hll_estimate nothing collects to the driver and the group
-    count may be unbounded. Mirrors hll_estimate exactly: absent
-    registers contribute 2^0 to the denominator and count as zeros."""
-    m = 1 << p
-    alpha = (
-        0.673 if m == 16 else 0.697 if m == 32 else 0.709 if m == 64
-        else 0.7213 / (1.0 + 1.079 / m)
-    )
-    agg = registers.groupBy("grp").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("_s"),
-        F.count(F.lit(1)).alias("_present"),
-    )
-    denom = F.col("_s") + (F.lit(m) - F.col("_present"))
-    raw = F.lit(alpha * m * m) / denom
-    zeros = F.lit(m) - F.col("_present")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(raw)
-    return agg.select("grp", est.alias("estimate"))
 
 
 def hll_estimate(registers: DataFrame, p: int = HLL_P) -> float:

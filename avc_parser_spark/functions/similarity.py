@@ -323,7 +323,7 @@ def pq_adc_expr(
     with every codeword ON THE DRIVER (m·k multiplications — constant),
     producing a lookup table shipped as a literal; per row the score is
     Σ_s lut[s][code_s], a zip_with/aggregate over the m-byte code array.
-    Exposed separately from pq_topk so callers that need a cross-engine
+    Callers rank by it themselves, so those that need a cross-engine
     deterministic ranking (the driver oracle) can round BEFORE ranking."""
     import numpy as np
 
@@ -348,23 +348,4 @@ def pq_adc_expr(
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
-    )
-
-
-def pq_topk(
-    codes_df: DataFrame,
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    codes_col: str = "pq_codes",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k by inner product over the codes
-    table. No shuffle, no join, no Python:
-    scan → project → TakeOrderedAndProject (plan-gated)."""
-    score = pq_adc_expr(codebooks, query_vec, codes_col)
-    return (
-        codes_df.select(F.col(id_col), score.alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
-        .limit(k)
     )

@@ -124,19 +124,6 @@ def quality_score(text: Column) -> Column:
     return F.round(len_ok + sw_ok + punct_ok, 2)
 
 
-def repetition_ratio(text: Column, k: int = 3) -> Column:
-    """Gopher-style within-document repetition: fraction of word k-grams
-    that are duplicates (1 - distinct/total). High values flag boilerplate
-    and degenerate generations. Native array ops, no shuffle."""
-    from avc_parser_spark.functions.dedup import word_shingles
-
-    sh = word_shingles(text, k)
-    n = F.size(sh)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        F.round(1.0 - F.size(F.array_distinct(sh)) / n, 6)
-    )
-
-
 def split_by_hash(
     docs: DataFrame,
     weights: dict[str, float] | None = None,
@@ -245,27 +232,6 @@ def canonicalize_url(url: Column) -> Column:
     return F.regexp_replace(u, r"(.)/$", r"$1")                # trailing slash
 
 
-# PII scrub patterns (order matters: emails before phone-ish digit runs).
-PII_PATTERNS = [
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    (r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    # ≤2 separator chars between digits (') ' in '(415) 555'), never two
-    # consecutive spaces, 8-15 digits total: the old unbounded [\d\s().-]{7,}
-    # fused adjacent number runs ('1999  2000  2001') into one <PHONE>
-    (r"\+?\d(?:(?!\s\s)[\s().-]{0,2}\d){7,14}", "<PHONE>"),
-]
-
-
-def redact_pii(text: Column) -> Column:
-    """Best-effort PII redaction for web text: emails, IPv4 addresses and
-    phone-like digit runs → typed placeholders. Chained native
-    regexp_replace — stays inside codegen; extend PII_PATTERNS per policy."""
-    out = F.coalesce(text, F.lit(""))
-    for pat, repl in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 # HTML → text extraction (trafilatura/jusText-lite boilerplate strip) as an
 # ORDERED step list shared between Spark and DuckDB, so the oracle runs the
 # byte-identical chain. Patterns use the RE2-safe subset only (no backrefs,
@@ -330,66 +296,6 @@ def html_extract_sql(col_sql: str) -> str:
         expr = f"replace({expr}, '{q(ent)}', '{q(ch)}')"
     for pat, rep in _HTML_WS_STEPS:
         expr = f"regexp_replace({expr}, '{q(pat)}', '{q(rep)}', 'g')"
-    return expr
-
-
-def _mojibake_table() -> list[tuple[str, str]]:
-    """(mojibake, fixed) pairs for the classic web-crawl double-encoding:
-    UTF-8 bytes mis-decoded as cp1252 and re-encoded. Generated from the
-    character list (not hand-typed), longest sequences first so 3-byte
-    artifacts ('â€™') repair before any 2-byte prefix could. Characters
-    whose UTF-8 bytes hit cp1252's unmapped holes are skipped — their
-    mojibake form never round-trips through real pipelines intact."""
-    chars = (
-        "àáâãäåæçèéêëìíîïñòóôõöøùúûüýÿ"
-        "ÀÁÂÃÄÅÆÇÈÉÊËÌÍÎÏÑÒÓÔÕÖØÙÚÛÜ"
-        "ßœŒ€™©®°±µ·"
-        "“”‘’–—… "
-    )
-    def cp1252_lenient(bs: bytes) -> str:
-        # real decoders pass cp1252's five hole bytes (81 8D 8F 90 9D)
-        # through as their latin-1 control chars — mirror that so e.g.
-        # '”' (E2 80 9D) still gets a repair entry
-        out = []
-        for b in bs:
-            try:
-                out.append(bytes([b]).decode("cp1252"))
-            except UnicodeDecodeError:
-                out.append(chr(b))
-        return "".join(out)
-
-    out = []
-    for ch in chars:
-        moji = cp1252_lenient(ch.encode("utf-8"))
-        if moji != ch:
-            out.append((moji, ch))
-    out.sort(key=lambda p: (-len(p[0]), p[0]))
-    return out
-
-
-_MOJIBAKE_TABLE = _mojibake_table()
-
-
-def fix_mojibake(text: Column) -> Column:
-    """Repair the classic UTF-8-as-cp1252 double-encoding artifacts
-    ('Ã©'→'é', 'â€™'→'’', 'â€”'→'—', …) — the ftfy-style cleanup pass a
-    web-crawl pipeline runs before quality scoring. One chained native
-    replace expression over a generated table (longest artifacts first);
-    text without artifacts streams through untouched."""
-    out = F.coalesce(text, F.lit(""))
-    for moji, ch in _MOJIBAKE_TABLE:
-        out = F.replace(out, F.lit(moji), F.lit(ch))
-    return out
-
-
-def fix_mojibake_sql(col_sql: str) -> str:
-    """DuckDB twin of fix_mojibake from the SAME generated table."""
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    expr = f"coalesce({col_sql}, '')"
-    for moji, ch in _MOJIBAKE_TABLE:
-        expr = f"replace({expr}, '{q(moji)}', '{q(ch)}')"
     return expr
 
 
@@ -479,29 +385,6 @@ def document_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
         fingerprint64(t).alias("fingerprint"),
     )
     return with_lang_guess(profiled, text_col)
-
-
-def temperature_weights(
-    counts: dict[str, int], temperature: float = 1.0, scale: int = 1_000_000
-) -> dict[str, int]:
-    """Temperature-scaled mixture weights from stratum counts — the
-    T5/mT5 multilingual-sampling rule: weight_s ∝ n_s^(1/T). T=1 keeps
-    natural proportions, T→∞ approaches uniform, intermediate T up-weights
-    low-resource strata without drowning high-resource ones (mT5 ships
-    T≈3.3). Returns integer weights (scaled, floor ≥ 1 for nonempty
-    strata) ready for sample_to_mixture; empty strata are dropped.
-    Driver-side arithmetic over the bounded stratum-count dict."""
-    if temperature <= 0:
-        raise ValueError("temperature_weights: temperature must be > 0")
-    pows = {
-        s: float(n) ** (1.0 / temperature)
-        for s, n in counts.items()
-        if n > 0
-    }
-    total = sum(pows.values())
-    if not total:
-        return {}
-    return {s: max(1, int(round(p / total * scale))) for s, p in pows.items()}
 
 
 def sample_to_mixture(
@@ -1009,126 +892,6 @@ def c4_line_filter(
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target_lm: dict[str, DataFrame],
-    source_lm: dict[str, DataFrame],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.4,
-) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023, "Data Selection for
-    Language Models via Importance Resampling"): log w(x) =
-    log p_target(x) − log p_source(x) under two cheap n-gram LMs — the
-    data-selection step that upweights raw-corpus docs resembling a
-    high-quality target (e.g. Wikipedia) relative to the raw distribution.
-    Reference repo has no analog.
-
-    100 TB shape: the raw corpus is ONE narrow pass — bigrams explode
-    ONCE and both (broadcast-bounded) LMs score in the same projection:
-    4 broadcast left joins + 2 one-row cross joins + one partial-
-    aggregated groupBy, instead of two full lm_score passes. Because both
-    per-bigram log-probs are integer micros, logw_micro is an integer sum
-    — order-independent, bit-exact across partitionings and engines, and
-    equal by construction to lm_score(target) − lm_score(source).
-
-    Returns (id_col, n_bigrams, logw_micro) for every doc with >=1 bigram.
-    """
-
-    def _lm_sides(lm: dict[str, DataFrame], tag: str):
-        bi = F.broadcast(
-            lm["bigrams"].withColumnRenamed("logp_micro", f"_{tag}lp")
-        )
-        uni = F.broadcast(
-            lm["unigrams"].select(
-                F.col("w").alias("w2"), F.col("c").alias(f"_{tag}c2")
-            )
-        )
-        tot = F.broadcast(
-            lm["total"].select(F.col("total").alias(f"_{tag}tot"))
-        )
-        return bi, uni, tot
-
-    tbi, tuni, ttot = _lm_sides(target_lm, "t")
-    sbi, suni, stot = _lm_sides(source_lm, "s")
-
-    def _eff(lp: Column, c2: Column, tot: Column) -> Column:
-        # identical stupid-backoff arithmetic to lm_score (kept in lockstep
-        # by the fused==two-pass differential pytest)
-        return F.coalesce(
-            lp,
-            F.round(
-                F.log(F.lit(alpha) * F.coalesce(c2, F.lit(0.5)) / tot)
-                * 1_000_000
-            ).cast("long"),
-        )
-
-    inst = (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.explode(_word_bigrams(F.col(text_col))).alias("g"),
-        )
-        .select("_id", "g.w1", "g.w2")
-        .join(tbi, ["w1", "w2"], "left")
-        .join(tuni, ["w2"], "left")
-        .join(sbi, ["w1", "w2"], "left")
-        .join(suni, ["w2"], "left")
-        .crossJoin(ttot)
-        .crossJoin(stot)
-        .select(
-            "_id",
-            (
-                _eff(F.col("_tlp"), F.col("_tc2"), F.col("_ttot"))
-                - _eff(F.col("_slp"), F.col("_sc2"), F.col("_stot"))
-            ).alias("_dw"),
-        )
-    )
-    return (
-        inst.groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("_dw").alias("logw_micro"),
-        )
-        .withColumnRenamed("_id", id_col)
-    )
-
-
-def dsir_select(
-    docs: DataFrame,
-    target_lm: dict[str, DataFrame],
-    source_lm: dict[str, DataFrame],
-    n: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """DSIR selection: sample `n` docs without replacement with probability
-    ∝ w(x) via Gumbel-top-k — with DETERMINISTIC noise, u(id) =
-    (md5-bucket(id) + 0.5) / 10000 (the split_by_hash md5 trick), so the
-    selected set is a pure function of (corpus, LMs, n): stable under
-    re-runs, repartitioning, and re-derivable in any engine with md5.
-
-    key = logw + Gumbel(u) = logw − ln(−ln u); top n via orderBy+limit =
-    TakeOrderedAndProject (each partition keeps its local top n, no global
-    sort partition). Ties broken by id for full determinism.
-
-    Returns (id_col, n_bigrams, logw_micro, dsir_key), the selected docs.
-    """
-    w = dsir_weights(docs, target_lm, source_lm, text_col, id_col)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10
-        ).cast("bigint")
-        % 10_000
-    )
-    u = (bucket + F.lit(0.5)) / F.lit(10_000.0)
-    key = F.col("logw_micro") / 1e6 - F.log(-F.log(u))
-    return (
-        w.withColumn("dsir_key", F.round(key, 6))
-        .orderBy(F.col("dsir_key").desc(), F.col(id_col))
-        .limit(n)
-    )
-
-
 def chunk_documents(
     docs: DataFrame,
     size: int = 32,
@@ -1262,40 +1025,6 @@ def normalize_nfc(
     return docs.withColumn(out_col, _nfc(F.col(text_col)))
 
 
-def compression_ratio_micro(
-    docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "zratio_micro",
-    level: int = 6,
-) -> DataFrame:
-    """Compressibility quality signal (the RefinedWeb/Gopher-adjacent
-    screen): zlib-compressed size over raw UTF-8 size, as an integer
-    micro-ratio (compressed*1e6 // raw). Highly templated or repetitive
-    pages compress far below fluent prose, so a low ratio flags machine-
-    generated boilerplate that n-gram screens can miss; a ratio near (or
-    above) 1e6 flags already-compressed or random bytes masquerading as
-    text. Per-payload stdlib zlib in an Arrow-batched pass (the sanctioned
-    decode-loop class — compression is inherently per-payload); the ratio
-    is deterministic for a fixed zlib version and level, which the pytest
-    pins. Empty/null text → null ratio (no evidence ≠ bad evidence, same
-    policy as the perplexity filter's short-doc rule)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _zr(s: pd.Series) -> pd.Series:
-        import zlib as _z
-
-        def one(t):
-            if t is None or t == "":
-                return None
-            raw = t.encode("utf-8")
-            return len(_z.compress(raw, level)) * 1_000_000 // len(raw)
-
-        return s.map(one)
-
-    return docs.withColumn(out_col, _zr(F.col(text_col)))
-
-
 def weighted_sample(
     docs: DataFrame,
     n: int,
@@ -1337,37 +1066,6 @@ def weighted_sample(
         .drop("_neglnu")
     )
     return gated.orderBy(key_col, id_col).limit(n)
-
-
-def histogram_quantiles(
-    docs: DataFrame,
-    value_col: str,
-    qs: tuple[int, ...] = (25, 50, 75, 90, 99),
-    bucket_width: float = 1.0,
-) -> DataFrame:
-    """Percentiles for UNBOUNDED numeric domains (floats, byte sizes,
-    scores — where exact_quantiles' per-VALUE table would itself be
-    corpus-sized): quantize to fixed-width buckets first, then run the
-    same bounded count-table + pinned ceiling-pick machinery over the
-    bucket table (≤ range/width rows however many rows the corpus has).
-    The answer is the BUCKET holding the exact-rule element: returns
-    (q, value_lo, value_hi, n_total) with the true q-th percentile
-    guaranteed inside [value_lo, value_hi) — error bounded by
-    bucket_width, the fixed-width-histogram quantile contract (mergeable
-    across batches: histograms add)."""
-    if bucket_width <= 0:
-        raise ValueError("histogram_quantiles: bucket_width must be > 0")
-    w = float(bucket_width)
-    scaled = docs.filter(F.col(value_col).isNotNull()).select(
-        F.floor(F.col(value_col).cast("double") / w).cast("long").alias("_hb")
-    )
-    out = exact_quantiles(scaled, "_hb", qs)
-    return out.select(
-        "q",
-        (F.col("value") * w).alias("value_lo"),
-        ((F.col("value") + 1) * w).alias("value_hi"),
-        "n_total",
-    )
 
 
 def exact_quantiles(
@@ -1452,136 +1150,6 @@ def extract_links(
         F.explode(
             F.regexp_extract_all(h, F.lit(_HREF_PATTERN), F.lit(1))
         ).alias(out_col),
-    )
-
-
-_ANCHOR_PATTERN = r'(?i)<a\s[^>]*href\s*=\s*"([^"]*)"[^>]*>([^<]*)</a>'
-
-
-def extract_anchor_texts(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Anchor-TEXT extraction: (id, href, anchor) triples — the classic
-    web-relevance signal (anchor text describes the TARGET page; grouped
-    by href it becomes a crowd-sourced summary feeding retrieval/quality).
-    Same pinned subset as extract_links (double-quoted href, simple —
-    non-nested — anchor bodies). One regexp_extract_all per capture group
-    zipped positionally (Spark extracts one group per pass; both passes
-    run over the same scan batch), exploded to hits only. Native
-    expressions end to end — no UDF, whole-stage codegen."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    pat = F.lit(_ANCHOR_PATTERN)
-    zipped = F.arrays_zip(
-        F.regexp_extract_all(h, pat, F.lit(1)).alias("href"),
-        F.regexp_extract_all(h, pat, F.lit(2)).alias("anchor"),
-    )
-    return (
-        docs.select(F.col(id_col), F.explode(zipped).alias("_z"))
-        .select(id_col, F.col("_z.href").alias("href"),
-                F.col("_z.anchor").alias("anchor"))
-    )
-
-
-_A_TAG_ATTRS_PATTERN = r"(?i)<a\s([^>]*)>"
-
-
-def extract_link_rels(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-    drop_nofollow: bool = False,
-) -> DataFrame:
-    """Tag-scoped link extraction with rel=nofollow awareness — the edge
-    hygiene a real PageRank/TrustRank pipeline applies (nofollow links
-    carry no endorsement; Google introduced rel=nofollow exactly so rank
-    computations skip them). Returns (id, href, nofollow) per <a> tag, or
-    drops nofollow edges outright with drop_nofollow=True.
-
-    Each <a ...> tag's ATTRIBUTE STRING is extracted once (so href and
-    rel are matched within the same tag — a flat corpus-wide href scan
-    can't attribute rel to the right link), then href / rel parse out of
-    the exploded attr string. Same pinned subset as extract_links
-    (double-quoted attribute values); <a> tags without a quoted href are
-    skipped. Native regexp end to end — no UDF, streams over the scan."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    attrs = F.explode(
-        F.regexp_extract_all(h, F.lit(_A_TAG_ATTRS_PATTERN), F.lit(1))
-    ).alias("_attrs")
-    out = (
-        docs.select(F.col(id_col), attrs)
-        .select(
-            id_col,
-            F.regexp_extract(F.col("_attrs"), _HREF_PATTERN, 1).alias("href"),
-            F.col("_attrs").rlike(
-                r'(?i)rel\s*=\s*"[^"]*\bnofollow\b[^"]*"'
-            ).alias("nofollow"),
-        )
-        .filter(F.col("href") != "")
-    )
-    return out.filter(~F.col("nofollow")).drop("nofollow") if drop_nofollow else out
-
-
-def meta_robots_flags(html: Column) -> Column:
-    """struct(noindex, nofollow) from a page's <meta name="robots"> tag —
-    crawl-hygiene screens a curation pipeline must honor (a noindex page
-    asked not to be kept; page-level nofollow voids ALL its outlinks for
-    the rank graph, complementing extract_link_rels' per-link flags).
-    Handles either attribute order within the tag and the double-quoted
-    pinned subset; native regexp only."""
-    h = F.coalesce(html.cast("string"), F.lit(""))
-
-    def _directive(word: str) -> Column:
-        fwd = (
-            r'(?i)<meta[^>]*name\s*=\s*"robots"[^>]*content\s*=\s*"[^"]*\b'
-            + word + r'\b[^"]*"'
-        )
-        rev = (
-            r'(?i)<meta[^>]*content\s*=\s*"[^"]*\b' + word
-            + r'\b[^"]*"[^>]*name\s*=\s*"robots"'
-        )
-        return h.rlike(fwd) | h.rlike(rev)
-
-    return F.struct(
-        _directive("noindex").alias("noindex"),
-        _directive("nofollow").alias("nofollow"),
-    )
-
-
-def anchor_summary(
-    docs: DataFrame,
-    k: int = 5,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Crowd-sourced target-page descriptions: for every linked-to URL,
-    the k most common anchor texts across the whole corpus — the classic
-    web-search relevance signal (anchor text describes the TARGET, written
-    by third parties), used to augment retrieval and page-quality scoring.
-
-    Scale shape: one (href, anchor)
-    partial-agg shuffle for counts, then the per-href top-k happens
-    INSIDE the href-side reduction — sort_array(collect_list(struct))
-    slice with a deterministic (count desc, anchor asc) tie-break — never
-    a corpus-wide window. Empty anchors are dropped (image links)."""
-    triples = extract_anchor_texts(docs, html_col, id_col).filter(
-        F.col("anchor") != ""
-    )
-    counted = (
-        triples.groupBy("href", "anchor")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # negate the count so one ascending array_sort yields
-        # (count desc, anchor asc) — the deterministic tie-break
-        .select("href", F.struct((-F.col("n")).alias("neg_n"), "anchor").alias("s"))
-    )
-    return counted.groupBy("href").agg(
-        F.transform(
-            F.slice(F.array_sort(F.collect_list("s")), 1, k),
-            lambda s: F.struct(
-                (-s["neg_n"]).cast("long").alias("n"), s["anchor"].alias("anchor")
-            ),
-        ).alias("top_anchors")
     )
 
 
@@ -1750,45 +1318,4 @@ def fim_transform(
         ).alias("fim_text"),
         lo.alias("cut_lo"),
         hi.alias("cut_hi"),
-    )
-
-
-def ccnet_buckets(
-    docs: DataFrame,
-    lm: dict[str, DataFrame],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """CCNet's head/middle/tail split (Wenzek et al. 2020): bucket docs by
-    LM perplexity TERCILES — 'head' (most fluent third) is what CCNet
-    ships as the highest-quality slice. Composes lm_score (one narrow
-    pass, broadcast LM) with exact_quantiles (bounded per-value count
-    table — never sorts the corpus).
-
-    Engine-portable ordering quantity: nmlp_micro = (-logp_micro_sum) div
-    n_bigrams — the integer mean negative log-prob (monotone with ppl, no
-    float compare at the boundary). Cutoffs are the exact 33rd/67th
-    percentiles of nmlp_micro; bucket = head if nmlp <= q33, middle if
-    <= q67, else tail (pinned closed-left rule). The two cutoffs come
-    back as one broadcast row. Docs with <2 tokens score no bigrams and
-    are excluded (same missing-evidence rule as the ppl filter).
-
-    Returns lm_score's columns + (nmlp_micro, bucket)."""
-    scored = lm_score(docs, lm, text_col=text_col, id_col=id_col).withColumn(
-        "nmlp_micro", F.expr("(-logp_micro_sum) div n_bigrams")
-    )
-    cuts = (
-        exact_quantiles(scored, "nmlp_micro", (33, 67))
-        .groupBy()
-        .agg(
-            F.min(F.when(F.col("q") == 33, F.col("value"))).alias("q33"),
-            F.min(F.when(F.col("q") == 67, F.col("value"))).alias("q67"),
-        )
-    )
-    return scored.crossJoin(F.broadcast(cuts)).select(
-        *scored.columns,
-        F.when(F.col("nmlp_micro") <= F.col("q33"), F.lit("head"))
-        .when(F.col("nmlp_micro") <= F.col("q67"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
     )

@@ -284,11 +284,6 @@ def normalize_events_for_json(events: DataFrame) -> DataFrame:
     )
 
 
-def write_routed_tables(events: DataFrame, path: str) -> None:
-    """One write partitioned by route (+ per-sink pruned reads)."""
-    events.write.mode("overwrite").partitionBy("route").parquet(path)
-
-
 def json_report(
     groups: DataFrame,
     findings: DataFrame | None = None,

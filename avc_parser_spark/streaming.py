@@ -42,40 +42,6 @@ def stream_events(pages_stream: DataFrame) -> DataFrame:
     return parse_pages(pages_stream)
 
 
-def stream_dedup_exact(
-    pages: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "warc_ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Ingest-time exact dedup: drop pages whose md5(normalized text)
-    digest was already seen within the watermark horizon — Spark's
-    stateful dropDuplicatesWithinWatermark operator, so dedup state is
-    BOUNDED (keys older than the watermark are evicted) instead of
-    growing forever like a naive dropDuplicates on an unbounded stream.
-
-    This is the streaming twin of functions/dedup.py::exact_duplicates:
-    the batch op finds all duplicates after the fact; this one admits
-    only first-seen digests at ingest. Cross-horizon dups are the stored
-    sketch table's job (minhash_delta_candidates) — the two compose into
-    the operational 100 TB ingest pattern: cheap in-horizon exact dedup
-    at the edge, stored-sketch near-dedup per batch behind it.
-
-    State shape at scale: one row per distinct digest inside the
-    watermark window, hash-partitioned by digest across executors; the
-    eviction is event-time driven, so a replayed backfill with old
-    timestamps cannot balloon the state.
-    """
-    from avc_parser_spark.functions.dedup import normalized_text
-
-    return (
-        pages.withColumn("digest", F.md5(normalized_text(F.col(text_col))))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
-
-
-
 def stream_lang_hour_rollup(
     events: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -220,7 +186,7 @@ def run_routed_stream(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Continuous routed-event sink: append parquet partitioned by route —
-    the streaming twin of sinks.write_routed_tables."""
+    the streaming twin of checkpoint.run_with_checkpoints' routed write."""
     events = stream_events(stream_pages(spark, landing_dir))
     return (
         events.writeStream.format("parquet")
@@ -231,90 +197,6 @@ def run_routed_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def run_sketch_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    cms_dir: str,
-    hll_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    width: int = 512,
-    depth: int = 4,
-    p: int = 6,
-    kmv_dir: str | None = None,
-    kmv_k: int = 256,
-) -> StreamingQuery:
-    """Streaming sketch maintenance — the bounded-memory ingest twin of
-    cms_build/hll_build: each micro-batch of landing pages contributes a
-    per-batch CMS counter table (≤ depth·width rows) and HLL register
-    table (≤ 2^p rows) APPENDED to the stored sketch dirs, never
-    rewriting or rescanning history. Term-frequency and cardinality
-    queries over the whole ingested corpus then read only the bounded
-    sketch tables (read_cms_sketch / read_hll_sketch), however many
-    batches have landed — the operational 100 TB shape alongside
-    write_sketch_table's minhash appends.
-
-    Exactly-once caveat, handled at READ time: a retried foreachBatch may
-    append the same batch's (identical) rows twice, so readers first
-    collapse per (batch_id, cell) with max — idempotent because a replay
-    writes byte-identical counts — then merge across batches (sum for
-    CMS cells, max for HLL registers, the sketches' merge laws)."""
-    from avc_parser_spark.functions.dedup import cms_build, hll_build, kmv_build
-
-    pages = stream_pages(spark, landing_dir)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        terms = batch_df.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("term")
-        ).filter(F.col("term") != "")
-        cms_build(terms, width=width, depth=depth).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ).write.mode("append").parquet(cms_dir)
-        hll_build(terms, p=p).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ).write.mode("append").parquet(hll_dir)
-        if kmv_dir is not None:
-            kmv_build(terms, k=kmv_k).withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.mode("append").parquet(kmv_dir)
-
-    return (
-        pages.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_cms_sketch(spark: SparkSession, cms_dir: str) -> DataFrame:
-    """Merged CMS counter table over every appended batch: replay-dedup
-    per (batch_id, r, c) with max, then cell-wise sum (cms_merge law)."""
-    return (
-        spark.read.parquet(cms_dir)
-        .groupBy("batch_id", "r", "c")
-        .agg(F.max("cnt").alias("cnt"))
-        .groupBy("r", "c")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def read_hll_sketch(spark: SparkSession, hll_dir: str) -> DataFrame:
-    """Merged HLL register table over every appended batch: register-wise
-    max is both the replay dedup AND the merge law."""
-    return (
-        spark.read.parquet(hll_dir)
-        .groupBy("idx")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def read_kmv_sketch(spark: SparkSession, kmv_dir: str, k: int = 256) -> DataFrame:
-    """Merged KMV sketch over every appended batch: distinct-then-k-
-    smallest is both the replay dedup AND the merge law (the union's k
-    minima are among each batch's k minima)."""
-    return spark.read.parquet(kmv_dir).select("h").distinct().orderBy("h").limit(k)
 
 
 def run_audit_routed_stream(

@@ -95,37 +95,6 @@ def test_split_by_hash_md5_portable(spark):
         assert out[i] == want, (i, bucket)
 
 
-def test_write_sharded_controls_file_counts(spark, tmp_path):
-    """Shard counts derive from MEASURED per-split text bytes: a split
-    with ~3 target-sizes of text gets 3 parquet files, a small one gets
-    1 — neither the small-files nor the giant-shard failure mode."""
-    import glob
-
-    from avc_parser_spark.functions.curation import write_sharded
-
-    big = "x" * 1000
-    rows = [(i, big, "train") for i in range(300)] + [
-        (1000 + i, "tiny", "val") for i in range(5)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, split string")
-    path = str(tmp_path / "sharded")
-    shards = write_sharded(
-        df, path, target_shard_mb=1
-    )  # 1 MiB target: both splits fit in one shard each
-    assert shards == {"train": 1, "val": 1}
-
-    rows_big = [(i, big * 400, "train") for i in range(8)]  # 3.2 MB total
-    df_big = spark.createDataFrame(
-        rows_big, "doc_id long, text string, split string"
-    )
-    shards = write_sharded(df_big, path + "2", target_shard_mb=1)
-    assert shards == {"train": 4}  # ceil(3.2 MB / 1 MiB)
-    files = glob.glob(path + "2/split=train/part-*.parquet")
-    assert len(files) == 4
-    back = spark.read.parquet(path + "2")
-    assert back.count() == 8
-
-
 def test_corpus_report_rollup(spark):
     """Data-card rollup: split totals plus split-by-lang breakdown in one
     GROUPING SETS pass; token/byte sums exact."""

@@ -221,41 +221,6 @@ def test_split_by_hash_deterministic_and_proportional(spark):
     assert first == again
 
 
-def test_repetition_ratio_and_redact_pii(spark):
-    from avc_parser_spark.functions.text import redact_pii, repetition_ratio
-
-    rows = [
-        (0, "spam spam spam spam spam spam"),           # fully repetitive
-        (1, "one two three four five six seven eight"),  # no repeats
-        (2, "contact me at bob.smith+x@example.co.uk or 192.168.1.17 "
-            "or call +1 (415) 555-0199 today"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["rep"], r["red"])
-        for r in df.select(
-            "doc_id",
-            repetition_ratio(F.col("text")).alias("rep"),
-            redact_pii(F.col("text")).alias("red"),
-        ).collect()
-    }
-    assert out[0][0] == 0.75  # 4 trigrams, 1 distinct
-    assert out[1][0] == 0.0
-    assert out[3][0] == 0.0
-    red = out[2][1]
-    assert "<EMAIL>" in red and "<IP>" in red and "<PHONE>" in red
-    assert "example" not in red and "415" not in red and "192.168" not in red
-
-    # adjacent number runs (years/figures) must not fuse into one <PHONE>:
-    # the separator is bounded to a single char and 15 digits total
-    years = spark.createDataFrame(
-        [(0, "revenue for 1999  2000  2001  2002 was flat")],
-        "doc_id long, text string",
-    ).select(redact_pii(F.col("text")).alias("red")).collect()[0]["red"]
-    assert "2002" in years  # double-spaced run no longer swallowed whole
-
-
 def test_canonicalize_url(spark):
     from avc_parser_spark.functions.text import canonicalize_url
 
@@ -311,43 +276,6 @@ def test_ngram_contamination(spark):
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_incremental_sketch_table(spark, tmp_path):
-    """The operational 100 TB ingest pattern: sketches are written once per
-    batch (append); a delta batch probes the STORED band columns without
-    re-sketching the corpus, finds exactly the planted cross-batch dups,
-    and the stored scan must read only (doc_id, band_*) — never `sig`."""
-    from avc_parser_spark.functions.dedup import (
-        minhash_delta_candidates,
-        write_sketch_table,
-    )
-
-    dup_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    dup_b = "lorem ipsum dolor sit amet consectetur adipiscing elit sed tempor"
-
-    def corpus(ids, planted):
-        return spark.createDataFrame(
-            [
-                (i, planted.get(i, f"unique document body {i} with words {i*13} {i*7} end"))
-                for i in ids
-            ],
-            "doc_id long, text string",
-        )
-
-    path = str(tmp_path / "sketches")
-    write_sketch_table(corpus(range(10), {2: dup_a}), path)
-    write_sketch_table(corpus(range(10, 20), {12: dup_b}), path)  # append
-
-    delta = corpus([100, 101, 102], {100: dup_a, 101: dup_b})
-    pairs = minhash_delta_candidates(spark, path, delta)
-    got = sorted((r["a"], r["b"]) for r in pairs.collect())
-    assert got == [(2, 100), (12, 101)]
-
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # delta side broadcasts
-    scan_schema = plan.split("ReadSchema:")[1].split("\n")[0]
-    assert "band_0" in scan_schema and "sig" not in scan_schema
 
 
 def test_resolve_clusters_transitive_chain(spark):
@@ -1370,8 +1298,9 @@ def test_winnow_candidates_and_jaccard(spark):
     """Candidate join finds the planted identical pair with fp_jaccard 1.0
     and emits nothing between character-disjoint documents."""
     from avc_parser_spark.functions.dedup import (
-        winnow_candidates,
-        winnow_jaccard,
+        winnow_candidates_from_fps,
+        winnow_fingerprints,
+        winnow_jaccard_from_fps,
     )
 
     rows = [
@@ -1381,25 +1310,27 @@ def test_winnow_candidates_and_jaccard(spark):
         (3, "ZZZZZZZZZZ YYYYYYYYYY XXXXXXXXXX WWWWWWWWWW VVVVVVVVVV"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    pairs = winnow_candidates(docs)
+    fps = winnow_fingerprints(docs)
+    pairs = winnow_candidates_from_fps(fps)
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     assert (0, 1) in got
     assert (2, 3) not in got and (3, 2) not in got
     jac = {
         (r["a"], r["b"]): r["fp_jaccard"]
-        for r in winnow_jaccard(docs, pairs).collect()
+        for r in winnow_jaccard_from_fps(fps, pairs).collect()
     }
     assert jac[(0, 1)] == 1.0
 
 
 def test_resolve_clusters_over_winnow_pairs(spark):
-    """Strategy-agnostic resolution, winnowing edition: winnow_candidates
+    """Strategy-agnostic resolution, winnowing edition: winnowing candidate
     pairs feed the SAME resolve loop that serves minhash/simhash/embedding
     edges — a transitive chain (A≈B via shared prefix, B≈C via shared
     suffix) collapses to one keeper even though A and C share nothing."""
     from avc_parser_spark.functions.dedup import (
         resolve_clusters,
-        winnow_candidates,
+        winnow_candidates_from_fps,
+        winnow_fingerprints,
     )
 
     # head and tail share NO 8-char substring (disjoint vocabularies), so
@@ -1413,7 +1344,7 @@ def test_resolve_clusters_over_winnow_pairs(spark):
         (3, "qqq www eee rrr ttt yyy uuu iii ooo ppp sss ddd fff ggg"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    pairs = winnow_candidates(docs)
+    pairs = winnow_candidates_from_fps(winnow_fingerprints(docs))
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     assert (0, 1) in got and (1, 2) in got and (0, 2) not in got
     resolved = {
@@ -1686,95 +1617,6 @@ def test_c4_line_filter_rules(spark):
         ["doc_id", "text"],
     )
     assert c4_line_filter(extra).collect()[0]["c4_bitmask"] & 4 == 0
-
-
-def test_dsir_weights_fused_equals_two_pass(spark):
-    """The fused one-pass DSIR scorer must equal the difference of two
-    independent lm_score passes integer-exactly (sum of per-bigram diffs
-    == diff of sums — both are integer micros)."""
-    import random
-
-    from avc_parser_spark.functions.text import (
-        build_ngram_lm,
-        dsir_weights,
-        lm_score,
-    )
-
-    rng = random.Random(20260817)
-    pool = ["acid", "base", "salt", "ion", "bond", "mol", "gas", "heat"]
-    mk = lambda lo, hi: " ".join(
-        rng.choice(pool) for _ in range(rng.randint(lo, hi))
-    )
-    docs = spark.createDataFrame(
-        [(i, mk(2, 12)) for i in range(60)], ["doc_id", "text"]
-    )
-    target = build_ngram_lm(
-        spark.createDataFrame([(i, mk(4, 10)) for i in range(30)],
-                              ["doc_id", "text"])
-    )
-    source = build_ngram_lm(
-        spark.createDataFrame([(i, mk(3, 8)) for i in range(40)],
-                              ["doc_id", "text"])
-    )
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["logw_micro"])
-        for r in dsir_weights(docs, target, source).collect()
-    }
-    t = {r["doc_id"]: r for r in lm_score(docs, target).collect()}
-    s = {r["doc_id"]: r for r in lm_score(docs, source).collect()}
-    want = {
-        i: (t[i]["n_bigrams"], t[i]["logp_micro_sum"] - s[i]["logp_micro_sum"])
-        for i in t
-    }
-    assert got == want and len(got) > 0
-
-
-def test_dsir_select_deterministic_and_prefers_target(spark):
-    """Gumbel-top-k selection with hash noise: (a) the selected set is
-    re-derivable in pure Python from the collected weights (md5-bucket
-    uniform + Gumbel key), (b) stable under repartitioning, and (c) docs
-    matching the target style dominate the sample."""
-    import hashlib
-    import math
-
-    from avc_parser_spark.functions.text import (
-        build_ngram_lm,
-        dsir_select,
-        dsir_weights,
-    )
-
-    chem = "acid base reacts with salt in water forming ion bond pairs"
-    news = "markets rally as stocks climb while investors await reports"
-    docs = spark.createDataFrame(
-        [(i, chem if i % 2 == 0 else news) for i in range(40)],
-        ["doc_id", "text"],
-    )
-    target = build_ngram_lm(
-        spark.createDataFrame([(0, chem), (1, chem)], ["doc_id", "text"])
-    )
-    source = build_ngram_lm(docs)
-
-    sel = dsir_select(docs, target, source, n=8)
-    picked = sorted(r["doc_id"] for r in sel.collect())
-    # (c) the chem docs have strictly higher logw; all 8 picks are chem
-    assert all(i % 2 == 0 for i in picked)
-
-    # (a) re-derive the selection from the weights in pure Python
-    w = {
-        r["doc_id"]: r["logw_micro"]
-        for r in dsir_weights(docs, target, source).collect()
-    }
-    keys = {}
-    for i, lw in w.items():
-        b = int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) % 10000
-        u = (b + 0.5) / 10000.0
-        keys[i] = lw / 1e6 - math.log(-math.log(u))
-    want = sorted(sorted(keys, key=lambda i: (-keys[i], i))[:8])
-    assert picked == want
-
-    # (b) repartition invariance
-    sel2 = dsir_select(docs.repartition(13), target, source, n=8)
-    assert sorted(r["doc_id"] for r in sel2.collect()) == picked
 
 
 def test_semantic_dedup_pairs_planted(spark):
@@ -2158,54 +2000,6 @@ def test_bm25_duckdb_differential(spark):
     assert got == want
 
 
-def test_fix_mojibake_roundtrip_and_duckdb_twin(spark):
-    """fix_mojibake repairs programmatically-generated double-encoding:
-    clean → utf-8 bytes → lenient cp1252 (holes pass through latin-1) →
-    repaired must equal clean, for accented Latin, punctuation and symbol
-    cases; clean ASCII streams through untouched; the generated DuckDB
-    twin produces byte-identical output."""
-    import duckdb
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from avc_parser_spark.functions.text import fix_mojibake, fix_mojibake_sql
-
-    def lenient(bs):
-        out = []
-        for b in bs:
-            try:
-                out.append(bytes([b]).decode("cp1252"))
-            except UnicodeDecodeError:
-                out.append(chr(b))
-        return "".join(out)
-
-    cleans = [
-        "naïve café crème brûlée",
-        "it’s “quoted” — and more…",
-        "€100 ±50° à la carte",
-        "plain ascii stays plain ascii",
-        "Gödel Escäper Øresund œuvre",
-        "",
-    ]
-    rows = []
-    for i, c in enumerate(cleans):
-        rows.append((2 * i, lenient(c.encode("utf-8")), c))
-        rows.append((2 * i + 1, c, c))  # already-clean text is untouched
-    df = spark.createDataFrame(rows, "i long, raw string, want string")
-    got = {r["i"]: (r["x"], r["want"])
-           for r in df.select("i", fix_mojibake(F.col("raw")).alias("x"),
-                              "want").collect()}
-    for i, (x, want) in got.items():
-        assert x == want, (i, x, want)
-
-    con = duckdb.connect()
-    con.register("t", pd.DataFrame(rows, columns=["i", "raw", "want"]))
-    oracle = dict(con.execute(
-        f"select i, {fix_mojibake_sql('raw')} from t").fetchall())
-    for i, (x, _) in got.items():
-        assert oracle[i] == x, (i, oracle[i], x)
-
-
 def test_chunk_documents_invariants(spark):
     """Structural invariants of overlapping token-window chunking:
     full coverage (chunk tokens reassemble the doc), overlap equality
@@ -2331,44 +2125,6 @@ def test_normalize_nfc_duckdb_battery(spark):
     assert normalize_nfc(ndf).collect()[0]["text_nfc"] is None
 
 
-def test_compression_ratio_micro(spark):
-    """Compressibility signal: exact integer agreement with a direct zlib
-    re-derivation (same level), repetitive text scoring far below fluent
-    prose and incompressible-ish text scoring highest; empty/null → null."""
-    import zlib
-
-    from avc_parser_spark.functions.text import compression_ratio_micro
-
-    fluent = (
-        "The committee reviewed seventeen proposals during the afternoon "
-        "session and deferred a decision on the harbor expansion until the "
-        "following quarter, citing unresolved environmental questions."
-    )
-    repetitive = "spam ham " * 200
-    # deterministic high-entropy printable text (~6.5 bits/char, no repeats)
-    import hashlib
-
-    jumbled = "".join(
-        chr(33 + (b % 90))
-        for i in range(8)
-        for b in hashlib.sha256(str(i).encode()).digest()
-    )
-    cases = [(0, fluent), (1, repetitive), (2, jumbled), (3, ""), (4, None)]
-    df = spark.createDataFrame(cases, "doc_id: long, text: string")
-    got = {
-        r["doc_id"]: r["zratio_micro"]
-        for r in compression_ratio_micro(df).collect()
-    }
-    for i, t in cases:
-        if not t:
-            assert got[i] is None
-        else:
-            raw = t.encode("utf-8")
-            assert got[i] == len(zlib.compress(raw, 6)) * 1_000_000 // len(raw)
-    assert got[1] < got[0] // 3        # boilerplate is far more compressible
-    assert got[2] > got[0]             # high-entropy text compresses worst
-
-
 def test_pq_encode_matches_numpy(spark):
     """Native per-subspace L2-argmin encoding must equal a numpy
     re-derivation code-for-code (deterministic lowest-index tie-break)."""
@@ -2405,8 +2161,8 @@ def test_pq_lossless_on_codeword_corpus(spark):
 
     from avc_parser_spark.functions.similarity import (
         brute_force_topk,
+        pq_adc_expr,
         pq_encode,
-        pq_topk,
     )
 
     rng = np.random.RandomState(11)
@@ -2426,7 +2182,12 @@ def test_pq_lossless_on_codeword_corpus(spark):
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
     q = rng.randn(m * d).tolist()
     codes = pq_encode(df, books)
-    adc = [r["vec_id"] for r in pq_topk(codes, books, q, k=10).collect()]
+    ranked = (
+        codes.select("vec_id", pq_adc_expr(books, q).alias("adc_score"))
+        .orderBy(F.col("adc_score").desc(), F.col("vec_id").asc())
+        .limit(10)
+    )
+    adc = [r["vec_id"] for r in ranked.collect()]
     exact = [r["vec_id"] for r in brute_force_topk(df, q, k=10).collect()]
     assert adc == exact
 
@@ -2538,27 +2299,6 @@ def test_ivfpq_fused_probe_equals_brute(spark):
         assert fused == exact
     finally:
         spark.catalog.dropTempView("embeddings")
-
-
-def test_pq_topk_plan_no_shuffle(spark):
-    """ADC scoring is scan → project → TakeOrderedAndProject: the plan must
-    contain NO Exchange (the 10^12-codes-table contract) and no Python."""
-    import numpy as np
-
-    from avc_parser_spark.functions.similarity import pq_encode, pq_topk
-
-    rng = np.random.RandomState(3)
-    m, d, k = 4, 4, 4
-    books = [rng.randn(k, d).tolist() for _ in range(m)]
-    df = spark.createDataFrame(
-        [(i, rng.randn(m * d).tolist()) for i in range(20)],
-        "vec_id: long, embedding: array<double>",
-    )
-    codes = pq_encode(df, books).select("vec_id", "pq_codes")
-    plan = pq_topk(codes, books, rng.randn(m * d).tolist(), k=5)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_cms_estimate_never_undercounts_and_exact_when_wide(spark):
@@ -2813,14 +2553,10 @@ def test_salted_join_equals_plain_join_on_skewed_keys(spark):
 def test_kmv_sketch_matches_duckdb_and_estimates(spark):
     """The KMV sketch table is a pure function of the value set — must be
     IDENTICAL to DuckDB's distinct-order-limit re-derivation; estimates:
-    exact below k, within the ~1/√(k-2) band above; merge law == whole."""
+    exact below k, within the ~1/√(k-2) band above."""
     import duckdb
 
-    from avc_parser_spark.functions.dedup import (
-        kmv_build,
-        kmv_estimate,
-        kmv_merge,
-    )
+    from avc_parser_spark.functions.dedup import kmv_build, kmv_estimate
 
     vals = [f"v{i % 5000}" for i in range(20000)]
     df = spark.createDataFrame([(v,) for v in vals], "term: string")
@@ -2836,21 +2572,15 @@ def test_kmv_sketch_matches_duckdb_and_estimates(spark):
     ]
     assert sorted(got) == want
 
-    est = kmv_estimate(sk, k=256)
+    est = kmv_estimate(got, k=256)
     assert abs(est - 5000) < 5000 * 0.35  # ~5σ at k=256
 
     small = kmv_build(
         spark.createDataFrame([(f"s{i}",) for i in range(40)], "term: string"),
         k=256,
     )
-    assert kmv_estimate(small, k=256) == 40  # exhaustive → exact
-
-    half1 = kmv_build(df.limit(9000), k=256)
-    half2 = kmv_build(df.subtract(df.limit(9000)), k=256)
-    merged = sorted(
-        int(r["h"]) for r in kmv_merge(half1, half2, k=256).collect()
-    )
-    assert merged == sorted(got)
+    small_hashes = [int(r["h"]) for r in small.collect()]
+    assert kmv_estimate(small_hashes, k=256) == 40  # exhaustive → exact
 
 
 def test_kmv_build_grouped_matches_per_group_and_merges(spark):
@@ -2888,13 +2618,16 @@ def test_kmv_intersection_estimate(spark):
         kmv_intersect_estimate,
     )
 
+    def hashes(df):
+        return [int(r["h"]) for r in kmv_build(df, k=256).collect()]
+
     a_small = spark.createDataFrame(
         [(f"x{i}",) for i in range(60)], "term: string"
     )
     b_small = spark.createDataFrame(
         [(f"x{i}",) for i in range(40, 100)], "term: string"
     )
-    ask, bsk = kmv_build(a_small, k=256), kmv_build(b_small, k=256)
+    ask, bsk = hashes(a_small), hashes(b_small)
     assert kmv_intersect_estimate(ask, bsk, k=256) == 20  # x40..x59 exact
 
     a_big = spark.createDataFrame(
@@ -2903,72 +2636,16 @@ def test_kmv_intersection_estimate(spark):
     b_big = spark.createDataFrame(
         [(f"y{i}",) for i in range(2000, 6000)], "term: string"
     )
-    est = kmv_intersect_estimate(
-        kmv_build(a_big, k=256), kmv_build(b_big, k=256), k=256
-    )
+    est = kmv_intersect_estimate(hashes(a_big), hashes(b_big), k=256)
     assert abs(est - 2000) < 2000 * 0.6  # intersection noise compounds
     disjoint = kmv_intersect_estimate(
-        kmv_build(a_big, k=256),
-        kmv_build(
-            spark.createDataFrame([(f"z{i}",) for i in range(4000)], "term: string"),
-            k=256,
+        hashes(a_big),
+        hashes(
+            spark.createDataFrame([(f"z{i}",) for i in range(4000)], "term: string")
         ),
         k=256,
     )
     assert disjoint == 0
-
-
-def test_hll_grouped_matches_per_group_global(spark):
-    """Per-group registers == hll_build on each group's subset; the native
-    per-group estimate equals the driver-side hll_estimate formula on the
-    same registers (to float tolerance); grouped merge law == whole."""
-    import pytest as _pt
-
-    from avc_parser_spark.functions.dedup import (
-        hll_build,
-        hll_build_grouped,
-        hll_estimate,
-        hll_estimate_grouped,
-        hll_merge_grouped,
-    )
-
-    rows = [("big", f"t{i}") for i in range(4000)] + [
-        ("small", f"s{i}") for i in range(9)
-    ]
-    df = spark.createDataFrame(rows, "grp: string, term: string")
-    grouped = hll_build_grouped(df, "grp", p=6)
-
-    for g in ("big", "small"):
-        sub = hll_build(df.filter(F.col("grp") == g), p=6)
-        want = {r["idx"]: r["rho"] for r in sub.collect()}
-        got = {
-            r["idx"]: r["rho"]
-            for r in grouped.filter(F.col("grp") == g).collect()
-        }
-        assert got == want, g
-
-    ests = {
-        r["grp"]: r["estimate"]
-        for r in hll_estimate_grouped(grouped, p=6).collect()
-    }
-    for g in ("big", "small"):
-        sub = hll_build(df.filter(F.col("grp") == g), p=6)
-        assert ests[g] == _pt.approx(hll_estimate(sub, p=6), rel=1e-9), g
-    # sanity: the small group takes the linear-counting branch and is
-    # near-exact; the big one lands within the ~13% HLL band at p=6
-    assert abs(ests["small"] - 9) < 2
-    assert 0.5 * 4000 < ests["big"] < 1.6 * 4000
-
-    half1 = hll_build_grouped(df.limit(2000), "grp", p=6)
-    half2 = hll_build_grouped(df.subtract(df.limit(2000)), "grp", p=6)
-    merged = {
-        (r["grp"], r["idx"]): r["rho"]
-        for r in hll_merge_grouped(half1, half2).collect()
-    }
-    whole = {
-        (r["grp"], r["idx"]): r["rho"] for r in grouped.collect()
-    }
-    assert merged == whole
 
 
 def test_training_order_md5_matches_python_and_is_partition_invariant(spark):
@@ -3013,27 +2690,6 @@ def test_training_order_no_global_sort(spark):
     plan = training_order(df, 4)._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower(), plan
     assert plan.count("Exchange") == 1, plan
-
-
-def test_cms_merge_equals_whole(spark):
-    """Sketch of the union corpus == cell-wise sum of per-batch sketches
-    (the incremental-ingest contract)."""
-    from avc_parser_spark.functions.dedup import cms_build, cms_merge
-
-    a = spark.createDataFrame(
-        [(w,) for w in ["x"] * 5 + ["y"] * 2], "term: string"
-    )
-    b = spark.createDataFrame(
-        [(w,) for w in ["y"] * 3 + ["z"] * 4], "term: string"
-    )
-    whole = cms_build(a.unionByName(b), width=8, depth=3)
-    merged = cms_merge(
-        cms_build(a, width=8, depth=3), cms_build(b, width=8, depth=3)
-    )
-    as_map = lambda df: {  # noqa: E731
-        (r["r"], r["c"]): r["cnt"] for r in df.collect()
-    }
-    assert as_map(whole) == as_map(merged)
 
 
 def test_cms_counters_match_duckdb(spark):
@@ -3110,25 +2766,6 @@ def test_hll_registers_match_duckdb(spark):
         FROM reg GROUP BY idx
     """).fetchall())
     assert got == want
-
-
-def test_hll_merge_equals_whole(spark):
-    """Register table of the union stream == register-wise max of the
-    per-batch tables (HLL merge is lossless)."""
-    from avc_parser_spark.functions.dedup import hll_build, hll_merge
-
-    a = spark.range(0, 3000).select(
-        F.concat(F.lit("va"), F.col("id")).alias("term")
-    )
-    b = spark.range(2000, 5000).select(
-        F.concat(F.lit("va"), F.col("id")).alias("term")
-    )
-    whole = hll_build(a.unionByName(b), p=8)
-    merged = hll_merge(hll_build(a, p=8), hll_build(b, p=8))
-    as_map = lambda df: {  # noqa: E731
-        int(r["idx"]): int(r["rho"]) for r in df.collect()
-    }
-    assert as_map(whole) == as_map(merged)
 
 
 def test_hll_estimate_accuracy_and_python_parity(spark):
@@ -3470,34 +3107,6 @@ def test_exact_quantiles_matches_numpy_style_rederivation(spark):
         assert got[q] == (sv[thr - 1], n), (q, got[q])
 
 
-def test_histogram_quantiles_brackets_exact_quantile(spark):
-    """For unbounded float domains the returned bucket must contain the
-    exact pinned-rule percentile element ((q·n+99) div 100 over the
-    sorted values), across bucket widths; negative values included."""
-    import random
-
-    from avc_parser_spark.functions.text import histogram_quantiles
-
-    rng = random.Random(5)
-    vals = [rng.gauss(0, 50.0) for _ in range(3000)]
-    df = spark.createDataFrame([(v,) for v in vals], "v: double")
-    sv = sorted(vals)
-    n = len(sv)
-    for width in (0.5, 7.0):
-        got = {
-            r["q"]: (r["value_lo"], r["value_hi"], r["n_total"])
-            for r in histogram_quantiles(
-                df, "v", (1, 25, 50, 75, 99, 100), bucket_width=width
-            ).collect()
-        }
-        for q in (1, 25, 50, 75, 99, 100):
-            lo, hi, ntot = got[q]
-            assert ntot == n
-            exact = sv[(q * n + 99) // 100 - 1]
-            assert lo <= exact < hi, (q, width, lo, exact, hi)
-            assert abs(hi - lo - width) < 1e-9
-
-
 def test_exact_quantiles_validates_q(spark):
     import pytest as _pt
 
@@ -3560,132 +3169,6 @@ def test_pagerank_multi_equals_singles(spark):
         for r in pagerank_micro(df, 6, seeds=seeds).collect()
     }
     assert both == {v: (single_pr[v], single_tr[v]) for v in single_pr}
-
-
-def test_extract_anchor_texts_pairs(spark):
-    """href/anchor pairs stay positionally aligned across multiple links;
-    the pinned subset skips single-quoted hrefs and nested-tag bodies."""
-    from avc_parser_spark.functions.text import extract_anchor_texts
-
-    rows = [
-        (0, '<a href="https://a.com">first</a> mid '
-            '<A class="x" HREF="https://b.com" rel="y">second one</A>'),
-        (1, "<a href='https://nope.com'>skip</a>"),
-        (2, '<a href="https://c.com"><b>nested skipped</b></a>'
-            '<a href="https://d.com">plain</a>'),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, html string")
-    got = sorted(
-        (r["doc_id"], r["href"], r["anchor"])
-        for r in extract_anchor_texts(df).collect()
-    )
-    assert got == [
-        (0, "https://a.com", "first"),
-        (0, "https://b.com", "second one"),
-        (2, "https://d.com", "plain"),
-    ]
-
-
-def test_extract_link_rels_nofollow_is_tag_scoped(spark):
-    """rel=nofollow must bind to ITS OWN <a> tag (a flat corpus-wide scan
-    can't do that); drop_nofollow removes exactly the flagged edges; <a>
-    without a quoted href and non-<a> href-bearing tags are skipped."""
-    from avc_parser_spark.functions.text import extract_link_rels
-
-    rows = [
-        (0, '<a href="https://a.com">x</a>'
-            '<a rel="nofollow" href="https://b.com">y</a>'
-            '<a href="https://c.com" rel="external nofollow">z</a>'),
-        (1, '<a rel="nofollower" href="https://d.com">not a nofollow</a>'
-            '<link href="https://css.com"><a name="frag">no href</a>'),
-        (2, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, html string")
-    got = sorted(
-        (r["doc_id"], r["href"], r["nofollow"])
-        for r in extract_link_rels(df).collect()
-    )
-    assert got == [
-        (0, "https://a.com", False),
-        (0, "https://b.com", True),
-        (0, "https://c.com", True),
-        (1, "https://d.com", False),  # \bnofollow\b: 'nofollower' ≠ nofollow
-    ]
-    kept = sorted(
-        (r["doc_id"], r["href"])
-        for r in extract_link_rels(df, drop_nofollow=True).collect()
-    )
-    assert kept == [(0, "https://a.com"), (1, "https://d.com")]
-
-
-def test_temperature_weights_properties():
-    """T=1 ≈ natural proportions; higher T compresses the ratio toward
-    uniform (mT5 rule); empty strata dropped; composes with
-    sample_to_mixture's integer-weight contract."""
-    from avc_parser_spark.functions.text import temperature_weights
-
-    counts = {"en": 90000, "sw": 100, "zz": 0}
-    w1 = temperature_weights(counts, 1.0)
-    assert "zz" not in w1
-    assert abs(w1["en"] / w1["sw"] - 900) / 900 < 0.01
-    w3 = temperature_weights(counts, 3.0)
-    ratio3 = w3["en"] / w3["sw"]
-    assert 1 < ratio3 < 20  # 900^(1/3) ≈ 9.65 — compressed toward uniform
-    wu = temperature_weights(counts, 1e9)
-    assert abs(wu["en"] - wu["sw"]) <= 1  # T→∞ → uniform
-    assert all(isinstance(v, int) and v >= 1 for v in w3.values())
-
-
-def test_meta_robots_flags(spark):
-    """noindex/nofollow parsed from <meta name="robots"> in either
-    attribute order; word-boundary guarded; non-robots meta ignored."""
-    from avc_parser_spark.functions.text import meta_robots_flags
-
-    rows = [
-        (0, '<meta name="robots" content="noindex, nofollow">'),
-        (1, '<meta content="NOINDEX" name="robots">'),
-        (2, '<meta name="robots" content="index, follow">'),
-        (3, '<meta name="description" content="noindex">'),
-        (4, '<meta name="robots" content="nofollowed">'),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, html string")
-    got = {
-        r["doc_id"]: (r["f"]["noindex"], r["f"]["nofollow"])
-        for r in df.select(
-            "doc_id", meta_robots_flags(F.col("html")).alias("f")
-        ).collect()
-    }
-    assert got == {
-        0: (True, True),
-        1: (True, False),
-        2: (False, False),
-        3: (False, False),
-        4: (False, False),
-        5: (False, False),
-    }
-
-
-def test_anchor_summary_top_k_with_tie_break(spark):
-    """Per-target top-k anchors by corpus-wide count, (count desc, anchor
-    asc) tie-break; empty anchors dropped."""
-    from avc_parser_spark.functions.text import anchor_summary
-
-    pages = []
-    for i in range(6):
-        pages.append((i, '<a href="https://t.com">good page</a>'))
-    pages.append((6, '<a href="https://t.com">click</a>'
-                     '<a href="https://t.com">zzz</a>'
-                     '<a href="https://t.com">aaa</a>'
-                     '<a href="https://t.com"></a>'))
-    df = spark.createDataFrame(pages, "doc_id long, html string")
-    got = {
-        r["href"]: [(t["n"], t["anchor"]) for t in r["top_anchors"]]
-        for r in anchor_summary(df, k=3).collect()
-    }
-    assert got == {
-        "https://t.com": [(6, "good page"), (1, "aaa"), (1, "click")]
-    }
 
 
 def test_extract_links_differential_vs_python_re(spark):
@@ -3830,40 +3313,3 @@ def test_fim_transform_is_shuffle_free(spark):
     df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
     plan = fim_transform(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-def test_ccnet_buckets_terciles(spark):
-    """head/middle/tail split by exact nmlp terciles: fluent (in-LM) docs
-    land in head, OOV-heavy gibberish in tail; bucket rule re-derived in
-    pure Python from the collected scores."""
-    from avc_parser_spark.functions.text import build_ngram_lm, ccnet_buckets
-
-    fluent = "the cat sat on the mat and the dog sat on the rug"
-    ref = spark.createDataFrame(
-        [(i, fluent) for i in range(20)], "doc_id long, text string"
-    )
-    lm = build_ngram_lm(ref)
-    rows = (
-        [(i, fluent) for i in range(10)]
-        + [(i, "the cat sat on zz qq") for i in range(10, 20)]
-        + [(i, f"zzz{i} qqq{i} xxx{i} vvv{i}") for i in range(20, 30)]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["nmlp_micro"], r["bucket"])
-        for r in ccnet_buckets(docs, lm).collect()
-    }
-    # re-derive the pinned rule from the scores themselves
-    vals = sorted(v for v, _ in got.values())
-    n = len(vals)
-    q33 = vals[(33 * n + 99) // 100 - 1]
-    q67 = vals[(67 * n + 99) // 100 - 1]
-    for did, (v, b) in got.items():
-        want = "head" if v <= q33 else ("middle" if v <= q67 else "tail")
-        assert b == want, (did, v, b)
-    assert all(got[i][1] == "head" for i in range(10))
-    # all 10 gibberish docs tie at the identical all-OOV backoff score, so
-    # the closed-left q67 boundary legitimately classifies the tie-block
-    # as middle — the guarantee is they never reach head.
-    assert all(got[i][1] != "head" for i in range(20, 30))
-    assert all(got[i][0] > got[0][0] for i in range(20, 30))

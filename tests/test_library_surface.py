@@ -1,76 +1,165 @@
 """Library surface guard: a top-level definition in avc_parser_spark/ that
-only tests name is code no caller runs. The few such names kept on purpose
-back a documented output format or front door; anything else found here is
-dead surface and should be deleted with its tests instead of added to
-KEPT."""
+no code outside tests/ reaches is code no caller runs. The few such names
+kept on purpose back a documented output format, are the reference a
+named test compares a live function against, or wait for a ROADMAP
+direction; anything else found here is dead surface and should be deleted
+with its tests instead of added to KEPT."""
 
 import ast
 import re
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "avc_parser_spark"
 
-# name → why it stays although only tests call it
+# name → why it stays although only tests reach it: the reference output
+# format it backs, the live function a named test compares it against, or
+# the ROADMAP direction it waits for
 KEPT = {
+    # reference output formats
     "sealert_report": "reference output format (sealert-style report)",
     "brief_report": "reference output format (brief triage lines)",
     "stats_report": "reference output format (summary statistics)",
-    "run_routed_stream": "streaming twin of the routed pipeline",
-    "run_audit_routed_stream": "streaming twin of the audit-log front door",
-    "stream_warc": "streaming twin of the WARC front door",
-    "build_warc_bytes": "fixture builder for the live WARC ingest",
-    "mls_high_str": "high side of an MLS range, twin of mls_low_str",
+    # streaming twins of the checkpointed front doors (ROADMAP E)
+    "run_routed_stream": "ROADMAP E; test_streaming_matches_batch compares "
+    "it with the batch pipeline",
+    "run_audit_routed_stream": "ROADMAP E; test_run_audit_routed_stream "
+    "compares it with the batch parse of read_audit_logs",
+    "stream_audit_logs": "ROADMAP E; test_stream_audit_logs_matches_batch "
+    "compares it with read_audit_logs",
+    "stream_warc": "ROADMAP E; test_stream_warc_matches_batch compares it "
+    "with read_warc",
+    "build_warc_bytes": "builds the fixtures of the live read_warc and "
+    "run_warc_with_checkpoints tests (test_run_warc_with_checkpoints_resume)",
+    # reference twins that tests compare live code against
+    "mls_high_str": "high side of an MLS range; the tests/test_mls.py "
+    "`parsed` fixture checks it next to the live mls_low_str",
     "dominates": "libsepol mls_level_dom, the reference arithmetic "
-    "tests/test_mls.py pins",
+    "test_dominance pins for the live mls_relationship_expr",
+    "HLL_P": "default precision of hll_build and hll_estimate",
+    "hll_build": "pins the live _hll_register_cols (token_suite 'hll' mode) "
+    "in test_hll_registers_match_duckdb",
+    "hll_estimate": "pure-Python-checked HLL formula over the live "
+    "_hll_register_cols, test_hll_estimate_accuracy_and_python_parity",
+    "kmv_build": "test_kmv_build_grouped_matches_per_group_and_merges "
+    "compares the live kmv_build_grouped against it",
+    "pagerank_micro": "test_pagerank_multi_equals_singles compares the live "
+    "pagerank_micro_multi against it",
+    "_png_paeth": "the spec predictor; "
+    "test_png_unfilter_scan_matches_reference_predictor compares the live "
+    "_unfilter_paeth against it",
+    "minhash_bucket_stats": "measures the live _minhash_band_keys in "
+    "test_minhash_lsh_bucket_cap_bounds_pairs",
+    "simhash_bucket_stats": "measures the live _simhash_block_keys in "
+    "test_simhash_bucket_stats_no_saturation_at_1m, their only scale guard",
+    # waiting for a ROADMAP verdict
+    "salted_join": "ROADMAP D: measure it against a broadcast or AQE skew "
+    "join, or delete it",
+    "run_pipeline": "ROADMAP K: replaced by one composition the CLI and "
+    "perfbench both call",
+    "route_split": "ROADMAP K: reached only from run_pipeline",
 }
 
-# Test-only surface still to be deleted (ROADMAP direction C). Deleting it
-# also deletes the tests that check only it, so it goes in a later change
-# rather than all at once; this set may only shrink.
-PENDING = {
-    # functions/text.py: cleaning, link and mixture statistics
-    "anchor_summary", "ccnet_buckets", "compression_ratio_micro",
-    "dsir_select", "fix_mojibake_sql", "meta_robots_flags", "redact_pii",
-    "repetition_ratio",
-    # functions/dedup.py and streaming.py: mergeable sketches, sketch stream
-    "hll_build_grouped", "hll_estimate_grouped", "hll_merge", "kmv_estimate",
-    "kmv_merge", "read_kmv_sketch", "run_sketch_stream",
-    "simhash_bucket_stats", "stream_dedup_exact",
-    # functions/curation.py
-    "write_sharded",
-}
+_IDENTIFIER = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 
-def _caller_sources() -> dict[Path, list[str]]:
-    """Every Python file outside tests/: the package, the driver entry
-    point, the benches, scripts/ and perfbench/."""
-    paths = [*PACKAGE.rglob("*.py"), *ROOT.glob("*.py")]
+def _defined_names(node: ast.stmt) -> list[str]:
+    """The names a module-level statement defines: a function, a class or
+    an assigned constant (dunders such as `__all__` are not surface)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [node.name]
+    elif isinstance(node, ast.Assign):
+        names = [
+            n.id for t in node.targets for n in ast.walk(t)
+            if isinstance(n, ast.Name)
+        ]
+    elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        names = [node.target.id]
+    else:
+        names = []
+    return [n for n in names if not n.startswith("__")]
+
+
+def _references(node: ast.AST) -> set[str]:
+    """Names a subtree uses in code: loaded Name and Attribute nodes,
+    import aliases, and identifier-shaped string constants (a `getattr`
+    or registry key). Comments, docstrings and prose never match."""
+    refs = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            refs.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            refs.add(n.attr)
+        elif isinstance(n, ast.alias):
+            refs.update(n.name.split("."))
+        elif (
+            isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and _IDENTIFIER.match(n.value)
+        ):
+            refs.add(n.value)
+    return refs
+
+
+def _test_only_definitions(root: Path = ROOT, package: Path = PACKAGE) -> set[str]:
+    """Top-level definitions in `package` that no code outside tests/
+    reaches. Every file under `root`'s top level, scripts/ and perfbench/
+    is a caller, as is module-level code in the package; a package
+    definition's own references count only once something live reaches
+    it, so code reached only from test-only code is test-only too."""
+    callers = {*root.glob("*.py")}
     for sub in ("scripts", "perfbench"):
-        paths += (ROOT / sub).rglob("*.py")
-    return {p: p.read_text().splitlines() for p in paths}
-
-
-def _test_only_definitions() -> set[str]:
-    sources = _caller_sources()
-    found = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
+        callers.update((root / sub).rglob("*.py"))
+    live = set()
+    uses = defaultdict(set)  # package definition → names its body uses
+    for path in sorted(callers):
+        live |= _references(ast.parse(path.read_text()))
+    for path in sorted(package.rglob("*.py")):
         for node in ast.parse(path.read_text()).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
-            named = any(
-                word.search(line)
-                for src, lines in sources.items()
-                for i, line in enumerate(lines, 1)
-                if not (src == path and i == node.lineno)
-            )
-            if not named:
-                found.add(node.name)
-    return found
+            names = _defined_names(node)
+            for name in names:
+                uses[name] |= _references(node)
+            if not names and not isinstance(node, (ast.Import, ast.ImportFrom)):
+                # an import binds a name; the code that uses it is the caller
+                live |= _references(node)
+    todo = list(live)
+    while todo:
+        for name in uses.get(todo.pop(), ()):
+            if name not in live:
+                live.add(name)
+                todo.append(name)
+    return set(uses) - live
 
 
 def test_test_only_definitions_are_the_kept_set():
-    assert _test_only_definitions() == set(KEPT) | PENDING
+    assert _test_only_definitions() == set(KEPT)
+
+
+def test_guard_counts_code_references_transitively(tmp_path):
+    """The scanner over a synthetic package: prose is not a caller, and
+    neither is code that only test-only code reaches."""
+    package = tmp_path / "pkg"
+    package.mkdir()
+    (package / "__init__.py").write_text("")
+    (package / "mod.py").write_text(
+        '"""Helpers; see mentioned_only."""\n'
+        "WIDTH = 3\n"
+        "def mentioned_only():\n"
+        '    """Only prose names it."""\n'
+        "def helper():\n"
+        "    return 1\n"
+        "def test_only():\n"
+        "    return helper() * WIDTH\n"
+        "def live():\n"
+        '    """Unlike mentioned_only, a caller runs this."""\n'
+        "    return 2\n"
+    )
+    (tmp_path / "main.py").write_text(
+        "from pkg.mod import live\n"
+        "live()  # not mentioned_only()\n"
+    )
+    found = _test_only_definitions(tmp_path, package)
+    assert "mentioned_only" in found  # named only in a comment or docstring
+    assert "helper" in found  # called only by a test-only function
+    assert "WIDTH" in found  # read only by a test-only function
+    assert found == {"mentioned_only", "helper", "test_only", "WIDTH"}

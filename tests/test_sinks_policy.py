@@ -15,7 +15,7 @@ from avc_parser_spark.enrich.join import signature_exprs
 from avc_parser_spark.parse.policy import parse_policy_events
 from avc_parser_spark.parse.udf import parse_pages
 from avc_parser_spark.pipeline import denial_groups
-from avc_parser_spark.sinks import json_report, stats_report, write_routed_tables
+from avc_parser_spark.sinks import json_report, stats_report
 
 
 @pytest.fixture(scope="module")
@@ -154,18 +154,6 @@ def test_stats_report(spark, events):
     assert 1 <= len(stats["processes"]) <= 5
     assert stats["processes"][0]["count"] >= stats["processes"][-1]["count"]
     assert len(stats["object_classes"]) <= 8
-
-
-def test_routed_tables_roundtrip(spark, events, tmp_path):
-    path = str(tmp_path / "routed")
-    write_routed_tables(events, path)
-    back = spark.read.parquet(path)
-    orig = {r["route"]: r["n"] for r in events.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()}
-    got = {r["route"]: r["n"] for r in back.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == orig
-    # per-sink pruned read
-    ok = spark.read.parquet(path).filter(F.col("route") == "parse_ok")
-    assert ok.count() == orig["parse_ok"]
 
 
 def test_resource_subgroups_and_consolidation(spark, events):

@@ -318,7 +318,10 @@ def test_winnow_candidates_plan_single_corpus_shuffle(spark):
     bounded by the bucket cap — no corpus-wide sort, no cartesian."""
     import re
 
-    from avc_parser_spark.functions.dedup import winnow_candidates
+    from avc_parser_spark.functions.dedup import (
+        winnow_candidates_from_fps,
+        winnow_fingerprints,
+    )
 
     docs = (
         spark.range(0, 500)
@@ -329,7 +332,7 @@ def test_winnow_candidates_plan_single_corpus_shuffle(spark):
         )
     )
     plan = (
-        winnow_candidates(docs)
+        winnow_candidates_from_fps(winnow_fingerprints(docs))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -396,153 +399,6 @@ def test_lm_score_plan_broadcast_one_pass(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan  # the top-k LM cap
-
-
-def test_dsir_select_plan_one_pass_bounded_topk(spark):
-    """DSIR over the raw corpus stays ONE narrow pass: all four LM-table
-    joins broadcast (the corpus is never shuffled on a join key), the two
-    totals are one-row broadcast nested loops (no CartesianProduct over
-    data), and the final top-n is TakeOrderedAndProject — per-partition
-    top-n, no global sort partition."""
-    from avc_parser_spark.functions.text import build_ngram_lm, dsir_select
-
-    docs = (
-        spark.range(0, 2000)
-        .withColumnRenamed("id", "doc_id")
-        .withColumn(
-            "text",
-            F.concat(F.lit("common words document number "), F.col("doc_id")),
-        )
-    )
-    target = build_ngram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    source = build_ngram_lm(docs)
-    plan = (
-        dsir_select(docs, target, source, n=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "TakeOrderedAndProject" in plan  # the top-n selection
-
-
-def test_stream_dedup_exact_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark admits the first-seen digest and
-    drops in-horizon repeats across micro-batches; once the watermark
-    passes a key's horizon its state is evicted (at end-of-batch — the
-    engine's cleanup runs after processing, so re-admission lands one
-    batch later) and the digest is admitted again: bounded state, the
-    point of the operator."""
-    import os
-    import time
-    from datetime import datetime
-
-    from avc_parser_spark.streaming import stream_dedup_exact
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    ddl = (
-        "url string, warc_ts timestamp, html binary, text string,"
-        " lang string"
-    )
-    t = lambda h, m: datetime(2025, 1, 1, h, m)  # noqa: E731
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, name))
-        time.sleep(1.1)  # distinct mod-times keep file->batch order stable
-
-    write_batch("b1", [
-        ("u1", t(0, 0), None, "alpha body", "en"),
-        ("u2", t(0, 1), None, "Alpha   BODY", "en"),  # same normalized text
-        ("u3", t(0, 2), None, "beta body", "en"),
-    ])
-    write_batch("b2", [
-        ("u4", t(0, 30), None, "alpha body", "en"),   # in-horizon dup
-        ("u5", t(9, 0), None, "gamma body", "en"),    # advances watermark
-    ])
-    # watermark is 08:00 DURING b3 (alpha expired 01:00) but cleanup runs
-    # at end-of-batch: u6 still sees the stale key, u7 is re-admitted.
-    write_batch("b3", [("u6", t(9, 5), None, "alpha body", "en")])
-    write_batch("b4", [("u7", t(9, 10), None, "alpha body", "en")])
-    # the re-admitted key opens a fresh horizon: u8 is a dup again
-    write_batch("b5", [("u8", t(9, 15), None, "alpha body", "en")])
-
-    stream = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing + "/*")
-    )
-    q = (
-        stream_dedup_exact(stream, watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("sdedup_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    rows = spark.table("sdedup_test").collect()
-    assert sorted(r["url"] for r in rows) == ["u1", "u3", "u5", "u7"]
-    assert all(r["digest"] for r in rows)
-
-
-def test_sketch_stream_merges_to_whole_corpus_sketch(spark, tmp_path):
-    """Streaming sketch maintenance: after two incremental landing drops
-    the merged stored CMS/HLL sketches equal the batch sketches over the
-    whole corpus (cell-wise-sum / register-max merge laws), and the second
-    run picks up ONLY the new file (appended batch rows, no rewrite)."""
-    from avc_parser_spark.functions.dedup import cms_build, hll_build, kmv_build
-    from avc_parser_spark.streaming import (
-        read_cms_sketch,
-        read_hll_sketch,
-        read_kmv_sketch,
-        run_sketch_stream,
-    )
-
-    landing = str(tmp_path / "landing")
-    cms_dir = str(tmp_path / "cms")
-    hll_dir = str(tmp_path / "hll")
-    kmv_dir = str(tmp_path / "kmv")
-    ck = str(tmp_path / "ck")
-
-    build_pages_df(spark, 300).write.mode("append").parquet(landing)
-    q = run_sketch_stream(spark, landing, cms_dir, hll_dir, ck, kmv_dir=kmv_dir)
-    q.awaitTermination(120)
-
-    # second drop (repeat content is fine: merge must still sum/max right)
-    build_pages_df(spark, 200).write.mode("append").parquet(landing)
-    q2 = run_sketch_stream(spark, landing, cms_dir, hll_dir, ck, kmv_dir=kmv_dir)
-    q2.awaitTermination(120)
-
-    whole_terms = (
-        spark.read.parquet(landing)
-        .select(F.explode(F.split(F.col("text"), " ")).alias("term"))
-        .filter(F.col("term") != "")
-    )
-    as_cells = lambda df: {  # noqa: E731
-        (r["r"], r["c"]): r["cnt"] for r in df.collect()
-    }
-    assert as_cells(read_cms_sketch(spark, cms_dir)) == as_cells(
-        cms_build(whole_terms, width=512, depth=4)
-    )
-    as_regs = lambda df: {r["idx"]: r["rho"] for r in df.collect()}  # noqa: E731
-    assert as_regs(read_hll_sketch(spark, hll_dir)) == as_regs(
-        hll_build(whole_terms, p=6)
-    )
-    kmv_stored = sorted(r["h"] for r in read_kmv_sketch(spark, kmv_dir).collect())
-    kmv_whole = sorted(r["h"] for r in kmv_build(whole_terms, k=256).collect())
-    assert kmv_stored == kmv_whole
-    # incremental: exactly two batch_ids landed, each appended once
-    batches = {
-        r["batch_id"]
-        for r in spark.read.parquet(cms_dir).select("batch_id").distinct().collect()
-    }
-    assert len(batches) == 2
 
 
 def test_extract_links_prunes_scan_columns(spark, tmp_path):
