@@ -72,7 +72,7 @@ def _defined_names(node: ast.stmt) -> list[str]:
     elif isinstance(node, ast.Assign):
         names = [
             n.id for t in node.targets for n in ast.walk(t)
-            if isinstance(n, ast.Name)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
         ]
     elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
         names = [node.target.id]
