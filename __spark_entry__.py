@@ -1320,79 +1320,79 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # jobs (sample + one collect per Lloyd step); running it on a thread
     # overlaps those barriers with the plant/PQ branch construction below,
     # which is pure driver-side expression building (guide §2.6). The
-    # query-vec probe rides the same pool.
+    # query-vec probe rides the same pool. Leaving the `with` block waits
+    # for both, so an error while building the branches cannot leave
+    # Lloyd jobs running behind the raised exception.
     from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=2)
-    f_qvec = pool.submit(_query_vec, emb)
-    f_cents = pool.submit(train_centroids, emb, 4, 2)
 
     def tag(df: DataFrame, mode: str) -> DataFrame:
         return df.select(F.lit(mode).alias("mode"), "vec_id", "cosine")
 
-    planted = spark.sql(_IVF_PLANT_SPARK_SQL)
-    pruned = tag(
-        ivf_topk(
-            planted,
-            _ivf_plant_query_vec(),
-            _ivf_plant_centroids(),
-            k=10,
-            n_probe=1,
-        ),
-        "ivf_pruned",
-    )
-    books = _pq_plant_codebooks()
-    pq_planted = spark.sql(_PQ_PLANT_SPARK_SQL)
-    codes = pq_encode(pq_planted, books).select("vec_id", "pq_codes")
-    # rank by the ROUNDED score: planted dots are 0.01·integer, and the
-    # code pattern repeats every lcm(16,13)=208 vec_ids, so mathematically
-    # tied scores are guaranteed — ranking the raw sum would let 1e-15
-    # summation noise pick among ties differently than DuckDB's
-    # round-then-vec_id ordering. Rounding first makes both engines rank
-    # by the identical (score, vec_id) key.
-    adc = F.round(pq_adc_expr(books, _pq_plant_query_vec()), 6)
-    pq = (
-        codes.select(
-            F.lit("pq").alias("mode"), "vec_id", adc.alias("cosine")
-        )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-    # ivfpq: assign → prune to the query's cluster (at scale: a partition
-    # filter over the stored codes table) → PQ-encode the survivors →
-    # ADC top-10. Full-precision vectors never reach the scoring stage.
-    from avc_parser_spark.functions.similarity import _probe_clusters, ivf_assign
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_qvec = pool.submit(_query_vec, emb)
+        f_cents = pool.submit(train_centroids, emb)
 
-    fp_books = _ivfpq_codebooks()
-    fp_planted = spark.sql(_IVFPQ_PLANT_SPARK_SQL)
-    fp_probe = _probe_clusters(
-        _ivfpq_plant_query_vec(), _ivf_plant_centroids(), n_probe=1
-    )
-    fp_cand = ivf_assign(fp_planted, _ivf_plant_centroids()).filter(
-        F.col("cluster").isin(fp_probe)
-    )
-    fp_codes = pq_encode(fp_cand, fp_books).select("vec_id", "pq_codes")
-    fp_adc = F.round(pq_adc_expr(fp_books, _ivfpq_plant_query_vec()), 6)
-    ivfpq = (
-        fp_codes.select(
-            F.lit("ivfpq").alias("mode"), "vec_id", fp_adc.alias("cosine")
+        planted = spark.sql(_IVF_PLANT_SPARK_SQL)
+        pruned = tag(
+            ivf_topk(
+                planted,
+                _ivf_plant_query_vec(),
+                _ivf_plant_centroids(),
+                n_probe=1,
+            ),
+            "ivf_pruned",
         )
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-    # harvest the overlapped probe + training jobs
-    qvec = f_qvec.result()
-    if qvec is None:
-        # no query vector ⇒ the centroid training is moot: drop it if still
-        # queued and wait for a running one, so no job outlives the query
-        pool.shutdown(wait=True, cancel_futures=True)
-        return _empty_topk(emb).select(
-            F.lit("brute").alias("mode"), "vec_id", "cosine"
+        books = _pq_plant_codebooks()
+        pq_planted = spark.sql(_PQ_PLANT_SPARK_SQL)
+        codes = pq_encode(pq_planted, books).select("vec_id", "pq_codes")
+        # rank by the ROUNDED score: planted dots are 0.01·integer, and the
+        # code pattern repeats every lcm(16,13)=208 vec_ids, so mathematically
+        # tied scores are guaranteed — ranking the raw sum would let 1e-15
+        # summation noise pick among ties differently than DuckDB's
+        # round-then-vec_id ordering. Rounding first makes both engines rank
+        # by the identical (score, vec_id) key.
+        adc = F.round(pq_adc_expr(books, _pq_plant_query_vec()), 6)
+        pq = (
+            codes.select(
+                F.lit("pq").alias("mode"), "vec_id", adc.alias("cosine")
+            )
+            .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+            .limit(10)
         )
-    cents = f_cents.result()
-    pool.shutdown()
+        # ivfpq: assign → prune to the query's cluster (at scale: a partition
+        # filter over the stored codes table) → PQ-encode the survivors →
+        # ADC top-10. Full-precision vectors never reach the scoring stage.
+        from avc_parser_spark.functions.similarity import _probe_clusters, ivf_assign
+
+        fp_books = _ivfpq_codebooks()
+        fp_planted = spark.sql(_IVFPQ_PLANT_SPARK_SQL)
+        fp_probe = _probe_clusters(
+            _ivfpq_plant_query_vec(), _ivf_plant_centroids(), n_probe=1
+        )
+        fp_cand = ivf_assign(fp_planted, _ivf_plant_centroids()).filter(
+            F.col("cluster").isin(fp_probe)
+        )
+        fp_codes = pq_encode(fp_cand, fp_books).select("vec_id", "pq_codes")
+        fp_adc = F.round(pq_adc_expr(fp_books, _ivfpq_plant_query_vec()), 6)
+        ivfpq = (
+            fp_codes.select(
+                F.lit("ivfpq").alias("mode"), "vec_id", fp_adc.alias("cosine")
+            )
+            .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+            .limit(10)
+        )
+        # harvest the overlapped probe + training jobs
+        qvec = f_qvec.result()
+        if qvec is None:
+            # no query vector ⇒ the centroid training is moot: drop it if still
+            # queued and wait for a running one, so no job outlives the query
+            pool.shutdown(wait=True, cancel_futures=True)
+            return _empty_topk(emb).select(
+                F.lit("brute").alias("mode"), "vec_id", "cosine"
+            )
+        cents = f_cents.result()
     brute = tag(brute_force_topk(emb, qvec, k=10), "brute")
-    exact = tag(ivf_topk(emb, qvec, cents, k=10, n_probe=len(cents)), "ivf_exact")
+    exact = tag(ivf_topk(emb, qvec, cents, n_probe=len(cents)), "ivf_exact")
     return (
         brute.unionByName(exact)
         .unionByName(pruned)
@@ -1536,9 +1536,7 @@ def q_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings WHERE vec_id < 64
         """
     )
-    sem_pairs = semantic_dedup_pairs(
-        sem_emb, _ivf_plant_centroids(), threshold=0.9
-    )
+    sem_pairs = semantic_dedup_pairs(sem_emb, _ivf_plant_centroids())
 
     emb_off = 1 << 41
     sem_off = 1 << 42
@@ -1752,7 +1750,7 @@ def q_streaming_lang_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sname = "q_stream_sessions_" + uuid.uuid4().hex[:8]
     q2 = (
-        stream_denial_sessions(stream, gap_minutes=30, watermark="1 hour")
+        stream_denial_sessions(stream, watermark="1 hour")
         .writeStream.format("memory")
         .queryName(sname)
         .outputMode("append")
@@ -2351,9 +2349,7 @@ def q_ngram_overlap_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE d.doc_id % 50 = 7 AND d.doc_id < 500
         """
     )
-    contam = ngram_contamination(
-        spark.table("documents"), eval_docs, n=8, hashed=False
-    ).select(
+    contam = ngram_contamination(spark.table("documents"), eval_docs).select(
         F.lit("contam").alias("mode"),
         F.col("eval_id").alias("a"),
         F.col("overlap_ngrams").cast("double").alias("k1"),
@@ -2947,7 +2943,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(spark.sparkContext.defaultParallelism)
     # ^ single-row-group driver parquet = one scan split; the per-payload
     # decode chain is the heavy stage, spread it across cores (guide §2.5)
-    resized = resize_media(media, max_dim=4)
+    resized = resize_media(media)
     feats = extract_media_features(resized)
     is_img = F.col("decode_status").isin("ok_ppm", "ok_png", "ok_gif", "ok_jpeg")
     is_wav = F.col("decode_status") == "ok_wav"

@@ -50,10 +50,12 @@ def _gen_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def build_pages_df(spark: SparkSession, n_docs: int, parallelism: int | None = None) -> DataFrame:
-    """Distributed deterministic pages DataFrame of n_docs rows."""
-    parallelism = parallelism or spark.sparkContext.defaultParallelism
-    base = spark.range(0, n_docs, 1, numPartitions=parallelism)
+def build_pages_df(spark: SparkSession, n_docs: int) -> DataFrame:
+    """Distributed deterministic pages DataFrame of n_docs rows, one
+    partition per default-parallelism slot."""
+    base = spark.range(
+        0, n_docs, 1, numPartitions=spark.sparkContext.defaultParallelism
+    )
     return base.mapInPandas(_gen_batch, schema=PAGES_SCHEMA)
 
 

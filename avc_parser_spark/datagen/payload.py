@@ -102,9 +102,9 @@ def _audit_ts(i: int, r: random.Random) -> tuple[str, int]:
     return f"{epoch}.{ms:03d}", 500 + i
 
 
-def _pick_weighted(r: random.Random, items: list, hot_weight: int = 8):
-    """First item is 'hot' with extra weight — forces signature/lang skew."""
-    idx = 0 if r.randint(0, hot_weight + len(items) - 1) < hot_weight else r.randint(
+def _pick_weighted(r: random.Random, items: list):
+    """First item is 'hot' with 8 extra shares — forces signature/lang skew."""
+    idx = 0 if r.randint(0, 8 + len(items) - 1) < 8 else r.randint(
         0, len(items) - 1
     )
     return items[idx]

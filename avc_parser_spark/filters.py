@@ -102,7 +102,6 @@ def filter_since_until(
     groups: DataFrame,
     since: str | None = None,
     until: str | None = None,
-    now: datetime | None = None,
 ) -> DataFrame:
     """F3 — applied to last_seen (fallback first_seen), like the reference
     (parse_avc.py:2038-2045). On a partitioned table the same predicate on
@@ -110,9 +109,9 @@ def filter_since_until(
     ts = F.coalesce(F.col("last_seen"), F.col("first_seen"))
     out = groups
     if since:
-        out = out.filter(ts >= F.lit(parse_time_spec(since, now)))
+        out = out.filter(ts >= F.lit(parse_time_spec(since)))
     if until:
-        out = out.filter(ts <= F.lit(parse_time_spec(until, now)))
+        out = out.filter(ts <= F.lit(parse_time_spec(until)))
     return out
 
 

@@ -45,20 +45,14 @@ from avc_parser_spark.functions.text import canonicalize_url, split_by_hash
 def curate_corpus(
     docs: DataFrame,
     eval_docs: DataFrame | None = None,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
     pair_filter: Column | None = None,
-    contam_n: int = 8,
     c4_clean: bool = False,
     gopher: bool = False,
     gopher_min_words: int = 50,
-    weights: dict[str, float] | None = None,
-    split_method: str = "md5",
 ) -> DataFrame:
-    """Run the full curation chain; returns the SURVIVING corpus with
-    `canon_url`, `domain` and `split` columns added.
+    """Run the full curation chain over a (doc_id, url, text, …) corpus;
+    returns the SURVIVING corpus with `canon_url`, `domain` and `split`
+    columns added.
 
     `c4_clean` / `gopher` switch on the heuristic quality battery in the
     FineWeb order — C4 line-level cleaning FIRST (it rewrites the text:
@@ -69,25 +63,26 @@ def curate_corpus(
     repetition screen costs one doc-keyed gram aggregation, with its drop
     set applied as a hits-only left_anti like every other stage.
 
+    Near-dup pairs are verified at word-5-gram Jaccard >= 0.5.
     `pair_filter` optionally restricts which verified near-dup pairs feed
     the resolver (e.g. a demo corpus's known dup universe); production runs
     leave it None and drop on every verified pair.
 
     `eval_docs` (id + text of the benchmark/eval suite) enables the
-    decontamination stage; None skips it.
+    decontamination stage over word 8-grams; None skips it.
     """
     # 1. canonical URL + exact URL-level dedup: keeper = min id per canon.
     #    One shuffle (window over canon_url); at warehouse scale the corpus
     #    is typically already bucketed by url hash, making this co-located.
     w = Window.partitionBy("canon_url")
     s1 = (
-        docs.withColumn("canon_url", canonicalize_url(F.col(url_col)))
+        docs.withColumn("canon_url", canonicalize_url(F.col("url")))
         .withColumn(
             "domain",
             F.regexp_extract(F.col("canon_url"), r"^[a-z]+://([^/:?#]+)", 1),
         )
-        .withColumn("_url_keeper", F.min(id_col).over(w))
-        .filter(F.col(id_col) == F.col("_url_keeper"))
+        .withColumn("_url_keeper", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("_url_keeper"))
         .drop("_url_keeper")
         # consumed three times (sketching, near-dup anti-join, contamination):
         # cache the url-deduped survivors instead of re-running the
@@ -103,11 +98,11 @@ def curate_corpus(
         from avc_parser_spark.functions.text import c4_line_filter
 
         before = set(s1.columns)
-        flagged = c4_line_filter(s1, text_col=text_col)
+        flagged = c4_line_filter(s1)
         extra = [c for c in flagged.columns if c not in before]
         s1 = (
             flagged.filter(F.col("c4_bitmask") == 0)
-            .withColumn(text_col, F.col("c4_kept_text"))
+            .withColumn("text", F.col("c4_kept_text"))
             .drop(*extra)
         )
     if gopher:
@@ -117,19 +112,15 @@ def curate_corpus(
         )
 
         before = set(s1.columns)
-        flagged = gopher_quality_flags(
-            s1, text_col=text_col, min_words=gopher_min_words
-        )
+        flagged = gopher_quality_flags(s1, min_words=gopher_min_words)
         extra = [c for c in flagged.columns if c not in before]
         s1 = flagged.filter(F.col("gopher_bitmask") == 0).drop(*extra)
         rep_drops = (
-            gopher_repetition_flags(
-                s1.select(id_col, text_col), text_col=text_col, id_col=id_col
-            )
+            gopher_repetition_flags(s1.select("doc_id", "text"))
             .filter(F.col("rep_bitmask") != 0)
-            .select(id_col)
+            .select("doc_id")
         )
-        s1 = s1.join(rep_drops, id_col, "left_anti")
+        s1 = s1.join(rep_drops, "doc_id", "left_anti")
     s1 = s1.persist()
 
     # 2. text near-dup: candidates → Jaccard verify → connected components →
@@ -138,51 +129,40 @@ def curate_corpus(
     #    sketch and the Jaccard verifier's two join sides — shingling is the
     #    expensive string pass, so never run it per consumer.
     hashed = s1.select(
-        F.col(id_col).alias("_id"),
-        base_shingle_hashes(word_shingles(F.col(text_col))).alias("h"),
+        F.col("doc_id").alias("_id"),
+        base_shingle_hashes(word_shingles(F.col("text"))).alias("h"),
     ).persist()
     candidates = minhash_candidates_from_hashes(hashed)
     verified = jaccard_from_hashes(hashed, candidates).filter(
-        F.col("jaccard") >= jaccard_threshold
+        F.col("jaccard") >= 0.5
     )
     if pair_filter is not None:
         verified = verified.filter(pair_filter)
     resolved = resolve_clusters(verified)
     hashed.unpersist()  # resolve_clusters materialized the edge set
-    near_dup_drops = resolved.filter(F.col("doc_id") != F.col("keeper")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    s2 = s1.join(near_dup_drops, id_col, "left_anti")
+    near_dup_drops = resolved.filter(F.col("doc_id") != F.col("keeper")).select("doc_id")
+    s2 = s1.join(near_dup_drops, "doc_id", "left_anti")
 
-    # 3. decontamination: drop surviving train docs sharing any contam_n-gram
-    #    with the (broadcast) eval suite.
+    # 3. decontamination: drop surviving train docs sharing any 8-gram with
+    #    the (broadcast) eval suite.
     if eval_docs is not None:
-        contam = contaminated_train_docs(
-            s2, eval_docs, n=contam_n, text_col=text_col, id_col=id_col
-        )
-        s2 = s2.join(contam.select(id_col), id_col, "left_anti")
+        contam = contaminated_train_docs(s2, eval_docs)
+        s2 = s2.join(contam.select("doc_id"), "doc_id", "left_anti")
 
-    # 4. deterministic split assignment (md5 default: SQL-portable, so any
-    #    engine can re-derive the exact train/val/test membership).
-    return split_by_hash(s2, weights, id_col=id_col, method=split_method)
+    # 4. deterministic split assignment (md5: SQL-portable, so any engine
+    #    can re-derive the exact train/val/test membership).
+    return split_by_hash(s2, method="md5")
 
 
-def write_curated(
-    curated: DataFrame, path: str, partition_col: str = "split"
-) -> None:
+def write_curated(curated: DataFrame, path: str) -> None:
     """Materialize the surviving training corpus hive-partitioned by split,
     so downstream training jobs read split=train/ as a directory-pruned scan
     (the partition filter must show up in the scan, test-gated in
     tests/test_curation.py)."""
-    curated.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    curated.write.mode("overwrite").partitionBy("split").parquet(path)
 
 
-def corpus_report(
-    curated: DataFrame,
-    text_col: str = "text",
-    partition_col: str = "split",
-    lang_col: str | None = None,
-) -> DataFrame:
+def corpus_report(curated: DataFrame, lang_col: str | None = None) -> DataFrame:
     """Data-card rollup over the curated corpus: per split (× lang when
     available) doc count, total/mean text bytes, whitespace-token total,
     and distinct-domain count. One GROUPING SETS pass (split totals and
@@ -192,17 +172,17 @@ def corpus_report(
     approx_count_distinct at extreme cardinalities)."""
     from avc_parser_spark.functions.text import token_count
 
-    keys = [partition_col] + ([lang_col] if lang_col else [])
-    base = curated.withColumn("_tok", token_count(F.col(text_col)))
+    keys = ["split"] + ([lang_col] if lang_col else [])
+    base = curated.withColumn("_tok", token_count(F.col("text")))
     gb = (
-        base.groupingSets([keys, [partition_col]], *[F.col(k) for k in keys])
+        base.groupingSets([keys, ["split"]], *[F.col(k) for k in keys])
         if lang_col
-        else base.groupBy(partition_col)
+        else base.groupBy("split")
     )
     return gb.agg(
         F.count(F.lit(1)).alias("docs"),
-        F.sum(F.octet_length(F.col(text_col))).alias("text_bytes"),
-        F.round(F.avg(F.octet_length(F.col(text_col))), 2).alias("mean_bytes"),
+        F.sum(F.octet_length(F.col("text"))).alias("text_bytes"),
+        F.round(F.avg(F.octet_length(F.col("text"))), 2).alias("mean_bytes"),
         F.sum("_tok").alias("tokens"),
         (
             F.count_distinct(F.col("domain"))

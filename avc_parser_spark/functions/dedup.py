@@ -37,17 +37,18 @@ def normalized_text(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(F.coalesce(text, F.lit("")))), r"\s+", " ")
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: md5 digest groupBy → clusters with ≥2 members.
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Exact dedup over `text`: md5 digest groupBy → clusters with ≥2
+    members.
 
-    Returns (digest, dup_count, doc_ids sorted, keeper = min id)."""
+    Returns (digest, dup_count, doc_ids sorted, keeper = min doc_id)."""
     return (
-        docs.select(F.md5(normalized_text(F.col(text_col))).alias("digest"), id_col)
+        docs.select(F.md5(normalized_text(F.col("text"))).alias("digest"), "doc_id")
         .groupBy("digest")
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-            F.min(id_col).alias("keeper"),
+            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
+            F.min("doc_id").alias("keeper"),
         )
         .filter(F.col("dup_count") >= 2)
     )
@@ -83,14 +84,13 @@ def _bloom_positions(col: Column, m_bits: int, k: int) -> list[Column]:
 
 def bloom_words(
     stored: DataFrame,
-    col: str = "digest",
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
 ) -> DataFrame:
-    """Distributed Bloom bitmap over `stored[col]` as a (word_idx, word)
+    """Distributed Bloom bitmap over `stored.digest` as a (word_idx, word)
     table — ≤ m/64 rows however large the corpus. One partial-aggregated
     shuffle; never collected."""
-    pos = F.explode(F.array(*_bloom_positions(F.col(col), m_bits, k)))
+    pos = F.explode(F.array(*_bloom_positions(F.col("digest"), m_bits, k)))
     return (
         stored.select(pos.alias("pos"))
         .select(
@@ -109,16 +109,15 @@ def bloom_words(
 def bloom_gate(
     delta: DataFrame,
     words: DataFrame,
-    col: str = "digest",
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
 ) -> DataFrame:
-    """Keep only delta rows the Bloom filter says MIGHT be in the stored
-    corpus (no false negatives — a true duplicate always survives). k
-    broadcast joins on word_idx, bit tests native; a word_idx absent from
-    the bitmap table coalesces to 0 = definitely new."""
+    """Keep only delta rows whose `digest` the Bloom filter says MIGHT be
+    in the stored corpus (no false negatives — a true duplicate always
+    survives). k broadcast joins on word_idx, bit tests native; a word_idx
+    absent from the bitmap table coalesces to 0 = definitely new."""
     out = delta
-    probes = _bloom_positions(F.col(col), m_bits, k)
+    probes = _bloom_positions(F.col("digest"), m_bits, k)
     for i, pos in enumerate(probes):
         w = words.select(
             F.col("word_idx").alias(f"_bw_idx_{i}"),
@@ -147,25 +146,22 @@ def bloom_gate(
 def exact_delta_dups(
     delta: DataFrame,
     stored: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
 ) -> DataFrame:
     """Incremental exact dedup: which delta docs already exist (by
-    normalized-text digest) in the stored corpus? Bloom gate first (narrow,
-    no delta shuffle), then a semi-join verify of the surviving maybe-set
-    against the stored digests — false positives die here, so the result
-    is EXACT set membership while the expensive join only ever sees the
-    maybe fraction. Returns (id_col, digest) per confirmed-duplicate
-    delta doc."""
-    dig = F.md5(normalized_text(F.col(text_col)))
-    d = delta.select(F.col(id_col), dig.alias("digest"))
+    normalized-`text` digest) in the stored corpus? Bloom gate first
+    (narrow, no delta shuffle), then a semi-join verify of the surviving
+    maybe-set against the stored digests — false positives die here, so
+    the result is EXACT set membership while the expensive join only ever
+    sees the maybe fraction. Returns (doc_id, digest) per
+    confirmed-duplicate delta doc."""
+    dig = F.md5(normalized_text(F.col("text")))
+    d = delta.select(F.col("doc_id"), dig.alias("digest"))
     s = stored.select(dig.alias("digest"))
-    gated = bloom_gate(d, bloom_words(s, "digest", m_bits, k),
-                       "digest", m_bits, k)
+    gated = bloom_gate(d, bloom_words(s, m_bits, k), m_bits, k)
     return gated.join(s.distinct(), "digest", "left_semi").select(
-        id_col, "digest"
+        "doc_id", "digest"
     )
 
 
@@ -196,11 +192,11 @@ def word_shingles(text: Column, k: int = DEFAULT_SHINGLE) -> Column:
 MERSENNE61 = (1 << 61) - 1
 
 
-def _perm_params(num_perms: int, seed: int = 42) -> tuple[list[int], list[int]]:
+def _perm_params(num_perms: int) -> tuple[list[int], list[int]]:
     """Deterministic universal-hash parameters (a_p, b_p) for MinHash."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     a = rng.randint(1, MERSENNE61 - 1, size=num_perms, dtype="int64").tolist()
     b = rng.randint(0, MERSENNE61 - 1, size=num_perms, dtype="int64").tolist()
     return a, b
@@ -301,13 +297,11 @@ def _minhash_band_keys(bands: int, rows_per_band: int) -> list[Column]:
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perms: int = DEFAULT_PERMS,
     bands: int = DEFAULT_BANDS,
     max_bucket: int = 512,
 ) -> DataFrame:
-    """MinHash+LSH near-dup candidate pairs.
+    """MinHash+LSH near-dup candidate pairs over `text`, keyed by `doc_id`.
 
     plan: sketch (narrow) → explode bands (narrow) → groupBy band bucket
     (ONE shuffle) → pairs within bucket.
@@ -322,8 +316,8 @@ def minhash_lsh_candidates(
     Returns distinct candidate (a, b) id pairs with a < b.
     """
     hashed = docs.select(
-        F.col(id_col).alias("_id"),
-        base_shingle_hashes(word_shingles(F.col(text_col))).alias("h"),
+        F.col("doc_id").alias("_id"),
+        base_shingle_hashes(word_shingles(F.col("text"))).alias("h"),
     )
     return minhash_candidates_from_hashes(hashed, num_perms, bands, max_bucket)
 
@@ -368,8 +362,6 @@ def minhash_candidates_from_hashes(
 
 def minhash_bucket_stats(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perms: int = DEFAULT_PERMS,
     bands: int = DEFAULT_BANDS,
     max_bucket: int = 512,
@@ -381,8 +373,8 @@ def minhash_bucket_stats(
     rows_per_band = num_perms // bands
     sig_udf = minhash_signature_udf(num_perms)
     sketched = docs.select(
-        F.col(id_col).alias("_id"),
-        sig_udf(base_shingle_hashes(word_shingles(F.col(text_col)))).alias("sig"),
+        F.col("doc_id").alias("_id"),
+        sig_udf(base_shingle_hashes(word_shingles(F.col("text")))).alias("sig"),
     )
     banded = sketched.select(
         "_id",
@@ -403,22 +395,19 @@ def minhash_bucket_stats(
 def ngram_jaccard(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = DEFAULT_SHINGLE,
-    hashed: bool = True,
 ) -> DataFrame:
-    """n-gram Jaccard for candidate pairs: join shingle sets back on both
-    sides (2 broadcast-or-shuffle joins), compute |∩|/|∪| natively.
+    """n-gram Jaccard of `text` for candidate `doc_id` pairs: join shingle
+    sets back on both sides (2 broadcast-or-shuffle joins), compute |∩|/|∪|
+    natively.
 
-    hashed=True intersects 64-bit shingle hashes instead of the shingle
-    strings — same Jaccard up to xxhash64 collisions (~n²/2⁶⁴, negligible)
-    at a fraction of the compare cost; hashed=False keeps byte-exact string
-    sets for oracle-grade comparisons."""
-    shingles = F.array_distinct(word_shingles(F.col(text_col), k))
-    if hashed:
-        shingles = F.transform(shingles, lambda s: F.xxhash64(s))
-    sh = docs.select(F.col(id_col).alias("_id"), shingles.alias("h"))
+    It intersects 64-bit shingle hashes instead of the shingle strings —
+    same Jaccard up to xxhash64 collisions (~n²/2⁶⁴, negligible) at a
+    fraction of the compare cost."""
+    shingles = F.transform(
+        F.array_distinct(word_shingles(F.col("text"), k)), lambda s: F.xxhash64(s)
+    )
+    sh = docs.select(F.col("doc_id").alias("_id"), shingles.alias("h"))
     return jaccard_from_hashes(sh, pairs)
 
 
@@ -493,13 +482,14 @@ def simhash64(text: Column) -> Column:
     return _simhash_from_hashes_udf()(hashes)
 
 
-def simhash_near_dups(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Near-dup clusters via identical SimHash (Hamming-0 buckets).
-    For Hamming ≤ k pairs use `simhash_pairs` (banded bucketing)."""
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
+    """Near-dup `doc_id` clusters via identical SimHash of `text`
+    (Hamming-0 buckets). For Hamming ≤ k pairs use `simhash_pairs` (banded
+    bucketing)."""
     return (
-        docs.select(F.col(id_col).alias("_id"), simhash64(F.col(text_col)).alias("simhash"))
+        docs.select(
+            F.col("doc_id").alias("_id"), simhash64(F.col("text")).alias("simhash")
+        )
         .groupBy("simhash")
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
@@ -518,7 +508,7 @@ def _simhash_block_keys(n_blocks: int, max_hamming: int) -> list[Column]:
     max_hamming differ in at most max_hamming blocks, so at least one
     combination avoids every differing block → they share that table's key
     exactly (recall 1). Key entropy is 64·(n_blocks-max_hamming)/n_blocks
-    bits (≈32 for the default 6/3), so buckets stay small even at 10^12
+    bits (≈32 for 6/3), so buckets stay small even at 10^12
     docs — unlike bucketing on raw (max_hamming+1)-way bands whose 16-bit
     values saturate at web scale."""
     from itertools import combinations
@@ -544,44 +534,37 @@ def _simhash_block_keys(n_blocks: int, max_hamming: int) -> list[Column]:
     return keys
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 512,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup PAIRS with Hamming distance ≤ max_hamming.
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup `doc_id` PAIRS whose `text` hashes lie within
+    Hamming distance ≤ max_hamming.
 
     Manku-style block permutation (Manku, Jain & Sarma, WWW'07 — the
-    Google-crawl simhash dedup design): 64 bits → `n_blocks` disjoint blocks
-    (default max_hamming+3, i.e. 6 for k=3); bucket once per combination of
-    (n_blocks-max_hamming) blocks — C(6,3)=20 tables with ~32-bit keys for
-    the default. Pigeonhole: any pair within Hamming ≤ k agrees on every
-    block of at least one combination → recall is exactly 1, while the
-    ~32-bit key space keeps bucket sizes tractable at web scale (the old
-    (k+1)-band scheme had 16-bit band values that saturate ≥10^8 docs and
-    the cap then silently dropped all near-dup buckets). max_hamming=0
+    Google-crawl simhash dedup design): 64 bits → max_hamming+3 disjoint
+    blocks (6 for k=3); bucket once per combination of 3 blocks —
+    C(6,3)=20 tables with ~32-bit keys for k=3. Pigeonhole: any pair
+    within Hamming ≤ k agrees on every block of at least one combination →
+    recall is exactly 1, while the ~32-bit key space keeps bucket sizes
+    tractable at web scale (the old (k+1)-band scheme had 16-bit band
+    values that saturate ≥10^8 docs and the cap then silently dropped all
+    near-dup buckets). max_hamming=0
     degenerates to one table keyed on the full hash (exact clustering).
     Shuffle key is (table, key); candidates are verified with a native
-    bit_count(xor) filter. Oversized buckets (all-identical boilerplate) are
-    dropped like in minhash_lsh_candidates — those members are exact dups
-    caught by `exact_duplicates`/Hamming-0 clustering.
+    bit_count(xor) filter. Buckets over 512 members (all-identical
+    boilerplate) are dropped like in minhash_lsh_candidates — those members
+    are exact dups caught by `exact_duplicates`/Hamming-0 clustering.
     Returns (a, b, hamming) with a < b.
     """
-    n_blocks = n_blocks or max_hamming + 3
     sh = docs.select(
-        F.col(id_col).alias("_id"), simhash64(F.col(text_col)).alias("simhash")
+        F.col("doc_id").alias("_id"), simhash64(F.col("text")).alias("simhash")
     )
-    keys = _simhash_block_keys(n_blocks, max_hamming)
+    keys = _simhash_block_keys(max_hamming + 3, max_hamming)
     banded = sh.select(
         "_id", "simhash", F.posexplode(F.array(*keys)).alias("band", "val")
     )
     grouped = (
         banded.groupBy("band", "val")
         .agg(F.sort_array(F.collect_set("_id")).alias("members"))
-        .filter(F.size("members").between(2, max_bucket))
+        .filter(F.size("members").between(2, 512))
     )
     pairs = (
         grouped.select(
@@ -613,25 +596,20 @@ def simhash_pairs(
     )
 
 
-def simhash_bucket_stats(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    max_bucket: int = 512,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """Observability for the Manku block-permutation bucketing: bucket-size
-    histogram over a DataFrame that already carries a `simhash` column (so
-    web-scale audits can run it on the stored sketch without re-hashing
-    text). One row: total buckets, max size, oversized bucket/member counts
-    relative to `max_bucket` — the saturation signal that the old 16-bit
-    band scheme tripped at ≥10^8 docs."""
-    n_blocks = n_blocks or max_hamming + 3
-    keys = _simhash_block_keys(n_blocks, max_hamming)
+def simhash_bucket_stats(hashes: DataFrame) -> DataFrame:
+    """Observability for `simhash_pairs`' Manku block-permutation bucketing
+    at max_hamming=3 (6 blocks): bucket-size histogram over a DataFrame
+    that already carries a `simhash` column (so web-scale audits can run it
+    on the stored sketch without re-hashing text). One row: total buckets,
+    max size, oversized bucket/member counts relative to the 512-member
+    cap — the saturation signal that the old 16-bit band scheme tripped at
+    ≥10^8 docs."""
+    keys = _simhash_block_keys(6, 3)
     banded = hashes.select(
         F.posexplode(F.array(*keys)).alias("band", "val")
     )
     sizes = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("sz"))
-    over = F.col("sz") > max_bucket
+    over = F.col("sz") > 512
     return sizes.agg(
         F.count(F.lit(1)).alias("buckets"),
         F.max("sz").alias("max_bucket_size"),
@@ -640,36 +618,24 @@ def simhash_bucket_stats(
     )
 
 
-def ngram_contamination(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    eval_id_col: str = "eval_id",
-    hashed: bool = True,
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Train/eval n-gram decontamination (the GPT-3/PaLM-style overlap
-    check): for every eval document, how many of its distinct word n-grams
-    appear anywhere in the training corpus.
+    check): for every eval document (`eval_id`, `text`), how many of its
+    distinct word 8-grams appear anywhere in the training corpus's `text`.
 
     Scale shape: the EVAL side is small (benchmark suites), so its distinct
     n-gram set BROADCASTS and the 100 TB train corpus is scanned ONCE,
     narrow: train grams are semi-joined against the broadcast eval set
     FIRST (so the full train gram stream is never shuffled or distinct-ed),
     and only the surviving hit set — at most |eval grams| rows — is
-    deduplicated and joined back. hashed=True works on xxhash64 of the
-    grams (collision odds ~|grams|²/2⁶⁴); hashed=False keeps exact strings
-    for oracle-grade runs.
+    deduplicated and joined back. It compares the exact gram strings.
 
     Returns (eval_id, total_ngrams, overlap_ngrams, contaminated).
     """
     def gram_col() -> F.Column:
-        g = F.array_distinct(word_shingles(F.col(text_col), n))
-        if hashed:
-            g = F.transform(g, lambda s: F.xxhash64(s))
-        return F.explode(g).alias("g")
+        return F.explode(F.array_distinct(word_shingles(F.col("text"), 8))).alias("g")
 
-    eg = eval_docs.select(F.col(eval_id_col).alias("_eid"), gram_col())
+    eg = eval_docs.select(F.col("eval_id").alias("_eid"), gram_col())
     eval_gram_set = eg.select("g").distinct()
     train_grams = train.select(gram_col())
     # one narrow pass over train; output ⊆ eval grams → small from here on
@@ -677,16 +643,16 @@ def ngram_contamination(
         F.broadcast(eval_gram_set), "g", "left_semi"
     ).distinct()
 
-    totals = eg.groupBy(F.col("_eid").alias(eval_id_col)).agg(
+    totals = eg.groupBy(F.col("_eid").alias("eval_id")).agg(
         F.countDistinct("g").alias("total_ngrams")
     )
     hits = (
         eg.join(F.broadcast(hit_grams), "g", "left_semi")
-        .groupBy(F.col("_eid").alias(eval_id_col))
+        .groupBy(F.col("_eid").alias("eval_id"))
         .agg(F.countDistinct("g").alias("overlap_ngrams"))
     )
     return (
-        totals.join(hits, eval_id_col, "left")
+        totals.join(hits, "eval_id", "left")
         .withColumn("overlap_ngrams", F.coalesce("overlap_ngrams", F.lit(0)))
         .withColumn(
             "contaminated", F.col("overlap_ngrams") * 2 >= F.col("total_ngrams")
@@ -694,52 +660,39 @@ def ngram_contamination(
     )
 
 
-def contaminated_train_docs(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hashed: bool = True,
-) -> DataFrame:
+def contaminated_train_docs(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Per-TRAIN-doc decontamination verdict — the direction a corpus
     curation pipeline actually filters on: a train document is contaminated
-    when ANY of its distinct word n-grams appears in the (small, broadcast)
-    eval benchmark gram set.
+    when ANY of the distinct word 8-grams of its `text` appears in the
+    (small, broadcast) eval benchmark gram set. Grams are compared as
+    xxhash64 values (collision odds ~|grams|²/2⁶⁴).
 
     Scale shape: train grams explode to (doc_id, gram) and are INNER-joined
     against the broadcast eval gram set immediately, so only hit grams —
     at most |eval grams| distinct values — survive into the per-doc count
     shuffle; grams of clean documents die map-side and never shuffle.
 
-    Returns (id_col, eval_hits) for contaminated train docs ONLY (absent ⇒
+    Returns (doc_id, eval_hits) for contaminated train docs ONLY (absent ⇒
     clean); callers drop them with a left_anti join.
     """
 
     def grams() -> F.Column:
-        g = F.array_distinct(word_shingles(F.col(text_col), n))
-        if hashed:
-            g = F.transform(g, lambda s: F.xxhash64(s))
-        return F.explode(g).alias("g")
+        g = F.array_distinct(word_shingles(F.col("text"), 8))
+        return F.explode(F.transform(g, lambda s: F.xxhash64(s))).alias("g")
 
     eval_gram_set = eval_docs.select(grams()).distinct()
     return (
-        train.select(F.col(id_col), grams())
+        train.select(F.col("doc_id"), grams())
         .join(F.broadcast(eval_gram_set), "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.countDistinct("g").alias("eval_hits"))
     )
 
 
-def resolve_clusters(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Resolve candidate near-dup PAIRS into connected-component clusters:
-    every doc in a component gets the component's min id as its keeper —
-    the step that turns verified pairs (minhash/simhash/embedding paths)
+def resolve_clusters(pairs: DataFrame) -> DataFrame:
+    """Resolve candidate near-dup (a, b) PAIRS into connected-component
+    clusters: every doc in a component gets the component's min id as its
+    keeper — the step that turns verified pairs (minhash/simhash/embedding paths)
     into an actionable keep/drop decision, the dedup analog of the
     reference collapsing raw denials into groups (parse_avc.py:3942-4046).
 
@@ -749,8 +702,8 @@ def resolve_clusters(
     groupBy), and its LABEL'S label (labels ⋈ labels — the shortcut that
     halves remaining path length every round, à la Shiloach-Vishkin /
     hash-to-min). Two shuffles per round on the vertex id; convergence in
-    O(log diameter) rounds instead of O(diameter), so `max_iters` bounds
-    even pathological 10^6-hop chains. Convergence is detected with a
+    O(log diameter) rounds instead of O(diameter), so a cap of 25 rounds
+    bounds even pathological 10^6-hop chains. Convergence is detected with a
     scalar count aggregate per round (no row data reaches the driver);
     each round's labels are localCheckpoint'ed — persist alone keeps the
     LOGICAL plan, which references the prior round 3× and grows 3^rounds
@@ -769,7 +722,7 @@ def resolve_clusters(
     # of two selects under `persist` re-plans the whole lazy pair subtree
     # (MinHash UDF, bucket shuffle, verify joins) once per branch, and AQE
     # does not reuse those stages across the branches.
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col("a"), F.col("b")
     edges = (
         pairs.select(
             F.explode(
@@ -806,7 +759,7 @@ def resolve_clusters(
     # carries the old label (other branches carry LONG_MAX, so the min
     # recovers it), which keeps the convergence check join-free.
     long_max = (1 << 63) - 1
-    for _ in range(max_iters):
+    for _ in range(25):
         nbr = (
             edges.join(
                 labels.select(F.col("id").alias("src"), "label"), "src"
@@ -861,23 +814,16 @@ def resolve_clusters(
     )
 
 
-def embedding_near_dups(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs above `threshold`.
+def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Embedding-cosine near-dup `vec_id` pairs whose `embedding` cosine is
+    above `threshold`.
 
-    Scale shape: sign-random-projection bucket is the EQUI-JOIN key (one
-    shuffle on bucket), cosine is evaluated only within buckets — never an
-    all-pairs cross join. Same-direction duplicates (scaled copies) always
-    share every sign bit, so their recall is exactly 1; merely-similar pairs
-    have recall (1 - θ/π)^n_planes — lower n_planes for higher recall, add
-    multi-probe (bit flips) for more. At 10^12 rows the bucketed table is
-    written bucketed-by(bucket) so the join is co-located.
+    Scale shape: sign-random-projection bucket over 4 planes is the
+    EQUI-JOIN key (one shuffle on bucket), cosine is evaluated only within
+    buckets — never an all-pairs cross join. Same-direction duplicates
+    (scaled copies) always share every sign bit, so their recall is exactly
+    1; merely-similar pairs have recall (1 - θ/π)^4. At 10^12 rows the
+    bucketed table is written bucketed-by(bucket) so the join is co-located.
     """
     from avc_parser_spark.functions.similarity import (
         cosine_expr,
@@ -885,25 +831,23 @@ def embedding_near_dups(
         make_planes,
     )
 
-    if dim is None:
-        # probe the vector width once (skip NULL vectors); empty input →
-        # empty pairs frame instead of a TypeError at plan-build time
-        first = (
-            embeddings.filter(F.col(vec_col).isNotNull())
-            .select(F.size(vec_col).alias("d"))
-            .head()
+    # probe the vector width once (skip NULL vectors); empty input → empty
+    # pairs frame instead of a TypeError at plan-build time
+    first = (
+        embeddings.filter(F.col("embedding").isNotNull())
+        .select(F.size("embedding").alias("d"))
+        .head()
+    )
+    if first is None:
+        id_type = embeddings.schema["vec_id"].dataType.simpleString()
+        return embeddings.sparkSession.createDataFrame(
+            [], f"a {id_type}, b {id_type}, cosine double"
         )
-        if first is None:
-            id_type = embeddings.schema[id_col].dataType.simpleString()
-            return embeddings.sparkSession.createDataFrame(
-                [], f"a {id_type}, b {id_type}, cosine double"
-            )
-        dim = int(first["d"])
-    planes = make_planes(dim, n_planes)
+    planes = make_planes(int(first["d"]), 4)
     bucketed = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        lsh_project_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        lsh_project_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     a = bucketed.select("bucket", F.col("_id").alias("a"), F.col("_v").alias("va"))
     b = bucketed.select("bucket", F.col("_id").alias("b"), F.col("_v").alias("vb"))
@@ -919,15 +863,12 @@ def embedding_near_dups(
 def semantic_dedup_pairs(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication"): partition the embedding
-    space with k-means, then treat within-cluster pairs with cosine >=
-    threshold as semantic duplicates — catches paraphrases and re-renders
+    web-scale through semantic deduplication"): partition the `embedding`
+    space with k-means, then treat within-cluster `vec_id` pairs with
+    cosine >= 0.9 as semantic duplicates — catches paraphrases and re-renders
     that no lexical sketch (minhash/simhash/winnowing) can see. Reference
     repo has no analog; centroids come from train_centroids (or any
     k-means) and the pairs feed resolve_clusters like every other edge
@@ -944,8 +885,8 @@ def semantic_dedup_pairs(
     """
     from avc_parser_spark.functions.similarity import cosine_expr, ivf_assign
 
-    assigned = ivf_assign(embeddings, centroids, vec_col).select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), "cluster"
+    assigned = ivf_assign(embeddings, centroids).select(
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"), "cluster"
     )
     if max_cluster is not None:
         sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("_n"))
@@ -960,21 +901,15 @@ def semantic_dedup_pairs(
         a.join(b, "cluster")
         .filter(F.col("a") < F.col("b"))
         .withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.9)
         .select("a", "b", F.round("cosine", 6).alias("cosine"), "cluster")
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 4) -> DataFrame:
     """MOSS-style winnowing document fingerprints (Schleimer/Wilkerson/
     Aiken, SIGMOD'03 — rolling-hash fingerprinting): hash every byte
-    k-gram of the UTF-8 normalized text with a polynomial rolling hash,
+    k-gram of the UTF-8 normalized `text` with a polynomial rolling hash,
     then keep the minimum of each sliding window of `window` consecutive
     gram hashes. Guarantee: two documents sharing a normalized substring
     of length >= window + k - 1 bytes share at least one fingerprint, so
@@ -993,13 +928,13 @@ def winnow_fingerprints(
     gram-hash array (~8 bytes per TEXT BYTE) across the Arrow boundary —
     hashing in numpy ships only the text. Docs shorter than k bytes get
     one whole-text fingerprint (note: all empty docs therefore share
-    one). Returns (id, fingerprints array<bigint>, n_fingerprints)."""
+    one). Returns (doc_id, fingerprints array<bigint>, n_fingerprints)."""
     normed = docs.select(
-        F.col(id_col), normalized_text(F.col(text_col)).alias("_wn_t")
+        F.col("doc_id"), normalized_text(F.col("text")).alias("_wn_t")
     )
     fp = _winnow_fp_udf(k, window)
     return normed.select(
-        id_col, fp(F.col("_wn_t")).alias("fingerprints")
+        "doc_id", fp(F.col("_wn_t")).alias("fingerprints")
     ).withColumn("n_fingerprints", F.size("fingerprints"))
 
 
@@ -1047,11 +982,9 @@ def _winnow_fp_udf(k: int, window: int):
     return _fp
 
 
-def winnow_candidates_from_fps(
-    fps: DataFrame, id_col: str = "doc_id", max_bucket: int = 512
-) -> DataFrame:
+def winnow_candidates_from_fps(fps: DataFrame, max_bucket: int = 512) -> DataFrame:
     """Candidate near-dup pairs by shared winnowing fingerprint over a
-    PRECOMPUTED (id, fingerprints) frame (winnow_fingerprints): explode
+    PRECOMPUTED (doc_id, fingerprints) frame (winnow_fingerprints): explode
     fingerprints → bucket docs per fingerprint (buckets over `max_bucket`
     dropped — same web-scale stop-list rationale as the LSH band cap: a
     fingerprint shared by thousands of docs is boilerplate, and keeping it
@@ -1062,7 +995,7 @@ def winnow_candidates_from_fps(
     ONCE and persist, the same one-sketch-pass pattern as
     minhash_candidates_from_hashes. Returns (a, b) with a < b."""
     exploded = fps.select(
-        F.col(id_col).alias("_id"), F.explode("fingerprints").alias("fp")
+        F.col("doc_id").alias("_id"), F.explode("fingerprints").alias("fp")
     )
     grouped = (
         exploded.groupBy("fp")
@@ -1088,15 +1021,13 @@ def winnow_candidates_from_fps(
     )
 
 
-def winnow_jaccard_from_fps(
-    fps: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Fingerprint-set Jaccard for candidate pairs over a PRECOMPUTED (id,
-    fingerprints) frame (the cheap verify step: fingerprints are
+def winnow_jaccard_from_fps(fps: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Fingerprint-set Jaccard for candidate pairs over a PRECOMPUTED
+    (doc_id, fingerprints) frame (the cheap verify step: fingerprints are
     ~2/(window+1) the size of the gram sets). Broadcast NOT assumed —
-    pairs join fingerprints on each side by id."""
-    a = fps.select(F.col(id_col).alias("a"), F.col("fingerprints").alias("_fa"))
-    b = fps.select(F.col(id_col).alias("b"), F.col("fingerprints").alias("_fb"))
+    pairs join fingerprints on each side by doc_id."""
+    a = fps.select(F.col("doc_id").alias("a"), F.col("fingerprints").alias("_fa"))
+    b = fps.select(F.col("doc_id").alias("b"), F.col("fingerprints").alias("_fb"))
     return (
         pairs.join(a, "a")
         .join(b, "b")
@@ -1112,20 +1043,15 @@ def winnow_jaccard_from_fps(
     )
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n\n",
-    keep: str = "first",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, keep: str = "first") -> DataFrame:
     """CCNet-style paragraph-level deduplication (reference has no analog;
     this is the web-corpus curation step between exact and near dedup:
     Wenzek et al. 2019 dedup CommonCrawl at paragraph granularity before
     any document-level pass).
 
-    Splits each doc on `sep`, removes duplicated paragraphs corpus-wide,
-    and reassembles the surviving text in original order:
+    Splits each doc's `text` on blank lines ("\\n\\n"), removes duplicated
+    paragraphs corpus-wide, and reassembles the surviving text in original
+    order, keyed by `doc_id`:
 
     - keep='first': keep only the globally FIRST instance of each
       paragraph — ordered by (id, position) — so boilerplate survives
@@ -1145,8 +1071,8 @@ def paragraph_dedup(
     in any engine for cross-system audits.
     """
     inst = docs.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.col("text"), "\n\n")).alias("pos", "para"),
     ).withColumn("ph", F.md5("para"))
     if keep == "first":
         firsts = inst.groupBy("ph").agg(
@@ -1169,18 +1095,13 @@ def paragraph_dedup(
                 F.array_sort(F.collect_list(F.struct("pos", "para"))),
                 lambda s: s["para"],
             ),
-            sep,
+            "\n\n",
         ).alias("text_dedup"),
         F.count(F.lit(1)).alias("paragraphs_kept"),
-    ).withColumnRenamed("_id", id_col)
+    ).withColumnRenamed("_id", "doc_id")
 
 
-def substring_dedup(
-    docs: DataFrame,
-    k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def substring_dedup(docs: DataFrame, k: int = 50) -> DataFrame:
     """Exact duplicated-substring removal (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better": the ExactSubstr pass that
     strips >=50-token spans repeated anywhere in the corpus; the reference
@@ -1213,13 +1134,13 @@ def substring_dedup(
     aggregate, so "dedup these docs against the whole corpus" is the plan
     Catalyst already produces.
 
-    Returns (id_col, text_dedup, tokens_kept, tokens_total) for EVERY
-    input doc; text_dedup is whitespace-normalized.
+    Returns (doc_id, text_dedup, tokens_kept, tokens_total) for EVERY
+    input doc; text_dedup is the whitespace-normalized `text`.
     """
     if k < 2:
         raise ValueError(f"window must span >=2 tokens, got k={k}")
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    base = docs.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
+    toks = F.split(normalized_text(F.col("text")), " ")
+    base = docs.select(F.col("doc_id").alias("_id"), toks.alias("_toks"))
     n = F.size(F.col("_toks"))
     # zip-of-shifted-slices, not slice-at-j over the captured `_toks`: a
     # captured outer reference is inlined back to the split by
@@ -1263,7 +1184,7 @@ def substring_dedup(
 
     kept = F.filter(F.col("_toks"), _keep_fn(k))
     return out.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.array_join(kept, " ").alias("text_dedup"),
         F.size(kept).alias("tokens_kept"),
         F.size("_toks").alias("tokens_total"),
@@ -1305,14 +1226,13 @@ def _cms_positions(col: Column, width: int, depth: int) -> list[Column]:
 
 def cms_build(
     terms: DataFrame,
-    col: str = "term",
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
 ) -> DataFrame:
-    """Build the sketch: a (r, c, cnt) counter table, ≤ depth·width rows.
-    One partial-aggregated shuffle (Expand to depth cells per term, then
-    map-side combine into the bounded cell space)."""
-    pos = _cms_positions(F.col(col), width, depth)
+    """Build the sketch of the `term` column: a (r, c, cnt) counter table,
+    ≤ depth·width rows. One partial-aggregated shuffle (Expand to depth
+    cells per term, then map-side combine into the bounded cell space)."""
+    pos = _cms_positions(F.col("term"), width, depth)
     pairs = F.explode(
         F.array(*[
             F.struct(F.lit(r).alias("r"), pos[r].alias("c"))
@@ -1329,28 +1249,27 @@ def cms_build(
 def cms_estimate(
     counters: DataFrame,
     probes: DataFrame,
-    col: str = "term",
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
 ) -> DataFrame:
-    """Point-frequency estimates for a bounded probe set: explode each
+    """Point-frequency estimates for a bounded `term` probe set: explode each
     probe into its depth (r, c) cells, broadcast-join the (small, bounded)
     counter table, take the min across rows. cms_count ≥ true count
     always; a cell absent from the table coalesces to 0 = never seen."""
-    pos = _cms_positions(F.col(col), width, depth)
+    pos = _cms_positions(F.col("term"), width, depth)
     cells = probes.select(
-        F.col(col),
+        F.col("term"),
         F.explode(
             F.array(*[
                 F.struct(F.lit(r).alias("r"), pos[r].alias("c"))
                 for r in range(depth)
             ])
         ).alias("p"),
-    ).select(col, F.col("p.r").alias("r"), F.col("p.c").alias("c"))
+    ).select("term", F.col("p.r").alias("r"), F.col("p.c").alias("c"))
     return (
         cells.join(F.broadcast(counters), ["r", "c"], "left")
         .withColumn("cnt", F.coalesce(F.col("cnt"), F.lit(0)))
-        .groupBy(col)
+        .groupBy("term")
         .agg(F.min("cnt").cast("long").alias("cms_count"))
     )
 
@@ -1358,12 +1277,11 @@ def cms_estimate(
 def cms_heavy_hitters(
     terms: DataFrame,
     threshold: int,
-    col: str = "term",
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
     counters: DataFrame | None = None,
 ) -> DataFrame:
-    """EXACT heavy hitters (every term with true count ≥ threshold, with
+    """EXACT heavy hitters (every `term` with true count ≥ threshold, with
     its exact count) without ever shuffling the vocabulary — the classic
     CMS-gate + verify two-pass:
 
@@ -1380,7 +1298,7 @@ def cms_heavy_hitters(
        shuffle is candidate-bounded, not corpus-bounded — and the final
        `count ≥ threshold` filter kills the impostors exactly.
 
-    Returns (col, cnt, cms_count): the exact count and the (over-)estimate
+    Returns (term, cnt, cms_count): the exact count and the (over-)estimate
     that admitted the term. Literal-table gate is for bounded sketches
     (width·depth ≤ 16384 cells); bigger sketches should pre-gate with
     cms_estimate's broadcast join instead."""
@@ -1391,11 +1309,11 @@ def cms_heavy_hitters(
             "cms_heavy_hitters: literal gate capped at width*depth <= 16384"
         )
     if counters is None:
-        counters = cms_build(terms, col, width, depth)
+        counters = cms_build(terms, width, depth)
     tables = [[0] * width for _ in range(depth)]
     for row in counters.collect():
         tables[row["r"]][row["c"]] = row["cnt"]
-    pos = _cms_positions(F.col(col), width, depth)
+    pos = _cms_positions(F.col("term"), width, depth)
     # One parsed SQL literal per row instead of `width` F.lit() column
     # objects: identical array literals, but a single expression-parse
     # each — building 2048 lit() columns through py4j measured ~1.5 s of
@@ -1412,7 +1330,7 @@ def cms_heavy_hitters(
     est = cells[0] if depth == 1 else F.least(*cells)
     return (
         terms.filter(est >= F.lit(int(threshold)))
-        .groupBy(col)
+        .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .filter(F.col("cnt") >= int(threshold))
         .withColumn("cms_count", est.cast("long"))
@@ -1452,11 +1370,11 @@ def _hll_register_cols(col: Column, p: int) -> tuple[Column, Column]:
     return idx.cast("long"), rho.cast("long")
 
 
-def hll_build(values: DataFrame, col: str = "term", p: int = HLL_P) -> DataFrame:
-    """Sketch a value stream into the (idx, rho) register table: rho =
+def hll_build(values: DataFrame, p: int = HLL_P) -> DataFrame:
+    """Sketch a `term` stream into the (idx, rho) register table: rho =
     per-register MAX (partial-aggregated — each task emits <= m rows).
     Registers never hit by any value are absent (implicit 0)."""
-    idx, rho = _hll_register_cols(F.col(col), p)
+    idx, rho = _hll_register_cols(F.col("term"), p)
     return (
         values.select(idx.alias("idx"), rho.alias("rho"))
         .groupBy("idx")
@@ -1467,9 +1385,9 @@ def hll_build(values: DataFrame, col: str = "term", p: int = HLL_P) -> DataFrame
 KMV_BITS = 60  # md5-slice hash domain: 15 hex chars, positive in int64
 
 
-def kmv_build(values: DataFrame, col: str = "term", k: int = 256) -> DataFrame:
+def kmv_build(values: DataFrame, k: int = 256) -> DataFrame:
     """KMV / theta sketch (Bar-Yossef et al. 2002; the DataSketches theta
-    family): the k SMALLEST distinct 60-bit md5-slice hashes of a value
+    family): the k SMALLEST distinct 60-bit md5-slice hashes of a `term`
     stream, as one `h`-column table. Unlike HLL this sketch supports SET
     OPERATIONS — union, and crucially INTERSECTION estimates (overlap of
     two corpora's vocabularies/url sets) which HLL cannot express.
@@ -1488,7 +1406,7 @@ def kmv_build(values: DataFrame, col: str = "term", k: int = 256) -> DataFrame:
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    h = F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10).cast("long")
+    h = F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
     hashed = values.select(h.alias("h")).filter(F.col("h").isNotNull())
 
     schema = StructType([StructField("h", LongType())])
@@ -1504,14 +1422,9 @@ def kmv_build(values: DataFrame, col: str = "term", k: int = 256) -> DataFrame:
     return candidates.distinct().orderBy("h").limit(k)
 
 
-def kmv_build_grouped(
-    values: DataFrame,
-    group_col: str,
-    col: str = "term",
-    k: int = 256,
-) -> DataFrame:
+def kmv_build_grouped(values: DataFrame, group_col: str, k: int = 256) -> DataFrame:
     """Per-group KMV sketches — (grp, h) with ≤ k rows per group — from
-    ONE pass over the stream. Because groups PARTITION the stream, any
+    ONE pass over the `term` stream. Because groups PARTITION the stream, any
     union of groups' sketches merges (distinct + k smallest) into exactly
     the sketch of the combined stream: one grouped pass serves per-stratum
     cardinalities AND the global/any-subset sketch (the token_suite kmv
@@ -1520,7 +1433,7 @@ def kmv_build_grouped(
     the per-group k-smallest rank runs over the tiny candidate frame."""
     import pandas as _pd
 
-    h = F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10).cast("long")
+    h = F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
     hashed = values.select(
         F.col(group_col).cast("string").alias("grp"), h.alias("h")
     ).filter(F.col("h").isNotNull() & F.col("grp").isNotNull())

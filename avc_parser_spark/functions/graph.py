@@ -39,20 +39,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RANK_SCALE = 1_000_000
+DAMPING_MICRO = 850_000  # PageRank damping 0.85 in micro units
 
 
-def degree_stats(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """Per-node (node, out_deg, in_deg) over an edge list. Parallel edges
     count once each (PageRank treats them the same way). Nodes appearing
     only as src get in_deg 0 and vice versa (full-outer merge)."""
     out_deg = (
-        edges.groupBy(F.col(src_col).alias("node"))
+        edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("out_deg"))
     )
     in_deg = (
-        edges.groupBy(F.col(dst_col).alias("node"))
+        edges.groupBy(F.col("dst").alias("node"))
         .agg(F.count(F.lit(1)).alias("in_deg"))
     )
     return (
@@ -69,9 +68,6 @@ def pagerank_micro_multi(
     edges: DataFrame,
     variants: dict[str, DataFrame | None],
     iters: int = 8,
-    damping_micro: int = 850_000,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Compute SEVERAL PageRank variants in one synchronized loop: returns
     (node, rank_<name> …) after `iters` rounds of
@@ -101,11 +97,11 @@ def pagerank_micro_multi(
         raise ValueError("pagerank_micro_multi: iters must be >= 0")
     if not variants:
         raise ValueError("pagerank_micro_multi: need at least one variant")
-    reset = RANK_SCALE - damping_micro
+    reset = RANK_SCALE - DAMPING_MICRO
     # one read of `edges` (a union of two selects would evaluate a lazy
     # edge input twice)
     nodes = edges.select(
-        F.explode(F.array(F.col(src_col), F.col(dst_col))).alias("node")
+        F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
     ).distinct()
     for name, seeds in variants.items():
         if seeds is None:
@@ -134,15 +130,13 @@ def pagerank_micro_multi(
                 )
                 .drop("_seed")
             )
-    out_deg = edges.groupBy(F.col(src_col).alias("node")).agg(
+    out_deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
     # Edges carry their source's out-degree from round 0 on — computed and
     # persisted ONCE, the reusable join side of every iteration.
     edeg = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
+        edges.select("src", "dst")
         .join(out_deg.withColumnRenamed("node", "src"), "src")
         .persist()
     )
@@ -196,7 +190,7 @@ def pagerank_micro_multi(
             *[
                 (
                     F.col(f"_reset_{n}")
-                    + F.expr(f"({damping_micro} * s_{n}) div {RANK_SCALE}")
+                    + F.expr(f"({DAMPING_MICRO} * s_{n}) div {RANK_SCALE}")
                 ).cast("long").alias(f"rank_{n}")
                 for n in names
             ],
@@ -220,9 +214,6 @@ def pagerank_micro_multi(
 def pagerank_micro(
     edges: DataFrame,
     iters: int = 8,
-    damping_micro: int = 850_000,
-    src_col: str = "src",
-    dst_col: str = "dst",
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Single-variant convenience wrapper over pagerank_micro_multi:
@@ -232,18 +223,10 @@ def pagerank_micro(
         edges,
         {"micro": seeds},  # the variant's column name IS rank_micro
         iters=iters,
-        damping_micro=damping_micro,
-        src_col=src_col,
-        dst_col=dst_col,
     )
 
 
-def hits_micro(
-    edges: DataFrame,
-    iters: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits_micro(edges: DataFrame, iters: int = 4) -> DataFrame:
     """HITS hubs & authorities (Kleinberg, JACM 1999) — the second classic
     link-analysis signal: a page is a good AUTHORITY if good hubs link to
     it, a good HUB if it links to good authorities. Curation pipelines use
@@ -276,7 +259,7 @@ def hits_micro(
     pure function of (edges, iters)."""
     if iters < 0:
         raise ValueError("hits_micro: iters must be >= 0")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     e = e.persist()
     zero = F.lit(0).cast("long")
@@ -357,9 +340,7 @@ def hits_micro(
     return scores
 
 
-def two_hop_reach(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def two_hop_reach(edges: DataFrame) -> DataFrame:
     """Per-node count of DISTINCT pages reachable in one or two hops —
     the truncated-neighborhood centrality used as a cheap link-locality
     signal (full closeness needs all-pairs BFS; two hops is one self-join).
@@ -367,9 +348,7 @@ def two_hop_reach(
     Scale shape: edges ⋈ edges on the hop-join key (dst = src) is the one
     potentially heavy shuffle — for power-law web graphs cap hub fan-out
     upstream; the distinct + count are partial-aggregated per node."""
-    e1 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e1 = edges.select("src", "dst")
     hop2 = (
         e1.alias("a")
         .join(e1.alias("b"), F.col("a.dst") == F.col("b.src"))

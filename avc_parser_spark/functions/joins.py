@@ -49,12 +49,11 @@ def asof_join(
     value_cols: tuple[str, ...] | list[str] | None = None,
     direction: str = "backward",
     tolerance_sec: float | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For every left row, attach the right row with the greatest
     `on` ≤ left.`on` (direction='backward'; 'forward' = smallest ≥) within
-    the same by-keys. Returns all left columns plus `<on><suffix>` (the
-    matched right timestamp) and `<col><suffix>` for each value column —
+    the same by-keys. Returns all left columns plus `<on>_asof` (the
+    matched right timestamp) and `<col>_asof` for each value column —
     NULLs when no right row qualifies (left-join semantics), or when the
     match is farther than `tolerance_sec` (measured on the columns cast to
     double — epoch seconds for timestamps).
@@ -105,9 +104,9 @@ def asof_join(
     carried = l_tag.unionByName(r_tag).select(
         *lcols,
         "_side",
-        F.last("_r_on", ignorenulls=True).over(w).alias(f"{on}{suffix}"),
+        F.last("_r_on", ignorenulls=True).over(w).alias(f"{on}_asof"),
         *[
-            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in value_cols
         ],
     )
@@ -116,13 +115,13 @@ def asof_join(
         dt = left.schema[on].dataType
         delta = F.abs(
             _as_seconds(F.col(on), dt)
-            - _as_seconds(F.col(f"{on}{suffix}"), dt)
+            - _as_seconds(F.col(f"{on}_asof"), dt)
         )
         keep = delta <= float(tolerance_sec)
         out = out.select(
             *lcols,
             *[
-                F.when(keep, F.col(f"{c}{suffix}")).alias(f"{c}{suffix}")
+                F.when(keep, F.col(f"{c}_asof")).alias(f"{c}_asof")
                 for c in [on] + value_cols
             ],
         )

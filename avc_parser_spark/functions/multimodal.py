@@ -767,11 +767,11 @@ def _resize_jpeg(payload: bytes, max_dim: int) -> bytes | None:
     return encode_jpeg(img[ys][:, xs], quality=50)
 
 
-def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
+def resize_media(media: DataFrame) -> DataFrame:
     """Resize op over the media table (Arrow-batched mapInPandas): PPM, PNG,
     GIF and baseline JPEG payloads are REALLY downsampled (nearest neighbor)
-    to max_dim; other formats pass through unchanged with
-    resize_status='passthrough'."""
+    to at most 4 pixels on the longest side; other formats pass through
+    unchanged with resize_status='passthrough'."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -779,13 +779,13 @@ def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
             for p in pdf["payload"]:
                 raw = bytes(p) if isinstance(p, (bytes, bytearray)) else b""
                 try:
-                    resized = _resize_ppm(raw, max_dim)
+                    resized = _resize_ppm(raw, 4)
                     if resized is None:
-                        resized = _resize_png(raw, max_dim)
+                        resized = _resize_png(raw, 4)
                     if resized is None:
-                        resized = _resize_gif(raw, max_dim)
+                        resized = _resize_gif(raw, 4)
                     if resized is None:
-                        resized = _resize_jpeg(raw, max_dim)
+                        resized = _resize_jpeg(raw, 4)
                 except Exception:  # noqa: BLE001 — corrupt media passes through
                     resized = None
                 if resized is None:

@@ -35,46 +35,40 @@ BM25_K1 = (6, 5)
 BM25_B = (3, 4)
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k docs for a bag-of-words query under BM25.
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
+    """Top-k docs (`doc_id`, `text`) for a bag-of-words query under BM25.
 
-    Returns (id_col, score_micro, terms_matched, rank) — score_micro is
+    Returns (doc_id, score_micro, terms_matched, rank) — score_micro is
     the integer-exact micro-scaled score (sum of floor-divided per-term
     contributions), rank breaks score ties on ascending id.
     """
     terms = sorted({t.lower() for t in query_terms})
 
-    toks = _tokens_expr(text_col)
+    toks = _tokens_expr()
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("dl"),
         F.explode(toks).alias("term"),
     ).filter(F.col("term").isin(terms))
 
-    tfd = base.groupBy(id_col, "term").agg(
+    tfd = base.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl")
     )
     dfreq = tfd.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     totals = docs.select(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_tokens_expr(text_col))).cast("long").alias(
+        F.sum(F.size(_tokens_expr())).cast("long").alias(
             "total_tokens"
         ),
     )
 
-    return _score_hits(tfd, dfreq, totals, k, id_col)
+    return _score_hits(tfd, dfreq, totals, k)
 
 
 def _score_hits(
-    tfd: DataFrame, dfreq: DataFrame, totals: DataFrame, k: int, id_col: str
+    tfd: DataFrame, dfreq: DataFrame, totals: DataFrame, k: int
 ) -> DataFrame:
-    """BM25 scoring tail: tfd = (id, term, tf, dl), dfreq = (term, df),
+    """BM25 scoring tail: tfd = (doc_id, term, tf, dl), dfreq = (term, df),
     totals 1 row."""
     p, q = BM25_K1
     r, s = BM25_B
@@ -99,63 +93,58 @@ def _score_hits(
         )
     )
     out = (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.sum("contrib").alias("score_micro"),
             F.count(F.lit(1)).alias("terms_matched"),
         )
-        .orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
+        .orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
         .limit(k)
     )
     # rank over the ≤k surviving rows only (the orderBy+limit above is a
     # TakeOrderedAndProject — the window never sees the corpus)
-    w = Window.orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
     return out.withColumn("rank", F.row_number().over(w))
 
 
-def _tokens_expr(text_col: str):
+def _tokens_expr():
     return F.filter(
         F.split(
-            F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"
+            F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
         ),
         lambda x: x != "",
     )
 
 
-def bm25_sql(
-    query_terms: list[str],
-    k: int = 10,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """DuckDB twin of bm25_topk built from the SAME rational constants and
-    the same tokenizer semantics — the oracle re-derives the exact ranking
-    (integer micro scores make the comparison bit-stable)."""
+def bm25_sql(query_terms: list[str], k: int = 10) -> str:
+    """DuckDB twin of bm25_topk over the `documents` table, built from the
+    SAME rational constants and the same tokenizer semantics — the oracle
+    re-derives the exact ranking (integer micro scores make the comparison
+    bit-stable)."""
     p, q = BM25_K1
     r, s = BM25_B
     terms = sorted({t.lower() for t in query_terms})
     in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
     return f"""
         WITH toked AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  list_filter(regexp_split_to_array(
-                   lower(trim(coalesce({text_col}, ''))), '\\s+'),
+                   lower(trim(coalesce(text, ''))), '\\s+'),
                    x -> x <> '') AS toks
-          FROM {table}),
+          FROM documents),
         base AS (
-          SELECT {id_col}, len(toks) AS dl, unnest(toks) AS term
+          SELECT doc_id, len(toks) AS dl, unnest(toks) AS term
           FROM toked),
         hits AS (
-          SELECT {id_col}, term, count(*) AS tf, min(dl) AS dl
+          SELECT doc_id, term, count(*) AS tf, min(dl) AS dl
           FROM base WHERE term IN ({in_list})
-          GROUP BY {id_col}, term),
+          GROUP BY doc_id, term),
         dfreq AS (SELECT term, count(*) AS df FROM hits GROUP BY term),
         totals AS (
           SELECT count(*) AS n_docs, sum(len(toks))::BIGINT AS total_tokens
           FROM toked),
         scored AS (
-          SELECT h.{id_col},
+          SELECT h.doc_id,
                  (round(ln((t.n_docs - d.df + 0.5) / (d.df + 0.5) + 1)
                         * 1e6)::BIGINT
                   * h.tf * {(p + q) * s} * t.total_tokens)
@@ -163,13 +152,13 @@ def bm25_sql(
                      + {p * (s - r)} * t.total_tokens
                      + {p * r} * h.dl * t.n_docs) AS contrib
           FROM hits h JOIN dfreq d ON h.term = d.term CROSS JOIN totals t)
-        SELECT {id_col},
+        SELECT doc_id,
                sum(contrib)::BIGINT AS score_micro,
                count(*)::BIGINT AS terms_matched,
-               row_number() OVER (ORDER BY sum(contrib) DESC, {id_col} ASC)
+               row_number() OVER (ORDER BY sum(contrib) DESC, doc_id ASC)
                  AS rank
         FROM scored
-        GROUP BY {id_col}
-        ORDER BY score_micro DESC, {id_col} ASC
+        GROUP BY doc_id
+        ORDER BY score_micro DESC, doc_id ASC
         LIMIT {k}
     """

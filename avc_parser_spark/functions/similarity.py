@@ -44,20 +44,19 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k against a constant query vector.
+    """Exact cosine top-k `vec_id`s by `embedding` against a constant query
+    vector.
 
     The query vector is a literal array → constant-folded; scan is narrow;
     only k·partitions rows reach the driver (TakeOrderedAndProject)."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         embeddings.select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_expr(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -74,19 +73,15 @@ def lsh_project_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
-def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (pure function of seed)."""
+def make_planes(dim: int, n_planes: int = 8) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (a fixed seed)."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     return rng.randn(n_planes, dim).tolist()
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """IVF cluster assignment: argmax dot-product against a small centroid
     set — native expressions only (one greatest() over N dot products).
 
@@ -104,7 +99,7 @@ def ivf_assign(
     # dot — the same earliest-index tie-break as the former strict-greater
     # when-chain, over identically-computed doubles.
     scores = (
-        "array(" + ",".join(_dot_sql(f"`{vec_col}`", c) for c in centroids) + ")"
+        "array(" + ",".join(_dot_sql("`embedding`", c) for c in centroids) + ")"
     )
     best = F.expr(
         f"CAST(array_position({scores}, array_max({scores})) - 1 AS INT)"
@@ -112,29 +107,24 @@ def ivf_assign(
     return embeddings.withColumn("cluster", best)
 
 
-def train_centroids(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[list[float]]:
-    """Mini k-means: deterministic seeded init from a sample, then `iters`
-    Lloyd steps computed distributively (groupBy cluster → avg per dim via
-    posexplode — one shuffle per iteration on (cluster, dim))."""
+def train_centroids(embeddings: DataFrame) -> list[list[float]]:
+    """Mini k-means over `embedding` with k=4: deterministic seeded init
+    from a sample, then 2 Lloyd steps computed distributively (groupBy
+    cluster → avg per dim via posexplode — one shuffle per iteration on
+    (cluster, dim))."""
     import numpy as np
 
     sample = np.array(
-        [list(r[vec_col]) for r in embeddings.select(vec_col).limit(512).collect()],
+        [list(r[0]) for r in embeddings.select("embedding").limit(512).collect()],
         dtype="float64",
     )
-    rng = np.random.RandomState(seed)
-    centroids = sample[rng.choice(len(sample), size=k, replace=False)]
+    rng = np.random.RandomState(42)
+    centroids = sample[rng.choice(len(sample), size=4, replace=False)]
 
-    for _ in range(iters):
-        assigned = ivf_assign(embeddings, centroids.tolist(), vec_col)
+    for _ in range(2):
+        assigned = ivf_assign(embeddings, centroids.tolist())
         means = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("dim", "x"))
+            assigned.select("cluster", F.posexplode("embedding").alias("dim", "x"))
             .groupBy("cluster", "dim")
             .agg(F.avg("x").alias("m"))
             .collect()
@@ -157,21 +147,15 @@ def _probe_clusters(
     return [int(i) for i in order[:n_probe]]
 
 
-def _topk_within(
-    candidates: DataFrame,
-    query_vec: list[float],
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _topk_within(candidates: DataFrame, query_vec: list[float], k: int) -> DataFrame:
     """Exact cosine top-k inside an (already pruned) candidate set."""
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         candidates.select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), qcol), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_expr(F.col("embedding"), qcol), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -180,39 +164,31 @@ def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     centroids: list[list[float]],
-    k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN top-k: probe the n_probe nearest clusters, exact cosine
+    """IVF ANN top-10: probe the n_probe nearest clusters, exact cosine
     within them. Recall grows with n_probe; n_probe=len(centroids) is
     exact."""
     probe = _probe_clusters(query_vec, centroids, n_probe)
-    assigned = ivf_assign(embeddings, centroids, vec_col)
-    return _topk_within(
-        assigned.filter(F.col("cluster").isin(probe)), query_vec, k, id_col, vec_col
-    )
+    assigned = ivf_assign(embeddings, centroids)
+    return _topk_within(assigned.filter(F.col("cluster").isin(probe)), query_vec, 10)
 
 
 def lsh_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    n_planes: int = 8,
     multi_probe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN top-k: probe the query's LSH bucket (plus multi-probe neighbors),
-    then exact cosine within the probed buckets.
+    """ANN top-k: probe the query's LSH bucket over 8 planes (plus
+    multi-probe neighbors), then exact cosine within the probed buckets.
 
     multi_probe = number of extra single-bit-flip buckets to probe, ordered
     by how close the query sits to each hyperplane (|dot| ascending — the
     planes most likely to have put a true neighbor on the other side).
     multi_probe=0 is the classic single-bucket probe (recall < 1);
-    multi_probe=n_planes probes all Hamming-1 neighbors."""
-    planes = make_planes(len(query_vec), n_planes)
+    multi_probe=8 probes all Hamming-1 neighbors."""
+    planes = make_planes(len(query_vec), 8)
     import numpy as np
 
     dots = [float(np.dot(query_vec, p)) for p in planes]
@@ -221,20 +197,20 @@ def lsh_topk(
         if d >= 0:
             qbits |= 1 << i
     # nearest-plane-first bit flips
-    flip_order = sorted(range(n_planes), key=lambda i: abs(dots[i]))
+    flip_order = sorted(range(8), key=lambda i: abs(dots[i]))
     probes = [qbits] + [qbits ^ (1 << i) for i in flip_order[:multi_probe]]
 
     bucketed = embeddings.withColumn(
-        "bucket", lsh_project_bucket(F.col(vec_col), planes)
+        "bucket", lsh_project_bucket(F.col("embedding"), planes)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         bucketed.filter(F.col("bucket").isin(probes))
         .select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_expr(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -294,12 +270,7 @@ def _l2_argmin_sql(subvec_sql: str, codebook: list[list[float]]) -> str:
     return f"CAST(array_position({scores}, array_min({scores})) - 1 AS INT)"
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Vector → array of m codebook indices, one native L2-argmin per
     subspace (pure projection: at scale this chains onto the scan and the
     codes table is what you persist — m bytes per vector)."""
@@ -307,18 +278,14 @@ def pq_encode(
     d = len(codebooks[0][0])
     codes = F.expr(
         "array(" + ",".join(
-            _l2_argmin_sql(f"slice(`{vec_col}`, {s * d + 1}, {d})", codebooks[s])
+            _l2_argmin_sql(f"slice(`embedding`, {s * d + 1}, {d})", codebooks[s])
             for s in range(m)
         ) + ")"
     )
-    return embeddings.withColumn(out_col, codes)
+    return embeddings.withColumn("pq_codes", codes)
 
 
-def pq_adc_expr(
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    codes_col: str = "pq_codes",
-) -> Column:
+def pq_adc_expr(codebooks: list[list[list[float]]], query_vec: list[float]) -> Column:
     """The ADC score column: the query is cut into m subvectors and dotted
     with every codeword ON THE DRIVER (m·k multiplications — constant),
     producing a lookup table shipped as a literal; per row the score is
@@ -343,7 +310,7 @@ def pq_adc_expr(
     ])
     return F.aggregate(
         F.zip_with(
-            F.col(codes_col), lut_lit,
+            F.col("pq_codes"), lut_lit,
             lambda c, l: F.element_at(l, c.cast("int") + 1),
         ),
         F.lit(0.0),

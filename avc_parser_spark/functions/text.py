@@ -55,20 +55,18 @@ def lang_pick_sql(score_cols: dict[str, str]) -> str:
     return f"(case when {mx} <= 0 then 'und' {whens} end)"
 
 
-def with_lang_guess(
-    docs: DataFrame, text_col: str = "text", out_col: str = "lang_guess"
-) -> DataFrame:
-    """Trigram-profile language id as a two-Project plan: the 60 counts are
-    computed ONCE into per-language score columns (first Project), then the
-    argmax case reads the named columns (second Project) — so the expensive
-    string scans aren't re-evaluated per CASE branch. All native (length/
-    replace/greatest inside codegen); the oracle twin uses the same
-    generated fragments in a WITH subquery."""
+def with_lang_guess(docs: DataFrame, out_col: str = "lang_guess") -> DataFrame:
+    """Trigram-profile language id of `text` as a two-Project plan: the 60
+    counts are computed ONCE into per-language score columns (first
+    Project), then the argmax case reads the named columns (second Project)
+    — so the expensive string scans aren't re-evaluated per CASE branch.
+    All native (length/replace/greatest inside codegen); the oracle twin
+    uses the same generated fragments in a WITH subquery."""
     score_names = {lang: f"_lang_s_{lang}" for lang in LANG_TRIGRAMS}
     scored = docs.select(
         "*",
         *[
-            F.expr(lang_score_sql(text_col, lang)).alias(name)
+            F.expr(lang_score_sql("text", lang)).alias(name)
             for lang, name in score_names.items()
         ],
     )
@@ -124,60 +122,44 @@ def quality_score(text: Column) -> Column:
     return F.round(len_ok + sw_ok + punct_ok, 2)
 
 
-def split_by_hash(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    seed: int = 42,
-    out_col: str = "split",
-    method: str = "xxhash",
-) -> DataFrame:
-    """Deterministic train/val/test assignment: bucket = pmod(xxhash64(id,
-    seed), 10000), split chosen by cumulative weight cutoffs. Unlike
-    rand()-based sampling this is a pure function of the id — stable under
+def split_by_hash(docs: DataFrame, method: str = "xxhash") -> DataFrame:
+    """Deterministic train/val/test assignment in a `split` column: bucket
+    = pmod(xxhash64(doc_id, 42), 10000), split chosen by the cumulative
+    cutoffs of the fixed 0.9/0.05/0.05 weights. Unlike rand()-based
+    sampling this is a pure function of the id — stable under
     repartitioning, re-runs, and incremental appends (a doc never migrates
     between splits), which is the property a 100 TB training pipeline
     actually needs.
 
-    method='md5' buckets on the first 16 bits of md5(cast(id as string))
-    instead (seed ignored) — slower than xxhash64 but reproducible in any
-    engine with md5 (DuckDB, Trino, Postgres), so cross-engine audits and
-    the SQL oracle can re-derive the exact assignment."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    total = sum(weights.values())
+    method='md5' buckets on the first 16 bits of md5(cast(doc_id as
+    string)) instead — slower than xxhash64 but reproducible in any engine
+    with md5 (DuckDB, Trino, Postgres), so cross-engine audits and the SQL
+    oracle can re-derive the exact assignment."""
     if method == "md5":
         bucket = (
             F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
             ).cast("bigint")
             % 10_000
         )
     else:
-        bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(10_000))
-    expr = None
-    acc = 0.0
-    for name, w in weights.items():
-        acc += w / total
-        cond = bucket < int(round(acc * 10_000))
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    last = list(weights)[-1]
-    return docs.withColumn(out_col, expr.otherwise(F.lit(last)))
+        bucket = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(42)), F.lit(10_000))
+    return docs.withColumn(
+        "split",
+        F.when(bucket < 9000, F.lit("train"))
+        .when(bucket < 9500, F.lit("val"))
+        .otherwise(F.lit("test")),
+    )
 
 
-def training_order(
-    docs: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-    seed: int = 42,
-    method: str = "xxhash",
-) -> DataFrame:
+def training_order(docs: DataFrame, n_shards: int, method: str = "xxhash") -> DataFrame:
     """Deterministic GLOBAL training-data order without a global sort —
     the reproducible corpus shuffle an LLM training run needs (fixed data
     order across re-runs, engines, and cluster sizes, so a resumed or
     re-provisioned job consumes batches in the identical sequence).
 
-    Adds (shard, pos): shard = id-hash mod n_shards, pos = rank of the
-    id's hash key within its shard (ties broken by id). The global order
+    Adds (shard, pos): shard = doc_id-hash mod n_shards, pos = rank of the
+    id's hash key within its shard (ties broken by doc_id). The global order
     is (shard, pos) — a pure function of the ID SET, independent of input
     partitioning or row arrival order. Scale shape: ONE hash exchange on
     shard + a per-shard local sort (the Window sort is within partitions;
@@ -186,19 +168,19 @@ def training_order(
     wants: each shard's file is internally ordered, readers stream shards
     in index order.
 
-    method='md5' derives key and shard from a 14-hex md5 prefix (seed
-    ignored) so any SQL engine re-derives the exact order; default
-    xxhash64 is the cheap JVM path."""
+    method='md5' derives key and shard from a 14-hex md5 prefix so any SQL
+    engine re-derives the exact order; default xxhash64(doc_id, 42) is the
+    cheap JVM path."""
     if n_shards < 1:
         raise ValueError("training_order: n_shards must be >= 1")
     if method == "md5":
         key = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 14), 16, 10
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 14), 16, 10
         ).cast("bigint")
     else:
-        key = F.xxhash64(F.col(id_col), F.lit(seed))
+        key = F.xxhash64(F.col("doc_id"), F.lit(42))
     shard = F.pmod(key, F.lit(n_shards))
-    w = Window.partitionBy("shard").orderBy(F.col("_ord_key"), F.col(id_col))
+    w = Window.partitionBy("shard").orderBy(F.col("_ord_key"), F.col("doc_id"))
     return (
         docs.withColumn("_ord_key", key)
         .withColumn("shard", shard)
@@ -307,14 +289,10 @@ def fingerprint64(text: Column) -> Column:
 
 
 def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = 2048,
-    bucket_count: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, seq_len: int = 2048, bucket_count: int = 64
 ) -> DataFrame:
     """GPT-style concat-then-chunk sequence packing: place every document
-    into the fixed-`seq_len` training-sequence stream.
+    (`doc_id`, `text`) into the fixed-`seq_len` training-sequence stream.
 
     Documents are distributed into `bucket_count` id-hash buckets (md5, the
     same engine-portable discipline as split_by_hash(method='md5'), so any
@@ -340,23 +318,23 @@ def pack_sequences(
     from pyspark.sql.window import Window
 
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10)
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("bigint")
         % bucket_count
     )
-    n_tok = token_count(F.col(text_col))
+    n_tok = token_count(F.col("text"))
     w = (
         Window.partitionBy("pack_bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     placed = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         bucket.alias("pack_bucket"),
         n_tok.alias("n_tokens"),
     ).withColumn("tok_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
     return placed.select(
-        id_col,
+        "doc_id",
         "pack_bucket",
         "n_tokens",
         "tok_start",
@@ -372,9 +350,9 @@ def pack_sequences(
     )
 
 
-def document_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text-analysis profile of a documents table."""
-    t = F.col(text_col)
+def document_profile(docs: DataFrame) -> DataFrame:
+    """One-pass text-analysis profile of a documents table's `text`."""
+    t = F.col("text")
     profiled = docs.select(
         "*",
         token_count(t).alias("n_tokens"),
@@ -384,27 +362,22 @@ def document_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
         quality_score(t).alias("quality"),
         fingerprint64(t).alias("fingerprint"),
     )
-    return with_lang_guess(profiled, text_col)
+    return with_lang_guess(profiled)
 
 
 def sample_to_mixture(
-    docs: DataFrame,
-    weights: dict[str, int],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 42,
-    method: str = "xxhash",
+    docs: DataFrame, weights: dict[str, int], method: str = "xxhash"
 ) -> DataFrame:
-    """Deterministic down-sampling to a target stratum mixture (the
+    """Deterministic down-sampling to a target `lang` mixture (the
     pretraining-corpus rebalance step: "make the kept corpus w_s/W parts
-    stratum s", e.g. language weights). No upsampling: the kept corpus is
+    stratum s"). No upsampling: the kept corpus is
     the LARGEST one whose target shares all fit inside their strata —
     T = min_s floor(n_s*W/w_s) docs total, so the scarcest stratum is kept
     whole and the rest are hash-gated down to w_s*T/W.
 
     All cutoff arithmetic is bigint (`div`), so any engine re-derives the
     exact same kept set — method='md5' buckets like split_by_hash(md5) for
-    cross-engine audits, default xxhash64(id, seed) stays JVM-native.
+    cross-engine audits, default xxhash64(doc_id, 42) stays JVM-native.
     Strata absent from `weights` (weight 0) are dropped.
 
     Scale shape: one partial-agg count per stratum (tiny result), cutoffs
@@ -417,13 +390,13 @@ def sample_to_mixture(
         raise ValueError("weights must contain a positive total")
     wexpr = None
     for name, w in weights.items():
-        cond = F.col(strata_col) == name
+        cond = F.col("lang") == name
         lit = F.lit(int(w)).cast("bigint")
         wexpr = F.when(cond, lit) if wexpr is None else wexpr.when(cond, lit)
     wexpr = wexpr.otherwise(F.lit(0).cast("bigint"))
 
     counts = (
-        docs.groupBy(strata_col)
+        docs.groupBy("lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
         .withColumn("_w", wexpr)
         .filter(F.col("_w") > 0)
@@ -438,19 +411,19 @@ def sample_to_mixture(
             "mix_cutoff",
             F.expr(f"(_w * _t * 10000) div ({w_total} * _n)"),
         )
-        .select(strata_col, "mix_cutoff")
+        .select("lang", "mix_cutoff")
     )
     if method == "md5":
         bucket = (
             F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
             ).cast("bigint")
             % 10_000
         )
     else:
-        bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(10_000))
+        bucket = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(42)), F.lit(10_000))
     return (
-        docs.join(F.broadcast(cutoffs), strata_col)
+        docs.join(F.broadcast(cutoffs), "lang")
         .withColumn("mix_bucket", bucket)
         .filter(F.col("mix_bucket") < F.col("mix_cutoff"))
     )
@@ -478,12 +451,8 @@ def _word_bigrams(text: Column) -> Column:
     )
 
 
-def build_ngram_lm(
-    ref_docs: DataFrame,
-    text_col: str = "text",
-    top_k: int = 50_000,
-) -> dict[str, DataFrame]:
-    """Bigram language model from a reference corpus — the artifact behind
+def build_ngram_lm(ref_docs: DataFrame, top_k: int = 50_000) -> dict[str, DataFrame]:
+    """Bigram language model from a reference corpus's `text` — the artifact behind
     CCNet-style perplexity filtering (Wenzek et al. 2019 score CommonCrawl
     against a Wikipedia-trained KenLM; the reference repo has no analog —
     this is the corpus-curation step between lang-id and mixture sampling).
@@ -502,7 +471,7 @@ def build_ngram_lm(
     vocab-bounded already.
     """
     grams = ref_docs.select(
-        F.explode(_word_bigrams(F.col(text_col))).alias("g")
+        F.explode(_word_bigrams(F.col("text"))).alias("g")
     ).select("g.w1", "g.w2")
     # ONE corpus explode + partial-aggregated groupBy builds the bounded
     # (w1, w2, c12) count table; unigram counts and the grand total are
@@ -539,18 +508,12 @@ def build_ngram_lm(
     return {"bigrams": bi, "unigrams": uni, "total": total}
 
 
-def lm_score(
-    docs: DataFrame,
-    lm: dict[str, DataFrame],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.4,
-) -> DataFrame:
-    """Score docs under the bigram LM with stupid backoff: a bigram in the
-    (top-k capped) LM contributes its stored logp_micro; a missing bigram
-    backs off to round(ln(alpha * c(w2) / total) * 1e6) with c=0.5 for
+def lm_score(docs: DataFrame, lm: dict[str, DataFrame]) -> DataFrame:
+    """Score docs' `text` under the bigram LM with stupid backoff: a bigram
+    in the (top-k capped) LM contributes its stored logp_micro; a missing
+    bigram backs off to round(ln(0.4 * c(w2) / total) * 1e6) with c=0.5 for
     out-of-vocabulary w2. Returns one row per doc with >=1 bigram:
-    (id, n_bigrams, n_oov, logp_micro_sum, ppl) where ppl =
+    (doc_id, n_bigrams, n_oov, logp_micro_sum, ppl) where ppl =
     exp(-mean logprob) — the CCNet filter threshold quantity.
 
     100 TB shape: the LM tables are explicitly broadcast (bigrams capped
@@ -569,8 +532,8 @@ def lm_score(
     total = F.broadcast(lm["total"])
     inst = (
         docs.select(
-            F.col(id_col).alias("_id"),
-            F.explode(_word_bigrams(F.col(text_col))).alias("g"),
+            F.col("doc_id").alias("_id"),
+            F.explode(_word_bigrams(F.col("text"))).alias("g"),
         )
         .select("_id", "g.w1", "g.w2")
         .join(bi, ["w1", "w2"], "left")
@@ -585,7 +548,7 @@ def lm_score(
                 F.col("_lp"),
                 F.round(
                     F.log(
-                        F.lit(alpha)
+                        F.lit(0.4)
                         * F.coalesce(F.col("_c2"), F.lit(0.5))
                         / F.col("total")
                     )
@@ -602,7 +565,7 @@ def lm_score(
             F.sum("_lp_eff").alias("logp_micro_sum"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_bigrams",
             "n_oov",
             "logp_micro_sum",
@@ -613,18 +576,13 @@ def lm_score(
     )
 
 
-def gopher_quality_flags(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality_flags(docs: DataFrame, min_words: int = 50) -> DataFrame:
     """Gopher rule-based quality filters (Rae et al. 2021, Appendix A —
     the heuristic document screens applied before model-based filtering;
-    reference repo has no analog). Seven rules, each a PASS/FAIL flag plus
-    a failure bitmask (bit i set = rule i failed):
+    reference repo has no analog) over `text`. Seven rules, each a
+    PASS/FAIL flag plus a failure bitmask (bit i set = rule i failed):
 
-    0 word_count     min_words <= n_words <= max_words
+    0 word_count     min_words <= n_words <= 100,000
     1 mean_word_len  mean word length in [3, 10] chars
     2 symbol_ratio   '#'/'…' symbols <= 0.1 per word
     3 alpha_words    >= 80% of words contain an alphabetic char
@@ -639,7 +597,7 @@ def gopher_quality_flags(
     no UDF, no shuffle — a pure per-row projection that runs inside
     whole-stage codegen over the 100 TB scan.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     trimmed = F.trim(t)
     toks = F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
         F.split(trimmed, r"\s+")
@@ -663,7 +621,7 @@ def gopher_quality_flags(
         F.filter(lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$"))
     )
     flags = [
-        ("word_count", (n_words >= min_words) & (n_words <= max_words)),
+        ("word_count", (n_words >= min_words) & (n_words <= 100_000)),
         (
             "mean_word_len",
             (n_words > 0)
@@ -686,11 +644,7 @@ def gopher_quality_flags(
     )
 
 
-def gopher_repetition_flags(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gopher_repetition_flags(docs: DataFrame) -> DataFrame:
     """Gopher repetition screens (Rae et al. 2021, Table A1 — the
     duplicate-text half of the quality battery; reference repo has no
     analog). Per doc (bit i of ``rep_bitmask`` set = rule i failed):
@@ -719,7 +673,7 @@ def gopher_repetition_flags(
     billion-doc corpus never sorts one hot partition. Returns one row
     per doc: id + metrics + ``rep_bitmask``/``rep_pass``.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(t, "\n")
     dup_lines_arr = F.filter(
         lines, lambda l: F.size(F.filter(lines, lambda m: m == l)) >= 2
@@ -729,7 +683,7 @@ def gopher_repetition_flags(
         trimmed == "", F.array().cast("array<string>")
     ).otherwise(F.split(trimmed, r"\s+"))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).alias("n_lines"),
         F.size(dup_lines_arr).alias("dup_lines"),
         F.aggregate(
@@ -766,7 +720,7 @@ def gopher_repetition_flags(
         ).otherwise(F.array().cast("array<struct<k:int,gram:string>>"))
 
     tagged = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.concat(_grams(2), _grams(3), _grams(4))
         ).alias("kg"),
@@ -782,9 +736,9 @@ def gopher_repetition_flags(
         )
 
     top = (
-        tagged.groupBy(id_col, "kg.k", "kg.gram")
+        tagged.groupBy("doc_id", "kg.k", "kg.gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             *[
                 F.max(
@@ -794,7 +748,7 @@ def gopher_repetition_flags(
             ]
         )
         .select(
-            id_col,
+            "doc_id",
             _cov(F.col("m2")).alias("top2_chars"),
             _cov(F.col("m3")).alias("top3_chars"),
             _cov(F.col("m4")).alias("top4_chars"),
@@ -802,7 +756,7 @@ def gopher_repetition_flags(
     )
     out = (
         base.drop("w")
-        .join(top, on=id_col, how="left")
+        .join(top, on="doc_id", how="left")
         .na.fill({"top2_chars": 0, "top3_chars": 0, "top4_chars": 0})
     )
     flags = [
@@ -820,34 +774,24 @@ def gopher_repetition_flags(
     )
 
 
-#: C4's default bad-word screen is a long external list; we ship a tiny
-#: built-in stand-in (callers pass their own list for production runs).
-_C4_BAD_WORDS = ("porn", "xxx")
-
-
-def c4_line_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words_per_line: int = 5,
-    min_lines: int = 3,
-    bad_words: tuple = _C4_BAD_WORDS,
-) -> DataFrame:
+def c4_line_filter(docs: DataFrame) -> DataFrame:
     """C4 line-level cleaning heuristics (Raffel et al. 2020, §2.2 —
     the webtext pass applied to Common Crawl before training T5;
-    reference repo has no analog). Line rules (a line SURVIVES iff all
-    hold):
+    reference repo has no analog) over `text`. Line rules (a line
+    SURVIVES iff all hold):
 
     - ends in a terminal punctuation mark (``.`` ``!`` ``?`` ``"`` ``”``
       after trailing-space trim),
-    - has at least ``min_words_per_line`` whitespace words,
+    - has at least 5 whitespace words,
     - does not mention "javascript" (case-insensitive).
 
     Document rules (bit i of ``c4_bitmask`` set = rule i violated):
 
     0 ``{`` anywhere (code page),
     1 "lorem ipsum" (placeholder page),
-    2 a bad word (word-boundary match over the lowercased text),
-    3 fewer than ``min_lines`` SURVIVING lines (C4 drops pages with
+    2 a bad word (word-boundary match over the lowercased text; C4's
+      long external list is stood in for by "porn" and "xxx"),
+    3 fewer than 3 SURVIVING lines (C4 drops pages with
       < 3 sentences; surviving-line count is our sentence proxy).
 
     ``c4_keep`` = bitmask 0; ``c4_kept_text`` = the surviving lines
@@ -858,25 +802,24 @@ def c4_line_filter(
     U+0020 — the DuckDB oracle mirrors that exactly (both engines'
     default ``trim`` is space-only).
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(t, "\n")
 
     def _line_ok(l):  # noqa: E741 - single-param HOF lambda (arity trap)
         l2 = F.trim(l)
         return (
             l2.rlike('[.!?"”]$')
-            & (F.size(F.split(l2, r"\s+")) >= min_words_per_line)
+            & (F.size(F.split(l2, r"\s+")) >= 5)
             & ~F.lower(l).contains("javascript")
         )
 
     kept = F.filter(lines, _line_ok)
     lo = F.lower(t)
-    bad_re = r"\b(" + "|".join(bad_words) + r")\b"
     flags = [
         ("brace", t.contains("{")),
         ("lorem", lo.contains("lorem ipsum")),
-        ("badword", lo.rlike(bad_re)),
-        ("short", F.size(kept) < min_lines),
+        ("badword", lo.rlike(r"\b(porn|xxx)\b")),
+        ("short", F.size(kept) < 3),
     ]
     out = (
         docs.withColumn("n_lines", F.size(lines))
@@ -892,13 +835,7 @@ def c4_line_filter(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    size: int = 32,
-    overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_documents(docs: DataFrame, size: int = 32, overlap: int = 8) -> DataFrame:
     """Overlapping token-window chunking (RAG indexing / long-context eval
     prep; mirrors the retrieval-side analog of the reference's block split,
     parse_avc.py ausearch block walk): each document becomes windows of
@@ -916,9 +853,9 @@ def chunk_documents(
     stride = size - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than size")
-    trimmed = F.trim(F.coalesce(F.col(text_col), F.lit("")))
+    trimmed = F.trim(F.coalesce(F.col("text"), F.lit("")))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(trimmed == "", F.array().cast("array<string>"))
         .otherwise(F.split(trimmed, r"\s+"))
         .alias("_toks"),
@@ -934,14 +871,14 @@ def chunk_documents(
     out = (
         base.filter(n_tok > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_toks"),
             F.explode(F.sequence(F.lit(0), (n_chunks - 1).cast("int"))).alias(
                 "chunk_idx"
             ),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_idx"),
             (F.col("chunk_idx").cast("long") * stride).alias("tok_start"),
             F.slice(
@@ -949,7 +886,7 @@ def chunk_documents(
             ).alias("_chunk"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "chunk_idx",
             "tok_start",
             F.size("_chunk").alias("n_chunk_tokens"),
@@ -959,13 +896,7 @@ def chunk_documents(
     return out
 
 
-def chunk_sql(
-    table: str,
-    size: int = 32,
-    overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def chunk_sql(table: str, size: int = 32, overlap: int = 8) -> str:
     """DuckDB twin of chunk_documents over `table` — same split, same
     integer chunk-count arithmetic (`//` vs Spark `div`), same 1-based
     inclusive list slice semantics (list_slice clamps the end exactly like
@@ -973,24 +904,24 @@ def chunk_sql(
     stride = size - overlap
     return f"""
         WITH toks AS (
-          SELECT {id_col},
-                 (CASE WHEN trim(coalesce({text_col}, '')) = ''
+          SELECT doc_id,
+                 (CASE WHEN trim(coalesce(text, '')) = ''
                        THEN []::varchar[]
-                       ELSE regexp_split_to_array(trim({text_col}), '\\s+')
+                       ELSE regexp_split_to_array(trim(text), '\\s+')
                   END) AS arr
           FROM {table}),
         sized AS (
-          SELECT {id_col}, arr, len(arr) AS n,
+          SELECT doc_id, arr, len(arr) AS n,
                  (CASE WHEN len(arr) <= {size} THEN 1
                        ELSE 1 + ((len(arr) - {size} + {stride - 1}) // {stride})
                   END) AS n_chunks
           FROM toks WHERE len(arr) > 0),
         chunks AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  unnest(generate_series(0, n_chunks - 1)) AS chunk_idx,
                  arr
           FROM sized)
-        SELECT {id_col}, chunk_idx,
+        SELECT doc_id, chunk_idx,
                (chunk_idx * {stride})::bigint AS tok_start,
                len(list_slice(arr, chunk_idx * {stride} + 1,
                               chunk_idx * {stride} + {size})) AS n_chunk_tokens,
@@ -1001,12 +932,11 @@ def chunk_sql(
     """
 
 
-def normalize_nfc(
-    docs: DataFrame, text_col: str = "text", out_col: str = "text_nfc"
-) -> DataFrame:
-    """Unicode NFC normalization — the canonical-composition pass a
-    web-crawl pipeline runs before hashing/dedup so that 'café' composed
-    and 'café' decomposed (e + U+0301) dedup to the same key. Spark has no
+def normalize_nfc(docs: DataFrame) -> DataFrame:
+    """Unicode NFC normalization of `text` into `text_nfc` — the
+    canonical-composition pass a web-crawl pipeline runs before
+    hashing/dedup so that 'café' composed and 'café' decomposed (e +
+    U+0301) dedup to the same key. Spark has no
     native normalizer, so this is an Arrow-batched pandas pass over
     stdlib unicodedata (sanctioned per-payload Python, same class as the
     decode loop); the DuckDB twin is nfc_normalize() (utf8proc) —
@@ -1022,21 +952,15 @@ def normalize_nfc(
             lambda t: _ud.normalize("NFC", t) if t is not None else None
         )
 
-    return docs.withColumn(out_col, _nfc(F.col(text_col)))
+    return docs.withColumn("text_nfc", _nfc(F.col("text")))
 
 
-def weighted_sample(
-    docs: DataFrame,
-    n: int,
-    weight_col: str,
-    id_col: str = "doc_id",
-    key_col: str = "sample_key",
-) -> DataFrame:
+def weighted_sample(docs: DataFrame, n: int, weight_col: str) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis 2006): keep the n docs winning an exponential race where doc i
     draws key u_i^(1/w_i) — inclusion probability proportional to weight,
     e.g. "sample 10M docs favoring high quality_score". rand()-free: u is
-    derived from the 15-hex md5 slice of the id (u = (h+1)/2^60 ∈ (0,1]),
+    derived from the 15-hex md5 slice of `doc_id` (u = (h+1)/2^60 ∈ (0,1]),
     so the sample is a pure function of (corpus, weights, n) — stable
     under repartitioning and re-runs, and re-derivable in any SQL engine
     (maximizing u^(1/w) ⇔ minimizing -ln(u)/w; -ln(u) is quantized to a
@@ -1046,12 +970,13 @@ def weighted_sample(
     Weights must be positive integers (quantize upstream, micro-units are
     fine); rows with weight <= 0 or NULL are excluded. Scale shape: ONE
     narrow projection over the scan + TakeOrderedAndProject(n) — no
-    shuffle, no window, every task keeps at most n candidate rows.
+    shuffle, no window, every task keeps at most n candidate rows. Each
+    kept row carries its race key as `sample_key`.
     """
     if n <= 0:
         raise ValueError("weighted_sample: n must be positive")
     h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
     neg_lnu_micro = F.round(
         -F.log((h + F.lit(1)) / F.lit(float(1 << 60))) * F.lit(1_000_000.0)
@@ -1060,12 +985,12 @@ def weighted_sample(
         docs.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
         .withColumn("_neglnu", neg_lnu_micro)
         .withColumn(
-            key_col,
+            "sample_key",
             F.expr(f"(_neglnu * 1000000) div cast({weight_col} as bigint)"),
         )
         .drop("_neglnu")
     )
-    return gated.orderBy(key_col, id_col).limit(n)
+    return gated.orderBy("sample_key", "doc_id").limit(n)
 
 
 def exact_quantiles(
@@ -1130,35 +1055,25 @@ def exact_quantiles(
 _HREF_PATTERN = r'(?i)href\s*=\s*"([^"]*)"'
 
 
-def extract_links(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-    out_col: str = "href",
-) -> DataFrame:
+def extract_links(docs: DataFrame) -> DataFrame:
     """Hyperlink extraction — the front stage that turns a crawled page
     table into the edge list graph ops consume (graph.pagerank_micro &
-    co.): one native regexp_extract_all over the html column, exploded to
-    (id, href) pairs. Whole-stage codegen, no UDF; the scan feeding it
-    prunes to (id, html). Docs with no links vanish (edge lists don't
+    co.): one native regexp_extract_all over the `html` column, exploded to
+    (doc_id, href) pairs. Whole-stage codegen, no UDF; the scan feeding it
+    prunes to (doc_id, html). Docs with no links vanish (edge lists don't
     carry empty rows; degree joins are left/outer downstream). Accepts
     binary or string html. Join the hrefs against the corpus's canonical
     URL column to produce (src_id, dst_id) edges."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(h, F.lit(_HREF_PATTERN), F.lit(1))
-        ).alias(out_col),
+        ).alias("href"),
     )
 
 
-def span_corrupt(
-    docs: DataFrame,
-    ratio_permille: int = 150,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_corrupt(docs: DataFrame, ratio_permille: int = 150) -> DataFrame:
     """T5-style span corruption (Raffel et al. 2020's denoising objective):
     mask token spans, emit `input_text` (surviving tokens with one
     <extra_id_k> sentinel where each span was) and `target_text`
@@ -1179,9 +1094,9 @@ def span_corrupt(
     """
     if not 0 <= ratio_permille <= 1000:
         raise ValueError("span_corrupt: ratio_permille must be in 0..1000")
-    trimmed = F.trim(F.coalesce(F.col(text_col), F.lit("")))
+    trimmed = F.trim(F.coalesce(F.col("text"), F.lit("")))
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.split(trimmed, r"\s+")).alias("pos", "tok"),
     ).filter(F.length("tok") > 0)
     gate = (
@@ -1189,7 +1104,7 @@ def span_corrupt(
             F.substring(
                 F.md5(
                     F.concat_ws(
-                        ":", F.col(id_col).cast("string"),
+                        ":", F.col("doc_id").cast("string"),
                         F.col("pos").cast("string"),
                     )
                 ),
@@ -1202,12 +1117,12 @@ def span_corrupt(
     toks = toks.withColumn("m", gate)
     # islands of consecutive masked tokens: pos - (rank among masked) is
     # constant within a run — the classic gaps-and-islands key.
-    wdoc = Window.partitionBy(id_col).orderBy("pos")
+    wdoc = Window.partitionBy("doc_id").orderBy("pos")
     masked = (
         toks.filter("m")
         .withColumn("island", F.col("pos") - F.row_number().over(wdoc))
     )
-    spans = masked.groupBy(id_col, "island").agg(
+    spans = masked.groupBy("doc_id", "island").agg(
         F.min("pos").alias("start"),
         F.array_join(
             F.transform(
@@ -1220,21 +1135,21 @@ def span_corrupt(
         ).alias("span_toks"),
         F.count(F.lit(1)).alias("span_len"),
     )
-    wspan = Window.partitionBy(id_col).orderBy("start")
+    wspan = Window.partitionBy("doc_id").orderBy("start")
     spans = spans.withColumn("k", F.row_number().over(wspan) - 1)
     sentinel = F.concat(F.lit("<extra_id_"), F.col("k"), F.lit(">"))
     # input = unmasked tokens + one sentinel at each span's start pos
     # (start belongs to a masked token, so positions never collide)
     pieces = (
         toks.filter(~F.col("m"))
-        .select(id_col, "pos", "tok")
+        .select("doc_id", "pos", "tok")
         .unionByName(
             spans.select(
-                id_col, F.col("start").alias("pos"), sentinel.alias("tok")
+                "doc_id", F.col("start").alias("pos"), sentinel.alias("tok")
             )
         )
     )
-    inputs = pieces.groupBy(id_col).agg(
+    inputs = pieces.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "tok"))),
@@ -1243,7 +1158,7 @@ def span_corrupt(
             " ",
         ).alias("input_text")
     )
-    targets = spans.groupBy(id_col).agg(
+    targets = spans.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -1259,11 +1174,11 @@ def span_corrupt(
         F.sum("span_len").alias("n_masked"),
     )
     return (
-        docs.select(id_col)
-        .join(inputs, id_col, "left")
-        .join(targets, id_col, "left")
+        docs.select("doc_id")
+        .join(inputs, "doc_id", "left")
+        .join(targets, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("input_text", F.lit("")).alias("input_text"),
             F.coalesce("target_text", F.lit("")).alias("target_text"),
             F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
@@ -1272,11 +1187,7 @@ def span_corrupt(
     )
 
 
-def fim_transform(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def fim_transform(docs: DataFrame) -> DataFrame:
     """Fill-in-the-middle transformation (Bavarian et al. 2022 — the
     code/infilling pretraining objective): split each doc at two cut
     points into (prefix, middle, suffix) and emit the PSM layout
@@ -1290,13 +1201,13 @@ def fim_transform(
     substring arithmetic — whole-stage codegen, no shuffle at all: the
     transform streams over the 100 TB scan. Returns (id, fim_text,
     cut_lo, cut_hi)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n = F.length(t)
 
     def cut(i: int) -> Column:
         h = F.conv(
             F.substring(
-                F.md5(F.concat_ws(":", F.col(id_col).cast("string"),
+                F.md5(F.concat_ws(":", F.col("doc_id").cast("string"),
                                   F.lit(str(i)))),
                 1, 15,
             ),
@@ -1311,7 +1222,7 @@ def fim_transform(
     middle = F.substring(t, (lo + 1).cast("int"), (hi - lo).cast("int"))
     suffix = F.substring(t, (hi + 1).cast("int"), n)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat(
             F.lit("<PRE>"), prefix, F.lit("<SUF>"), suffix,
             F.lit("<MID>"), middle,

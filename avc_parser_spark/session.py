@@ -62,14 +62,22 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
 
-    for k, v in (extra_conf or {}).items():
+    # The shuffle width goes on the session, not the builder: PySpark
+    # launches the JVM with the builder's options as --conf, which makes
+    # them JVM system properties that every later session in this process
+    # would inherit after stop().
+    key = "spark.sql.shuffle.partitions"
+    conf = dict(extra_conf or {})
+    width = conf.pop(key, None)
+    for k, v in conf.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
-    # One shuffle partition per core, unless a width is already set: at
-    # launch (spark-submit --conf), through extra_conf, or earlier on this
+    # One shuffle partition per core, unless a width is given here or is
+    # already set: at launch (spark-submit --conf) or earlier on this
     # session.
-    key = "spark.sql.shuffle.partitions"
-    if spark.conf.get(key, None) is None:
+    if width is not None:
+        spark.conf.set(key, width)
+    elif spark.conf.get(key, None) is None:
         spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
     return spark

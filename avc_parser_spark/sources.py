@@ -109,21 +109,19 @@ def stream_audit_logs(spark: SparkSession, landing_dir: str) -> DataFrame:
 WARC_SEPARATOR = "\r\n\r\nWARC/1.0\r\n"
 
 
-def build_warc_bytes(records, warcinfo: bool = True) -> bytes:
+def build_warc_bytes(records) -> bytes:
     """Render an uncompressed WARC/1.0 file (test/plant fixture builder —
     pure function, no Spark). `records`: iterables of dicts with url,
     ts (datetime or None), html (bytes or str), optional status/ctype.
     Emits a leading warcinfo record (real crawl files open with one) and
     one response record per page, each payload a full HTTP response."""
-    out = []
-    if warcinfo:
-        info = b"software: avc-parser-spark datagen\r\n"
-        out.append(
-            b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-            b"Content-Type: application/warc-fields\r\n"
-            b"Content-Length: " + str(len(info)).encode() + b"\r\n\r\n"
-            + info + b"\r\n\r\n"
-        )
+    info = b"software: avc-parser-spark datagen\r\n"
+    out = [
+        b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
+        b"Content-Type: application/warc-fields\r\n"
+        b"Content-Length: " + str(len(info)).encode() + b"\r\n\r\n"
+        + info + b"\r\n\r\n"
+    ]
     for r in records:
         body = r["html"]
         if isinstance(body, str):
@@ -218,7 +216,7 @@ def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
         "url", "warc_ts", "html",
         extract_html_text(F.col("html")).alias("text"),
     )
-    return with_lang_guess(recs, text_col="text", out_col="lang")
+    return with_lang_guess(recs, out_col="lang")
 
 
 def stream_warc(spark: SparkSession, landing_dir: str) -> DataFrame:

@@ -42,14 +42,12 @@ def stream_events(pages_stream: DataFrame) -> DataFrame:
     return parse_pages(pages_stream)
 
 
-def stream_lang_hour_rollup(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def stream_lang_hour_rollup(events: DataFrame) -> DataFrame:
     """Watermarked per-lang/per-hour windowed counts (late data beyond the
-    watermark is dropped)."""
+    2-hour watermark is dropped)."""
     return (
         events.filter(F.col("route") == "parse_ok")
-        .withWatermark("event_ts", watermark)
+        .withWatermark("event_ts", "2 hours")
         .groupBy(F.window("event_ts", "1 hour").alias("w"), F.col("lang"))
         .agg(F.count(F.lit(1)).alias("events"))
         .select(
@@ -64,14 +62,10 @@ SESSION_OUT_DDL = (
 SESSION_STATE_DDL = "start_us long, last_us long, cnt long"
 
 
-def stream_denial_sessions(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_denial_sessions(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Custom STATEFUL streaming operator (applyInPandasWithState): per-comm
-    denial sessions with a `gap_minutes` inactivity window — the streaming
-    twin of the batch `events_sessions` lag/cumsum sessionizer.
+    denial sessions with a 30-minute inactivity gap — the streaming twin of
+    the batch `events_sessions` lag/cumsum sessionizer.
 
     State per key: (session_start, last_seen, count) as int64 microseconds.
     A session closes two ways: data-driven (a new event arrives more than
@@ -85,7 +79,7 @@ def stream_denial_sessions(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
 
     def _emit(comm: str, start_us: int, last_us: int, cnt: int) -> dict:
         return {
@@ -204,25 +198,22 @@ def run_audit_routed_stream(
     audit_landing_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tail a landing zone of raw ausearch-export files: new files are
     block-split by the streaming file source (sources.stream_audit_logs),
     parsed by the same kernel, and appended route-partitioned — the
     operational ingest mode for hosts that drop audit exports into a
-    directory. availableNow=False leaves the query running as a true tail
-    (production); True drains what exists and stops (tests / cron-style
-    catch-up runs)."""
+    directory. The availableNow trigger drains what exists and stops
+    (tests / cron-style catch-up runs)."""
     from avc_parser_spark.sources import stream_audit_logs
 
     events = stream_events(stream_audit_logs(spark, audit_landing_dir))
-    writer = (
+    return (
         events.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("route")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -267,7 +267,7 @@ def test_ngram_contamination(spark):
         ],
         "eval_id long, text string",
     )
-    out = ngram_contamination(train, evals, n=8, hashed=False)
+    out = ngram_contamination(train, evals)
     rows = {r["eval_id"]: r for r in out.collect()}
     assert rows[100]["overlap_ngrams"] == rows[100]["total_ngrams"] == 3
     assert rows[100]["contaminated"]
@@ -776,7 +776,7 @@ def test_simhash_bucket_stats_no_saturation_at_1m(spark):
     from avc_parser_spark.functions.dedup import simhash_bucket_stats
 
     hashes = spark.range(1_000_000).select(F.xxhash64("id").alias("simhash"))
-    stats = simhash_bucket_stats(hashes, max_hamming=3, max_bucket=512).head()
+    stats = simhash_bucket_stats(hashes).head()
     assert stats["oversized_buckets"] == 0
     assert stats["max_bucket_size"] <= 16
 
@@ -883,16 +883,16 @@ def test_ivf_topk_recall(spark):
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(200)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
 
-    cents = train_centroids(emb, k=4, iters=2)
+    cents = train_centroids(emb)
     assert len(cents) == 4 and len(cents[0]) == 8
 
     q = [float(x) for x in vecs[7]]
     exact = [r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()]
-    ann = [r["vec_id"] for r in ivf_topk(emb, q, cents, k=10, n_probe=1).collect()]
+    ann = [r["vec_id"] for r in ivf_topk(emb, q, cents, n_probe=1).collect()]
     # probing 1 of 4 well-separated clusters must recover most of top-10
     assert len(set(exact) & set(ann)) >= 8
     # full probe == exact
-    full = [r["vec_id"] for r in ivf_topk(emb, q, cents, k=10, n_probe=4).collect()]
+    full = [r["vec_id"] for r in ivf_topk(emb, q, cents, n_probe=4).collect()]
     assert full == exact
 
 
@@ -955,7 +955,7 @@ def test_media_resize_ppm(spark):
         (1, "audio", bytearray(b"RIFF not really")),
     ]
     media = spark.createDataFrame(rows, "doc_id long, media_type string, payload binary")
-    out = {r["doc_id"]: r for r in resize_media(media, max_dim=4).collect()}
+    out = {r["doc_id"]: r for r in resize_media(media).collect()}
 
     assert out[0]["resize_status"] == "resized"
     small = bytes(out[0]["payload"])
@@ -1643,14 +1643,14 @@ def test_semantic_dedup_pairs_planted(spark):
     ]
     got = {
         (r["a"], r["b"], r["cosine"], r["cluster"])
-        for r in semantic_dedup_pairs(emb, cents, threshold=0.9).collect()
+        for r in semantic_dedup_pairs(emb, cents).collect()
     }
     want = {
         (8 * m + g, 8 * m + g + 4, 1.0, g) for m in range(8) for g in range(4)
     }
     assert got == want
     assert (
-        semantic_dedup_pairs(emb, cents, threshold=0.9, max_cluster=8).count()
+        semantic_dedup_pairs(emb, cents, max_cluster=8).count()
         == 0
     )
 

@@ -3,7 +3,9 @@ no code outside tests/ reaches is code no caller runs. The few such names
 kept on purpose back a documented output format, are the reference a
 named test compares a live function against, or wait for a ROADMAP
 direction; anything else found here is dead surface and should be deleted
-with its tests instead of added to KEPT."""
+with its tests instead of added to KEPT. The same holds for options: a
+defaulted parameter that no caller sets to a second value is a constant
+(test_no_unset_knobs)."""
 
 import ast
 import re
@@ -163,3 +165,104 @@ def test_guard_counts_code_references_transitively(tmp_path):
     assert "helper" in found  # called only by a test-only function
     assert "WIDTH" in found  # read only by a test-only function
     assert found == {"mentioned_only", "helper", "test_only", "WIDTH"}
+
+
+def _unset_knobs(root: Path = ROOT, package: Path = PACKAGE) -> set[str]:
+    """`function.param` for every defaulted parameter of a top-level
+    function in `package` that no call in code or tests passes anything
+    but its default (compared as `ast.unparse` text). A call binds
+    positional and keyword arguments, and `submit(fn, …)` and
+    `partial(fn, …)` bind the arguments after `fn`; a function called
+    anywhere with `*args` or `**kwargs` is skipped, as its binding is
+    unknown."""
+    knobs = {}  # function → (positional names, {param: default text})
+    for path in sorted(package.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            defaults = dict(zip(positional[::-1], map(ast.unparse, a.defaults[::-1])))
+            defaults.update(
+                (p.arg, ast.unparse(d))
+                for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            )
+            if defaults:
+                knobs[node.name] = (positional, defaults)
+    callers = {*root.glob("*.py"), *package.rglob("*.py")}
+    for sub in ("scripts", "perfbench", "tests"):
+        callers.update((root / sub).rglob("*.py"))
+    set_somewhere, unbound = set(), set()
+    for path in sorted(callers):
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = call.func, call.args
+            name = getattr(func, "id", getattr(func, "attr", None))
+            if name in ("submit", "partial") and args:
+                func, args = args[0], args[1:]
+                name = getattr(func, "id", getattr(func, "attr", None))
+            if name not in knobs:
+                continue
+            if any(isinstance(a, ast.Starred) for a in args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                unbound.add(name)
+                continue
+            positional, defaults = knobs[name]
+            bound = list(zip(positional, args))
+            bound += [(k.arg, k.value) for k in call.keywords]
+            set_somewhere.update(
+                f"{name}.{p}" for p, v in bound
+                if p in defaults and ast.unparse(v) != defaults[p]
+            )
+    return {
+        f"{name}.{p}"
+        for name, (_, defaults) in knobs.items() if name not in unbound
+        for p in defaults
+    } - set_somewhere
+
+
+def test_no_unset_knobs():
+    """A defaulted parameter that every caller leaves at its default is a
+    constant: inline its value and delete what only another value ran."""
+    assert _unset_knobs() == set()
+
+
+def test_knob_guard_binds_calls_and_skips_unknown_bindings(tmp_path):
+    """The knob scanner over a synthetic package: a knob no call passes, or
+    passes only as its default literal, is reported; a non-default value
+    from a test, through `pool.submit(fn, …)` or through `partial(fn, …)`
+    sets it; a `**kwargs` call exempts the whole function."""
+    package = tmp_path / "pkg"
+    package.mkdir()
+    (package / "__init__.py").write_text("")
+    (package / "mod.py").write_text(
+        "def unset(x, width=3):\n"
+        "    return x * width\n"
+        "def default_only(x, mode='a'):\n"
+        "    return x\n"
+        "def tested(x, limit=10):\n"
+        "    return x\n"
+        "def pooled(x, n=1):\n"
+        "    return x\n"
+        "def bound(x, n=1):\n"
+        "    return x\n"
+        "def spread(x, flag=False):\n"
+        "    return x\n"
+    )
+    (tmp_path / "main.py").write_text(
+        "from functools import partial\n"
+        "from pkg.mod import bound, default_only, pooled, spread, unset\n"
+        "unset(1)\n"
+        "default_only(1, mode='a')\n"
+        "pool.submit(pooled, 1, 5)\n"
+        "partial(bound, 1, n=2)\n"
+        "spread(1, **opts)\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from pkg.mod import tested\n"
+        "tested(1, limit=3)\n"
+    )
+    assert _unset_knobs(tmp_path, package) == {"unset.width", "default_only.mode"}

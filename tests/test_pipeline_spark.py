@@ -501,3 +501,34 @@ def test_shuffle_width_is_one_partition_per_core(spark):
         assert get_spark(master="local[8]").conf.get(key) == "3"
     finally:
         spark.conf.set(key, "8")
+
+
+def test_shuffle_width_does_not_outlive_its_session():
+    """A width passed through extra_conf holds for that session only: the
+    next session built in the same process after stop() gets one partition
+    per core again. Runs in a subprocess, since it stops its sessions."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from avc_parser_spark.session import get_spark\n"
+        "key = 'spark.sql.shuffle.partitions'\n"
+        "s = get_spark(master='local[3]', extra_conf={key: '7'})\n"
+        "first = s.conf.get(key)\n"
+        "s.stop()\n"
+        "s = get_spark(master='local[3]')\n"
+        "print('widths', first, s.conf.get(key))\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    assert out.split("widths", 1)[1].split() == ["7", "3"]

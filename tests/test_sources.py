@@ -260,7 +260,6 @@ def test_read_warc_filters_non_response_records(spark, tmp_path):
     raw = build_warc_bytes(
         [{"url": "http://x.example/a", "ts": None, "html": body,
           "status": 301, "ctype": "text/html"}],
-        warcinfo=True,
     )
     # splice in a request record (never a page) between warcinfo and response
     req = (

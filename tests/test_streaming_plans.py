@@ -136,6 +136,37 @@ def test_tpch_q3ish_uses_broadcast_for_customer(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_ann_suite_waits_for_its_pool_on_error(spark, tmp_path, monkeypatch):
+    """An error while q_ann_suite builds its plant/PQ branches propagates,
+    and the thread pool it overlapped the k-means jobs on is shut down by
+    then, with no job left running behind the exception."""
+    import threading
+
+    import pytest
+
+    import __spark_entry__ as em
+
+    spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[((F.col("id") * (d + 7)) % 13).cast("float") for d in range(8)]
+        ).alias("embedding"),
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    def no_codebooks():
+        raise RuntimeError("no codebooks")
+
+    monkeypatch.setattr(em, "_pq_plant_codebooks", no_codebooks)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="no codebooks"):
+        em.q_ann_suite(spark, str(tmp_path))
+    assert [
+        t.name for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ] == []
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
 def test_stateful_streaming_sessions(spark, tmp_path):
     """applyInPandasWithState sessionizer: data-driven gap closure within a
     micro-batch AND event-time-timeout closure across micro-batches."""
@@ -171,7 +202,7 @@ def test_stateful_streaming_sessions(spark, tmp_path):
         .parquet(landing + "/*")
     )
     q = (
-        stream_denial_sessions(stream, gap_minutes=30, watermark="2 hours")
+        stream_denial_sessions(stream, watermark="2 hours")
         .writeStream.format("memory")
         .queryName("sess_test")
         .outputMode("append")
@@ -230,7 +261,7 @@ def test_stateful_sessions_match_batch_sessionization(spark, tmp_path):
         .parquet(landing + "/*")
     )
     q = (
-        stream_denial_sessions(stream, gap_minutes=30, watermark="1 hour")
+        stream_denial_sessions(stream, watermark="1 hour")
         .writeStream.format("memory")
         .queryName("sess_eq")
         .outputMode("append")
